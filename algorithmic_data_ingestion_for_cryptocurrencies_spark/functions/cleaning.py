@@ -11,6 +11,8 @@ Parity targets in ``/root/reference/algo-data-ingestion/``:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -37,6 +39,11 @@ def sanitize_symbol(col: Column | str) -> Column:
     """``BTC/USDT`` -> ``BTC-USDT`` (also ``:`` -> ``-``), uppercased."""
     c = F.col(col) if isinstance(col, str) else col
     return F.upper(F.regexp_replace(c, "[/:]", "-"))
+
+
+def sanitize_symbol_str(symbol: str) -> str:
+    """Plain-string twin of :func:`sanitize_symbol`, for read keys."""
+    return re.sub("[/:]", "-", symbol).upper()
 
 
 def sanitize_partition_value(col: Column | str) -> Column:

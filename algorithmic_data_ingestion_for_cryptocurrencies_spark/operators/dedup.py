@@ -461,6 +461,10 @@ def minhash_signature(col: Column | str, *, num_hashes: int = 64, n: int = 3) ->
 #: hash_family): 2^31 - 1, so a_i*v + b_i stays well inside BIGINT
 #: (v < 2^32, a_i < 2^31 → product < 2^63) on both engines
 MINHASH_MERSENNE31 = 2147483647
+#: docs per partial-signature RecordBatch in the Arrow run-min pass
+#: (:func:`_md5_signatures_from_staged`): bounds a Python worker's
+#: buffer on a large or skewed partition
+MINHASH_PARTIAL_FLUSH_DOCS = 65_536
 
 
 def minhash_coeffs(num_hashes: int, seed: int = 913) -> list[tuple[int, int]]:
@@ -649,6 +653,8 @@ def _md5_signatures_from_staged(
         [id_field, T.StructField("__psig", T.ArrayType(T.LongType()))]
     )
 
+    flush_docs = MINHASH_PARTIAL_FLUSH_DOCS
+
     def partial(batches):
         # heavyweight init once per task (guide §4.5)
         import numpy as np
@@ -662,6 +668,17 @@ def _md5_signatures_from_staged(
         carry = None
         ids_out: list = []
         sigs_out: list = []
+
+        def emit():
+            flat = np.concatenate(sigs_out)
+            sig_arr = pa.FixedSizeListArray.from_arrays(
+                pa.array(flat, type=pa.int64()), k
+            ).cast(pa.list_(pa.int64()))
+            return pa.RecordBatch.from_arrays(
+                [pa.array(ids_out, type=id_type), sig_arr],
+                names=["id", "__psig"],
+            )
+
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -690,21 +707,15 @@ def _md5_signatures_from_staged(
             if len(rids) > 1:
                 ids_out.extend(rids[:-1].tolist())
                 sigs_out.extend(list(mins[:-1]))
+            # only the carry row (a doc that may continue) stays buffered
+            if len(ids_out) >= flush_docs:
+                yield emit()
+                ids_out, sigs_out = [], []
         if carry_id is not None:
             ids_out.append(carry_id)
             sigs_out.append(carry)
         if ids_out:
-            import numpy as np
-            import pyarrow as pa
-
-            flat = np.concatenate(sigs_out)
-            sig_arr = pa.FixedSizeListArray.from_arrays(
-                pa.array(flat, type=pa.int64()), k
-            ).cast(pa.list_(pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids_out, type=id_type), sig_arr],
-                names=["id", "__psig"],
-            )
+            yield emit()
 
     part = staged.mapInArrow(partial, schema=out_schema)
     # layout-independent merge: one collect_list aggregate (cheap to

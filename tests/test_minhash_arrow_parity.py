@@ -124,3 +124,24 @@ def test_xx64_family_unchanged_pure_jvm(spark, docs):
     )
     plan = sig._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" not in plan and "ArrowEval" not in plan
+
+
+def test_arrow_signature_flushes_every_n_docs(spark, docs, monkeypatch):
+    """With a flush every 2 docs and 7-row Arrow batches, one partition
+    emits many partial batches and carries a doc's run across both batch
+    and flush boundaries; the signatures must still equal the oracle."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MINHASH_PARTIAL_FLUSH_DOCS", 2)
+    staged = _staged(spark, docs)
+    ref = _as_map(_md5_signatures_agg(staged, num_hashes=64).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = _as_map(
+            _md5_signatures_from_staged(staged.coalesce(1), num_hashes=64).collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert got == ref and len(got) == 6
