@@ -1055,7 +1055,7 @@ def a2(spark, sf_dir):
 )
 def a4(spark, sf_dir):
     book = _book(spark, sf_dir)
-    # tier auto-select on rows-per-group: the fixture is 10 symbols
+    # the rows-per-group hint picks the tier: the fixture is 10 symbols
     # (suppkey % 10) x the fixed ~2526-day TPC-H shipdate span, so the
     # group cardinality is known and the hint needs only the parquet
     # FOOTER row count — r13: this was a count() Spark job (~0.4 s of
@@ -1063,7 +1063,7 @@ def a4(spark, sf_dir):
     rpg = _parquet_rowcount(f"{sf_dir}/lineitem.parquet") / (10 * 2526)
     return depth_series(
         book, 3, keys=["symbol"], tiebreak_cols=["okey", "lnum", "amount"],
-        strategy="auto", rows_per_group=rpg,
+        rows_per_group=rpg,
     )
 
 
@@ -3281,7 +3281,7 @@ def dedup_simhash(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return simhash_near_pairs(
         docs, id_col="doc_id", text_col="text", prefix_bits=12,
-        max_hamming=6, hash_family="md5",
+        max_hamming=6,
     ).select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 

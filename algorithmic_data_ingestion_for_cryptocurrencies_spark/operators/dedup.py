@@ -5,21 +5,26 @@ has id-set dedup — ``news_adapter.py:139,153-156``).
 Five tiers, each fully distributed:
 
 - :func:`exact_dedup` — hash-groupBy on content columns.
-- :func:`ngram_shingles` / :func:`jaccard_similar_pairs` — exact
-  n-gram Jaccard via shingle-inverted-index self-join (the candidate
-  generation only materializes co-shingled pairs, never the n² grid).
+- :func:`jaccard_similar_pairs` — exact n-gram Jaccard via
+  shingle-inverted-index self-join (the candidate generation only
+  materializes co-shingled pairs, never the n² grid).
 - :func:`minhash_dedup_pairs` — MinHash+LSH banding: shingles ->
-  minhash signature (k permutations via seeded xxhash64) -> band
-  buckets -> bucket equi-join; candidates verified with exact
-  signature similarity. Scales as O(docs × k) + join on band keys.
-- :func:`simhash` / :func:`simhash_near_pairs` — 64-bit SimHash with
-  per-bit majority vote; near-dups = equal hash (or banded prefix).
+  minhash signature (k permutations) -> band buckets -> bucket
+  equi-join; candidates verified with signature agreement. Scales as
+  O(docs × k) + join on band keys.
+- :func:`simhash_near_pairs` — 63-bit SimHash with per-bit majority
+  vote over per-token md5 hashes; near-dups = same prefix block and
+  small Hamming distance.
 - :func:`embedding_near_pairs` (in :mod:`.similarity`) — cosine tier.
 
-All hashing uses ``xxhash64`` (JVM built-in, deterministic across the
-cluster); the one Python-boundary stage is the md5-family signature
-run-min (vectorized NumPy over Arrow batches, exact int64 arithmetic —
-see :func:`_md5_signatures_from_staged`), which outruns the 64-MIN JVM
+Shingle keys and content keys use ``xxhash64`` (JVM built-in,
+deterministic across the cluster). MinHash has two hash families
+(:func:`minhash_signatures`): ``xx64``, a pure-JVM aggregate that
+backs the incremental store, and the portable ``md5`` family the
+registry and its DuckDB oracle share; SimHash uses md5 only. The one
+Python-boundary stage is the md5-family signature run-min (vectorized
+NumPy over Arrow batches, exact int64 arithmetic — see
+:func:`_md5_signatures_from_staged`), which outruns the 64-MIN JVM
 aggregate both in Catalyst planning and per-row execution.
 """
 
@@ -99,50 +104,6 @@ def exact_dedup(
 def tokenize(col: Column | str) -> Column:
     """Whitespace word split of the normalized text."""
     return F.split(normalize_text(col), " ")
-
-
-def ngram_shingles(col: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), built with higher-order
-    functions — no UDF. Documents shorter than n words yield their
-    full text as the single shingle.
-
-    The token array is BOUND once per row (``functions/hof.py``):
-    referencing the tokenize expression from the per-shingle lambda
-    re-evaluates the regex+split per shingle — measured 18.3 s vs
-    2.7 s for identical output over 150k docs (r6)."""
-    from ..functions.hof import bind_array
-
-    def body(ws: Column) -> Column:
-        k = F.size(ws) - F.lit(n - 1)
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-            )
-        )
-
-    return bind_array(tokenize(col), body)
-
-
-def ngram_shingle_hashes(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as ``xxhash64`` of the token
-    slice — the int64-keyed twin of :func:`ngram_shingles`: the n-gram
-    string never materializes (``xxhash64`` hashes the sliced array
-    directly) and the distinct runs over longs. Token arrays and
-    joined strings are a bijection (tokens cannot contain whitespace),
-    so set identity matches the string form absent a 2^-64 collision."""
-    from ..functions.hof import bind_array
-
-    def body(ws: Column) -> Column:
-        k = F.size(ws) - F.lit(n - 1)
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.xxhash64(F.slice(ws, i, n)),
-            )
-        )
-
-    return bind_array(tokenize(col), body)
 
 
 def _token_window_rows(
@@ -255,8 +216,8 @@ def shingle_rows(
     text_col: str,
     n: int = 3,
 ) -> DataFrame:
-    """Distinct (id, shingle) rows — the exploded twin of
-    :func:`ngram_shingles`: one shuffle (the distinct)."""
+    """Distinct (id, shingle) rows: :func:`exploded_shingles` plus one
+    shuffle (the distinct)."""
     return exploded_shingles(df, id_col=id_col, text_col=text_col, n=n).distinct()
 
 
@@ -441,22 +402,6 @@ def contamination_check(
     )
 
 
-def minhash_signature(col: Column | str, *, num_hashes: int = 64, n: int = 3) -> Column:
-    """MinHash signature: min over shingles of xxhash64(shingle, seed_i)
-    for each of ``num_hashes`` seeds. Array column, JVM-side.
-
-    Shingles enter as int64 slice hashes (:func:`ngram_shingle_hashes`)
-    so the k seeded hashes each fold 8 bytes instead of a ~25-byte
-    string, and the shingle strings are never built. Seed-hashing a
-    uniform hash preserves the min-hash estimator (the composition is
-    still a uniform family per seed); signature VALUES differ from a
-    string-shingled signature, so compare signatures only against
-    signatures produced by the same pipeline (the incremental store
-    recomputes on its own path, unaffected)."""
-    shingles = ngram_shingle_hashes(col, n)
-    return minhash_signature_from_shingles(shingles, num_hashes=num_hashes)
-
-
 #: modulus of the portable Carter-Wegman permutation family (md5
 #: hash_family): 2^31 - 1, so a_i*v + b_i stays well inside BIGINT
 #: (v < 2^32, a_i < 2^31 → product < 2^63) on both engines
@@ -479,28 +424,6 @@ def minhash_coeffs(num_hashes: int, seed: int = 913) -> list[tuple[int, int]]:
         (rnd.randrange(1, MINHASH_MERSENNE31), rnd.randrange(MINHASH_MERSENNE31))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature_from_shingles(shingles: Column, *, num_hashes: int = 64) -> Column:
-    """Signature over a precomputed shingle-array column. The shingle
-    expression is BOUND once (``functions/hof.py``) before the k
-    per-seed mins — inlining it k times used to make Catalyst build k
-    copies of the tokenize/slice pipeline (measured 20x at k=64)."""
-    from ..functions.hof import bind_array
-
-    # NB: the lambda must take exactly ONE parameter — PySpark passes
-    # (element, index) to two-parameter lambdas in F.transform, which
-    # would clobber a default-bound seed (round-1 defect: all k hashes
-    # collapsed to xxhash64(shingle, position)).
-    def seeded(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return bind_array(
-        shingles,
-        lambda shs: F.array(
-            *[F.array_min(F.transform(shs, seeded(i))) for i in range(num_hashes)]
-        ),
-    )
 
 
 def minhash_signatures(
@@ -526,10 +449,10 @@ def minhash_signatures(
     combines map-side to one row per document.
 
     Shingles enter as int64 slice hashes (the
-    :func:`exploded_shingle_hashes` keying, matching
-    :func:`minhash_signature`): each of the k seeded hashes folds 8
-    bytes instead of a ~25-byte string and the n-gram string is never
-    built. Seed-hashing a uniform hash preserves the estimator.
+    :func:`exploded_shingle_hashes` keying): each of the k seeded
+    hashes folds 8 bytes instead of a ~25-byte string and the n-gram
+    string is never built. Seed-hashing a uniform hash preserves the
+    estimator.
 
     ``hash_family``: ``"xx64"`` (default, the fast JVM path above) or
     ``"md5"`` — a cross-engine-portable family (r11: MD5 is the one
@@ -815,6 +738,8 @@ def banded_buckets(
     family ``md5`` of the ``'|'``-joined string slice — matching
     DuckDB ``md5(ARRAY_TO_STRING(sig[lo:hi], '|'))``). Candidates
     only materialize for banded collisions."""
+    if hash_family not in ("xx64", "md5"):
+        raise ValueError(f"unknown hash_family: {hash_family!r}")
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rows_per_band = num_hashes // bands
@@ -845,6 +770,14 @@ def banded_buckets(
             )
         ).alias("bb"),
     ).select("id", "sig", "bb.band", "bb.bucket")
+
+
+def _est_jaccard(num_hashes: int) -> Column:
+    """MinHash Jaccard estimate of a candidate pair: the fraction of
+    the ``num_hashes`` positions where columns ``sig_a`` and ``sig_b``
+    agree."""
+    agree = F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int"))
+    return F.size(F.filter(agree, lambda v: v == 1)) / F.lit(float(num_hashes))
 
 
 def minhash_dedup_pairs(
@@ -923,19 +856,10 @@ def minhash_dedup_pairs(
     sig_frame = banded.filter(F.col("band") == 0).select("id", "sig")
     sa = sig_frame.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig_frame.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        )
-        / F.lit(float(num_hashes))
-    )
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("est_jaccard", est)
+        .withColumn("est_jaccard", _est_jaccard(num_hashes))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -1056,52 +980,6 @@ def dedup_survivors(
     )
 
 
-def simhash(col: Column | str, *, bits: int = 64) -> Column:
-    """SimHash fingerprint: per-bit majority vote over token hashes.
-
-    Expressed as 64 conditional sums over the exploded-token-free
-    aggregate form: we fold the token array with ``aggregate`` so the
-    whole fingerprint is one expression per row — no explode, no
-    shuffle, no UDF.
-    """
-    tokens = tokenize(col)
-
-    # F.shiftright/shiftleft require PYTHON-INT bit offsets, so the bit
-    # loop is unrolled in Python (round-1 defect: a Column from
-    # F.sequence crashed at plan build with NOT_ITERABLE).
-    def token_votes(tok: Column) -> Column:
-        h = F.xxhash64(tok)
-        return F.array(
-            *[
-                (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).cast("int")
-                for b in range(bits)
-            ]
-        )
-
-    # vote vector: for each bit, sum(+1/-1) across tokens
-    votes = F.aggregate(
-        tokens,
-        F.array(*[F.lit(0)] * bits).cast("array<int>"),
-        lambda acc, tok: F.zip_with(acc, token_votes(tok), lambda a, v: a + v),
-    )
-
-    # assemble: sum(2^b where vote > 0); bit 63 keeps the sign bit
-    # off. The vote aggregate is BOUND once (functions/hof.py) — the
-    # 63-term sum would otherwise embed (and re-evaluate) the whole
-    # token fold per bit
-    def assemble(vs: Column) -> Column:
-        fp = F.lit(0).cast("long")
-        for b in range(min(bits, 63)):
-            fp = fp + F.when(
-                F.element_at(vs, b + 1) > 0, F.lit(1 << b).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return fp
-
-    from ..functions.hof import bind_array
-
-    return bind_array(votes, assemble)
-
-
 def simhash_md5_fingerprints(
     df: DataFrame, *, id_col: str, text_col: str
 ) -> DataFrame:
@@ -1119,8 +997,7 @@ def simhash_md5_fingerprints(
     ONE md5 + 16 nibble columns per token row in a single projection
     (codegen CSE shares the digest), 64 conditional-SUM votes, then
     the 63-term fingerprint assembly. Docs with ZERO tokens drop out
-    (no rows to vote) — unlike the ``xx64`` column form, which gives
-    empty docs fingerprint 0.
+    (no rows to vote).
     """
     tok = df.select(
         F.col(id_col).alias("id"),
@@ -1162,28 +1039,15 @@ def simhash_near_pairs(
     text_col: str,
     prefix_bits: int = 16,
     max_hamming: int = 3,
-    hash_family: str = "xx64",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: block on the top ``prefix_bits``
-    (cheap LSH), verify Hamming distance <= ``max_hamming`` via
-    bit_count(xor). Production variant would rotate the blocking
-    prefix over several permutations for full recall.
-
-    ``hash_family="md5"`` swaps the per-token hash for the portable
-    MD5 family (:func:`simhash_md5_fingerprints`) so a DuckDB oracle
-    can reproduce the pairs exactly; fingerprint VALUES differ between
-    families."""
-    if hash_family == "md5":
-        hashed = simhash_md5_fingerprints(
-            df, id_col=id_col, text_col=text_col
-        )
-    elif hash_family == "xx64":
-        hashed = df.select(
-            F.col(id_col).alias("id"), simhash(text_col).alias("sh")
-        )
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    hashed = hashed.withColumn("block", F.shiftright("sh", 64 - prefix_bits))
+    """Near-dup pairs by SimHash (:func:`simhash_md5_fingerprints`, so
+    a DuckDB oracle reproduces the pairs exactly): block on the top
+    ``prefix_bits`` (cheap LSH), verify Hamming distance <=
+    ``max_hamming`` via bit_count(xor). Production variant would rotate
+    the blocking prefix over several permutations for full recall."""
+    hashed = simhash_md5_fingerprints(
+        df, id_col=id_col, text_col=text_col
+    ).withColumn("block", F.shiftright("sh", 64 - prefix_bits))
     # r14 (guide §2.4): same exchange-sharing device as the minhash /
     # jaccard self-joins — shuffle-hash on the block key so the
     # fingerprint build (per-token md5 + 64 vote sums on the portable

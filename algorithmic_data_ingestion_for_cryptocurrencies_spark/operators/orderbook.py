@@ -62,370 +62,116 @@ def spread_series(df: DataFrame, *, ts_col: str = "ts", side_col: str = "side",
     )
 
 
-#: rows per (keys, ts) group above which the "prune" tier beats the
-#: fused single-exchange tier (interleaved min-of-N A/B, r6/r7:
-#: 238 rows/group → fused wins ~10%; 714 → prune wins ~20%;
-#: 2400 → prune wins ~13%)
+#: rows per (keys, ts) group at or above which :func:`depth_series`
+#: runs the prune tier instead of the fused single-exchange window tier
+#: (interleaved min-of-N A/B, r6/r7: 238 rows/group → window wins ~10%;
+#: 714 → prune wins ~20%; 2400 → prune wins ~13%)
 AUTO_PRUNE_MIN_ROWS_PER_GROUP = 500.0
 
 
 def depth_series(df: DataFrame, n_levels: int = 5, *, ts_col: str = "ts",
                  side_col: str = "side", price_col: str = "price",
                  amount_col: str = "amount", keys=(),
-                 tiebreak_cols=(), pre_partition: int | None = None,
-                 strategy: str = "auto",
+                 tiebreak_cols=(),
                  rows_per_group: float | None = None) -> DataFrame:
     """Top-N levels per (keys, ts, side) pivoted to ``bid_depth_i`` /
     ``ask_depth_i`` amount columns — ``orderbook_features.py:140-157``.
-    Both physical tiers below are single-shuffle; book depth per
-    (ts, side) is bounded (exchange levels), so the shape holds at
-    100-TB scale.
+    Levels rank by price (bids descending, asks ascending), then
+    ``tiebreak_cols``, then amount, so tied prices resolve
+    deterministically.
 
-    ``"object"`` tier shape: ONE ``groupBy(keys, ts)`` whose aggregate collects
-    each side's levels as a list of structs, sorted in-aggregate with
-    ``sort_array`` and sliced with ``element_at`` — a single shuffle;
-    no rank window (which needs a full sort exchange on (keys, ts,
-    side)) and no pivot (a second exchange). Book depth per (ts, side)
-    is bounded (exchange levels), so the collected lists are tiny and
-    the shape holds at 100-TB scale. Struct sort order is
-    lexicographic by field: ``(-price, *tiebreaks, amount)`` for bids
-    and ``(price, *tiebreaks, amount)`` for asks reproduce the ranked
-    ordering exactly; ``tiebreak_cols`` make it deterministic when
-    price ties.
+    ``rows_per_group`` — the expected rows per (keys, ts) group — picks
+    one of two physical tiers, both producing identical rows
+    (pytest-asserted):
 
-    The one exchange is placed BEFORE the aggregation (an explicit
-    repartition on the group keys that the aggregate then reuses —
-    still a single shuffle) rather than letting the planner run a
-    map-side partial ``collect_list`` first: a collect-style partial
-    reduces nothing (every level still crosses the wire, boxed in a
-    list instead of a row), and on a compact scan with few splits it
-    serializes the whole object aggregation onto the scan tasks —
-    measured 2x slower at sf0.1 (3 splits, 12.6x DuckDB; r3 verdict).
-    Exchange-first runs the object aggregation at full reduce
-    parallelism. ``pre_partition`` defaults to
-    ``spark.sql.shuffle.partitions``; the explicit partition count
-    keeps AQE from byte-coalescing this CPU-heavy, small-bytes stage.
+    - **window** (below ``AUTO_PRUNE_MIN_ROWS_PER_GROUP``): ONE
+      exchange on (keys, ts) and one Window operator ordered side-major
+      ('ask' < 'bid', so an ask's level is its row_number and a bid's
+      is row_number − n_ask, with n_ask an unbounded-frame sum over the
+      same spec); the conditional-max pivot reuses the window's
+      partitioning, so rank, filter and pivot share the post-shuffle
+      stage. The partition count is pinned to
+      ``spark.sql.shuffle.partitions`` so AQE does not byte-coalesce
+      this CPU-heavy, small-bytes stage.
+    - **prune** (at or above it): a per-(keys, ts, side) rank whose
+      literal ``row_number() <= n`` filter becomes a partial
+      WindowGroupLimit below the exchange, so each scan task ships at
+      most ~2n rows per group instead of the whole book, at the price
+      of a second, tiny exchange for the pivot.
 
-    ``strategy`` picks the physical tier — measured, not guessed
-    (tools/bench_depth_tiers.py, min-of-7, r5):
+    The crossover is measured (r6/r7, see the constant; min-of-5 r6:
+    window 0.88 s vs prune 1.64 s at sf0.1 ~24 rows/group, 3.76 s vs
+    3.48 s at sf3 ~720 rows/group). Three other shapes — a collect/
+    sort_array object aggregate, salted partial top-k, and a per-side
+    window over a (keys, ts) repartition — were measured in r5–r11 and
+    lost or tied at every scale (artifacts/r05, r08, r11).
 
-    - ``"auto"`` (default, r10): picks ``"prune"`` when the expected
-      rows per (keys, ts) group — the caller's ``rows_per_group``
-      hint, else a one-job count/HLL estimate — reaches
-      ``AUTO_PRUNE_MIN_ROWS_PER_GROUP``, else ``"window"``; the two
-      regimes' measured crossover (r6/r8 A/B) is documented on the
-      constant above.
-    - ``"window"``: the r5 FUSED single-exchange rank tier —
-      one window over (keys, ts) ordered side-major ('ask' < 'bid', so
-      ask level = row_number and bid level = row_number − n_ask, with
-      n_ask an unbounded-frame sum in the SAME window spec → one
-      Window operator), then the conditional-max pivot reuses the
-      window's (keys, ts) partitioning: rank, filter, and pivot all in
-      the single post-shuffle stage. Ties the object tier at sf0.1 and
-      sf1-equivalent (0.55 s / 0.99 s) with none of its JVM object
-      churn, and its sort spills gracefully — the default for a real
-      cluster. (The r4 two-exchange variant — per-(keys,ts,side)
-      window + separate pivot shuffle — lost at both scales, 1.33 s /
-      1.13 s, despite map-side WindowGroupLimit pruning: at bounded
-      book depth the second sort+exchange stage costs more than the
-      prune saves. For pathologically deep books where shipping all
-      levels dominates, that shape would win the wire — resurrect it
-      from the bench script if that regime ever materializes.)
-    - ``"prune"`` (r6): per-(keys, ts, side) rank whose literal
-      ``row_number() <= n`` filter becomes a PARTIAL WindowGroupLimit
-      below the exchange — each scan task keeps ≤n rows per (group,
-      side) locally, so the wire carries ~2n rows per group instead
-      of the whole book, at the price of a tiny second post-filter
-      exchange for the pivot. Crosses over the fused tier as
-      rows-per-group grows (min-of-5, r6: 1.64 s vs 0.88 s at sf0.1
-      ~24 rows/group, 3.48 s vs 3.76 s at sf3 ~720 rows/group) — the
-      tier to pick for deep books / few series.
-    - ``"object"``: the single-shuffle collect/sort_array aggregate
-      above. Ties the fused tier at small group sizes; degrades on
-      deep books (5.6 s at sf3 — JVM object churn grows with group
-      size), kept as the window-memory fallback.
-    - ``"salted"`` (r8 prototype, verdict #3): no sort exchange —
-      salt-capped collect_list top-n partials per (group, side, salt)
-      merged by a second tiny aggregate. Measured LOSER at every tier
-      (tools/bench_depth_salted.py, interleaved min-of-5, one
-      session): sf1 1.41 s vs window 0.91 / prune 0.97; sf3 3.43 vs
-      2.46 / 1.81; sf10 17.2 vs 10.1 / 6.3 — the per-row struct
-      build + ObjectHashAggregate churn on ALL rows costs more than
-      the sort it avoids. Kept as the measured record; ``auto`` never
-      selects it.
-
-    - ``"window2"`` (r11, attempt #4 on the sf1 residual): per-side
-      window partition like ``prune`` (no full-frame n_ask count,
-      WindowGroupLimit row pruning) WITH the explicit subset
-      ``repartition(keys, ts)`` of ``window`` — subset hash
-      partitioning satisfies the window's ClusteredDistribution and
-      the pivot reuses it, so it is single-exchange like ``window``.
-      Measured (interleaved round-robin min-of-5 with a no-change
-      control, tools/bench_depth_window2.py, r11): sf1 1.06 vs window 1.15 /
-      prune 1.25 / control 1.05; sf3 2.30 vs 2.42 / 2.19 / 2.50;
-      sf10 8.17 vs 8.03 / 6.94 / 8.71 — a TIE with ``window`` at
-      every tier once the control's position bias is subtracted (the
-      identical-code control "won" its pairings by more than window2
-      did). Kept as the measured record; ``auto`` never selects it.
-
-    The a4 sf1 gap is hereby a documented hold, closed after four
-    physical shapes (object / window / prune / salted, + window2):
-    the auto choices (window at sf1, prune at sf3/sf10) are the best
-    measured, and the r7 floor analysis stands (residual = executor
-    sort throughput on many small groups vs DuckDB's
-    bare-aggregate-cost query).
-
-    All tiers produce identical rows for any input (same deterministic
-    tiebreak ordering; pytest-asserted).
-
-    Measured floor note (r6, sf3 = 18M rows): scan 0.38 s,
-    +repartition exchange 1.05 s, +sort 1.85 s; the full fused query
-    is ~2.9-3.8 s vs DuckDB's 0.88 s. The plan shape is already
-    minimal (one exchange, ONE Window operator, map-side pivot); the
-    residual gap is executor sort+window throughput on 25k SMALL
-    groups — the same window machinery BEATS DuckDB on the flagship
-    family where partitions are few and large. Structural options
-    exhausted short of a native columnar top-k aggregate.
+    Without a hint, ONE count + HLL-distinct job over the group-key
+    columns estimates it at plan-build time (warned: it makes the call
+    eager; hot-path callers pass the hint — a parquet footer row count
+    over a known group cardinality is enough, see the a4 registry
+    query). A streaming frame cannot run that job and resolves to the
+    window tier.
     """
     keys = list(keys)
-    n_shuffle = pre_partition or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    if strategy == "auto":
-        # tier selection on the measured crossover: deep books win with
-        # the map-side WindowGroupLimit prune, shallow books with the
-        # fused single-exchange tier (r10: auto is the DEFAULT — the
-        # r9 verdict's one non-floor-bound weak cell was callers
-        # defaulting to the fused tier on deep books). The caller may
-        # supply the expected rows-per-(keys, ts) estimate — it knows
-        # its data (a metadata row count over known group cardinality
-        # costs ~0.1 s; see the a4 registry query). Without a hint, ONE
-        # cheap map-reduce estimates it (count + HLL distinct over the
-        # group key hash — an aggregate job over the pruned 2-3 column
-        # scan, a small fraction of the main query at any SF; hot-path
-        # callers should pass the hint to skip it).
-        if rows_per_group is None and df.isStreaming:
-            # a streaming frame cannot run the estimate job (and the
-            # rank tiers are batch operators anyway): keep the old
-            # lazy default rather than raising at plan-build time
-            rows_per_group = 0.0
-        if rows_per_group is None:
-            # NOTE this makes an unhinted auto call EAGER: one
-            # count+HLL job over the pruned group-key columns runs at
-            # plan-BUILD time (and the upstream plan executes again in
-            # the real query). Callers composing plans ahead of data,
-            # or on a hot path, should pass the hint or a fixed tier.
-            # r11 (advisor): warn loudly — pre-r10 callers got a pure
-            # lazy builder here, so the silent semantics change is
-            # surfaced instead of discovered in a trace.
-            import warnings
+    if rows_per_group is None and df.isStreaming:
+        rows_per_group = 0.0
+    if rows_per_group is None:
+        import warnings
 
-            warnings.warn(
-                "depth_series(strategy='auto') without rows_per_group "
-                "runs an eager count+HLL estimate job at plan-build "
-                "time; pass rows_per_group= or strategy='window'/"
-                "'prune' to keep plan construction lazy",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            est = df.select(
-                F.count(F.lit(1)).alias("__n"),
-                F.approx_count_distinct(
-                    F.xxhash64(*[F.col(c) for c in (*keys, ts_col)])
-                ).alias("__g"),
-            ).first()
-            rows_per_group = (
-                est["__n"] / max(est["__g"], 1) if est["__n"] else 0.0
-            )
-        strategy = (
-            "prune"
-            if rows_per_group >= AUTO_PRUNE_MIN_ROWS_PER_GROUP
-            else "window"
+        warnings.warn(
+            "depth_series() without rows_per_group runs an eager "
+            "count+HLL estimate job at plan-build time; pass "
+            "rows_per_group= to keep plan construction lazy",
+            RuntimeWarning,
+            stacklevel=2,
         )
-    # shared across the rank tiers (r11 review: the sort key and the
-    # conditional-max pivot existed in 4 copies; the tiers' row
-    # identity is pytest-pinned, so a fix applied to one copy and not
-    # the others would break it silently — single definitions now)
+        est = df.select(
+            F.count(F.lit(1)).alias("__n"),
+            F.approx_count_distinct(
+                F.xxhash64(*[F.col(c) for c in (*keys, ts_col)])
+            ).alias("__g"),
+        ).first()
+        rows_per_group = est["__n"] / max(est["__g"], 1) if est["__n"] else 0.0
     sort_key = F.when(
         F.col(side_col) == "bid", -F.col(price_col)
     ).otherwise(F.col(price_col))
+    order = [sort_key, *[F.col(c) for c in tiebreak_cols], F.col(amount_col)]
+    df = df.filter(F.col(side_col).isin("bid", "ask"))
 
-    def ranked_pivot(ranked: DataFrame) -> DataFrame:
-        return ranked.groupBy(*keys, ts_col).agg(*[
-            F.max(
-                F.when(
-                    (F.col(side_col) == side) & (F.col("__lvl") == i),
-                    F.col(amount_col),
-                )
-            ).alias(f"{side}_depth_{i}")
-            for side in ("bid", "ask")
-            for i in range(1, n_levels + 1)
-        ])
-
-    if strategy == "window":
-        # SINGLE-exchange rank tier (r5; the r4 variant partitioned the
-        # window by (keys, ts, side) and paid a second exchange for the
-        # (keys, ts) pivot). One window over (keys, ts) ordered with
-        # side FIRST ('ask' < 'bid' lexicographically, so asks rank
-        # 1..n_ask and a bid's per-side level is rn - n_ask, with
-        # n_ask an unordered count over the same partitioning — same
-        # sort, no extra exchange). The explicit repartition on
-        # (keys, ts) satisfies the window's required distribution AND
-        # the pivot groupBy's, so rank, filter, and the conditional-max
-        # pivot all run inside the one post-shuffle stage; the pinned
-        # partition count keeps AQE from byte-coalescing this
-        # CPU-heavy, small-bytes stage (same reasoning as the object
-        # tier below).
-        df = df.filter(F.col(side_col).isin("bid", "ask")).repartition(
-            n_shuffle, *[F.col(c) for c in (*keys, ts_col)]
+    if rows_per_group >= AUTO_PRUNE_MIN_ROWS_PER_GROUP:
+        w = Window.partitionBy(ts_col, *keys, side_col).orderBy(*order)
+        ranked = df.withColumn("__lvl", F.row_number().over(w))
+    else:
+        n_shuffle = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        # partition keys listed TS-FIRST: the window's required sort is
-        # (partition keys in listed order) ++ order keys, and Spark's
-        # sorter radix-compares an 8-byte prefix of the LEADING column
-        # only — a high-cardinality leading ts resolves most
-        # comparisons in the prefix, where a handful of symbols first
-        # would tie almost every prefix and fall back to full-row
-        # compares (interleaved A/B at sf3: ~11% off the query,
-        # /tmp-logged r6; identical output rows either way)
-        w_rn = Window.partitionBy(ts_col, *keys).orderBy(
-            F.col(side_col), sort_key,
-            *[F.col(c) for c in tiebreak_cols], F.col(amount_col),
-        )
-        # same partitioning AND ordering as w_rn (frame differs) so
-        # Spark evaluates rank and count in ONE Window operator pass
-        n_ask = F.sum(
-            F.when(F.col(side_col) == "ask", 1).otherwise(0)
-        ).over(
+        df = df.repartition(n_shuffle, *[F.col(c) for c in (*keys, ts_col)])
+        # partition keys listed TS-FIRST: the window's sort radix-compares
+        # an 8-byte prefix of the leading column only, and a
+        # high-cardinality ts resolves most comparisons there (~11% off
+        # the query at sf3, r6; identical rows either way)
+        w_rn = Window.partitionBy(ts_col, *keys).orderBy(F.col(side_col), *order)
+        # same partitioning AND ordering as w_rn (frame differs), so rank
+        # and count evaluate in ONE Window operator pass
+        n_ask = F.sum(F.when(F.col(side_col) == "ask", 1).otherwise(0)).over(
             w_rn.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         )
         lvl = F.row_number().over(w_rn) - F.when(
             F.col(side_col) == "bid", n_ask
         ).otherwise(F.lit(0))
-        ranked = df.withColumn("__lvl", lvl).filter(F.col("__lvl") <= n_levels)
-        return ranked_pivot(ranked)
-    if strategy == "window2":
-        # r11 candidate (verdict #7, the a4 sf1 residual): rank
-        # per-(ts, keys, SIDE) like 'prune' — so the literal
-        # row_number() <= n filter becomes a WindowGroupLimit with a
-        # PARTIAL mode below the exchange (map-side book pruning) and
-        # no full-frame n_ask count is needed — but with the explicit
-        # (keys, ts) repartition of the 'window' tier: hash
-        # partitioning on a SUBSET of the window's clustering keys
-        # satisfies its ClusteredDistribution, and the pivot groupBy
-        # reuses the same partitioning, so rank, filter, and pivot all
-        # run in ONE post-shuffle stage. Same total sort order as
-        # 'window' (ts, keys, side, sort_key, ...), one exchange like
-        # 'window', map-side pruning like 'prune'.
-        staged = df.filter(F.col(side_col).isin("bid", "ask")).repartition(
-            n_shuffle, *[F.col(c) for c in (*keys, ts_col)]
-        )
-        w = Window.partitionBy(ts_col, *keys, side_col).orderBy(
-            sort_key, *[F.col(c) for c in tiebreak_cols], F.col(amount_col)
-        )
-        ranked = staged.withColumn(
-            "__lvl", F.row_number().over(w)
-        ).filter(F.col("__lvl") <= n_levels)
-        return ranked_pivot(ranked)
-    if strategy == "prune":
-        # DEEP-BOOK tier (r6): per-(keys, ts, side) rank with a literal
-        # row_number() <= n filter directly above the window, which the
-        # optimizer rewrites to a WindowGroupLimit with a PARTIAL mode
-        # below the exchange — each scan task keeps at most n rows per
-        # (group, side) locally, so the wire carries ~2n rows per group
-        # instead of the whole book. The price is a second (tiny,
-        # post-filter) exchange for the pivot. Wins when rows-per-group
-        # is large enough that shipping the unpruned book dominates
-        # (measured crossover vs the fused tier: tools/
-        # bench_depth_tiers.py); the same ts-first sort-prefix ordering
-        # as the fused tier applies.
-        w = Window.partitionBy(ts_col, *keys, side_col).orderBy(
-            sort_key, *[F.col(c) for c in tiebreak_cols], F.col(amount_col)
-        )
-        ranked = (
-            df.filter(F.col(side_col).isin("bid", "ask"))
-            .withColumn("__lvl", F.row_number().over(w))
-            .filter(F.col("__lvl") <= n_levels)
-        )
-        return ranked_pivot(ranked)
-    if strategy == "salted":
-        # SALTED PARTIAL TOP-K tier (r8 prototype, verdict #3): no sort
-        # exchange anywhere. Stage 1 hash-aggregates top-n per
-        # (keys, ts, side, salt) — collect_list into salt-capped lists,
-        # sort_array + slice truncate in-memory (the global top-n is a
-        # subset of the union of per-bucket top-n) — then stage 2
-        # merges the ≤ 2·S·n surviving entries per (keys, ts) and
-        # pivots. Exchange 1 ships every row (like the fused tier's)
-        # but feeds a HASH aggregate instead of a 2N-row SORT; exchange
-        # 2 is ~2·S·n entries per group. The salt caps stage-1 list
-        # length at ~rows/(2·S) per group, avoiding the object tier's
-        # churn-at-depth failure; deterministic salt (level identity
-        # hash) keeps the plan reproducible.
-        n_salt = 8
-        entry = F.struct(
-            sort_key.alias("k"),
-            *[F.col(c).alias(f"t{i}") for i, c in enumerate(tiebreak_cols)],
-            F.col(amount_col).alias("a"),
-        )
-        salt = F.pmod(
-            F.xxhash64(*(tiebreak_cols or (price_col, amount_col))),
-            F.lit(n_salt),
-        )
-        partial = (
-            df.filter(F.col(side_col).isin("bid", "ask"))
-            .groupBy(*keys, ts_col, side_col, salt.alias("__salt"))
-            .agg(
-                F.slice(
-                    F.sort_array(F.collect_list(entry)), 1, n_levels
-                ).alias("__top")
+        ranked = df.withColumn("__lvl", lvl)
+    ranked = ranked.filter(F.col("__lvl") <= n_levels)
+    return ranked.groupBy(*keys, ts_col).agg(*[
+        F.max(
+            F.when(
+                (F.col(side_col) == side) & (F.col("__lvl") == i),
+                F.col(amount_col),
             )
-        )
-        merged = partial.groupBy(*keys, ts_col).agg(*[
-            F.slice(
-                F.sort_array(
-                    F.flatten(
-                        F.collect_list(
-                            F.when(F.col(side_col) == side, F.col("__top"))
-                        )
-                    )
-                ),
-                1, n_levels,
-            ).alias(f"__{side}s")
-            for side in ("bid", "ask")
-        ])
-        out_cols: list = [*keys, ts_col]
-        for side in ("bid", "ask"):
-            for i in range(1, n_levels + 1):
-                out_cols.append(
-                    F.element_at(F.col(f"__{side}s"), i)["a"]
-                    .alias(f"{side}_depth_{i}")
-                )
-        return merged.select(*out_cols)
-    if strategy != "object":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    df = df.repartition(n_shuffle, *[F.col(c) for c in (*keys, ts_col)])
-
-    def side_entries(side: str) -> F.Column:
-        sort_key = -F.col(price_col) if side == "bid" else F.col(price_col)
-        entry = F.struct(
-            sort_key.alias("k"),
-            *[F.col(c).alias(f"t{i}") for i, c in enumerate(tiebreak_cols)],
-            F.col(amount_col).alias("a"),
-        )
-        return F.sort_array(
-            F.collect_list(F.when(F.col(side_col) == side, entry))
-        )
-
-    agg = df.groupBy(*keys, ts_col).agg(
-        side_entries("bid").alias("__bids"),
-        side_entries("ask").alias("__asks"),
-    )
-    out_cols: list = [*keys, ts_col]
-    for side, src in (("bid", "__bids"), ("ask", "__asks")):
-        for i in range(1, n_levels + 1):
-            out_cols.append(
-                F.element_at(F.col(src), i)["a"].alias(f"{side}_depth_{i}")
-            )
-    return agg.select(*out_cols)
+        ).alias(f"{side}_depth_{i}")
+        for side in ("bid", "ask")
+        for i in range(1, n_levels + 1)
+    ])
 
 
 def batch_orderbook(df: DataFrame, *, ts_col: str = "ts", side_col: str = "side",

@@ -39,7 +39,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.dedup import banded_buckets, exact_dedup, minhash_signatures
+from ..operators.dedup import (
+    _est_jaccard,
+    banded_buckets,
+    exact_dedup,
+    minhash_signatures,
+)
 
 _KEYS_DIR = "keys"
 _BANDS_DIR = "bands"
@@ -200,19 +205,8 @@ class IncrementalDedup:
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        est = (
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-                    ),
-                    lambda v: v == 1,
-                )
-            )
-            / F.lit(float(self.num_hashes))
-        )
         pairs = (
-            cand.withColumn("est_jaccard", est)
+            cand.withColumn("est_jaccard", _est_jaccard(self.num_hashes))
             .filter(F.col("est_jaccard") >= self.threshold)
             .select("id_a", "id_b", "est_jaccard")
             .localCheckpoint()
@@ -276,19 +270,8 @@ class IncrementalDedup:
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        est = (
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-                    ),
-                    lambda v: v == 1,
-                )
-            )
-            / F.lit(float(self.num_hashes))
-        )
         return (
-            cand.withColumn("est_jaccard", est)
+            cand.withColumn("est_jaccard", _est_jaccard(self.num_hashes))
             .filter(F.col("est_jaccard") >= self.threshold)
             .select("id_a", "id_b", "est_jaccard")
         )

@@ -98,11 +98,23 @@ def docs_sdf(spark):
 
 
 def test_minhash_signature_hashes_are_independent(docs_sdf):
-    rows = docs_sdf.select(
-        dedup.minhash_signature("text", num_hashes=32).alias("s")
-    ).collect()
-    for r in rows:
-        assert len(set(r["s"])) >= 30  # round-1 bug: 1 distinct of k
+    for family in ("xx64", "md5"):
+        rows = dedup.minhash_signatures(
+            docs_sdf, id_col="doc_id", text_col="text", num_hashes=32,
+            hash_family=family,
+        ).collect()
+        assert len(rows) == 3
+        for r in rows:
+            # round-1 bug: 1 distinct of k
+            assert len(set(r["sig"])) >= 30, (family, r["sig"])
+
+
+def test_banded_buckets_rejects_unknown_hash_family(docs_sdf):
+    sig = dedup.minhash_signatures(
+        docs_sdf, id_col="doc_id", text_col="text", num_hashes=8
+    )
+    with pytest.raises(ValueError, match="hash_family"):
+        dedup.banded_buckets(sig, num_hashes=8, bands=4, hash_family="MD5")
 
 
 def test_minhash_est_jaccard_tracks_exact(docs_sdf):
@@ -122,8 +134,11 @@ def test_simhash_builds_and_discriminates(docs_sdf):
         docs_sdf, id_col="doc_id", text_col="text", max_hamming=10
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
-    fp = docs_sdf.select(dedup.simhash("text").alias("f")).collect()
-    assert all(r["f"] >= 0 for r in fp)  # sign bit kept clear
+    fp = dedup.simhash_md5_fingerprints(
+        docs_sdf, id_col="doc_id", text_col="text"
+    ).collect()
+    assert len(fp) == 3
+    assert all(r["sh"] >= 0 for r in fp)  # sign bit kept clear
 
 
 def test_lang_id(spark):

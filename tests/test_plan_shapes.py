@@ -201,29 +201,6 @@ def test_resample_pre_cluster_shares_exchange_with_windows(spark):
                  keys=["symbol"], pre_cluster=["nope"])
 
 
-def test_depth_series_single_exchange_before_aggregate(spark):
-    """Top-N depth object tier: exactly one exchange, and it must sit
-    BELOW the object aggregation (exchange-first shape) — a map-side
-    partial collect_list reduces nothing and serializes the aggregation
-    onto the scan splits (r3 verdict: 12.6x DuckDB from exactly that)."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.orderbook import (
-        depth_series,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 10.0, 1.0, "bid"), (1, 11.0, 2.0, "ask"), (1, 9.5, 3.0, "bid")],
-        ["ts", "price", "amount", "side"],
-    )
-    out = depth_series(df, 2, strategy="object")
-    plan = explain_str(out, "formatted").split("\n\n")[0]
-    assert plan.count("Exchange") == 1
-    # tree prints top-down: every aggregate node is ABOVE the exchange
-    lines = plan.splitlines()
-    exchange_at = next(i for i, l in enumerate(lines) if "Exchange" in l)
-    agg_lines = [i for i, l in enumerate(lines) if "ObjectHashAggregate" in l]
-    assert agg_lines and all(i < exchange_at for i in agg_lines)
-
-
 def test_chunk_prep_pipeline_is_single_dedup_exchange(spark):
     """Capstone #2 (scrub -> chunk -> exact dedup -> repetition gate):
     everything around the dedup survivor must stay narrow — one data
@@ -243,12 +220,15 @@ def test_chunk_prep_pipeline_is_single_dedup_exchange(spark):
     assert "Window" not in plan, plan
 
 
-def test_depth_series_window_tier_matches_object_tier(spark):
+def test_depth_series_window_tier_matches_prune_tier(spark):
     """The two physical tiers must be row-identical on tied prices
-    (deterministic tiebreaks), and the fused window tier must be a
-    SINGLE exchange (rank, filter, and pivot all share the (keys, ts)
-    partitioning) with no ObjectHashAggregate and exactly one Window
-    operator (rank + n_ask fold into one window spec)."""
+    (deterministic tiebreaks) whichever way the tier is chosen: a
+    shallow hint, a deep hint, or no hint (the warned estimate job).
+    The fused window tier must be a SINGLE exchange (rank, filter, and
+    pivot all share the (keys, ts) partitioning) with no
+    ObjectHashAggregate and exactly one Window operator (rank + n_ask
+    fold into one window spec); the prune tier's rank filter must reach
+    a WindowGroupLimit."""
     import random
 
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.orderbook import (
@@ -268,63 +248,30 @@ def test_depth_series_window_tier_matches_object_tier(spark):
         rows, ["symbol", "ts", "okey", "price", "amount", "side"]
     )
     kw = dict(keys=["symbol"], tiebreak_cols=["okey"])
-    obj = depth_series(df, 3, strategy="object", **kw).orderBy("symbol", "ts").collect()
-    win = depth_series(df, 3, strategy="window", **kw).orderBy("symbol", "ts").collect()
-    prune = depth_series(df, 3, strategy="prune", **kw).orderBy("symbol", "ts").collect()
-    salted = depth_series(df, 3, strategy="salted", **kw).orderBy("symbol", "ts").collect()
-    win2 = depth_series(df, 3, strategy="window2", **kw).orderBy("symbol", "ts").collect()
-    assert obj == win
-    assert obj == prune
-    assert obj == salted
-    assert obj == win2
-    # auto tier resolves by rows-per-group and stays row-identical
-    auto_deep = depth_series(
-        df, 3, strategy="auto", rows_per_group=1e4, **kw
-    ).orderBy("symbol", "ts").collect()
-    auto_shallow = depth_series(
-        df, 3, strategy="auto", **kw
-    ).orderBy("symbol", "ts").collect()
-    assert auto_deep == obj and auto_shallow == obj
+    win = depth_series(df, 3, rows_per_group=0, **kw)
+    prune = depth_series(df, 3, rows_per_group=1e4, **kw)
+    with pytest.warns(RuntimeWarning, match="rows_per_group"):
+        unhinted = depth_series(df, 3, **kw)
+    want = win.orderBy("symbol", "ts").collect()
+    assert len(want) == 50
+    assert prune.orderBy("symbol", "ts").collect() == want
+    assert unhinted.orderBy("symbol", "ts").collect() == want
 
-    plan = explain_str(
-        depth_series(df, 3, strategy="window", **kw), "formatted"
-    ).split("\n\n")[0]
+    plan = explain_str(win, "formatted").split("\n\n")[0]
     assert "ObjectHashAggregate" not in plan
+    assert "WindowGroupLimit" not in plan
     assert plan.count("Exchange") == 1, plan
     win_ops = [ln for ln in plan.splitlines() if ln.lstrip("+- *(0123456789) ").startswith("Window")]
     assert len(win_ops) == 1, plan
+    # the unhinted estimate on this shallow book selects the window tier
+    uplan = explain_str(unhinted, "formatted").split("\n\n")[0]
+    assert "WindowGroupLimit" not in uplan
+    assert uplan.count("Exchange") == 1, uplan
 
     # prune tier: the rank filter must reach a WindowGroupLimit so the
     # per-(group, side) top-n prunes MAP-SIDE before the exchange
-    pplan = explain_str(
-        depth_series(df, 3, strategy="prune", **kw), "formatted"
-    ).split("\n\n")[0]
+    pplan = explain_str(prune, "formatted").split("\n\n")[0]
     assert "WindowGroupLimit" in pplan, pplan
-
-    # window2 (r11 record): per-side rank + subset repartition — the
-    # subset hash partitioning must satisfy BOTH the window and the
-    # pivot (single exchange) and keep the rank-limit rewrite
-    w2plan = explain_str(
-        depth_series(df, 3, strategy="window2", **kw), "formatted"
-    ).split("\n\n")[0]
-    assert w2plan.count("Exchange") == 1, w2plan
-    assert "WindowGroupLimit" in w2plan, w2plan
-
-    # auto: deep-book hint selects the prune tier, no/shallow hint the
-    # fused single-exchange tier
-    deep_plan = explain_str(
-        depth_series(df, 3, strategy="auto", rows_per_group=1e4, **kw),
-        "formatted",
-    ).split("\n\n")[0]
-    assert "WindowGroupLimit" in deep_plan, deep_plan
-    shallow_plan = explain_str(
-        depth_series(df, 3, strategy="auto", **kw), "formatted"
-    ).split("\n\n")[0]
-    assert "WindowGroupLimit" not in shallow_plan
-    assert shallow_plan.count("Exchange") == 1, shallow_plan
-
-    with pytest.raises(ValueError):
-        depth_series(df, 3, strategy="nope", **kw)
 
 
 def test_corpus_curation_pipeline_is_single_exchange(spark):

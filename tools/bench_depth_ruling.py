@@ -4,17 +4,19 @@ after 1.51x (r11) and ~1.3x (r10) — a hair-over-slack wobble history
 on a ~2.4 s cell. This tool puts every relevant number for the ruling
 in ONE interleaved quiet window per tier:
 
-- shipped:       the registry a4_depth exactly as benched (auto tier
-                 select including its rows-per-group count() job)
-- window/prune:  the two physical tiers called directly (no count)
+- shipped:       the registry a4_depth exactly as benched (tier picked
+                 from its footer-derived rows-per-group hint)
+- window/prune:  the two physical tiers, forced by a rows_per_group
+                 hint of 0 / AUTO_PRUNE_MIN_ROWS_PER_GROUP
 - floor:         bare book exchange+sort (the shape-matched minimal
                  data motion, same columns the shipped plan carries)
 - duckdb:        the oracle twin, same estimator
 
 plus derived ratios. The four-shape hold (r11, closed: object /
 window / prune / salted all measured, none beats the shipped pick
-beyond noise) is tier-independent — this extends its evidence to the
-sf3 cell specifically.
+beyond noise; the object and salted tiers were removed since) is
+tier-independent — this extends its evidence to the sf3 cell
+specifically.
 
 Usage: python tools/bench_depth_ruling.py [sf_dir ...]
 """
@@ -28,10 +30,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from algorithmic_data_ingestion_for_cryptocurrencies_spark import driver_queries as dq
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.orderbook import (
+    AUTO_PRUNE_MIN_ROWS_PER_GROUP,
     depth_series,
 )
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.session import (
@@ -66,8 +67,10 @@ def main() -> None:
 
         shapes = {
             "shipped": lambda: shipped_fn(spark, sf_dir),
-            "window": lambda: depth_series(book, 3, strategy="window", **KW),
-            "prune": lambda: depth_series(book, 3, strategy="prune", **KW),
+            "window": lambda: depth_series(book, 3, rows_per_group=0.0, **KW),
+            "prune": lambda: depth_series(
+                book, 3, rows_per_group=AUTO_PRUNE_MIN_ROWS_PER_GROUP, **KW
+            ),
             "floor_book_sort": floor_shape,
         }
         best = {k: None for k in shapes}

@@ -152,8 +152,9 @@ scan it serializes the object work onto however few splits the scan
 produced — so put the exchange FIRST (explicit repartition on the group
 keys, which the aggregate then reuses; still one shuffle) and run the
 object aggregation at full reduce parallelism. Measured: a4_depth
-object tier 12.6x -> ~2x DuckDB (r3->r4). Guarded by
-`test_depth_series_single_exchange_before_aggregate`.
+object tier 12.6x -> ~2x DuckDB (r3->r4). That tier was later
+removed (rule B's fused window tier replaced it), so no test guards
+this rule now.
 
 **B. Fuse a window with its downstream aggregation by partition
 alignment.** When a rank-then-pivot (or rank-then-groupBy) pipeline
@@ -164,7 +165,7 @@ ordering, ask level = row_number, bid level = row_number - n_ask) —
 the aggregate then reuses the window's partitioning and the whole
 pipeline is one exchange. Measured: 0.55s/0.99s (sf0.1/sf1) vs
 1.33s/1.13s for the two-exchange shape. Guarded by
-`test_depth_series_window_tier_matches_object_tier`.
+`test_depth_series_window_tier_matches_prune_tier`.
 
 **C. One Window operator per (partitionBy, orderBy) spec.** Window
 expressions sharing partitioning AND ordering evaluate in a single
@@ -172,7 +173,7 @@ Window pass even with different frames — derive auxiliary per-group
 scalars (counts, totals) as unbounded-frame aggregates over the SAME
 ordered spec rather than a separate unordered window, which plans a
 second operator. Guarded by the one-Window assertion in
-`test_depth_series_window_tier_matches_object_tier`.
+`test_depth_series_window_tier_matches_prune_tier`.
 
 **D. Keep top-k filters literally `row_number() <= k`.** Spark's
 InsertWindowGroupLimit only fires on a filter over the raw rank
