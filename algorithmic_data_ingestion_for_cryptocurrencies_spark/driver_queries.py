@@ -4287,7 +4287,8 @@ def st16_backtest_stream_curve(spark, sf_dir):
     import pandas as pd
 
     from .operators.signals import with_sma_crossover_signals
-    from .streaming.backtest_stream import chunked_backtest_batch
+    from .streaming._carry import chunked_batch
+    from .streaming.backtest_stream import backtest_op
 
     sig = with_sma_crossover_signals(
         _damped_market(spark, sf_dir), "close", 10, 50,
@@ -4298,14 +4299,15 @@ def st16_backtest_stream_curve(spark, sf_dir):
         .add("trade", "double").add("strategy_ret", "double") \
         .add("equity", "double")
     sort_cols = ["ts", "okey", "lnum", "pkey"]
+    op = backtest_op(
+        price_col="close", position_col="position", fee_bps=5.0,
+        ts_col="ts", sort_cols=sort_cols,
+    )
 
     def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
         n = max(1, -(-len(pdf) // 3))  # ceil(len/3): three chunks
-        out = chunked_backtest_batch(
-            pdf, n, price_col="close", position_col="position",
-            fee_bps=5.0, ts_col="ts", sort_cols=sort_cols,
-        )
+        out = chunked_batch(op, pdf, n)
         return out[["suppkey", "ts", "okey", "lnum",
                     "trade", "strategy_ret", "equity"]]
 
@@ -4361,7 +4363,8 @@ def st17_strategy_stream(spark, sf_dir):
     streamed signals to the batch operator pair bit-for-bit."""
     import pandas as pd
 
-    from .streaming.strategy_stream import chunked_strategy_batch
+    from .streaming._carry import chunked_batch
+    from .streaming.strategy_stream import sma_strategy_op
 
     m = _damped_market(spark, sf_dir).select(
         "suppkey", "ts", "okey", "lnum", "pkey", "close"
@@ -4370,14 +4373,15 @@ def st17_strategy_stream(spark, sf_dir):
         .add("position", "long").add("equity", "double") \
         .add("drawdown", "double")
     sort_cols = ["ts", "okey", "lnum", "pkey"]
+    op = sma_strategy_op(
+        fast=10, slow=50, fee_bps=5.0, price_col="close", ts_col="ts",
+        sort_cols=sort_cols,
+    )
 
     def per_series(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
         n = max(1, -(-len(pdf) // 3))
-        out = chunked_strategy_batch(
-            pdf, n, fast=10, slow=50, fee_bps=5.0,
-            price_col="close", ts_col="ts", sort_cols=sort_cols,
-        )
+        out = chunked_batch(op, pdf, n)
         return out[["suppkey", "ts", "okey", "lnum",
                     "position", "equity", "drawdown"]]
 

@@ -364,6 +364,10 @@ def with_hl_spread(df: DataFrame, *, high: str = "high", low: str = "low",
 
 
 DEFAULT_SERIES_KEYS = ("symbol", "exchange", "timeframe")
+MARKET_FEATURES = (
+    "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
+    "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
+)
 
 
 def build_market_features(
@@ -417,11 +421,7 @@ def build_market_features(
         *[f.name for f in MARKET_FEATURE_SCHEMA.fields], *keep_cols
     )
     if dropna_final:
-        feature_cols = [
-            "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
-            "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
-        ]
-        out = out.filter(F.coalesce(*[F.col(c) for c in feature_cols]).isNotNull())
+        out = out.filter(F.coalesce(*[F.col(c) for c in MARKET_FEATURES]).isNotNull())
     return out
 
 
@@ -435,50 +435,127 @@ def build_market_features_arrow(
 ) -> DataFrame:
     """Alternate PHYSICAL strategy for the flagship feature stage: one
     ``applyInPandas`` per series computes every feature in a single
-    O(n) pandas pass (C-speed rolling/ewm) — one shuffle total vs the
-    expression plan's window-stage chain. Same logical features as
-    :func:`build_market_features` (values agree to float tolerance;
-    the expression plan remains the oracle-exact path). Series are
-    bounded per key, so no group outgrows a task — the same contract
-    as ``with_ewm_exact``.
+    O(n) pandas pass (:func:`market_features_step` with no carry) — one
+    shuffle total vs the expression plan's window-stage chain. Same
+    logical features as :func:`build_market_features` (values agree to
+    float tolerance; the expression plan remains the oracle-exact
+    path). Series are bounded per key, so no group outgrows a task —
+    the same contract as ``with_ewm_exact``.
     """
-    import numpy as np
     from pyspark.sql import types as T
 
     keys = list(keys)
     order = list(order_cols) if order_cols is not None else [ts_col]
-    feature_fields = [
-        T.StructField(c, T.DoubleType())
-        for c in (
-            "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
-            "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
-        )
-    ]
-    out_fields = [df.schema[c] for c in (*keys, *id_cols, ts_col)] + feature_fields
-    schema = T.StructType(out_fields)
+    out_cols = [*keys, *id_cols, ts_col]
+    schema = T.StructType(
+        [df.schema[c] for c in out_cols]
+        + [T.StructField(c, T.DoubleType()) for c in MARKET_FEATURES]
+    )
 
     def compute(pdf):
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        close = pdf["close"].astype(float)
-        prev = close.shift(1)
-        out = pdf[[*keys, *id_cols, ts_col]].copy()
-        out["ret_1"] = (close - prev) / prev.replace(0.0, np.nan)
-        logc = np.log(close.replace(0.0, np.nan))
-        out["logret_1"] = logc - logc.shift(1)
-        out["rvol_5"] = out["logret_1"].rolling(5).std()
-        out["rvol_20"] = out["logret_1"].rolling(20).std()
-        out["ema_12"] = close.ewm(span=12, adjust=False).mean()
-        out["ema_26"] = close.ewm(span=26, adjust=False).mean()
-        out["macd"] = out["ema_12"] - out["ema_26"]
-        out["macd_signal_9"] = out["macd"].ewm(span=9, adjust=False).mean()
-        delta = close.diff()
-        up = delta.clip(lower=0).fillna(0.0)
-        down = (-delta).clip(lower=0).fillna(0.0)
-        rs = up.rolling(14).mean() / down.rolling(14).mean().replace(0.0, np.nan)
-        out["rsi_14"] = 100.0 - 100.0 / (1.0 + rs)
-        out["hl_spread"] = (pdf["high"] - pdf["low"]) / close.replace(0.0, np.nan)
-        out["oi_obv"] = (np.sign(delta.fillna(0.0)) * pdf["volume"].fillna(0.0)).cumsum()
-        feature_cols = [f.name for f in feature_fields]
-        return out[out[feature_cols].notna().any(axis=1)]
+        out, _ = market_features_step(pdf, None, ts_col=ts_col, sort_cols=order)
+        out = out[[*out_cols, *MARKET_FEATURES]]
+        return out[out[list(MARKET_FEATURES)].notna().any(axis=1)]
 
     return df.groupBy(*keys).applyInPandas(compute, schema=schema)
+
+
+_MF_CARRY_ROWS = 20  # longest rolling window (rvol_20): 20 trailing closes
+
+
+def _cont_ewm(x, span: int, y0: float | None):
+    """adjust=False EWM, continued exactly from a carried value: the
+    recursion y_t = (1-a)·y_{t-1} + a·x_t depends on history only
+    through y_{t-1}, so seeding with y0 as a pseudo-first-row and
+    dropping it reproduces the full-series EWM bit-for-bit."""
+    import pandas as pd
+
+    if y0 is not None and not pd.isna(y0):
+        s = pd.concat([pd.Series([y0]), x], ignore_index=True)
+        return s.ewm(span=span, adjust=False).mean().iloc[1:].reset_index(drop=True)
+    return x.reset_index(drop=True).ewm(span=span, adjust=False).mean()
+
+
+def market_features_step(pdf, carry: dict | None, *, ts_col: str, sort_cols: Sequence[str]):
+    """pandas chunk step for the flagship features: sort ``pdf`` on
+    ``sort_cols``, compute :data:`MARKET_FEATURES` continuing from
+    ``carry``, and return ``(pdf + features, new carry)``.
+
+    ``carry`` (``None`` for a series' first chunk) holds the trailing
+    ``_MF_CARRY_ROWS`` ``ts`` (ISO strings) and ``closes`` — enough
+    history for every rolling window — plus the O(1) recursive
+    accumulators ``ema12``, ``ema26``, ``sig9`` (MACD signal) and
+    ``obv`` (running total). Chunked output equals one full pass to
+    float precision (``stateful_processor.py:11-41``'s invariant over
+    the whole family). The Arrow tier runs it once per series with no
+    carry; ``streaming/stateful.py`` runs it per micro-batch."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values(list(sort_cols)).reset_index(drop=True)
+    have_carry = carry is not None and len(carry["closes"]) > 0
+    if have_carry:
+        prefix = pd.DataFrame({
+            ts_col: pd.to_datetime(carry["ts"]),
+            "close": carry["closes"],
+        })
+        full = pd.concat([prefix, pdf], ignore_index=True, sort=False)
+        p = len(prefix)
+    else:
+        full = pdf
+        p = 0
+
+    close = full["close"].astype(float)
+    prev = close.shift(1)
+    delta = close.diff()
+    ret_1 = (close - prev) / prev.replace(0.0, np.nan)
+    logc = np.log(close.replace(0.0, np.nan))
+    logret = logc - logc.shift(1)
+    rvol_5 = logret.rolling(5).std()
+    rvol_20 = logret.rolling(20).std()
+    up = delta.clip(lower=0).fillna(0.0)
+    down = (-delta).clip(lower=0).fillna(0.0)
+    rs = up.rolling(14).mean() / down.rolling(14).mean().replace(0.0, np.nan)
+    rsi_14 = 100.0 - 100.0 / (1.0 + rs)
+
+    new_close = close.iloc[p:].reset_index(drop=True)
+    ema_12 = _cont_ewm(new_close, 12, carry["ema12"] if have_carry else None)
+    ema_26 = _cont_ewm(new_close, 26, carry["ema26"] if have_carry else None)
+    macd = ema_12 - ema_26
+    sig_9 = _cont_ewm(macd, 9, carry["sig9"] if have_carry else None)
+
+    # OBV: sign of each NEW row's delta (first-ever row: sign(0) = 0)
+    # times its volume, accumulated onto the carried running total
+    signed = (
+        np.sign(delta.iloc[p:].fillna(0.0).to_numpy())
+        * pdf["volume"].fillna(0.0).to_numpy()
+    )
+    obv0 = carry["obv"] if have_carry else 0.0
+    oi_obv = obv0 + np.cumsum(signed)
+
+    out = pdf.copy()
+    out["ret_1"] = ret_1.iloc[p:].to_numpy()
+    out["logret_1"] = logret.iloc[p:].to_numpy()
+    out["rvol_5"] = rvol_5.iloc[p:].to_numpy()
+    out["rvol_20"] = rvol_20.iloc[p:].to_numpy()
+    out["ema_12"] = ema_12.to_numpy()
+    out["ema_26"] = ema_26.to_numpy()
+    out["macd"] = macd.to_numpy()
+    out["macd_signal_9"] = sig_9.to_numpy()
+    out["rsi_14"] = rsi_14.iloc[p:].to_numpy()
+    out["hl_spread"] = (
+        (pdf["high"].astype(float) - pdf["low"].astype(float))
+        / pdf["close"].astype(float).replace(0.0, np.nan)
+    ).to_numpy()
+    out["oi_obv"] = oi_obv
+
+    tail = full.iloc[max(0, len(full) - _MF_CARRY_ROWS):]
+    new_carry = {
+        "ts": [t.isoformat() for t in pd.to_datetime(tail[ts_col])],
+        "closes": [float(v) for v in tail["close"]],
+        "ema12": float(ema_12.iloc[-1]) if len(ema_12) else (carry["ema12"] if have_carry else float("nan")),
+        "ema26": float(ema_26.iloc[-1]) if len(ema_26) else (carry["ema26"] if have_carry else float("nan")),
+        "sig9": float(sig_9.iloc[-1]) if len(sig_9) else (carry["sig9"] if have_carry else float("nan")),
+        "obv": float(oi_obv[-1]) if len(oi_obv) else obv0,
+    }
+    return out, new_carry

@@ -2,13 +2,24 @@
 micro-batches (the ST-surface twin of ``operators/backtest.py``).
 
 A live strategy needs the SAME curve the batch backtest produces,
-updated as bars arrive. The recursion depends on history only through
-four scalars — last close, last position, the cumulative log-equity,
-and the running equity peak — so the state per series is O(1)
-regardless of history length, and every emitted bar is exactly what
-``backtest_positions`` would compute over the full series
-(chunked == batch pytest, plus a real ``applyInPandasWithState``
-micro-batch equivalence test).
+updated as bars arrive. The operator is a chunk step run by the shared
+carry driver (:mod:`._carry`):
+
+- step — :func:`_bt_combine_with_carry`: continue the curve from the
+  carry, emit the chunk's bars;
+- state — ``last_close``, ``last_position``, ``cum_logeq`` (cumulative
+  log-equity) and ``peak_equity``: O(1) per series regardless of
+  history length, and every emitted bar is exactly what
+  ``backtest_positions`` computes over the full series (chunked ==
+  batch pytest, plus a real micro-batch equivalence test);
+- chunk ordering — ``batch_order``: ``"buffer"`` (default) concatenates
+  a group's Arrow chunks and sorts once, tolerating any row order
+  within a micro-batch, peak memory O(micro-batch); ``"chunk"`` folds
+  and emits chunk-by-chunk, peak memory O(Arrow chunk) — the
+  backfill-safe mode — and fails loudly if the batch is not
+  chunk-ordered (``_carry._ordered_chunks``). Across triggers rows must
+  arrive in order either way: enforce it upstream with a watermark or
+  source ordering.
 
 Semantics mirror ``operators/backtest.py:backtest_positions``
 (close-to-close fills, lag-1 earning, bps fees on position changes,
@@ -21,61 +32,15 @@ window sum but propagates -inf here; positive prices keep strat > -1.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 import numpy as np
 import pandas as pd
 
-try:  # pyspark >= 3.4
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-except ImportError:  # pragma: no cover - older layout
-    from pyspark.sql.streaming import GroupState, GroupStateTimeout  # type: ignore
+from ._carry import CarryOp, apply_carry
 
 _CARRY_FIELDS = ("last_close", "last_position", "cum_logeq", "peak_equity")
-
-
-def _ordered_chunks(pdf_iter, *, batch_order: str, cols):
-    """Yield sorted pandas frames for one group's micro-batch.
-
-    ``"buffer"``: concatenate every Arrow chunk first (tolerates
-    arbitrary row order within the micro-batch; peak memory
-    O(micro-batch) — the pre-r10 behavior).
-
-    ``"chunk"`` (r10, closes the r8/r9 buffering advice in code): fold
-    chunk-by-chunk — each chunk is sorted internally and yielded
-    immediately, so peak per-group memory is O(Arrow chunk) even on an
-    unthrottled backfill first-trigger. The price is an ordering
-    contract WITHIN the micro-batch: each chunk must start at or after
-    the previous chunk's last sort key. A violation raises (the query
-    fails visibly) rather than silently producing a wrong curve —
-    after a grouped shuffle Spark does not order rows within a group,
-    so use this mode when the source feeds each group's rows in order
-    (single upstream partition per key, pre-sorted files) and
-    ``"buffer"`` otherwise.
-    """
-    cols = list(cols)
-    if batch_order == "buffer":
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            yield (chunks[0] if len(chunks) == 1
-                   else pd.concat(chunks, ignore_index=True))
-        return
-    if batch_order != "chunk":
-        raise ValueError(f"unknown batch_order: {batch_order!r}")
-    prev_max = None
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        s = pdf.sort_values(cols, kind="stable").reset_index(drop=True)
-        lo = tuple(s[c].iloc[0] for c in cols)
-        if prev_max is not None and lo < prev_max:
-            raise ValueError(
-                "batch_order='chunk': an Arrow chunk starts before the "
-                f"previous chunk's last row ({lo!r} < {prev_max!r}) — "
-                "this micro-batch is not chunk-ordered; use "
-                "batch_order='buffer' or order the source per group"
-            )
-        prev_max = tuple(s[c].iloc[-1] for c in cols)
-        yield s
+_CURVE_COLS = ("trade", "strategy_ret", "equity", "drawdown")
 
 
 def _bt_combine_with_carry(
@@ -129,35 +94,7 @@ def _bt_combine_with_carry(
     return out, new_carry
 
 
-def chunked_backtest_batch(
-    pdf: pd.DataFrame,
-    chunk_size: int,
-    *,
-    price_col: str = "close",
-    position_col: str = "position",
-    fee_bps: float = 0.0,
-    ts_col: str = "ts",
-    sort_cols: Sequence[str] | None = None,
-) -> pd.DataFrame:
-    """Batch harness over the carry core (chunked == full-batch
-    equivalence twin, same pattern as ``chunked_ewm_batch``).
-    NOTE: chunks are taken from ``pdf`` in its GIVEN row order; pass
-    a pre-sorted frame (the sort inside the carry core is per-chunk)."""
-    fee = fee_bps / 1e4
-    carry = None
-    outs = []
-    for lo in range(0, len(pdf), chunk_size):
-        out, carry = _bt_combine_with_carry(
-            pdf.iloc[lo:lo + chunk_size], carry,
-            price_col=price_col, position_col=position_col,
-            fee=fee, ts_col=ts_col, sort_cols=sort_cols,
-        )
-        outs.append(out)
-    return pd.concat(outs, ignore_index=True)
-
-
-def stateful_backtest(
-    key_cols: Sequence[str],
+def backtest_op(
     *,
     price_col: str = "close",
     position_col: str = "position",
@@ -165,42 +102,22 @@ def stateful_backtest(
     ts_col: str = "ts",
     sort_cols: Sequence[str] | None = None,
     batch_order: str = "buffer",
-):
-    """Build the ``applyInPandasWithState`` function: O(1) carry per
-    series (four scalars), exact continuation.
-
-    ``batch_order`` governs how a group's micro-batch (possibly many
-    Arrow chunks, in arbitrary row order) is consumed — see
-    :func:`_ordered_chunks`. ``"buffer"`` (default) concatenates and
-    sorts once, peak memory O(micro-batch); ``"chunk"`` folds and
-    emits chunk-by-chunk, peak memory O(Arrow chunk) — the backfill-
-    safe mode — under a fail-loud within-batch ordering contract.
-    Ordering ACROSS triggers is an in-order-arrival assumption either
-    way: bars later than anything already carried must arrive in a
-    later-or-same trigger — enforce it upstream with a watermark or
-    source ordering."""
-    fee = fee_bps / 1e4
-
-    def fn(key, pdf_iter, state: GroupState):
-        carry = dict(zip(_CARRY_FIELDS, state.get)) if state.exists else None
-        emitted = False
-        for pdf in _ordered_chunks(
-            pdf_iter, batch_order=batch_order,
-            cols=sort_cols if sort_cols else [ts_col],
-        ):
-            out, carry = _bt_combine_with_carry(
-                pdf, carry, price_col=price_col,
-                position_col=position_col, fee=fee, ts_col=ts_col,
-                sort_cols=sort_cols,
-            )
-            for i, k in enumerate(key_cols):
-                out[k] = key[i]
-            emitted = True
-            yield out
-        if emitted:
-            state.update(tuple(carry[f] for f in _CARRY_FIELDS))
-
-    return fn
+) -> CarryOp:
+    """The backtest curve as a :class:`._carry.CarryOp`."""
+    return CarryOp(
+        step=partial(
+            _bt_combine_with_carry, price_col=price_col,
+            position_col=position_col, fee=fee_bps / 1e4, ts_col=ts_col,
+            sort_cols=sort_cols,
+        ),
+        state=tuple((f, "double") for f in _CARRY_FIELDS),
+        out=(
+            (ts_col, "timestamp"), (price_col, "double"), (position_col, None),
+            *((c, "double") for c in _CURVE_COLS),
+        ),
+        sort_cols=list(sort_cols) if sort_cols else [ts_col],
+        batch_order=batch_order,
+    )
 
 
 def apply_stateful_backtest(
@@ -214,34 +131,11 @@ def apply_stateful_backtest(
     sort_cols: Sequence[str] | None = None,
     batch_order: str = "buffer",
 ):
-    """Wire the stateful backtest onto a (streaming) DataFrame grouped
-    by ``keys``. Output: keys + ts + close + position + the four curve
-    columns; key types are taken from the input schema. Pass
+    """Stateful backtest per ``keys`` series. Output: ts + close +
+    position (input type) + the four curve columns + keys. Pass
     ``sort_cols`` (e.g. ``(ts, okey, lnum)``) when ``ts_col`` alone is
-    not unique within a series so tied bars order deterministically.
-    ``batch_order="chunk"`` caps peak per-group memory at O(Arrow
-    chunk) for ordered sources (see :func:`_ordered_chunks`)."""
-    key_schema = ", ".join(
-        f"{k} {stream_df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    pos_type = stream_df.schema[position_col].dataType.simpleString()
-    out_schema = (
-        f"{ts_col} timestamp, {price_col} double, {position_col} {pos_type}, "
-        f"trade double, strategy_ret double, equity double, "
-        f"drawdown double, {key_schema}"
-    )
-    state_schema = (
-        "last_close double, last_position double, "
-        "cum_logeq double, peak_equity double"
-    )
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        stateful_backtest(
-            list(keys), price_col=price_col, position_col=position_col,
-            fee_bps=fee_bps, ts_col=ts_col, sort_cols=sort_cols,
-            batch_order=batch_order,
-        ),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    not unique within a series so tied bars order deterministically."""
+    return apply_carry(stream_df, keys, backtest_op(
+        price_col=price_col, position_col=position_col, fee_bps=fee_bps,
+        ts_col=ts_col, sort_cols=sort_cols, batch_order=batch_order,
+    ))

@@ -1,67 +1,66 @@
 """Stateful streaming continuity (SURVEY §2 ST3) — the reference's
 ``StatefulTAProcessor`` (``algo-data-ingestion/app/features/processors/
 stateful_processor.py:11-41``): process chunks/micro-batches of a
-series while carrying the trailing ``window-1`` rows so rolling
-features are identical to a full-batch run (equivalence asserted by
-``tests/features/processors/test_stateful_processor.py:19-37``).
+series while carrying its tail so rolling features are identical to a
+full-batch run (equivalence asserted by ``tests/features/processors/
+test_stateful_processor.py:19-37``).
 
-Spark mapping: ``applyInPandasWithState`` — state is the trailing-row
-buffer keyed by series, the engine manages the state store /
-checkpointing. The same chunk-combining core also powers a batch
-harness (:func:`chunked_rolling_mean_batch`) used by the equivalence
-test.
+Three operators, each a chunk step run by the shared carry driver
+(:mod:`._carry`):
+
+- rolling mean — state ``ts``/``vals``: the trailing ``window - 1``
+  rows;
+- EWM (adjust=True) — state ``num``/``den``: the exact accumulator pair;
+- market features (the whole flagship family) — state ``ts``/``closes``
+  (20 trailing rows) plus ``ema12``/``ema26``/``sig9``/``obv``; the
+  step is ``operators/indicators.py:market_features_step``.
+
+Chunk ordering: a group's Arrow chunks are buffered and sorted once per
+micro-batch, so any row order within a batch is safe. Across triggers
+rows must arrive in order.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 import pandas as pd
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.indicators import MARKET_FEATURES, market_features_step
+from ._carry import CarryOp, apply_carry
 
 
-def _combine_with_carry(pdf: pd.DataFrame, carry: pd.DataFrame | None,
-                        value_col: str, window: int, out_col: str) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Core chunk step: prepend carried rows, compute the rolling op,
-    emit only the new rows, return the new trailing carry."""
-    full = pd.concat([carry, pdf], ignore_index=True) if carry is not None and len(carry) else pdf
+def _rolling_mean_step(pdf: pd.DataFrame, carry: dict | None, *,
+                       value_col: str, window: int, out_col: str):
+    """Prepend the carried rows, compute the rolling mean, emit only the
+    new rows, return the new trailing carry."""
+    full = pdf
+    if carry is not None and len(carry["vals"]):
+        prefix = pd.DataFrame({"ts": pd.to_datetime(carry["ts"]), value_col: carry["vals"]})
+        full = pd.concat([prefix, pdf], ignore_index=True)
     full = full.sort_values("ts").reset_index(drop=True)
     rolled = full[value_col].rolling(window).mean()
     n_new = len(pdf)
     out = full.iloc[len(full) - n_new:].copy()
     out[out_col] = rolled.iloc[len(full) - n_new:].values
-    new_carry = full.iloc[max(0, len(full) - (window - 1)):][["ts", value_col]]
-    return out, new_carry
+    tail = full.iloc[max(0, len(full) - (window - 1)):]
+    return out, {
+        "ts": [t.isoformat() for t in tail["ts"]],
+        "vals": [float(v) for v in tail[value_col]],
+    }
 
 
-def stateful_rolling_mean(
-    value_col: str,
-    window: int,
-    key_cols: Sequence[str],
-    out_col: str = "rolling_mean",
-):
-    """Build the ``applyInPandasWithState`` function: carries the last
-    ``window - 1`` rows per key across micro-batches."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        carry = None
-        if state.exists:
-            (ts_list, val_list) = state.get
-            carry = pd.DataFrame({"ts": pd.to_datetime(list(ts_list)), value_col: list(val_list)})
-        outs = []
-        for pdf in pdf_iter:
-            out, carry = _combine_with_carry(pdf, carry, value_col, window, out_col)
-            outs.append(out)
-        state.update((
-            [t.isoformat() for t in carry["ts"]],
-            [float(v) for v in carry[value_col]],
-        ))
-        for out in outs:
-            for i, k in enumerate(key_cols):
-                out[k] = key[i]
-            yield out
-
-    return fn
+def rolling_mean_op(*, value_col: str = "value", window: int = 5,
+                    out_col: str = "rolling_mean") -> CarryOp:
+    """The rolling mean as a :class:`._carry.CarryOp`."""
+    return CarryOp(
+        step=partial(_rolling_mean_step, value_col=value_col,
+                     window=window, out_col=out_col),
+        state=(("ts", "array<string>"), ("vals", "array<double>")),
+        out=(("ts", "timestamp"), (value_col, "double"), (out_col, "double")),
+        sort_cols=["ts"],
+    )
 
 
 def apply_stateful_rolling_mean(
@@ -71,30 +70,15 @@ def apply_stateful_rolling_mean(
     value_col: str = "value",
     window: int = 5,
     out_col: str = "rolling_mean",
-    extra_out_cols: str = "",
 ):
-    """Wire the stateful op onto a (streaming) DataFrame grouped by
-    ``keys``. Output schema: keys + ts + value + rolling col. Key
-    types are taken from the input schema (round-1 version hardcoded
-    ``long`` keys, breaking string-keyed series)."""
-    key_schema = ", ".join(
-        f"{k} {stream_df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = f"ts timestamp, {value_col} double{extra_out_cols}, {out_col} double, {key_schema}"
-    state_schema = "ts array<string>, vals array<double>"
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        stateful_rolling_mean(value_col, window, list(keys), out_col),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Rolling mean over ``window`` rows per ``keys`` series. Output:
+    ts + value + rolling col + keys."""
+    return apply_carry(stream_df, keys, rolling_mean_op(
+        value_col=value_col, window=window, out_col=out_col))
 
 
-def _ewm_combine_with_carry(
-    pdf: pd.DataFrame, carry: tuple[float, float] | None,
-    value_col: str, span: int, out_col: str,
-) -> tuple[pd.DataFrame, tuple[float, float]]:
+def _ewm_step(pdf: pd.DataFrame, carry: dict | None, *,
+              value_col: str, span: int, out_col: str):
     """EWM chunk step with EXACT continuation (pandas adjust=True).
 
     adjust=True EWM is y_t = num_t / den_t with num_t = x_t + q·num_{t-1}
@@ -104,9 +88,7 @@ def _ewm_combine_with_carry(
     where chunk_num/den are the chunk-local EWM pieces, recovered
     STABLY from pandas' own O(n) chunk EWM (chunk_num = y_chunk·chunk_den,
     chunk_den = (1-q^{t+1})/(1-q)) — no q^{-i} terms, so no overflow at
-    any chunk length (q^{t+1} underflows gracefully to 0).
-    Generalizes the reference's ``StatefulTAProcessor`` carry beyond
-    rolling windows (``stateful_processor.py:11-41``)."""
+    any chunk length (q^{t+1} underflows gracefully to 0)."""
     import numpy as np
 
     pdf = pdf.sort_values("ts").reset_index(drop=True)
@@ -118,39 +100,25 @@ def _ewm_combine_with_carry(
     chunk_den = (1.0 - qpow) / (1.0 - q)
     y_chunk = pd.Series(x).ewm(span=span, adjust=True).mean().to_numpy()
     chunk_num = y_chunk * chunk_den
-    num0, den0 = carry if carry is not None else (0.0, 0.0)
+    num0, den0 = (carry["num"], carry["den"]) if carry is not None else (0.0, 0.0)
     num = chunk_num + qpow * num0
     den = chunk_den + qpow * den0
     out = pdf.copy()
     out[out_col] = num / den
-    new_carry = (float(num[-1]), float(den[-1])) if len(x) else (num0, den0)
-    return out, new_carry
+    if len(x):
+        num0, den0 = float(num[-1]), float(den[-1])
+    return out, {"num": num0, "den": den0}
 
 
-def stateful_ewm(
-    value_col: str,
-    span: int,
-    key_cols: Sequence[str],
-    out_col: str = "ewm",
-):
-    """``applyInPandasWithState`` function carrying the (num, den)
-    EWM accumulator pair per key — O(1) state per series vs the
-    rolling family's window-1 row buffer."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        carry = tuple(state.get) if state.exists else None
-        outs = []
-        for pdf in pdf_iter:
-            out, carry = _ewm_combine_with_carry(pdf, carry, value_col, span, out_col)
-            outs.append(out)
-        if carry is not None:
-            state.update(carry)
-        for out in outs:
-            for i, k in enumerate(key_cols):
-                out[k] = key[i]
-            yield out[["ts", value_col, out_col, *key_cols]]
-
-    return fn
+def ewm_op(*, value_col: str = "value", span: int = 12,
+           out_col: str = "ewm") -> CarryOp:
+    """The exact-continuation EWM as a :class:`._carry.CarryOp`."""
+    return CarryOp(
+        step=partial(_ewm_step, value_col=value_col, span=span, out_col=out_col),
+        state=(("num", "double"), ("den", "double")),
+        out=(("ts", "timestamp"), (value_col, "double"), (out_col, "double")),
+        sort_cols=["ts"],
+    )
 
 
 def apply_stateful_ewm(
@@ -161,146 +129,28 @@ def apply_stateful_ewm(
     span: int = 12,
     out_col: str = "ewm",
 ):
-    """Wire exact-continuation EWM onto a (streaming) DataFrame grouped
-    by ``keys``. State is two doubles per key."""
-    key_schema = ", ".join(
-        f"{k} {stream_df.schema[k].dataType.simpleString()}" for k in keys
+    """Exact-continuation EWM per ``keys`` series. Output: ts + value +
+    ewm col + keys."""
+    return apply_carry(stream_df, keys, ewm_op(
+        value_col=value_col, span=span, out_col=out_col))
+
+
+def market_features_op(*, ts_col: str = "ts") -> CarryOp:
+    """The flagship feature family as a :class:`._carry.CarryOp`."""
+    return CarryOp(
+        step=partial(market_features_step, ts_col=ts_col, sort_cols=[ts_col]),
+        state=(
+            ("ts", "array<string>"), ("closes", "array<double>"),
+            ("ema12", "double"), ("ema26", "double"),
+            ("sig9", "double"), ("obv", "double"),
+        ),
+        out=(
+            (ts_col, "timestamp"),
+            *((c, "double") for c in ("close", "high", "low", "volume")),
+            *((c, "double") for c in MARKET_FEATURES),
+        ),
+        sort_cols=[ts_col],
     )
-    out_schema = f"ts timestamp, {value_col} double, {out_col} double, {key_schema}"
-    state_schema = "num double, den double"
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        stateful_ewm(value_col, span, list(keys), out_col),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def chunked_ewm_batch(
-    pdf: pd.DataFrame,
-    chunk_size: int,
-    *,
-    value_col: str = "value",
-    span: int = 12,
-    out_col: str = "ewm",
-) -> pd.DataFrame:
-    """Batch harness over the EWM carry core (chunked == full-batch
-    equivalence twin of :func:`chunked_rolling_mean_batch`)."""
-    carry = None
-    outs = []
-    for lo in range(0, len(pdf), chunk_size):
-        out, carry = _ewm_combine_with_carry(
-            pdf.iloc[lo:lo + chunk_size], carry, value_col, span, out_col
-        )
-        outs.append(out)
-    return pd.concat(outs, ignore_index=True)
-
-
-# --------------------------------------------------------------------------
-# ST3 generality (r3 verdict #6): stateful continuity for the FULL
-# flagship feature family — ret/logret, rvol_5/20, ema_12/26, macd,
-# macd_signal_9, rsi_14, hl_spread, oi_obv — not just one rolling mean.
-# --------------------------------------------------------------------------
-
-_MF_CARRY_ROWS = 20  # max rolling window (rvol_20): 20 trailing closes
-_MF_FEATURES = [
-    "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
-    "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
-]
-
-
-def _cont_ewm(x: pd.Series, span: int, y0: float | None) -> pd.Series:
-    """adjust=False EWM, continued exactly from a carried value: the
-    recursion y_t = (1-a)·y_{t-1} + a·x_t depends on history only
-    through y_{t-1}, so seeding with y0 as a pseudo-first-row and
-    dropping it reproduces the full-series EWM bit-for-bit."""
-    if y0 is not None and not pd.isna(y0):
-        s = pd.concat([pd.Series([y0]), x], ignore_index=True)
-        return s.ewm(span=span, adjust=False).mean().iloc[1:].reset_index(drop=True)
-    return x.reset_index(drop=True).ewm(span=span, adjust=False).mean()
-
-
-def _market_features_combine(
-    pdf: pd.DataFrame, carry: dict | None, *, ts_col: str = "ts",
-) -> tuple[pd.DataFrame, dict]:
-    """Chunk step for the composite feature stage. ``carry`` holds the
-    trailing ``_MF_CARRY_ROWS`` (ts, close) rows — enough history for
-    every rolling window — plus the O(1) recursive accumulators
-    (ema_12/26, macd signal, OBV running total). Math mirrors
-    ``build_market_features_arrow`` line-for-line so chunked == full
-    batch to float precision (``stateful_processor.py:11-41``'s
-    invariant, extended to the whole family)."""
-    import numpy as np
-
-    pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-    have_carry = carry is not None and len(carry["closes"]) > 0
-    if have_carry:
-        prefix = pd.DataFrame({
-            ts_col: pd.to_datetime(carry["ts"]),
-            "close": carry["closes"],
-        })
-        full = pd.concat([prefix, pdf], ignore_index=True, sort=False)
-        p = len(prefix)
-    else:
-        full = pdf
-        p = 0
-
-    close = full["close"].astype(float)
-    prev = close.shift(1)
-    delta = close.diff()
-    ret_1 = (close - prev) / prev.replace(0.0, np.nan)
-    logc = np.log(close.replace(0.0, np.nan))
-    logret = logc - logc.shift(1)
-    rvol_5 = logret.rolling(5).std()
-    rvol_20 = logret.rolling(20).std()
-    up = delta.clip(lower=0).fillna(0.0)
-    down = (-delta).clip(lower=0).fillna(0.0)
-    rs = up.rolling(14).mean() / down.rolling(14).mean().replace(0.0, np.nan)
-    rsi_14 = 100.0 - 100.0 / (1.0 + rs)
-
-    new_close = close.iloc[p:].reset_index(drop=True)
-    ema_12 = _cont_ewm(new_close, 12, carry["ema12"] if have_carry else None)
-    ema_26 = _cont_ewm(new_close, 26, carry["ema26"] if have_carry else None)
-    macd = ema_12 - ema_26
-    sig_9 = _cont_ewm(macd, 9, carry["sig9"] if have_carry else None)
-
-    # OBV: sign of each NEW row's delta (first-ever row: sign(0) = 0,
-    # matching the batch twin's fillna) times its volume, accumulated
-    # onto the carried running total
-    signed = (
-        np.sign(delta.iloc[p:].fillna(0.0).to_numpy())
-        * pdf["volume"].fillna(0.0).to_numpy()
-    )
-    obv0 = carry["obv"] if have_carry else 0.0
-    oi_obv = obv0 + np.cumsum(signed)
-
-    out = pdf.copy()
-    out["ret_1"] = ret_1.iloc[p:].to_numpy()
-    out["logret_1"] = logret.iloc[p:].to_numpy()
-    out["rvol_5"] = rvol_5.iloc[p:].to_numpy()
-    out["rvol_20"] = rvol_20.iloc[p:].to_numpy()
-    out["ema_12"] = ema_12.to_numpy()
-    out["ema_26"] = ema_26.to_numpy()
-    out["macd"] = macd.to_numpy()
-    out["macd_signal_9"] = sig_9.to_numpy()
-    out["rsi_14"] = rsi_14.iloc[p:].to_numpy()
-    out["hl_spread"] = (
-        (pdf["high"].astype(float) - pdf["low"].astype(float))
-        / pdf["close"].astype(float).replace(0.0, np.nan)
-    ).to_numpy()
-    out["oi_obv"] = oi_obv
-
-    tail = full.iloc[max(0, len(full) - _MF_CARRY_ROWS):]
-    new_carry = {
-        "ts": [t.isoformat() for t in pd.to_datetime(tail[ts_col])],
-        "closes": [float(v) for v in tail["close"]],
-        "ema12": float(ema_12.iloc[-1]) if len(ema_12) else (carry["ema12"] if have_carry else float("nan")),
-        "ema26": float(ema_26.iloc[-1]) if len(ema_26) else (carry["ema26"] if have_carry else float("nan")),
-        "sig9": float(sig_9.iloc[-1]) if len(sig_9) else (carry["sig9"] if have_carry else float("nan")),
-        "obv": float(oi_obv[-1]) if len(oi_obv) else obv0,
-    }
-    return out, new_carry
 
 
 def apply_stateful_market_features(
@@ -309,84 +159,6 @@ def apply_stateful_market_features(
     keys: Sequence[str],
     ts_col: str = "ts",
 ):
-    """Wire the composite feature stage onto a (streaming) DataFrame:
-    state per series is 20 trailing (ts, close) rows + four scalar
-    accumulators — constant size regardless of stream length."""
-    key_schema = ", ".join(
-        f"{k} {stream_df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    feat_schema = ", ".join(f"{c} double" for c in _MF_FEATURES)
-    out_schema = (
-        f"{ts_col} timestamp, close double, high double, low double, "
-        f"volume double, {feat_schema}, {key_schema}"
-    )
-    state_schema = (
-        "ts array<string>, closes array<double>, "
-        "ema12 double, ema26 double, sig9 double, obv double"
-    )
-    key_cols = list(keys)
-
-    def fn(key, pdf_iter, state: GroupState):
-        carry = None
-        if state.exists:
-            ts_l, cl_l, e12, e26, s9, obv = state.get
-            carry = {"ts": list(ts_l), "closes": list(cl_l),
-                     "ema12": e12, "ema26": e26, "sig9": s9, "obv": obv}
-        outs = []
-        for pdf in pdf_iter:
-            out, carry = _market_features_combine(pdf, carry, ts_col=ts_col)
-            outs.append(out)
-        if carry is not None:
-            state.update((carry["ts"], carry["closes"], carry["ema12"],
-                          carry["ema26"], carry["sig9"], carry["obv"]))
-        for out in outs:
-            for i, k in enumerate(key_cols):
-                out[k] = key[i]
-            yield out[[ts_col, "close", "high", "low", "volume",
-                       *_MF_FEATURES, *key_cols]]
-
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def chunked_market_features_batch(
-    pdf: pd.DataFrame,
-    chunk_size: int,
-    *,
-    ts_col: str = "ts",
-) -> pd.DataFrame:
-    """Batch harness over the composite-feature carry core (equivalence
-    twin for tests: chunked-with-state == one-pass full batch)."""
-    carry = None
-    outs = []
-    for lo in range(0, len(pdf), chunk_size):
-        out, carry = _market_features_combine(
-            pdf.iloc[lo:lo + chunk_size], carry, ts_col=ts_col
-        )
-        outs.append(out)
-    return pd.concat(outs, ignore_index=True)
-
-
-def chunked_rolling_mean_batch(
-    pdf: pd.DataFrame,
-    chunk_size: int,
-    *,
-    value_col: str = "value",
-    window: int = 5,
-    out_col: str = "rolling_mean",
-) -> pd.DataFrame:
-    """Batch harness over the same carry core — lets tests assert
-    chunked-with-state == full-batch (the reference's invariance
-    test, ``test_stateful_processor.py:19-37``)."""
-    carry = None
-    outs = []
-    for lo in range(0, len(pdf), chunk_size):
-        chunk = pdf.iloc[lo:lo + chunk_size]
-        out, carry = _combine_with_carry(chunk, carry, value_col, window, out_col)
-        outs.append(out)
-    return pd.concat(outs, ignore_index=True)
+    """The flagship feature family per ``keys`` series. Output: ts +
+    close/high/low/volume + the features + keys."""
+    return apply_carry(stream_df, keys, market_features_op(ts_col=ts_col))

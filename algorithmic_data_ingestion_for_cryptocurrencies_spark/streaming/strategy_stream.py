@@ -1,13 +1,23 @@
 """Live-trading-loop stateful operator: SMA-crossover signal ->
 forward-filled position -> fee-aware equity curve, continued exactly
-across micro-batches in ONE ``applyInPandasWithState`` stage.
+across micro-batches in ONE stateful stage.
 
 Chaining two stateful stages (signal, then backtest) would need two
 grouped stateful operators in one streaming query; fusing them keeps
-the pipeline a single stage with a single state struct. State per
-series is bounded: the trailing ``slow`` (ts, close) rows (enough
-history for both SMAs and the crossover diff) plus the O(1) backtest
-scalars — independent of stream length.
+the pipeline a single stage with a single state struct. The operator is
+a chunk step run by the shared carry driver (:mod:`._carry`):
+
+- step — :func:`_strategy_combine`: signals over (carried tail +
+  chunk), position, then the :mod:`.backtest_stream` curve step;
+- state — ``ts``/``closes`` (the trailing ``slow`` rows: enough history
+  for both SMAs and the crossover diff), ``last_pos``, and the four
+  backtest scalars (``last_close``, ``last_position``, ``cum_logeq``,
+  ``peak_equity``) — bounded, independent of stream length;
+- chunk ordering — ``batch_order``, as for the backtest operator:
+  ``"buffer"`` (default) buffers and sorts a group's micro-batch once,
+  ``"chunk"`` folds chunk-by-chunk at O(Arrow chunk) memory and fails
+  loudly on a batch that is not chunk-ordered. Across triggers rows must
+  arrive in order.
 
 Semantics mirror the batch pair
 ``operators/signals.py:with_sma_crossover_signals`` →
@@ -19,22 +29,18 @@ Semantics mirror the batch pair
   NULL diff — pandas' NaN-compares-False would fabricate an entry)
 - position = last signal forward-filled, seeded from the carried
   position so a hold survives chunk boundaries
-- curve continuation via the :mod:`backtest_stream` carry core
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 import numpy as np
 import pandas as pd
 
-from .backtest_stream import _bt_combine_with_carry, _ordered_chunks
-
-try:  # pyspark >= 3.4
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-except ImportError:  # pragma: no cover - older layout
-    from pyspark.sql.streaming import GroupState, GroupStateTimeout  # type: ignore
+from ._carry import CarryOp, apply_carry
+from .backtest_stream import _CARRY_FIELDS, _CURVE_COLS, _bt_combine_with_carry
 
 
 def _sma_left_fold(close: pd.Series, w: int) -> pd.Series:
@@ -112,7 +118,7 @@ def _strategy_combine(
         )
         p = len(prefix)
         last_pos = carry["last_pos"]
-        bt_carry = carry["bt"]
+        bt_carry = carry  # the flat carry holds the backtest fields too
     else:
         full_close = pdf[price_col].astype(float).reset_index(drop=True)
         p = 0
@@ -140,14 +146,12 @@ def _strategy_combine(
         "ts": [t.isoformat() for t in pd.to_datetime(tail[ts_col])],
         "closes": [float(v) for v in tail[price_col]],
         "last_pos": float(position.iloc[-1]),
-        "bt": new_bt,
+        **new_bt,
     }
     return out, new_carry
 
 
-def chunked_strategy_batch(
-    pdf: pd.DataFrame,
-    chunk_size: int,
+def sma_strategy_op(
     *,
     fast: int = 10,
     slow: int = 50,
@@ -155,25 +159,26 @@ def chunked_strategy_batch(
     price_col: str = "close",
     ts_col: str = "ts",
     sort_cols: Sequence[str] | None = None,
-) -> pd.DataFrame:
-    """Batch harness over the fused carry core (chunked == full-batch
-    equivalence twin). NOTE: chunks are taken from ``pdf`` in its GIVEN
-    row order; pass a pre-sorted frame (the sort inside the carry core
-    is per-chunk)."""
-    fee = fee_bps / 1e4
-    carry = None
-    outs = []
-    for lo in range(0, len(pdf), chunk_size):
-        out, carry = _strategy_combine(
-            pdf.iloc[lo:lo + chunk_size], carry, fast=fast, slow=slow,
-            fee=fee, price_col=price_col, ts_col=ts_col,
-            sort_cols=sort_cols,
-        )
-        outs.append(out)
-    return pd.concat(outs, ignore_index=True)
-
-
-_BT_FIELDS = ("last_close", "last_position", "cum_logeq", "peak_equity")
+    batch_order: str = "buffer",
+) -> CarryOp:
+    """The fused SMA strategy as a :class:`._carry.CarryOp`."""
+    return CarryOp(
+        step=partial(
+            _strategy_combine, fast=fast, slow=slow, fee=fee_bps / 1e4,
+            price_col=price_col, ts_col=ts_col, sort_cols=sort_cols,
+        ),
+        state=(
+            ("ts", "array<string>"), ("closes", "array<double>"),
+            ("last_pos", "double"), *((f, "double") for f in _CARRY_FIELDS),
+        ),
+        out=(
+            (ts_col, "timestamp"), (price_col, "double"),
+            ("entry_sig", "int"), ("exit_sig", "int"), ("position", "long"),
+            *((c, "double") for c in _CURVE_COLS),
+        ),
+        sort_cols=list(sort_cols) if sort_cols else [ts_col],
+        batch_order=batch_order,
+    )
 
 
 def apply_stateful_sma_strategy(
@@ -188,72 +193,10 @@ def apply_stateful_sma_strategy(
     sort_cols: Sequence[str] | None = None,
     batch_order: str = "buffer",
 ):
-    """Wire the fused signal+backtest onto a (streaming) DataFrame
-    grouped by ``keys``.
-
-    ``batch_order`` governs micro-batch consumption (see
-    :func:`backtest_stream._ordered_chunks`): ``"buffer"`` (default)
-    concatenates and sorts the group's chunks once — tolerant of
-    arbitrary within-batch row order, peak memory O(micro-batch);
-    ``"chunk"`` folds and emits chunk-by-chunk through the same carry
-    core — peak memory O(Arrow chunk), the backfill-safe mode — and
-    fails loudly if the batch is not chunk-ordered. Ordering ACROSS
-    triggers is an in-order-arrival assumption either way — enforce
-    upstream. Pass ``sort_cols`` when ``ts_col`` alone is not unique
-    per series."""
-    fee = fee_bps / 1e4
-    key_cols = list(keys)
-
-    def fn(key, pdf_iter, state: GroupState):
-        carry = None
-        if state.exists:
-            (ts_list, closes, last_pos, *bt_vals) = state.get
-            carry = {
-                "ts": list(ts_list), "closes": list(closes),
-                "last_pos": last_pos,
-                "bt": dict(zip(_BT_FIELDS, bt_vals)),
-            }
-        emitted = False
-        for pdf in _ordered_chunks(
-            pdf_iter, batch_order=batch_order,
-            cols=sort_cols if sort_cols else [ts_col],
-        ):
-            out, carry = _strategy_combine(
-                pdf, carry, fast=fast, slow=slow, fee=fee,
-                price_col=price_col, ts_col=ts_col, sort_cols=sort_cols,
-            )
-            for i, k in enumerate(key_cols):
-                out[k] = key[i]
-            emitted = True
-            yield out
-        if emitted:
-            state.update((
-                carry["ts"], carry["closes"], carry["last_pos"],
-                *[carry["bt"][f] for f in _BT_FIELDS],
-            ))
-
-    return _wire(stream_df, fn, key_cols, price_col, ts_col)
-
-
-def _wire(stream_df, fn, key_cols, price_col, ts_col):
-    key_schema = ", ".join(
-        f"{k} {stream_df.schema[k].dataType.simpleString()}" for k in key_cols
-    )
-    out_schema = (
-        f"{ts_col} timestamp, {price_col} double, "
-        "entry_sig int, exit_sig int, position long, trade double, "
-        "strategy_ret double, equity double, drawdown double, "
-        + key_schema
-    )
-    state_schema = (
-        "ts array<string>, closes array<double>, last_pos double, "
-        "last_close double, last_position double, "
-        "cum_logeq double, peak_equity double"
-    )
-    return stream_df.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Fused signal + backtest per ``keys`` series. Output: ts + close +
+    entry/exit signals + position + the four curve columns + keys. Pass
+    ``sort_cols`` when ``ts_col`` alone is not unique per series."""
+    return apply_carry(stream_df, keys, sma_strategy_op(
+        fast=fast, slow=slow, fee_bps=fee_bps, price_col=price_col,
+        ts_col=ts_col, sort_cols=sort_cols, batch_order=batch_order,
+    ))

@@ -13,9 +13,12 @@ from pyspark.sql import functions as F
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.backtest import (
     backtest_positions,
 )
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming._carry import (
+    chunked_batch,
+)
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.backtest_stream import (
     apply_stateful_backtest,
-    chunked_backtest_batch,
+    backtest_op,
 )
 
 FEE_BPS = 10.0
@@ -45,10 +48,8 @@ def batch_expected(spark, curve_pdf):
 
 def test_chunked_equals_batch_operator(curve_pdf, batch_expected):
     for chunk_size in (9, 64, 500):
-        chunked = chunked_backtest_batch(
-            curve_pdf, chunk_size, price_col="close",
-            position_col="position", fee_bps=FEE_BPS,
-        )
+        op = backtest_op(price_col="close", position_col="position", fee_bps=FEE_BPS)
+        chunked = chunked_batch(op, curve_pdf, chunk_size)
         for col in ("trade", "strategy_ret", "equity", "drawdown"):
             np.testing.assert_allclose(
                 chunked[col].to_numpy(dtype=float),

@@ -10,8 +10,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming._carry import (
+    group_fn,
+)
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.backtest_stream import (
-    stateful_backtest,
+    backtest_op,
 )
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.strategy_stream import (
     apply_stateful_sma_strategy,  # noqa: F401  (signature carries batch_order)
@@ -78,13 +81,13 @@ def test_chunk_mode_streams_per_chunk_and_matches_buffer(series_pdf):
     chunks = _chunks(series_pdf, 64)
 
     buf_state = _FakeState()
-    fn_buf = stateful_backtest(["sym"], batch_order="buffer", **kw)
+    fn_buf = group_fn(backtest_op(batch_order="buffer", **kw), ["sym"])
     buffered = pd.concat(
         fn_buf(("X",), iter(chunks), buf_state), ignore_index=True
     )
 
     chk_state = _FakeState()
-    fn_chk = stateful_backtest(["sym"], batch_order="chunk", **kw)
+    fn_chk = group_fn(backtest_op(batch_order="chunk", **kw), ["sym"])
     it = _CountingIter(chunks)
     gen = fn_chk(("X",), it, chk_state)
     first = next(gen)
@@ -111,17 +114,17 @@ def test_chunk_mode_streams_per_chunk_and_matches_buffer(series_pdf):
 
 
 def test_chunk_mode_rejects_out_of_order_chunks(series_pdf):
-    fn = stateful_backtest(
-        ["sym"], price_col="close", position_col="position",
+    fn = group_fn(backtest_op(
+        price_col="close", position_col="position",
         fee_bps=FEE_BPS, ts_col="ts", batch_order="chunk",
-    )
+    ), ["sym"])
     mid = len(series_pdf) // 2
     bad = [series_pdf.iloc[mid:].reset_index(drop=True),
            series_pdf.iloc[:mid].reset_index(drop=True)]
     with pytest.raises(ValueError, match="not chunk-ordered"):
         list(fn(("X",), iter(bad), _FakeState()))
     # unknown mode fails loudly too
-    fn_bad = stateful_backtest(["sym"], batch_order="nope")
+    fn_bad = group_fn(backtest_op(batch_order="nope"), ["sym"])
     with pytest.raises(ValueError, match="unknown batch_order"):
         list(fn_bad(("X",), iter([series_pdf]), _FakeState()))
 

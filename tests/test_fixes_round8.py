@@ -3,8 +3,9 @@
 1. strategy/backtest carry cores order tied timestamps
    deterministically (sort_cols passthrough + stable sort) and the
    chunked strategy equals the batch operator pair on non-unique ts.
-2. stateful fns buffer a group's micro-batch chunks and sort ONCE, so
-   out-of-order Arrow chunking cannot feed bars out of time order.
+2. all five stateful stream operators buffer a group's micro-batch
+   chunks and sort ONCE, so out-of-order Arrow chunking cannot feed
+   bars out of time order.
 3. IncrementalDedup._read propagates real read failures instead of
    silently resetting the store; a missing path still means "new
    store".
@@ -21,7 +22,16 @@ import random
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
+
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.indicators import (
+    MARKET_FEATURES,
+)
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming import (
+    backtest_stream,
+    stateful,
+    strategy_stream,
+)
 
 FAST, SLOW, FEE_BPS = 5, 15, 10.0
 
@@ -49,8 +59,11 @@ def test_chunked_strategy_tied_ts_deterministic_and_batch_exact(
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.signals import (
         with_sma_crossover_signals,
     )
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming._carry import (
+        chunked_batch,
+    )
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.strategy_stream import (
-        chunked_strategy_batch,
+        sma_strategy_op,
     )
 
     df = spark.createDataFrame(tied_ts_pdf).withColumn("sym", F.lit("X"))
@@ -62,13 +75,10 @@ def test_chunked_strategy_tied_ts_deterministic_and_batch_exact(
         price_col="close", position_col="position", fee_bps=FEE_BPS,
     ).orderBy("ts", "k").toPandas()
 
-    outs = [
-        chunked_strategy_batch(
-            tied_ts_pdf, 37, fast=FAST, slow=SLOW, fee_bps=FEE_BPS,
-            sort_cols=["ts", "k"],
-        )
-        for _ in range(2)
-    ]
+    op = sma_strategy_op(
+        fast=FAST, slow=SLOW, fee_bps=FEE_BPS, sort_cols=["ts", "k"]
+    )
+    outs = [chunked_batch(op, tied_ts_pdf, 37) for _ in range(2)]
     # run-to-run determinism on tied bars
     pd.testing.assert_frame_equal(outs[0], outs[1])
     for col in ("position", "trade", "strategy_ret", "equity", "drawdown"):
@@ -96,79 +106,83 @@ class _FakeState:
         self._val = val
 
 
-def test_stateful_backtest_reorders_arrow_chunks(tied_ts_pdf):
+class _CaptureGroupFn:
+    """Stand-in streaming frame: ``apply_stateful_*`` hands it the
+    per-group function it would run under applyInPandasWithState, so
+    the test drives each operator's real function."""
+
+    schema = T.StructType([
+        T.StructField("sym", T.StringType()),
+        T.StructField("position", T.LongType()),
+    ])
+
+    def groupBy(self, *keys):
+        return self
+
+    def applyInPandasWithState(self, fn, **_):
+        return fn
+
+
+_CURVE = ["trade", "strategy_ret", "equity", "drawdown"]
+# (apply fn, kwargs, value columns); operators taking ``sort_cols`` run
+# on the tied-ts frame with ``k`` as tiebreak, the ts-ordered ones on
+# its unique-ts half
+_REORDER_CASES = {
+    "rolling_mean": (stateful.apply_stateful_rolling_mean,
+                     dict(value_col="close", window=5), ["rolling_mean"]),
+    "ewm": (stateful.apply_stateful_ewm,
+            dict(value_col="close", span=12), ["ewm"]),
+    "market_features": (stateful.apply_stateful_market_features,
+                        dict(ts_col="ts"), list(MARKET_FEATURES)),
+    "backtest": (backtest_stream.apply_stateful_backtest,
+                 dict(fee_bps=FEE_BPS, sort_cols=["ts", "k"]), _CURVE),
+    "sma_strategy": (strategy_stream.apply_stateful_sma_strategy,
+                     dict(fast=FAST, slow=SLOW, fee_bps=FEE_BPS,
+                          sort_cols=["ts", "k"]),
+                     ["entry_sig", "exit_sig", "position", *_CURVE]),
+}
+
+
+@pytest.mark.parametrize("op", list(_REORDER_CASES))
+def test_stateful_reorders_arrow_chunks(tied_ts_pdf, op):
     """Feeding a group's micro-batch as two chunks in REVERSED order
-    must equal the single-chunk in-order run: the fn buffers, concats
-    and sorts once before the carry."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.backtest_stream import (
-        stateful_backtest,
+    must equal the single-chunk in-order run: every operator buffers,
+    concats and sorts once before the carry. An empty micro-batch
+    emits nothing and leaves the state unset."""
+    apply, kw, cols = _REORDER_CASES[op]
+    fn = apply(_CaptureGroupFn(), keys=["sym"], **kw)
+
+    pdf = tied_ts_pdf if "sort_cols" in kw else tied_ts_pdf[tied_ts_pdf["k"] == 1]
+    pdf = pdf.sort_values(["ts", "k"], kind="stable").reset_index(drop=True)
+    pdf = pdf.assign(
+        high=pdf["close"] * 1.01, low=pdf["close"] * 0.99,
+        volume=1.0 + np.arange(len(pdf)) % 5,
+        position=(np.arange(len(pdf)) // 7) % 2,  # some trades
+        sym="X",
     )
 
-    pdf = tied_ts_pdf.sort_values(["ts", "k"], kind="stable").reset_index(
-        drop=True
-    )
-    pdf["position"] = (np.arange(len(pdf)) // 7) % 2  # some trades
-    fn = stateful_backtest(
-        ["sym"], price_col="close", position_col="position",
-        fee_bps=FEE_BPS, ts_col="ts", sort_cols=["ts", "k"],
-    )
+    def run(chunks, state):
+        return pd.concat(fn(("X",), iter(chunks), state), ignore_index=True)
 
-    ordered = list(fn(("X",), iter([pdf]), _FakeState()))[0]
+    ordered_state, scrambled_state = _FakeState(), _FakeState()
+    ordered = run([pdf], ordered_state)
     mid = len(pdf) // 2
-    scrambled_state = _FakeState()
-    scrambled = list(
-        fn(
-            ("X",),
-            iter([pdf.iloc[mid:], pdf.iloc[:mid]]),  # chunks out of order
-            scrambled_state,
-        )
-    )[0]
-    for col in ("trade", "strategy_ret", "equity", "drawdown"):
+    scrambled = run([pdf.iloc[mid:], pdf.iloc[:mid]], scrambled_state)
+    assert len(scrambled) == len(ordered) == len(pdf)
+    assert (scrambled["ts"].to_numpy() == ordered["ts"].to_numpy()).all()
+    for col in cols:
         np.testing.assert_allclose(
-            scrambled[col].to_numpy(), ordered[col].to_numpy(),
+            scrambled[col].astype(float).to_numpy(),
+            ordered[col].astype(float).to_numpy(),
             rtol=1e-12, err_msg=col,
         )
     assert scrambled_state.exists
+    np.testing.assert_equal(scrambled_state.get, ordered_state.get)
 
     # empty micro-batch: no emission, state untouched
     s = _FakeState()
     assert list(fn(("X",), iter([pdf.iloc[:0]]), s)) == []
     assert not s.exists
-
-
-def test_stateful_strategy_reorders_arrow_chunks(tied_ts_pdf):
-    """Same buffering contract for the fused strategy fn — wire-level
-    check through the real streaming stage is in
-    test_strategy_stream.py; this drives the fn directly with
-    scrambled chunk order."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming import (
-        strategy_stream as ss,
-    )
-
-    pdf = tied_ts_pdf.sort_values(["ts", "k"], kind="stable").reset_index(
-        drop=True
-    )
-    fee = FEE_BPS / 1e4
-
-    def run(chunks):
-        carry = None
-        # mirror fn's buffering: concat then one combine
-        full = pd.concat(chunks, ignore_index=True)
-        out, carry = ss._strategy_combine(
-            full, carry, fast=FAST, slow=SLOW, fee=fee,
-            sort_cols=["ts", "k"],
-        )
-        return out
-
-    mid = len(pdf) // 2
-    a = run([pdf])
-    b = run([pdf.iloc[mid:], pdf.iloc[:mid]])
-    for col in ("position", "equity", "drawdown"):
-        np.testing.assert_allclose(
-            a[col].astype(float).to_numpy(),
-            b[col].astype(float).to_numpy(),
-            rtol=1e-12, err_msg=col,
-        )
 
 
 def _mk_docs(spark, rows):

@@ -16,9 +16,12 @@ from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.backtest im
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.signals import (
     with_sma_crossover_signals,
 )
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming._carry import (
+    chunked_batch,
+)
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.strategy_stream import (
     apply_stateful_sma_strategy,
-    chunked_strategy_batch,
+    sma_strategy_op,
 )
 
 FAST, SLOW, FEE_BPS = 5, 15, 10.0
@@ -60,9 +63,8 @@ def _assert_curves_match(got: pd.DataFrame, exp: pd.DataFrame, label: str):
 
 def test_chunked_strategy_equals_batch_pair(price_pdf, batch_expected):
     for chunk_size in (11, 60, 400):
-        chunked = chunked_strategy_batch(
-            price_pdf, chunk_size, fast=FAST, slow=SLOW, fee_bps=FEE_BPS,
-        )
+        op = sma_strategy_op(fast=FAST, slow=SLOW, fee_bps=FEE_BPS)
+        chunked = chunked_batch(op, price_pdf, chunk_size)
         _assert_curves_match(chunked, batch_expected, f"chunk={chunk_size}")
 
 

@@ -18,9 +18,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming._carry import (
+    chunked_batch,
+)
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.stateful import (
     apply_stateful_rolling_mean,
-    chunked_rolling_mean_batch,
+    ewm_op,
+    market_features_op,
+    rolling_mean_op,
 )
 
 
@@ -40,7 +45,7 @@ def test_chunked_equals_full_batch(series_pdf):
     full = series_pdf.copy()
     full["rolling_mean"] = full["value"].rolling(5).mean()
     for chunk_size in (7, 50, 200):
-        chunked = chunked_rolling_mean_batch(series_pdf, chunk_size, window=5)
+        chunked = chunked_batch(rolling_mean_op(window=5), series_pdf, chunk_size)
         np.testing.assert_allclose(
             chunked["rolling_mean"].to_numpy(),
             full["rolling_mean"].to_numpy(),
@@ -105,13 +110,9 @@ def test_streaming_stateful_equals_batch(spark, series_pdf):
 
 
 def test_chunked_ewm_equals_full_batch(series_pdf):
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.stateful import (
-        chunked_ewm_batch,
-    )
-
     full = series_pdf["value"].ewm(span=12, adjust=True).mean()
     for chunk_size in (1, 7, 50, 200):
-        chunked = chunked_ewm_batch(series_pdf, chunk_size, span=12)
+        chunked = chunked_batch(ewm_op(span=12), series_pdf, chunk_size)
         np.testing.assert_allclose(
             chunked["ewm"].to_numpy(), full.to_numpy(), rtol=1e-12,
             err_msg=f"chunk_size={chunk_size}",
@@ -170,13 +171,10 @@ def test_chunked_market_features_equals_full_batch(ohlcv_series_pdf):
     """ST3 generality: the WHOLE flagship feature family survives
     chunking with carried state — rolling windows from the 20-row
     tail, EWMs and OBV from O(1) accumulators (r3 verdict #6)."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.stateful import (
-        chunked_market_features_batch,
-    )
 
     full = _full_batch_features(ohlcv_series_pdf)
     for chunk_size in (1, 7, 50, 240):
-        chunked = chunked_market_features_batch(ohlcv_series_pdf, chunk_size)
+        chunked = chunked_batch(market_features_op(), ohlcv_series_pdf, chunk_size)
         assert len(chunked) == len(full)
         for c in FEATS:
             x, y = chunked[c].to_numpy(), full[c].to_numpy()

@@ -1,8 +1,23 @@
-"""Regenerate PLANS.md: formatted physical plans for representative
-queries with commentary on the 100 TB property each demonstrates."""
+"""Dump formatted physical plans.
+
+With no arguments, regenerate PLANS.md: plans for representative
+queries with commentary on the 100 TB property each demonstrates
+(sf dir from ``SF_DIR``, default sf0.01).
+
+With a tag, write one ``explain("formatted")`` file per named query,
+``<out-dir>/<query>_<tag>.txt``, on a session with shuffle partitions
+sized to the sf dir. ``--exec`` first executes each query through its own
+QueryExecution, so the file holds the AQE FINAL plan
+(isFinalPlan=true, suffix ``_executed``): runtime decisions such as
+exchange reuse in a self-join only show there.
+
+Usage: python tools/dump_plans.py
+       python tools/dump_plans.py <tag> [--exec] [--out-dir DIR] <query> [query ...]
+"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -204,12 +219,49 @@ unrolling is gated at `UNROLL_MAX_DIM = 4`. Guarded by
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("tag", nargs="?", help="file-name tag, e.g. before|after; omit to regenerate PLANS.md")
+    ap.add_argument("queries", nargs="*", help="registry query names")
+    ap.add_argument("--exec", dest="execute", action="store_true",
+                    help="execute each query first and dump the AQE-final plan")
+    ap.add_argument("--out-dir", default="plans", help="directory for the per-query files")
+    args = ap.parse_intermixed_args()
+    if args.tag is not None and not args.queries:
+        ap.error("name at least one query to dump")
+
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import REGISTRY
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.plans.inspect import explain_str
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.session import get_spark
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.session import (
+        clear_persisted_blocks,
+        get_spark,
+        shuffle_partitions_for_dir,
+    )
 
-    spark = get_spark("plandump")
     sf = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+    if args.tag is not None:
+        spark = get_spark("plandump", shuffle_partitions=shuffle_partitions_for_dir(sf))
+        os.makedirs(args.out_dir, exist_ok=True)
+        for name in args.queries:
+            fn, _sql = REGISTRY[name]
+            df = fn(spark, sf)
+            if args.execute:
+                clear_persisted_blocks(spark, blocking=True)
+                # collect THROUGH the DataFrame's own QueryExecution (a
+                # .write would plan a new one and leave this one
+                # isFinalPlan=false); results dumped this way are small
+                print(f"{name}: executed, {len(df.collect())} rows")
+            text = explain_str(df, "formatted")
+            suffix = f"{args.tag}_executed" if args.execute else args.tag
+            path = os.path.join(args.out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                mode = "executed/AQE-final" if args.execute else "static"
+                f.write(f"-- {name} @ {sf} ({mode})\n")
+                f.write(text)
+            print(f"wrote {path} ({len(text)} bytes)")
+        return
+    spark = get_spark("plandump")
     out = [
         "# PLANS — physical-plan evidence for the scale design",
         "",
