@@ -3333,8 +3333,6 @@ def sim_topk(spark, sf_dir):
 def sim_knn(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    # no dim= : the HOF scoring tier wins at dim=64 (r4 regression
-    # reverted; see UNROLL_MAX_DIM in operators/similarity.py)
     return knn_join(queries, emb, k=5, id_col="vec_id", vec_col="embedding")
 
 
@@ -3350,8 +3348,7 @@ def sim_knn(spark, sf_dir):
 def sim_near_pairs(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     # dim=64 here is ONLY the LSH fail-over routing hint for the
-    # O(n^2) cap guard; scoring runs the HOF tier (dim > UNROLL_MAX_DIM
-    # in operators/similarity.py — the r4 unrolled-tier regression)
+    # O(n^2) cap guard; it does not touch the scoring expression
     return embedding_near_pairs(
         emb, threshold=0.3, id_col="vec_id", vec_col="embedding", dim=64
     )
@@ -4537,10 +4534,9 @@ def _portable_cents_cte(
     cents_from: str = "embeddings",
     dim: int = 64,
 ) -> tuple[str, str]:
-    """CTE chain for similarity's ``quantizer="portable"`` — the
-    DuckDB twin of FIXED-POINT-mean Lloyd
-    (`similarity.kmeans_centroids(mean="scaled_int")`). Seeds are the
-    library default (the k lowest-id corpus vectors); each
+    """CTE chain for similarity's coarse quantizer — the DuckDB twin
+    of FIXED-POINT-mean Lloyd (`similarity.kmeans_centroids`). Seeds
+    are the k lowest-id corpus vectors; each
     iteration re-assigns by the `_dot_sql` argmax (ties → lowest
     centroid_id, `_assign_expr`'s struct order) and recomputes means as
     ``SUM(FLOOR(x * 2^40)::DECIMAL(38,0))`` — integer addition is
@@ -4586,8 +4582,8 @@ def _ivf_sql(
     queries_where: str = "vec_id < 3",
     iters: int = 3,
 ) -> str:
-    """DuckDB twin of the PORTABLE IVF path (quantizer="portable",
-    PLANS.md rule V): the coarse quantizer is `_portable_cents_cte`'s
+    """DuckDB twin of the IVF path (`similarity.ivf_topk`, PLANS.md
+    rule V): the coarse quantizer is `_portable_cents_cte`'s
     bit-reproducible Lloyd chain, the assignment/probe argmax compares
     the identical FLOAT-product DOUBLE-accumulated dots both engines
     compute (`_dot_sql`), and the exact rerank is the proven
@@ -4633,20 +4629,17 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 )
 def sim_ivf(spark, sf_dir):
     # IVF inverted-file ANN (coarse k-means quantizer + nprobe lists +
-    # exact rerank). r11: the registry row runs quantizer="portable" —
-    # the SAME Lloyd k-means with an order-independent fixed-point
-    # mean (FLOOR(x*2^40) summed as DECIMAL(38,0)), so every value is
-    # DuckDB-reproducible — flipped from rows-only to hash-exact with
-    # NO recall change (0.96@nprobe=8, same as the float-mean default;
-    # asserted in tests/test_ivf_backfill.py).
+    # exact rerank). The Lloyd mean is order-independent fixed point
+    # (FLOOR(x*2^40) summed as DECIMAL(38,0)), so every value is
+    # DuckDB-reproducible (hash-exact; recall 0.96@nprobe=8 asserted
+    # in tests/test_ivf_backfill.py).
     from .operators.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
-    # no dim= : HOF scoring tier (r4 unrolled-tier regression reverted)
     return ivf_topk(
         queries, emb, k=5, id_col="vec_id", vec_col="embedding",
-        n_centroids=16, nprobe=8, quantizer="portable",
+        n_centroids=16, nprobe=8,
     )
 
 
@@ -4799,20 +4792,18 @@ FROM assigned a LEFT JOIN comp c ON a.vec_id = c.vec_id"""
 def sim_semantic_dedup_q(spark, sf_dir):
     # SemDeDup: coarse clusters -> intra-cluster cosine pairs ->
     # connected components -> min-id survivor per duplicate group.
-    # r11: the registry row runs quantizer="portable" (fixed-point-
-    # mean Lloyd k-means, recall-identical to the float default),
-    # making cluster assignment DuckDB-reproducible; the component's
-    # oracle is the dedup_clusters recursive-CTE transitive closure —
-    # flipped from rows-only to hash-exact. k-means stays the library
-    # default quantizer; survivor invariants (no surviving
-    # intra-cluster pair >= threshold, determinism, dup-class
-    # collapse) remain pytest-asserted in test_dedup_scale.py.
+    # The fixed-point-mean Lloyd quantizer makes cluster assignment
+    # DuckDB-reproducible; the component's oracle is the
+    # dedup_clusters recursive-CTE transitive closure (hash-exact).
+    # Survivor invariants (no surviving intra-cluster pair >=
+    # threshold, determinism, dup-class collapse) are pytest-asserted
+    # in test_dedup_scale.py.
     from .operators.similarity import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(
         emb, id_col="vec_id", vec_col="embedding",
-        n_clusters=16, threshold=0.95, quantizer="portable",
+        n_clusters=16, threshold=0.95,
     )
 
 
@@ -5041,18 +5032,17 @@ def st15_dedup_incremental(spark, sf_dir):
 def sim_ivf_index(spark, sf_dir):
     # persisted-IVF serving path: build the partitioned index once,
     # query with partition-pruned list scans (recall + pruning
-    # plan-asserted in tests/test_ivf_backfill.py). r11: built over
-    # the portable fixed-point-mean k-means quantizer — the persisted
-    # centroids round-trip float32 parquet exactly, so the served
-    # values equal the in-memory portable IVF and carry the same
-    # DuckDB oracle (flipped from rows-only to hash-exact).
+    # plan-asserted in tests/test_ivf_backfill.py). The persisted
+    # fixed-point-mean k-means centroids round-trip float32 parquet
+    # exactly, so the served values equal the in-memory IVF and carry
+    # the same DuckDB oracle (hash-exact).
     import tempfile
 
     from .operators.similarity import build_ivf_index, ivf_index_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     path = tempfile.mkdtemp(prefix="adi_ivf_") + "/idx"
-    build_ivf_index(emb, path, n_centroids=16, quantizer="portable")
+    build_ivf_index(emb, path, n_centroids=16)
     queries = emb.filter(F.col("vec_id") < 3)
     return ivf_index_topk(spark, path, queries, k=5, nprobe=8)
 
@@ -5074,12 +5064,12 @@ def sim_ivf_upsert(spark, sf_dir):
     # top-k through the partition-pruned read path. Batch-split
     # invariance, replay idempotence, last-writer-wins re-upsert, and
     # compaction equivalence are pytest-asserted
-    # (tests/test_ivf_upsert.py). r11: with the portable fixed-point
-    # k-means quantizer frozen over the HEAD half, the manifest/LWW
-    # machinery must be value-invisible — the served top-k equals a one-shot
-    # portable IVF over the full corpus with head-half centroids,
-    # which IS the DuckDB oracle (flipped from rows-only; the protocol
-    # state-machine itself stays pytest-verified).
+    # (tests/test_ivf_upsert.py). With the fixed-point k-means
+    # quantizer frozen over the HEAD half, the manifest/LWW machinery
+    # must be value-invisible — the served top-k equals a one-shot IVF
+    # over the full corpus with head-half centroids, which IS the
+    # DuckDB oracle (the protocol state-machine itself stays
+    # pytest-verified).
     import tempfile
 
     from .operators.similarity import (
@@ -5092,8 +5082,7 @@ def sim_ivf_upsert(spark, sf_dir):
     hi = emb.agg(F.max("vec_id")).first()[0] or 0
     path = tempfile.mkdtemp(prefix="adi_ivf_up_") + "/idx"
     build_ivf_index(
-        emb.filter(F.col("vec_id") <= hi // 2), path, n_centroids=16,
-        quantizer="portable",
+        emb.filter(F.col("vec_id") <= hi // 2), path, n_centroids=16
     )
     mid = hi // 2 + (hi - hi // 2) // 2
     ivf_index_upsert(

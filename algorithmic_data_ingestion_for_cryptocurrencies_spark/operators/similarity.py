@@ -15,41 +15,17 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..store import genfile
 
-#: Measured crossover for the unrolled ``element_at`` expression tier
-#: (tools/bench_unroll_dim.py, pairwise-scoring workload, min-of-3):
-#: dim=4 the unrolled chain wins (0.40x the HOF tier); dim>=8 it LOSES
-#: 8-10x — the generated whole-stage method (~3 element_at ops per
-#: term across dot + two norms) blows past the JIT inlining /
-#: huge-method limit and runs deoptimized, while the
-#: interpreted-but-tight ArrayAggregate loop stays fast. The round-4
-#: driver bench confirmed the same cliff end-to-end at dim=64
-#: (sim_near_pairs 13.1s -> 41.6s). Above this threshold ``dim`` is
-#: accepted as a routing/metadata hint but the HOF tier is used.
-UNROLL_MAX_DIM = 4
 
-
-def dot(a: Column | str, b: Column | str, *, dim: int | None = None) -> Column:
-    """Dot product. ``dim`` (when given AND <= :data:`UNROLL_MAX_DIM`)
-    unrolls to an ``element_at`` multiply-add chain — plain codegen'd
-    expressions. Spark's higher-order functions
-    (``zip_with``/``aggregate``) are CodegenFallback (each element
-    evaluates through an interpreted lambda closure), but the HOF tier
-    still WINS above tiny dims: the unrolled chain deoptimizes the
-    whole generated stage (see :data:`UNROLL_MAX_DIM`). Both tiers are
-    bit-identical: same left-to-right accumulation from 0.0, same
-    float-multiply-then-double-cast per element.
-
-    Invariant (unrolled tier only): ``dim`` must equal the exact array
-    length — smaller truncates the sum silently, larger yields NULL
-    elements under non-ANSI mode and a NULL score. The HOF tier always
-    uses the full array; guarded by tests/test_similarity.py."""
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product: ``zip_with`` + ``aggregate``, accumulated left to
+    right from 0.0 with each float product cast to double. This is the
+    only scoring form. The higher-order functions are CodegenFallback
+    (each element runs through an interpreted lambda), yet an unrolled
+    ``element_at`` chain lost to them 8-10x from dim=8 up (its
+    generated method passes the JIT's huge-method limit; 3-5x end to
+    end at dim=64) and won only at dim<=4, which no embedding reaches."""
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    if dim is not None and dim <= UNROLL_MAX_DIM:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + (F.element_at(a, i) * F.element_at(b, i)).cast("double")
-        return acc
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -57,24 +33,16 @@ def dot(a: Column | str, b: Column | str, *, dim: int | None = None) -> Column:
     )
 
 
-def norm(a: Column | str, *, dim: int | None = None) -> Column:
-    """L2 norm; same tiering and invariant as :func:`dot`."""
+def norm(a: Column | str) -> Column:
+    """L2 norm, accumulated like :func:`dot`."""
     a = F.col(a) if isinstance(a, str) else a
-    if dim is not None and dim <= UNROLL_MAX_DIM:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            x = F.element_at(a, i)
-            acc = acc + (x * x).cast("double")
-        return F.sqrt(acc)
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double"))
     )
 
 
-def cosine(a: Column | str, b: Column | str, *, dim: int | None = None) -> Column:
-    return dot(a, b, dim=dim) / F.nullif(
-        norm(a, dim=dim) * norm(b, dim=dim), F.lit(0.0)
-    )
+def cosine(a: Column | str, b: Column | str) -> Column:
+    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
 def cosine_topk(
@@ -88,13 +56,9 @@ def cosine_topk(
     """Exact top-k by cosine against a literal query vector: one scan,
     one narrow projection, then a global top-k (``orderBy.limit`` —
     Spark executes it as per-partition top-k + driver merge of k·p
-    rows, no full sort materialization). The query's length is passed
-    as ``dim``, so the score takes the unrolled codegen tier exactly
-    when it wins (dim <= UNROLL_MAX_DIM) and the HOF tier otherwise."""
+    rows, no full sort materialization)."""
     q = F.array(*[F.lit(float(x)) for x in query])
-    scored = df.select(
-        F.col(id_col), cosine(F.col(vec_col), q, dim=len(query)).alias("cosine")
-    )
+    scored = df.select(F.col(id_col), cosine(F.col(vec_col), q).alias("cosine"))
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
@@ -105,15 +69,11 @@ def knn_join(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Brute-force k-NN join: broadcast the (small) query set against
     the corpus, rank per query. Exact; O(|Q|·|C|) scored pairs but
     never materializes beyond the ranked window. Norms are staged once
-    per vector (not once per pair) — same doubles, 3x less work.
-    ``dim`` engages the unrolled scoring tier only when it wins
-    (dim <= UNROLL_MAX_DIM; above that the guard keeps the HOF tier —
-    the r4 dim=64 unroll was a measured 3-5x regression)."""
+    per vector (not once per pair) — same doubles, 3x less work."""
     # r14 (guide §2.5 "one huge unsplittable file ... repartition
     # immediately after the read"): the O(|Q|·|C|) scoring runs at the
     # corpus SCAN's parallelism (the per-query window exchange comes
@@ -140,19 +100,19 @@ def knn_join(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        norm(F.col(vec_col), dim=dim).alias("__qn"),
+        norm(F.col(vec_col)).alias("__qn"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
-        norm(F.col(vec_col), dim=dim).alias("__cn"),
+        norm(F.col(vec_col)).alias("__cn"),
     )
     scored = F.broadcast(q).crossJoin(c).filter(
         F.col("query_id") != F.col("neighbor_id")
     ).select(
         "query_id",
         "neighbor_id",
-        (dot("__qvec", "__cvec", dim=dim)
+        (dot("__qvec", "__cvec")
          / F.nullif(F.col("__qn") * F.col("__cn"), F.lit(0.0))).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -195,7 +155,7 @@ def with_lsh_bucket(
     planes = _hyperplanes(dim, n_planes, seed)
     bits = [
         F.when(
-            dot(F.col(vec_col), F.array(*[F.lit(x) for x in p]), dim=dim) >= 0,
+            dot(F.col(vec_col), F.array(*[F.lit(x) for x in p])) >= 0,
             F.lit(1),
         )
         .otherwise(F.lit(0))
@@ -256,7 +216,7 @@ def ann_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine("__qvec", "__cvec", dim=dim).alias("cosine"),
+            cosine("__qvec", "__cvec").alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -330,12 +290,12 @@ def embedding_near_pairs(
     a = a_src.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col), dim=dim).alias("__na"),
+        norm(F.col(vec_col)).alias("__na"),
     )
     b = df.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col), dim=dim).alias("__nb"),
+        norm(F.col(vec_col)).alias("__nb"),
     )
     if use_lsh:
         if dim is None:
@@ -360,7 +320,7 @@ def embedding_near_pairs(
     return (
         pairs.withColumn(
             "cosine",
-            dot("__va", "__vb", dim=dim)
+            dot("__va", "__vb")
             / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
         )
         .filter(F.col("cosine") >= threshold)
@@ -454,17 +414,16 @@ def embedding_near_pairs_capped(
     )
 
 
-#: Fixed-point scale for the PORTABLE Lloyd mean (PLANS.md rule V
-#: extension): each float32 element is quantized to
-#: ``FLOOR(x * 2^40)`` — exact double arithmetic, unambiguous floor —
-#: and summed as DECIMAL(38,0). Integer/decimal addition is
-#: ORDER-INDEPENDENT, so the parallel aggregation is reproducible
-#: bit-for-bit in any engine (float summation is not: its rounding
-#: depends on reduction order, which is why plain ``F.avg`` Lloyd has
-#: no DuckDB twin). Headroom: the decimal sum overflows only past
-#: ~10^38 / 2^40 ≈ 3e26 summed absolute mass — unreachable. The
-#: 2^-40 input quantization (~1e-12 absolute) is noise relative to
-#: float32's own 2^-24 mantissa.
+#: Fixed-point scale for the Lloyd mean (PLANS.md rule V extension):
+#: each float32 element is quantized to ``FLOOR(x * 2^40)`` — exact
+#: double arithmetic, unambiguous floor — and summed as DECIMAL(38,0).
+#: Integer/decimal addition is ORDER-INDEPENDENT, so the parallel
+#: aggregation is reproducible bit-for-bit in any engine (float
+#: summation is not: its rounding depends on reduction order, which is
+#: why a plain ``F.avg`` Lloyd has no DuckDB twin). Headroom: the
+#: decimal sum overflows only past ~10^38 / 2^40 ≈ 3e26 summed
+#: absolute mass — unreachable. The 2^-40 input quantization (~1e-12
+#: absolute) is noise relative to float32's own 2^-24 mantissa.
 PORTABLE_MEAN_SCALE = float(1 << 40)
 
 
@@ -475,21 +434,20 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     iterations: int = 3,
-    mean: str = "float",
 ) -> DataFrame:
-    """Deterministic Lloyd iterations, pure DataFrame ops: seeds are
-    the k lowest-id vectors (deterministic), each iteration assigns
-    points to the nearest centroid (map-only argmax expression,
-    deterministic ties) and recomputes the mean. Exact k-means is not
-    the goal — IVF only needs a stable coarse quantizer. Returns
-    (centroid_id, centroid).
+    """The coarse quantizer behind IVF and SemDeDup: deterministic
+    Lloyd iterations in pure DataFrame ops. Seeds are the k lowest-id
+    vectors; each iteration assigns points to the nearest centroid
+    (map-only argmax expression, ties to the lowest centroid_id) and
+    recomputes the mean. Exact k-means is not the goal — IVF only
+    needs a stable coarse quantizer. Returns (centroid_id, centroid).
 
-    ``mean="scaled_int"`` swaps the float mean for the
-    order-independent fixed-point mean (:data:`PORTABLE_MEAN_SCALE`),
-    making every Lloyd iteration — and therefore every downstream
-    assignment, probe, and rerank — reproducible in DuckDB. Verified
-    bit-exact over 3 iterations in the registry gate; empty clusters
-    drop identically in both engines (GROUP BY emits no row).
+    The mean is the order-independent fixed-point mean
+    (:data:`PORTABLE_MEAN_SCALE`), so every Lloyd iteration — and
+    therefore every downstream assignment, probe and rerank — is
+    reproducible in DuckDB (``driver_queries._portable_cents_cte``):
+    bit-exact over 3 iterations in the registry gate, and empty
+    clusters drop identically in both engines (GROUP BY emits no row).
     """
     spark = df.sparkSession
     seed_rows = [
@@ -504,8 +462,6 @@ def kmeans_centroids(
     dims = len(seed_rows[0][1])
 
     def _mean_elem(i: int) -> Column:
-        if mean == "float":
-            return F.avg(F.element_at(F.col(vec_col), i + 1))
         scale = F.lit(PORTABLE_MEAN_SCALE)
         q = F.floor(
             F.element_at(F.col(vec_col), i + 1).cast("double") * scale
@@ -522,8 +478,7 @@ def kmeans_centroids(
         # vectors at their true multiplicity in the mean.
         assigned = _assigned_frame(
             df.select(F.col(id_col), F.col(vec_col)),
-            spark.createDataFrame(rows, schema), rows,
-            vec_col=vec_col, dim=dims,
+            spark.createDataFrame(rows, schema), rows, vec_col=vec_col,
         # NULL/malformed vectors assign to NULL (the r12 dirty-input
         # contract) and are EXCLUDED from the means — they carry no
         # usable coordinates; without this filter the NULL group would
@@ -540,82 +495,6 @@ def kmeans_centroids(
         # coarse quantizer has dozens of centroids, not millions)
         rows = [(int(r["centroid_id"]), list(r["centroid"])) for r in new.collect()]
     return spark.createDataFrame(rows, schema)
-
-
-def hash_centroids(
-    df: DataFrame,
-    k: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Portable coarse quantizer (PLANS.md rule V): the centroids are
-    the ``k`` corpus vectors with the smallest ``(md5-prefix, id)``
-    sort key — order statistics of a uniform hash, so the seeds are a
-    uniform corpus sample any engine reproduces from the same rows
-    (lowercase hex compares lexicographically == numerically, the
-    ``sampling._hash_hex8`` invariant). ``centroid_id`` is the rank in
-    that order.
-
-    Unlike :func:`kmeans_centroids` there is NO averaging step: every
-    centroid is a verbatim float32 corpus vector, so the assignment
-    argmax downstream compares dot products that are bit-identical
-    across engines (the ``_cos_sql`` float-multiply contract). This is
-    the CHEAP quantizer (no Lloyd jobs at all); the registry rows use
-    ``quantizer="portable"`` instead — fixed-point-mean Lloyd, which
-    is equally engine-reproducible AND keeps k-means recall (this
-    sampler measured 0.73@nprobe=8 vs Lloyd's 0.96 on the
-    uniform-sphere testdata; floor pytest-pinned). k-means stays the
-    library default quantizer.
-
-    The seed selection is a distributed ``orderBy().limit(k)``
-    (per-partition top-k + driver merge); the rank window then runs on
-    the k-row result, so the unpartitioned window is bounded by
-    ``k``, never the corpus.
-    """
-    from .sampling import _hash_hex8
-
-    h = _hash_hex8(id_col)
-    seeds = (
-        df.select(
-            h.alias("__h"), F.col(id_col).alias("__sid"),
-            F.col(vec_col).alias("centroid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(k)
-    )
-    w = Window.orderBy("__h", "__sid")  # k rows by construction
-    return seeds.select(
-        (F.row_number().over(w) - 1).cast("int").alias("centroid_id"),
-        "centroid",
-    )
-
-
-def _centroids(
-    df: DataFrame,
-    k: int,
-    *,
-    vec_col: str,
-    id_col: str,
-    iterations: int,
-    quantizer: str,
-) -> DataFrame:
-    if quantizer == "hash":
-        return hash_centroids(df, k, vec_col=vec_col, id_col=id_col)
-    if quantizer == "kmeans":
-        return kmeans_centroids(
-            df, k, vec_col=vec_col, id_col=id_col, iterations=iterations
-        )
-    if quantizer == "portable":
-        # the library quantizer with an ORDER-INDEPENDENT fixed-point
-        # mean (rule V): same seeds, same iterations, recall measured
-        # identical (the means differ by <= 2^-40 per element), but
-        # every Lloyd step now has a bit-exact DuckDB twin
-        return kmeans_centroids(
-            df, k, vec_col=vec_col, id_col=id_col, iterations=iterations,
-            mean="scaled_int",
-        )
-    raise ValueError(f"unknown quantizer {quantizer!r} (kmeans|portable|hash)")
 
 
 def _cent_rows(cents: DataFrame) -> list[tuple[int, list[float]]]:
@@ -637,9 +516,7 @@ def _cent_lit(vec: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in vec]).cast("array<float>")
 
 
-def _assign_expr(
-    vec_col: str, cents: list[tuple[int, list[float]]], *, dim: int | None = None
-) -> Column:
+def _assign_expr(vec_col: str, cents: list[tuple[int, list[float]]]) -> Column:
     """Map-only nearest-centroid assignment (r11): ``greatest()`` over
     one ``(dot, -centroid_id)`` struct per centroid — max dot first,
     ties to the LOWEST centroid_id (the negation makes the struct
@@ -653,7 +530,7 @@ def _assign_expr(
     left in an IVF build is the partitioned write itself."""
     structs = [
         F.struct(
-            dot(F.col(vec_col), _cent_lit(v), dim=dim).alias("d"),
+            dot(F.col(vec_col), _cent_lit(v)).alias("d"),
             F.lit(-cid).alias("nc"),
         )
         for cid, v in cents
@@ -665,10 +542,10 @@ def _assign_expr(
     # and silently assign centroid 0 (r11 advisor). Yield NULL instead,
     # matching the broadcast tier's explicit null-out. The gate probes
     # ONE dot (against the first centroid — null-ness is centroid-
-    # independent), not best["d"]: the k-dot greatest() is
-    # CodegenFallback at HOF dims, where a second reference risks
+    # independent), not best["d"]: the k-dot greatest() over HOF dots
+    # is CodegenFallback, where a second reference risks
     # re-evaluating all k dots per row.
-    null_vec = dot(F.col(vec_col), _cent_lit(cents[0][1]), dim=dim).isNull()
+    null_vec = dot(F.col(vec_col), _cent_lit(cents[0][1])).isNull()
     return F.when(null_vec, F.lit(None)).otherwise(-best["nc"]).cast("int")
 
 
@@ -676,8 +553,6 @@ def _probe_expr(
     vec_col: str,
     cents: list[tuple[int, list[float]]],
     nprobe: int,
-    *,
-    dim: int | None = None,
 ) -> Column:
     """Map-only probe-list selection: the ``nprobe`` nearest centroid
     ids as an array, ordered (dot DESC, centroid_id) exactly like the
@@ -685,7 +560,7 @@ def _probe_expr(
     ``(-dot, centroid_id)`` structs needs no exchange at all."""
     arr = F.array(*[
         F.struct(
-            (-dot(F.col(vec_col), _cent_lit(v), dim=dim)).alias("nd"),
+            (-dot(F.col(vec_col), _cent_lit(v))).alias("nd"),
             F.lit(cid).alias("cid"),
         )
         for cid, v in cents
@@ -698,7 +573,7 @@ def _probe_expr(
     # dirty-input contract as _assign_expr; gate on ONE dot, not the
     # sorted array, to avoid re-evaluating the k-dot array under
     # CodegenFallback (r12 review).
-    null_vec = dot(F.col(vec_col), _cent_lit(cents[0][1]), dim=dim).isNull()
+    null_vec = dot(F.col(vec_col), _cent_lit(cents[0][1])).isNull()
     return F.when(null_vec, F.lit(None)).otherwise(probes)
 
 
@@ -719,7 +594,6 @@ def _assigned_frame(
     *,
     vec_col: str,
     out: str = "centroid_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment, tiered on centroid count: the
     map-only greatest() expression up to
@@ -736,7 +610,7 @@ def _assigned_frame(
         )
     if len(crows) <= ASSIGN_EXPR_MAX_CENTROIDS:
         return df.select(
-            *df.columns, _assign_expr(vec_col, crows, dim=dim).alias(out)
+            *df.columns, _assign_expr(vec_col, crows).alias(out)
         )
     key = F.struct(F.col("__d"), (-F.col("centroid_id")).alias("__nc"))
     # max(__d) is NULL iff the row's vector is NULL/malformed (every
@@ -745,7 +619,7 @@ def _assigned_frame(
     # (r11 advisor finding, similarity.py _assign_expr).
     agged = (
         df.crossJoin(F.broadcast(cents))
-        .withColumn("__d", dot(F.col(vec_col), F.col("centroid"), dim=dim))
+        .withColumn("__d", dot(F.col(vec_col), F.col("centroid")))
         .groupBy(*df.columns)
         .agg(
             F.max_by("centroid_id", key).alias(out),
@@ -766,8 +640,6 @@ def _probed_frame(
     cents: DataFrame,
     crows: list[tuple[int, list[float]]],
     nprobe: int,
-    *,
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-``nprobe`` probe lists per query, tiered like
     :func:`_assigned_frame`: map-only array_sort expression for small
@@ -777,16 +649,14 @@ def _probed_frame(
     if len(crows) <= ASSIGN_EXPR_MAX_CENTROIDS:
         return q.select(
             "query_id", "__qvec",
-            F.explode(_probe_expr("__qvec", crows, nprobe, dim=dim)).alias(
-                "centroid_id"
-            ),
+            F.explode(_probe_expr("__qvec", crows, nprobe)).alias("centroid_id"),
         )
     w = Window.partitionBy("query_id").orderBy(
         F.col("__d").desc(), F.col("centroid_id")
     )
     return (
         q.crossJoin(F.broadcast(cents))
-        .withColumn("__d", dot(F.col("__qvec"), F.col("centroid"), dim=dim))
+        .withColumn("__d", dot(F.col("__qvec"), F.col("centroid")))
         # NULL/malformed query vector: drop before ranking, so the
         # query probes nothing — identical to the expr tier's NULL
         # probe array whose explode() drops the row (r12 review: the
@@ -808,8 +678,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 4,
-    dim: int | None = None,
-    quantizer: str = "kmeans",
     iterations: int = 3,
 ) -> DataFrame:
     """IVF approximate k-NN — the inverted-file scale path (the other
@@ -819,14 +687,13 @@ def ivf_topk(
     touches ~``nprobe/n_centroids`` of the corpus, and every stage is
     an equi-join on centroid_id — never n².
 
-    ``quantizer="portable"`` (what the registry rows run, PLANS.md
-    rule V/W) keeps the Lloyd k-means but with the fixed-point mean,
-    making every downstream value DuckDB-reproducible at unchanged
-    recall; ``"hash"`` is the cheap no-Lloyd seed-sample quantizer.
+    The coarse quantizer is :func:`kmeans_centroids` (``iterations``
+    Lloyd steps, fixed-point mean), so every value is reproducible in
+    DuckDB (``driver_queries._ivf_sql``, PLANS.md rules V/W).
     """
-    cents = _centroids(
+    cents = kmeans_centroids(
         corpus, n_centroids, vec_col=vec_col, id_col=id_col,
-        iterations=iterations, quantizer=quantizer,
+        iterations=iterations,
     )
     crows = _cent_rows(cents)
     if not crows:  # empty corpus: empty, correctly-typed result
@@ -847,21 +714,21 @@ def ivf_topk(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("__cvec"),
         ),
-        cents, crows, vec_col="__cvec", dim=dim,
+        cents, crows, vec_col="__cvec",
     )
     query_probes = _probed_frame(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("__qvec"),
         ),
-        cents, crows, nprobe, dim=dim,
+        cents, crows, nprobe,
     )
     scored = (
         query_probes.join(corpus_l, "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            cosine("__qvec", "__cvec", dim=dim).alias("cosine"),
+            cosine("__qvec", "__cvec").alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
@@ -890,9 +757,13 @@ def embedding_near_pairs_arrow(
     1e6) fails over to the bucketed-LSH candidate tier
     (:func:`embedding_near_pairs` with ``use_lsh=True``, which needs
     ``dim``; without ``dim`` the call raises instead of silently
-    collecting an unbounded corpus onto the driver)."""
+    collecting an unbounded corpus onto the driver).
+
+    NULL vectors score no pair, as in the exact tier: one filter drops
+    them before the count, the collect and the per-batch product."""
     import numpy as np
 
+    df = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     n = df.count()
     if n > max_broadcast_vectors:
         if dim is None:
@@ -904,13 +775,15 @@ def embedding_near_pairs_arrow(
         return embedding_near_pairs(
             df, threshold, id_col=id_col, vec_col=vec_col, use_lsh=True, dim=dim
         )
-    rows = df.select(id_col, vec_col).collect()
+    spark = df.sparkSession
+    if n == 0:
+        return spark.createDataFrame([], "id_a long, id_b long, cosine double")
+    rows = df.collect()
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     mat = np.array([r[vec_col] for r in rows], dtype=np.float32)
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     unit = mat / norms
-    spark = df.sparkSession
     b_ids = spark.sparkContext.broadcast(ids)
     b_unit = spark.sparkContext.broadcast(unit)
     thr = float(threshold)
@@ -939,9 +812,7 @@ def embedding_near_pairs_arrow(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
-        block, schema="id_a long, id_b long, cosine double"
-    )
+    return df.mapInPandas(block, schema="id_a long, id_b long, cosine double")
 
 
 def build_ivf_index(
@@ -952,7 +823,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     iterations: int = 3,
-    quantizer: str = "kmeans",
 ) -> None:
     """Persist an IVF index as a lake layout: ``<path>/centroids``
     (tiny) plus ``<path>/lists`` PARTITIONED BY centroid_id — the
@@ -962,13 +832,12 @@ def build_ivf_index(
     twin of :func:`ivf_topk`: build once over 100 TB, serve many
     queries without rescanning or re-clustering.
 
-    ``quantizer="hash"`` builds over :func:`hash_centroids` instead of
-    k-means — every served value is then DuckDB-reproducible (the
-    persisted centroids are verbatim float32 corpus vectors, so probe
-    and assignment dots match the oracle bit-for-bit)."""
-    cents = _centroids(
+    The persisted centroids are :func:`kmeans_centroids` output and
+    round-trip float32 parquet exactly, so a served top-k equals the
+    in-memory :func:`ivf_topk` and shares its DuckDB twin."""
+    cents = kmeans_centroids(
         corpus, n_centroids, vec_col=vec_col, id_col=id_col,
-        iterations=iterations, quantizer=quantizer,
+        iterations=iterations,
     )
     crows = _cent_rows(cents)
     # map-only assignment (r11, small-k tier): the build's only
@@ -1466,15 +1335,15 @@ def semantic_dedup(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     threshold: float = 0.9,
-    dim: int | None = None,
     iterations: int = 3,
-    quantizer: str = "kmeans",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
     deduplication"): cluster the embedding space with the coarse
-    k-means quantizer, compute pairwise cosine WITHIN each cluster
-    only, connect pairs above ``threshold`` into duplicate groups
+    quantizer (:func:`kmeans_centroids`, ``iterations`` fixed-point
+    Lloyd steps, so cluster ids are DuckDB-reproducible), compute
+    pairwise cosine WITHIN each cluster only, connect pairs above
+    ``threshold`` into duplicate groups
     (:func:`..dedup.connected_components` — near-dup relations are
     not transitive), and keep the minimum-id representative per
     group. The batch twin of the curation step between exact dedup
@@ -1502,9 +1371,8 @@ def semantic_dedup(
     """
     from .dedup import connected_components
 
-    cents = _centroids(
-        df, n_clusters, vec_col=vec_col, id_col=id_col,
-        iterations=iterations, quantizer=quantizer,
+    cents = kmeans_centroids(
+        df, n_clusters, vec_col=vec_col, id_col=id_col, iterations=iterations,
     )
     crows = _cent_rows(cents)
     if not crows:  # empty corpus: empty frame, output schema intact
@@ -1521,7 +1389,7 @@ def semantic_dedup(
     # equi-join on cluster_id below
     assigned = _assigned_frame(
         df.select(F.col(id_col), F.col(vec_col)),
-        cents, crows, vec_col=vec_col, out="cluster_id", dim=dim,
+        cents, crows, vec_col=vec_col, out="cluster_id",
     )
     a = assigned.select(
         F.col("cluster_id"),
@@ -1534,7 +1402,7 @@ def semantic_dedup(
     pairs = (
         a.join(b, "cluster_id")
         .filter(F.col("__ida") < F.col("__idb"))
-        .filter(cosine("__va", "__vb", dim=dim) >= threshold)
+        .filter(cosine("__va", "__vb") >= threshold)
         .select(F.col("__ida").alias("id_a"), F.col("__idb").alias("id_b"))
     )
     comps = connected_components(pairs)

@@ -201,14 +201,11 @@ def test_pagerank_empty_edges_returns_empty(spark):
     assert out.count() == 0
 
 
-@pytest.mark.parametrize("quantizer", ["kmeans", "portable"])
-def test_semantic_dedup_invariants(spark, quantizer):
+def test_semantic_dedup_invariants(spark):
     """SemDeDup: (a) planted near-duplicate classes collapse to one
     survivor each; (b) no two survivors in the same cluster are a
     pair at/above the threshold; (c) deterministic across runs; (d)
-    one output row per input row. Runs under both the float-mean
-    library quantizer and the fixed-point portable one (r11) — the
-    invariants are quantizer-independent."""
+    one output row per input row."""
     import numpy as np
 
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
@@ -240,7 +237,7 @@ def test_semantic_dedup_invariants(spark, quantizer):
 
     out = semantic_dedup(
         df, id_col="vec_id", vec_col="embedding", n_clusters=8,
-        threshold=0.98, quantizer=quantizer,
+        threshold=0.98,
     )
     got = {r["vec_id"]: r for r in out.collect()}
     assert len(got) == len(rows)  # one row per input
@@ -273,7 +270,7 @@ def test_semantic_dedup_invariants(spark, quantizer):
     # deterministic
     again = {r["vec_id"]: r for r in semantic_dedup(
         df, id_col="vec_id", vec_col="embedding", n_clusters=8,
-        threshold=0.98, quantizer=quantizer,
+        threshold=0.98,
     ).collect()}
     assert all(
         got[k]["keep"] == again[k]["keep"]

@@ -161,7 +161,7 @@ def test_knn_join_still_parallelizes_serial_corpus(spark):
     ).to_parquet(path)
     corpus = spark.read.parquet(path)
     queries = corpus.limit(3)
-    out = knn_join(queries, corpus, k=2, dim=3)
+    out = knn_join(queries, corpus, k=2)
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.plans.inspect import (
         explain_str,
     )

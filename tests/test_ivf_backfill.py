@@ -26,73 +26,35 @@ def test_ivf_recall_vs_exact(spark):
     assert len(exact & approx) / len(exact) >= 0.9
 
 
-def test_portable_quantizer_recall_matches_kmeans(spark):
-    """quantizer="portable" (r11) is the library Lloyd k-means with an
-    order-independent fixed-point mean — the per-element change is
-    <= 2^-40, so recall must match the float-mean default (0.96@8 on
-    this data for both)."""
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 20)
-    exact = {(r["query_id"], r["neighbor_id"]) for r in knn_join(q, emb, k=5).collect()}
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(
-            q, emb, k=5, n_centroids=16, nprobe=8, quantizer="portable"
-        ).collect()
-    }
-    assert len(exact & approx) / len(exact) >= 0.9
-
-
 def test_portable_mean_tracks_float_mean_bitwise_close(spark):
-    """The fixed-point Lloyd mean deviates from the float mean by at
-    most the 2^-40 input quantization plus one float rounding step —
-    per-element agreement to 1e-6 absolute over 3 full iterations
-    (assignment identity would amplify any real divergence)."""
-    import numpy as np
-
+    """The fixed-point Lloyd mean deviates from a float64 mean by at
+    most the 2^-40 input quantization plus one float32 rounding step.
+    Reference: NumPy Lloyd in float64 with the same k lowest-id seeds,
+    the same argmax (ties to the lowest centroid id; empty clusters
+    drop) and 3 iterations, each centroid rounded to float32 as the
+    quantizer stores it. Per-element agreement to 1e-6 absolute (a
+    diverging assignment would amplify any real error)."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
         kmeans_centroids,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = {r["centroid_id"]: np.asarray(r["centroid"], dtype=np.float64)
-         for r in kmeans_centroids(emb, 8, iterations=3).collect()}
-    b = {r["centroid_id"]: np.asarray(r["centroid"], dtype=np.float64)
-         for r in kmeans_centroids(
-             emb, 8, iterations=3, mean="scaled_int"
-         ).collect()}
-    assert set(a) == set(b)
-    worst = max(float(np.max(np.abs(a[c] - b[c]))) for c in a)
+    pdf = emb.select("vec_id", "embedding").toPandas().sort_values("vec_id")
+    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    ref = {i: mat[i].astype(np.float32) for i in range(8)}
+    for _ in range(3):
+        ids = sorted(ref)
+        cents = np.stack([ref[c] for c in ids]).astype(np.float64)
+        assign = np.asarray(ids)[np.argmax(mat @ cents.T, axis=1)]
+        ref = {
+            c: mat[assign == c].mean(axis=0).astype(np.float32)
+            for c in np.unique(assign)
+        }
+    got = {r["centroid_id"]: np.asarray(r["centroid"], dtype=np.float64)
+           for r in kmeans_centroids(emb, 8, iterations=3).collect()}
+    assert set(got) == {int(c) for c in ref}
+    worst = max(float(np.max(np.abs(got[c] - ref[c]))) for c in got)
     assert worst <= 1e-6, worst
-
-
-def test_hash_centroids_deterministic_uniform_sample(spark):
-    """hash_centroids: k rows, ids 0..k-1, stable across runs, and the
-    chosen seeds are the k smallest (md5-prefix, id) — the portable
-    uniform-sample contract."""
-    import hashlib
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
-        hash_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = hash_centroids(emb, 8).collect()
-    assert sorted(r["centroid_id"] for r in got) == list(range(8))
-    again = hash_centroids(emb, 8).collect()
-    assert {r["centroid_id"]: r["centroid"] for r in got} == {
-        r["centroid_id"]: r["centroid"] for r in again
-    }
-    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
-    expect = sorted(
-        ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest()[:8], i)
-    )[:8]
-    chosen = {tuple(r["centroid"]) for r in got}
-    by_id = {
-        r["vec_id"]: tuple(r["embedding"])
-        for r in emb.filter(F.col("vec_id").isin(expect)).collect()
-    }
-    assert chosen == set(by_id.values())
 
 
 def test_gap_detect_and_backfill_roundtrip(spark):
@@ -144,31 +106,41 @@ def test_gap_detect_and_backfill_roundtrip(spark):
         assert full.count() == n
 
 
-def test_arrow_near_pairs_match_exact_tier(spark):
+@pytest.mark.parametrize("case", ["sf0.01", "empty", "null_vector"])
+def test_arrow_near_pairs_match_exact_tier(spark, case):
+    """The Arrow tier finds the exact tier's pairs, including on an
+    empty corpus and one holding a NULL vector (both crashed the
+    driver-side collect before the NULL filter)."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
         embedding_near_pairs,
         embedding_near_pairs_arrow,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    if case == "empty":
+        emb = emb.limit(0)
+    elif case == "null_vector":
+        emb = spark.read.parquet(
+            "/root/testdata/sf0.001/embeddings.parquet"
+        ).select("vec_id", "embedding").filter(F.col("vec_id") < 30).unionByName(
+            spark.createDataFrame([(10_001, None)], "vec_id long, embedding array<float>")
+        )
     exact = {
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in embedding_near_pairs(emb, 0.3).collect()
     }
-    fast = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_pairs_arrow(emb, 0.3).collect()
-    }
+    fast_df = embedding_near_pairs_arrow(emb, 0.3)
+    assert fast_df.dtypes == [
+        ("id_a", "bigint"), ("id_b", "bigint"), ("cosine", "double")
+    ]
+    fast = {(r["id_a"], r["id_b"]): r["cosine"] for r in fast_df.collect()}
+    assert bool(exact) == (case != "empty")
     # any set difference must sit within float noise of the threshold
     for pair in set(exact) ^ set(fast):
         cos = exact.get(pair, fast.get(pair))
         assert abs(cos - 0.3) < 1e-5
     # shared pairs agree to float32-matmul precision
-    import numpy as np
-
-    common = set(exact) & set(fast)
-    diffs = np.array([abs(exact[p] - fast[p]) for p in common])
-    assert diffs.max() < 1e-5
+    assert all(abs(exact[p] - fast[p]) < 1e-5 for p in set(exact) & set(fast))
 
 
 def test_arrow_flagship_matches_expression_plan(spark):
@@ -252,68 +224,6 @@ def test_exact_near_pairs_cap_guard_never_goes_quadratic(spark):
     assert exact.columns == ["id_a", "id_b", "cosine"]
 
 
-def test_unroll_guard_keeps_hof_tier_above_threshold(spark):
-    """r4 regression guard: dim above UNROLL_MAX_DIM must NOT unroll
-    (the 64-term element_at chain measured 3-5x slower than the HOF
-    tier — tools/bench_unroll_dim.py); at or below the threshold the
-    unrolled tier must be bit-identical to the HOF tier."""
-    from pyspark.sql import functions as F
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
-        UNROLL_MAX_DIM,
-        cosine,
-        dot,
-        norm,
-    )
-
-    # above threshold: expression contains aggregate(), no element_at
-    big = str(dot(F.col("a"), F.col("b"), dim=64)._jc)
-    assert "aggregate" in big and "element_at" not in big
-    assert "element_at" not in str(norm(F.col("a"), dim=64)._jc)
-
-    # at/below threshold: unrolled, and values match HOF bit-exactly
-    df = spark.range(50).select(
-        F.array(
-            *[(F.col("id") * (i + 1) % 13).cast("float") / 13.0 for i in range(UNROLL_MAX_DIM)]
-        ).alias("a"),
-        F.array(
-            *[(F.col("id") * (i + 3) % 7).cast("float") / 7.0 for i in range(UNROLL_MAX_DIM)]
-        ).alias("b"),
-    )
-    small = str(dot(F.col("a"), F.col("b"), dim=UNROLL_MAX_DIM)._jc)
-    assert "element_at" in small
-    rows = df.select(
-        cosine("a", "b").alias("hof"),
-        cosine("a", "b", dim=UNROLL_MAX_DIM).alias("unrolled"),
-    ).collect()
-    assert all(r["hof"] == r["unrolled"] for r in rows)  # bit-identical
-
-
-def test_unrolled_dim_mismatch_surfaces_not_silent(spark):
-    """ADVICE r4: the unrolled tier's dim must equal the array length.
-    Larger dim makes element_at return NULL (non-ANSI) so the score
-    goes NULL — rows must surface as NULL, never as a wrong number;
-    the HOF tier is immune (always full array)."""
-    from pyspark.sql import functions as F
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
-        UNROLL_MAX_DIM,
-        dot,
-    )
-
-    short = UNROLL_MAX_DIM - 1
-    df = spark.range(5).select(
-        F.array(*[F.lit(1.0).cast("float")] * short).alias("a"),
-        F.array(*[F.lit(1.0).cast("float")] * short).alias("b"),
-    )
-    out = df.select(
-        dot("a", "b", dim=UNROLL_MAX_DIM).alias("over"),
-        dot("a", "b").alias("hof"),
-    ).collect()
-    assert all(r["over"] is None for r in out)   # surfaces as NULL
-    assert all(r["hof"] == float(short) for r in out)
-
-
 def test_capped_near_pairs_bounded_and_subset_of_exact(spark):
     """The budgeted tier must (a) never score more than cap vectors
     per bucket, (b) emit a SUBSET of the exact all-pairs result with
@@ -389,23 +299,6 @@ def test_persisted_ivf_index_prunes_partitions_and_recalls(spark, tmp_path):
     assert len(exact & approx) / len(exact) >= 0.9
 
 
-def test_hash_quantizer_recall_sanity(spark):
-    """quantizer="hash" (seed-sample, no Lloyd) is the cheap build
-    option: recall is lower than the Lloyd quantizers by design —
-    pin a floor so the mode stays usable (measured 0.73@nprobe=8 on
-    this uniform-sphere data; real clustered embeddings do better)."""
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 20)
-    exact = {(r["query_id"], r["neighbor_id"]) for r in knn_join(q, emb, k=5).collect()}
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(
-            q, emb, k=5, n_centroids=16, nprobe=8, quantizer="hash"
-        ).collect()
-    }
-    assert len(exact & approx) / len(exact) >= 0.6
-
-
 def test_ivf_and_semantic_dedup_empty_corpus(spark):
     """Empty-corpus edges return typed empty frames (the map-only
     assignment guard, r11): no crash building expressions over zero
@@ -417,7 +310,7 @@ def test_ivf_and_semantic_dedup_empty_corpus(spark):
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).limit(0)
-    out = ivf_topk(emb, emb, k=3, n_centroids=8, quantizer="portable")
+    out = ivf_topk(emb, emb, k=3, n_centroids=8)
     assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
     sd = semantic_dedup(emb, n_clusters=8, threshold=0.9)
@@ -429,7 +322,9 @@ def test_assignment_tiers_agree_above_threshold(spark, monkeypatch):
     """The large-k broadcast-join assignment tier (above
     ASSIGN_EXPR_MAX_CENTROIDS, the 100k-cluster SemDeDup regime) must
     produce row-identical results to the map-only expression tier —
-    same argmax, same (dot DESC, centroid_id) tie order."""
+    same argmax, same (dot DESC, centroid_id) tie order. The Lloyd
+    step inside the quantizer switches tier with the same cap, so the
+    centroids must agree too."""
     import algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity as sim
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -439,7 +334,7 @@ def test_assignment_tiers_agree_above_threshold(spark, monkeypatch):
         return {
             (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
             for r in ivf_topk(
-                q, emb, k=5, n_centroids=80, nprobe=20, quantizer="hash"
+                q, emb, k=5, n_centroids=80, nprobe=20, iterations=1
             ).collect()
         }
 
@@ -471,7 +366,7 @@ def test_null_vector_assignment_is_null_in_both_tiers(spark, monkeypatch):
         got = {
             r["vec_id"]: r["centroid_id"]
             for r in sim._assigned_frame(
-                df, cents, crows, vec_col="embedding", dim=2
+                df, cents, crows, vec_col="embedding"
             ).collect()
         }
         assert got == {0: 0, 1: None, 2: None}, (cap, got)
@@ -479,7 +374,7 @@ def test_null_vector_assignment_is_null_in_both_tiers(spark, monkeypatch):
     probes = {
         r["vec_id"]: r["p"]
         for r in df.select(
-            "vec_id", sim._probe_expr("embedding", crows, 2, dim=2).alias("p")
+            "vec_id", sim._probe_expr("embedding", crows, 2).alias("p")
         ).collect()
     }
     assert probes[0] == [0, 2] and probes[1] is None and probes[2] is None
@@ -508,11 +403,10 @@ def test_null_vectors_through_kmeans_probe_and_ivf(spark, monkeypatch):
         ).select("vec_id", F.col("embedding").cast("array<float>"))
     )
 
-    for mean in ("float", "scaled_int"):
-        cents = sim.kmeans_centroids(dirty, 4, iterations=2, mean=mean)
-        assert cents.count() >= 1  # Lloyd completed on dirty input
+    cents = sim.kmeans_centroids(dirty, 4, iterations=2)
+    assert cents.count() >= 1  # Lloyd completed on dirty input
 
-    crows = sim._cent_rows(sim.hash_centroids(clean, 8))
+    crows = sim._cent_rows(sim.kmeans_centroids(clean, 8, iterations=1))
     cents_df = spark.createDataFrame(
         crows, "centroid_id int, centroid array<float>"
     )
@@ -524,14 +418,14 @@ def test_null_vectors_through_kmeans_probe_and_ivf(spark, monkeypatch):
         monkeypatch.setattr(sim, "ASSIGN_EXPR_MAX_CENTROIDS", cap)
         probed[cap] = {
             (r["query_id"], r["centroid_id"])
-            for r in sim._probed_frame(q, cents_df, crows, 3, dim=dim).collect()
+            for r in sim._probed_frame(q, cents_df, crows, 3).collect()
         }
     assert probed[64] == probed[2]  # tier identity on dirty input
     assert not any(qid >= 10_001 for qid, _ in probed[64])  # nulls dropped
 
     out = sim.ivf_topk(
         dirty.filter(F.col("vec_id").isin(10_001, int(clean.first()["vec_id"]))),
-        dirty, k=3, n_centroids=4, nprobe=4, quantizer="hash",
+        dirty, k=3, n_centroids=4, nprobe=4, iterations=1,
     ).collect()
     assert out, "clean query must still return neighbors"
     assert all(r["query_id"] != 10_001 for r in out)

@@ -515,7 +515,7 @@ def test_ivf_serve_plan_two_exchanges_no_crossjoin(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     out = ivf_topk(
         emb.filter(F.col("vec_id") < 3), emb,
-        k=5, n_centroids=8, nprobe=4, quantizer="portable",
+        k=5, n_centroids=8, nprobe=4,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan

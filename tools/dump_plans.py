@@ -212,9 +212,9 @@ widths.** An `element_at` multiply-add chain stays inside whole-stage
 codegen but blows the JIT inlining/huge-method limit almost
 immediately: measured 0.40x (faster) at dim=4, 8-10x SLOWER at
 dim>=8, 3-5x slower end-to-end at dim=64 (the r4 regression). The
-interpreted-but-tight ArrayAggregate loop is the right default;
-unrolling is gated at `UNROLL_MAX_DIM = 4`. Guarded by
-`test_unroll_guard_keeps_hof_tier_above_threshold`.
+interpreted-but-tight ArrayAggregate loop (`zip_with` + `aggregate`
+in `similarity.dot`/`norm`) is the only scoring path; the unrolled
+tier, which only a dim<=4 embedding could reach, was deleted.
 """
 
 
