@@ -4065,14 +4065,14 @@ _BT_FX_SCALE = float(1 << 24)
 
 
 def _bt_above_sql(fast: int, slow: int) -> str:
-    """The crossover indicator view.  ``sma="fixed"`` twin (r14): ONE
+    """The crossover indicator view, fixed-point twin (r14): ONE
     cumulative integer running sum of ``FLOOR(close * 2^24)`` shared
     by both windows (Spark sums primitive LONG; DuckDB sums BIGINT
     into HUGEINT — same integers either way), frame sums as lags of
     it, mask = ``row_number >= slow`` — step-for-step the DataFrame
-    form in ``sma_backtest_curve_fused(sma="fixed")``, so the emitted
-    ``__above`` integers are bit-identical cross-engine (every step is
-    exact integer arithmetic or a single IEEE double op)."""
+    form in ``sma_backtest_curve_fused``, so the emitted ``__above``
+    integers are bit-identical cross-engine (every step is exact
+    integer arithmetic or a single IEEE double op)."""
     s = repr(_BT_FX_SCALE)
     mean = (
         "CAST(__cs - COALESCE(LAG(__cs, {n}) {over}, 0) AS DOUBLE) "
@@ -4093,22 +4093,23 @@ def _bt_above_sql(fast: int, slow: int) -> str:
     )"""
 
 
-def _bt_summary_sql(fast: int, slow: int, *, tag: bool = False,
-                    sma: str = "float") -> str:
-    """One SMA-crossover backtest summary as nested inline views (no
-    CTEs, so combos can be UNION ALL branches); ``tag`` prepends the
-    (fast, slow) combo columns for the param-sweep oracle.  ``sma``
-    picks the crossover-indicator twin: ``"float"`` = sliding-frame
-    AVG (the unfused signals chain), ``"fixed"`` = the O(1)/row
-    fixed-point form mirroring ``sma_backtest_curve_fused(sma="fixed")``."""
-    if sma == "fixed":
-        above_view = _bt_above_sql(fast, slow)
-    else:
-        above_view = f"""SELECT *, CAST(({_roll('AVG', 'close', fast)}) > ({_roll('AVG', 'close', slow)}) AS INT) AS __above
+def _bt_float_above_sql(fast: int, slow: int) -> str:
+    """The crossover indicator view, sliding-frame AVG twin (the
+    unfused ``with_sma_crossover_signals`` chain)."""
+    return f"""SELECT *, CAST(({_roll('AVG', 'close', fast)}) > ({_roll('AVG', 'close', slow)}) AS INT) AS __above
             FROM (SELECT suppkey, ts, okey, lnum, pkey,
                          10000 + CAST(close AS DOUBLE) / 100 AS close
                   FROM ({MARKET_SQL}))"""
-    head = f"{fast} AS fast, {slow} AS slow, " if tag else ""
+
+
+def _bt_summary_sql(above_view: str, *,
+                    tag: tuple[int, int] | None = None) -> str:
+    """One SMA-crossover backtest summary over a crossover-indicator
+    view (:func:`_bt_above_sql` or :func:`_bt_float_above_sql`) as
+    nested inline views (no CTEs, so combos can be UNION ALL
+    branches); ``tag`` prepends the (fast, slow) combo columns for the
+    param-sweep oracle."""
+    head = f"{tag[0]} AS fast, {tag[1]} AS slow, " if tag else ""
     return f"""SELECT {head}suppkey, COUNT(*) AS n_bars,
        CAST(SUM(trade) AS DOUBLE) AS n_trades,
        EXP(SUM(LN(1 + strat))) - 1 AS total_return,
@@ -4142,7 +4143,7 @@ FROM (
 
 @q(
     "u6_backtest",
-    _bt_summary_sql(10, 50, sma="fixed"),
+    _bt_summary_sql(_bt_above_sql(10, 50)),
     cols=["suppkey", "n_bars", "n_trades", "total_return",
           "max_drawdown", "sharpe"],
     fcols=["n_trades", "total_return", "max_drawdown", "sharpe"],
@@ -4156,7 +4157,7 @@ def u6_backtest(spark, sf_dir):
     equity curve is one window family, so the backtest scales to any
     number of series via the partition key.
 
-    Runs the FUSED shape with the FIXED-POINT SMA tier (r14 verdict
+    Runs the FUSED shape with its FIXED-POINT SMA (r14 verdict
     task #1, closing the r13 decomposition's one engine-level gap):
     the O(w)-per-row sliding-frame SMA pass — measured 0.71s of the
     2.1s sf1 cell — is replaced by one shared primitive-LONG running
@@ -4166,9 +4167,9 @@ def u6_backtest(spark, sf_dir):
     ``_bt_above_sql``; the DECIMAL(38,0) first cut was value-perfect
     but Spark's boxed decimal window arithmetic ate the O(1) saving).
     Measured (BENCH_BACKTEST_AB_r14.json): sf1 fused_fixed 2.09s =
-    fastest Spark shape, 1.21x its DuckDB twin.  The float-SMA tier
-    remains the default in ``sma_backtest_curve_fused`` and is A/B'd
-    against this shape in ``tools/bench_backtest_shapes.py``."""
+    fastest Spark shape, 1.21x its DuckDB twin.  The unfused float
+    chain stays as ``sma_param_sweep``'s shape and the independent
+    reference in ``tests/test_backtest.py``."""
     from .operators.backtest import backtest_summary, sma_backtest_curve_fused
 
     # TPC-H pseudo-prices swing ~100x bar to bar — compounding over
@@ -4180,7 +4181,7 @@ def u6_backtest(spark, sf_dir):
     )
     curve = sma_backtest_curve_fused(
         m, keys=KEYS, order=ORDER,
-        price_col="close", fast=10, slow=50, fee_bps=5.0, sma="fixed",
+        price_col="close", fast=10, slow=50, fee_bps=5.0,
     )
     return backtest_summary(curve, keys=KEYS)
 
@@ -4195,7 +4196,8 @@ def _damped_market(spark, sf_dir):
 
 
 _SWEEP_SQL = "\nUNION ALL\n".join(
-    _bt_summary_sql(f, s, tag=True) for f, s in _SWEEP_GRID
+    _bt_summary_sql(_bt_float_above_sql(f, s), tag=(f, s))
+    for f, s in _SWEEP_GRID
 )
 
 
@@ -5476,23 +5478,25 @@ for _src in _SQL_DIALECT_TWINS:
 
 
 # The EWM twin needs a Spark-dialect text (the DuckDB oracle leans on
-# LIST_REDUCE for its sequential fold): ewm_spark_sql renders the SAME
-# expression graph with_ewm builds, so the spark.sql path is
-# bit-identical to the DataFrame path and oracle-exact by inheritance.
+# LIST_REDUCE for its sequential fold): ewm_spark_sql nests the SAME
+# expression layers with_ewm_multi attaches, at w09's shared block size
+# _K_W09, so the spark.sql path is bit-identical to the DataFrame path
+# (unrounded, pinned by tests/test_sql_layer.py) and oracle-exact by
+# inheritance.
 from .operators.ewm import ewm_spark_sql  # noqa: E402
 
+#: the two unrounded EMAs of w09_ema as ONE Spark SQL statement
+_SQL_W09_EMAS = ewm_spark_sql(
+    ewm_spark_sql(
+        "SELECT * FROM market", "close", "ema_12",
+        keys=[PART], order=ORDER, keep=_EMA_KEEP, span=12, k=_K_W09,
+    ),
+    "close", "ema_26",
+    keys=[PART], order=ORDER, keep=_EMA_KEEP + ["ema_12"], span=26, k=_K_W09,
+)
 _SQL_W09_SPARK = (
     f"SELECT suppkey, ts, okey, lnum, {SR('ema_12')} AS ema_12, "
-    f"{SR('ema_26')} AS ema_26 FROM ("
-    + ewm_spark_sql(
-        ewm_spark_sql(
-            "SELECT * FROM market", "close", "ema_12",
-            keys=[PART], order=ORDER, keep=_EMA_KEEP, span=12,
-        ),
-        "close", "ema_26",
-        keys=[PART], order=ORDER, keep=_EMA_KEEP + ["ema_12"], span=26,
-    )
-    + ")"
+    f"{SR('ema_26')} AS ema_26 FROM ({_SQL_W09_EMAS})"
 )
 
 

@@ -83,13 +83,13 @@ def sma_backtest_curve_fused(
     equity_out: str = "equity",
     drawdown_out: str = "drawdown",
     position_out: str = "position",
-    sma: str = "float",
     scale_bits: int = 24,
 ) -> DataFrame:
-    """The U6 SMA-crossover backtest curve in FOUR window passes
-    instead of the six that ``with_sma_crossover_signals`` +
-    :func:`backtest_positions` chain (r12 verdict task: collapse the
-    position build).
+    """The U6 SMA-crossover backtest curve in FIVE window passes whose
+    frames are all O(1)/row, instead of the six — two of them
+    O(window)/row sliding SMA frames — that ``with_sma_crossover_signals``
+    + :func:`backtest_positions` chain (r12 verdict task: collapse the
+    position build; r14 verdict task #1: fixed-point SMA).
 
     The collapse: the forward-filled crossover position has a closed
     form that needs no signal column and no ffill pass. Once the
@@ -104,8 +104,17 @@ def sma_backtest_curve_fused(
 
     and the whole chain plans as:
 
-    1. sliding SMA pass (identical to ``with_sma_crossover_signals``'s
-       first pass: two trailing means + warmup-count masks);
+    1. the fixed-point SMA pair (see
+       :func:`~.rolling.with_rolling_mean_fixed` for the exactness
+       argument), two passes: ONE cumulative LONG running sum of
+       ``FLOOR(price * 2^scale_bits)`` plus ``row_number()``, then two
+       lags of that sum — the fast and slow frame sums. The warmup
+       mask collapses to ``row_number() >= slow`` (valid because the
+       non-null-price precondition is enforced), and the crossover
+       indicator compares two bit-deterministic doubles, so the whole
+       ``above`` series is hash-exactly reproducible by the SQL oracle
+       (DuckDB sums BIGINT into HUGEINT: same integers, same diff,
+       same exact double cast);
     2. ONE pass of O(1)/row frames over ``above``: ``lag(above)``,
        running min/max with frames ``(-inf, 0)`` and ``(-inf, -1)``,
        plus ``lag(price)`` for the bar return — replacing the
@@ -115,6 +124,11 @@ def sma_backtest_curve_fused(
     3. the cumulative log-equity sum;
     4. the running equity peak (depends on 3, irreducible).
 
+    The running sum stays a PRIMITIVE long inside whole-stage codegen:
+    a DECIMAL(38,0) first cut, measured at sf1, lost the entire O(1)
+    saving to Spark's boxed decimal window arithmetic (decimal remains
+    the generic operator's unbounded-series form).
+
     PRECONDITION: ``price_col`` must be non-null — ENFORCED with a
     per-row ``raise_error`` guard (r13 review: a silent divergence is
     worse than a loud one). With null prices the warmup-count mask can
@@ -122,43 +136,22 @@ def sma_backtest_curve_fused(
     position across such a gap while the closed form re-reads
     ``above`` after it — semantics then diverge. (The unfused chain
     stays the general tool for gappy prices; u6's market frame has
-    non-null closes by construction.) Value-identity with the unfused
-    chain on non-null prices is pytest-pinned and re-asserted by
-    ``tools/bench_backtest_shapes.py`` on the real market frame.
-
-    ``sma="fixed"`` (r14 verdict task #1) swaps the sliding-frame SMA
-    pass for the O(1)/row fixed-point prefix-sum form (see
-    :func:`~.rolling.with_rolling_mean_fixed` for the exactness
-    argument): ONE cumulative LONG running sum of
-    ``FLOOR(price * 2^scale_bits)`` is SHARED by both the fast and
-    slow window (their frame sums are just two different lags of it),
-    the warmup mask collapses to ``row_number() >= slow`` (valid
-    because the non-null-price precondition is enforced), and the
-    crossover indicator compares two bit-deterministic doubles — so
-    the whole ``above`` series is hash-exactly reproducible by the SQL
-    oracle (DuckDB sums BIGINT into HUGEINT: same integers, same
-    diff, same exact double cast).  Cost: the O(w)-per-row pass
-    (2 sliding AVGs + 2 sliding COUNT masks) becomes two O(1)/row
-    window passes; total window nodes go 4 → 5 but every frame is
-    constant-time and the sum stays a PRIMITIVE long inside
-    whole-stage codegen (the first cut used DECIMAL(38,0); measured
-    at sf1, Spark's boxed decimal window arithmetic ate the entire
-    O(1) saving — long is the shipped representation, decimal remains
-    the generic operator's unbounded-series tier).
+    non-null closes by construction.)
 
     Exactness envelope at the default bits=24: frame sums exact while
     ``slow * max_price < 2^29`` (u6: 50 * 1.2e4 = 6e5, 890x headroom)
     and the per-key running sum fits long while ``rows_per_series *
     max_price < 2^39`` (u6: 4.6e7 bars/series at 1.2e4 — 87 years of
     minute bars).  The quantized SMA differs from the float SMA by
-    ~6e-8 absolute, so a crossover flips vs the float tier only on a
-    fast/slow near-tie below that — pinned identical on the benchmark
-    frame by ``tools/bench_backtest_shapes.py`` before timing.
+    ~6e-8 absolute, so a crossover flips vs the unfused float chain
+    only on a fast/slow near-tie below that. Bit-identity with the
+    chain on non-null prices is pytest-pinned
+    (``tests/test_backtest.py::test_fused_curve_matches_unfused_chain``)
+    and held on the benchmark market frame in the r13/r14 shape A/B
+    (``BENCH_BACKTEST_AB_r14.json``).
 
     Returns the same curve columns as :func:`backtest_positions`, so
     :func:`backtest_summary` applies unchanged."""
-    from .rolling import rolling_mean
-
     w = series_window(keys, order)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -178,31 +171,23 @@ def sma_backtest_curve_fused(
             )).cast(df.schema[price_col].dataType),
         ).otherwise(F.col(price_col)),
     )
-    if sma == "fixed":
-        # pass 1a+1b — shared fixed-point running sum (primitive
-        # long: F.floor already returns LongType), two lags of it
-        scale = float(1 << scale_bits)
-        q = F.floor(F.col(price_col).cast("double") * F.lit(scale))
-        df = df.withColumn("__cs", F.sum(q).over(w_cum)).withColumn(
-            "__rn", F.row_number().over(w)
-        )
-        mean_f = (
-            F.col("__cs") - F.coalesce(F.lag("__cs", fast).over(w), F.lit(0))
-        ).cast("double") / F.lit(fast * scale)
-        mean_s = (
-            F.col("__cs") - F.coalesce(F.lag("__cs", slow).over(w), F.lit(0))
-        ).cast("double") / F.lit(slow * scale)
-        df = df.withColumn(
-            "__above",
-            F.when(F.col("__rn") >= slow, (mean_f > mean_s).cast("int")),
-        ).drop("__cs", "__rn")
-    else:
-        # pass 1 — identical sliding-SMA expressions as the unfused chain
-        df = df.withColumn(
-            "__above",
-            (rolling_mean(price_col, w, fast) > rolling_mean(price_col, w, slow))
-            .cast("int"),
-        )
+    # pass 1a+1b — shared fixed-point running sum (primitive long:
+    # F.floor already returns LongType), two lags of it
+    scale = float(1 << scale_bits)
+    q = F.floor(F.col(price_col).cast("double") * F.lit(scale))
+    df = df.withColumn("__cs", F.sum(q).over(w_cum)).withColumn(
+        "__rn", F.row_number().over(w)
+    )
+    mean_f = (
+        F.col("__cs") - F.coalesce(F.lag("__cs", fast).over(w), F.lit(0))
+    ).cast("double") / F.lit(fast * scale)
+    mean_s = (
+        F.col("__cs") - F.coalesce(F.lag("__cs", slow).over(w), F.lit(0))
+    ).cast("double") / F.lit(slow * scale)
+    df = df.withColumn(
+        "__above",
+        F.when(F.col("__rn") >= slow, (mean_f > mean_s).cast("int")),
+    ).drop("__cs", "__rn")
     # pass 2 — every remaining per-bar input as O(1)/row frames over
     # one (keys, order) WindowExec
     df = (

@@ -209,18 +209,6 @@ def exploded_shingle_hashes(
     )
 
 
-def shingle_rows(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-) -> DataFrame:
-    """Distinct (id, shingle) rows: :func:`exploded_shingles` plus one
-    shuffle (the distinct)."""
-    return exploded_shingles(df, id_col=id_col, text_col=text_col, n=n).distinct()
-
-
 def jaccard_similar_pairs(
     df: DataFrame,
     *,
@@ -230,7 +218,6 @@ def jaccard_similar_pairs(
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
     broadcast_sizes: bool = False,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= t).
 
@@ -262,18 +249,14 @@ def jaccard_similar_pairs(
     at sf0.1, correct only while one (id, n_sh) row per document fits
     a broadcast (bounded corpora; not the 5B-doc regime).
 
-    ``hash_shingles`` (default on) keys every stage — the set build,
-    the inverted index, and the self-join — on ``xxhash64`` of the
-    token slice (:func:`exploded_shingle_hashes`): the n-gram string
-    never materializes and all exchanges carry int64 keys. Jaccard is
-    a pure set-count statistic, so values are identical absent a
-    2^-64 collision; the string-keyed DuckDB oracle stays value-exact.
+    Every stage is keyed on :func:`exploded_shingle_hashes` int64s;
+    Jaccard is a set-count statistic, so the string-keyed DuckDB
+    oracle stays value-exact absent a 2^-64 collision.
     """
     from pyspark.sql import Window
 
-    expl = exploded_shingle_hashes if hash_shingles else exploded_shingles
     sets = (
-        expl(df, id_col=id_col, text_col=text_col, n=n)
+        exploded_shingle_hashes(df, id_col=id_col, text_col=text_col, n=n)
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("__shs"))
     )
@@ -347,7 +330,6 @@ def contamination_check(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Train/eval contamination scan: for each eval document, the
     fraction of its distinct n-gram shingles that appear anywhere in
@@ -362,30 +344,18 @@ def contamination_check(
     explode projection so the partial agg is map-side). No driver
     state, no broadcast of the big side.
 
-    ``hash_shingles=True`` keys the whole pipeline on ``xxhash64`` of
-    the TOKEN SLICE (see :func:`exploded_shingle_hashes`): the n-gram
-    string never materializes, and every exchange — the distincts AND
-    the join — carries 8-byte ints; at 100 TB the join key shrinks
-    ~10×. (The previous form hashed after a string-keyed distinct,
-    paying the string shuffle anyway.) The OUTPUT is count-level
-    (counts and a ratio per doc), so results are identical to the
-    string-keyed path absent a 2^-64 collision — same contract as
-    :func:`cross_doc_repetition`, and the string-keyed DuckDB oracle
-    stays value-exact. Turn it off only to materialize the matched
-    shingle STRINGS for inspection.
+    Every exchange — the distincts AND the join — carries
+    :func:`exploded_shingle_hashes` int64 keys (at 100 TB the join key
+    shrinks ~10×); the output is count-level, so the string-keyed
+    DuckDB oracle stays value-exact absent a 2^-64 collision.
     """
-    if hash_shingles:
-        key = "__sh_h"
-        tr = exploded_shingle_hashes(
-            train, id_col=id_col, text_col=text_col, n=n
-        ).select(F.col("shingle").alias(key))
-        ev = exploded_shingle_hashes(
-            eval_df, id_col=id_col, text_col=text_col, n=n
-        ).select("id", F.col("shingle").alias(key)).distinct()
-    else:
-        key = "shingle"
-        tr = shingle_rows(train, id_col=id_col, text_col=text_col, n=n)
-        ev = shingle_rows(eval_df, id_col=id_col, text_col=text_col, n=n)
+    key = "__sh_h"
+    tr = exploded_shingle_hashes(
+        train, id_col=id_col, text_col=text_col, n=n
+    ).select(F.col("shingle").alias(key))
+    ev = exploded_shingle_hashes(
+        eval_df, id_col=id_col, text_col=text_col, n=n
+    ).select("id", F.col("shingle").alias(key)).distinct()
     tr_set = tr.select(key).distinct().withColumn("__hit", F.lit(1))
     return (
         ev.join(tr_set, key, "left")
@@ -1287,7 +1257,6 @@ def cross_doc_repetition(
     text_col: str,
     n: int = 3,
     min_docs: int = 2,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Corpus-level boilerplate signal (the bounded cousin of
     substring dedup a la 'Deduplicating Training Data Makes Language
@@ -1323,24 +1292,17 @@ def cross_doc_repetition(
     universe, not a duplicated subset; not worth the broadcast-size
     risk, not shipped.)
 
-    ``hash_shingles`` (default on) compresses the shingle key to
-    ``xxhash64(shingle)`` BEFORE the distinct/doc-frequency/join
-    stages, so every exchange carries 8-byte ints instead of ~25-byte
-    shingle strings — the same key compression
-    :func:`contamination_check` uses (its 0.47× sf10 cell vs this
-    operator's pre-compression 2.7× motivated the change). The output
-    is count-level, so results are identical absent a 2^-64 xxhash64
-    collision; the DuckDB oracle stays string-keyed and hash-exact.
+    Every exchange carries :func:`exploded_shingle_hashes` int64 keys
+    instead of ~25-byte shingle strings (:func:`contamination_check`'s
+    0.47× sf10 cell vs this operator's string-keyed 2.7× motivated
+    it); the output is count-level, so the string-keyed DuckDB oracle
+    stays hash-exact absent a 2^-64 collision.
 
     Returns (id_col, n_shingles, n_repeated, repeated_frac).
     """
-    if hash_shingles:
-        # hash the token slice directly — the n-gram string never
-        # materializes (see exploded_shingle_hashes)
-        sh = exploded_shingle_hashes(df, id_col=id_col, text_col=text_col, n=n)
-    else:
-        sh = exploded_shingles(df, id_col=id_col, text_col=text_col, n=n)
-    sh = sh.distinct()
+    sh = exploded_shingle_hashes(
+        df, id_col=id_col, text_col=text_col, n=n
+    ).distinct()
     freq = sh.groupBy("shingle").agg(F.count("*").alias("__dfc"))
     return (
         sh.join(freq, "shingle")

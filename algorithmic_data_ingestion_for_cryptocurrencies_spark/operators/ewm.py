@@ -43,7 +43,7 @@ fallback (bit-identical to pandas for any alpha, at Arrow cost).
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Collection, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -106,47 +106,35 @@ def with_ewm(
     span: int | None = None,
     alpha: float | None = None,
     com: float | None = None,
-    k: int | None = None,
 ) -> DataFrame:
     """Append EWM-mean column ``out`` (adjust=False), JVM-native,
     numerically stable at any series length (block renormalization).
-
-    ``k`` overrides the block size (must match the oracle rendering's
-    ``k`` bit-for-bit parity; used by :func:`with_ewm_multi` to share
-    block structure across several EWMs)."""
+    Use :func:`with_ewm_multi` to share one block size across EWMs."""
     return with_ewm_multi(
         df,
         [{"col": col, "out": out, "span": span, "alpha": alpha, "com": com}],
         keys=keys,
         order=order,
-        k=k,
     )
 
 
-def with_ewm_multi(
-    df: DataFrame,
+def _ewm_layers(
     specs: Sequence[dict],
     *,
     keys: Sequence[str],
     order: str | Sequence[str],
-    k: int | None = None,
-    keep_stage: bool = False,
-) -> DataFrame:
-    """Compute several EWMs in one fused pass: all specs share the
-    block size ``k`` (default: max of the per-spec sizes) so their
-    windows have IDENTICAL partition specs — Catalyst then evaluates
-    every per-block sum/boundary/chain in a shared WindowExec instead
-    of re-sorting per EWM (a MACD goes from 8 window stages to 4).
-
-    Each spec: ``{col, out, span|alpha|com}`` plus optional
-    ``pos_col`` — derive positions from that column's null pattern
-    instead of the spec's own (valid whenever the two patterns are
-    provably identical, e.g. a MACD line vs its source close: it lets
-    a dependent second pass reuse the staged block columns and hence
-    the same window partitioning). ``keep_stage=True`` leaves the
-    staged position columns in place for such a follow-up pass (the
-    follow-up, run without ``keep_stage``, drops them).
-    """
+    k: int | None,
+    staged: Collection[str] = (),
+) -> tuple[list[dict[str, str]], list[str], list[str]]:
+    """The block-renormalized EWM graph as Spark-SQL text: returns
+    ``(layers, stage_cols, tmp_cols)``. ``layers`` is the ordered list
+    ``idx, block/pos, u, L, Le, out`` of ``{column: expression}``
+    dicts — each layer reads only columns of earlier layers (or of the
+    input), so a consumer attaches them in order. Position columns
+    already in ``staged`` (left by a ``keep_stage`` pass) are reused,
+    not re-rendered; the idx and block/pos layers are then empty.
+    ``stage_cols`` are the ``__mew_*`` position columns, ``tmp_cols``
+    every helper column the layers name (``out`` excluded)."""
     parsed = []
     for s in specs:
         a = _alpha(s.get("span"), s.get("alpha"), s.get("com"))
@@ -161,14 +149,6 @@ def with_ewm_multi(
 
     keys = list(keys)
     order_cols = [order] if isinstance(order, str) else list(order)
-
-    # The whole stage is rendered as Spark-SQL text and attached with a
-    # handful of batched ``withColumns(F.expr(...))`` calls: building
-    # the same graph node-by-node through the Column API costs ~2000
-    # py4j round trips (~1 s of driver latency per MACD, measured
-    # round 3), while the parsed SQL produces the IDENTICAL Catalyst
-    # expression tree — same multiply/divide/sum graph on the same
-    # embedded constants, so oracle bit parity is untouched.
     ordr = ", ".join(f"`{c}`" for c in order_cols)
     part_keys = ", ".join(f"`{c}`" for c in keys)
     over_cum = (
@@ -186,7 +166,7 @@ def with_ewm_multi(
     bp_layer: dict[str, str] = {}
     for c in cols:
         x_idx, x_b, x_p = f"__mew_{c}_idx", f"__mew_{c}_b", f"__mew_{c}_p"
-        if x_idx not in df.columns:
+        if x_idx not in staged:
             idx_layer[x_idx] = f"COUNT(`{c}`) {over_cum} - 1"
             bp_layer[x_b] = (
                 f"CASE WHEN `{x_idx}` >= 0 THEN FLOOR(`{x_idx}` / {k}) ELSE 0 END"
@@ -196,9 +176,7 @@ def with_ewm_multi(
             )
         stage[c] = (x_idx, x_b, x_p)
         tmp += [x_idx, x_b, x_p]
-    if idx_layer:
-        df = df.withColumns({n: F.expr(s) for n, s in idx_layer.items()})
-        df = df.withColumns({n: F.expr(s) for n, s in bp_layer.items()})
+    stage_cols = list(tmp)
 
     u_layer: dict[str, str] = {}
     L_layer: dict[str, str] = {}
@@ -248,14 +226,49 @@ def with_ewm_multi(
         )
         tmp += [x_u, x_L, x_Le]
 
-    df = df.withColumns({n: F.expr(s) for n, s in u_layer.items()})
-    df = df.withColumns({n: F.expr(s) for n, s in L_layer.items()})
-    df = df.withColumns({n: F.expr(s) for n, s in Le_layer.items()})
-    df = df.withColumns({n: F.expr(s) for n, s in out_layer.items()})
+    layers = [idx_layer, bp_layer, u_layer, L_layer, Le_layer, out_layer]
+    return layers, stage_cols, tmp
 
+
+def with_ewm_multi(
+    df: DataFrame,
+    specs: Sequence[dict],
+    *,
+    keys: Sequence[str],
+    order: str | Sequence[str],
+    k: int | None = None,
+    keep_stage: bool = False,
+) -> DataFrame:
+    """Compute several EWMs in one fused pass: all specs share the
+    block size ``k`` (default: max of the per-spec sizes) so their
+    windows have IDENTICAL partition specs — Catalyst then evaluates
+    every per-block sum/boundary/chain in a shared WindowExec instead
+    of re-sorting per EWM (a MACD goes from 8 window stages to 4).
+
+    Each spec: ``{col, out, span|alpha|com}`` plus optional
+    ``pos_col`` — derive positions from that column's null pattern
+    instead of the spec's own (valid whenever the two patterns are
+    provably identical, e.g. a MACD line vs its source close: it lets
+    a dependent second pass reuse the staged block columns and hence
+    the same window partitioning). ``keep_stage=True`` leaves the
+    staged position columns in place for such a follow-up pass (the
+    follow-up, run without ``keep_stage``, drops them).
+    """
+    # The whole stage is rendered as Spark-SQL text and attached with a
+    # handful of batched ``withColumns(F.expr(...))`` calls: building
+    # the same graph node-by-node through the Column API costs ~2000
+    # py4j round trips (~1 s of driver latency per MACD, measured
+    # round 3), while the parsed SQL produces the IDENTICAL Catalyst
+    # expression tree — same multiply/divide/sum graph on the same
+    # embedded constants, so oracle bit parity is untouched.
+    layers, stage_cols, tmp = _ewm_layers(
+        specs, keys=keys, order=order, k=k, staged=df.columns
+    )
+    for layer in layers:
+        if layer:  # idx and block/pos are empty when every stage is reused
+            df = df.withColumns({n: F.expr(s) for n, s in layer.items()})
     if keep_stage:
-        staged = {c for names in stage.values() for c in names}
-        tmp = [c for c in tmp if c not in staged]
+        tmp = [c for c in tmp if c not in stage_cols]
     return df.drop(*tmp)
 
 
@@ -395,7 +408,7 @@ FROM (
 
 def ewm_spark_sql(
     inner: str,
-    value_expr: str,
+    col: str,
     out: str,
     *,
     keys: Sequence[str],
@@ -407,69 +420,21 @@ def ewm_spark_sql(
     k: int | None = None,
 ) -> str:
     """Spark-dialect text twin of :func:`ewm_sql` (SURVEY §7.1 SQL
-    surface): ONE nested SELECT containing the IDENTICAL expression
-    graph :func:`with_ewm_multi` attaches through ``withColumns`` —
-    same ``_d``-embedded constants, same multiply/divide/sum shapes,
-    same window specs — so ``spark.sql(ewm_spark_sql(...))`` is
-    bit-identical to the DataFrame API path (and therefore inherits its
-    oracle parity). The DuckDB rendering needs LIST_REDUCE for a
-    sequential fold; Spark's running-window SUM already folds
+    surface): the layers :func:`with_ewm_multi` attaches through
+    ``withColumns`` (one :func:`_ewm_layers` build), nested as
+    ``SELECT *, … FROM (…)`` over ``inner`` and projected to ``keep``
+    plus ``out`` — so ``spark.sql(ewm_spark_sql(...))`` evaluates the
+    same expression graph and, at the same ``k``, is bit-identical to
+    the DataFrame API path. The DuckDB rendering needs LIST_REDUCE for
+    a sequential fold; Spark's running-window SUM already folds
     left-to-right, so the blocked prefix sum is a plain window here."""
-    a = _alpha(span, alpha, com)
-    r = 1.0 - a
-    k = k or _block_size(r)
-    hi, lo, rho = _pow_tables(r, k)
-
-    part_keys = ", ".join(f"`{c}`" for c in keys)
-    ordr = ", ".join(f"`{c}`" for c in order)
+    layers, _stage, _tmp = _ewm_layers(
+        [{"col": col, "out": out, "span": span, "alpha": alpha, "com": com}],
+        keys=keys, order=order, k=k,
+    )
+    sql = inner
+    for layer in layers[:-1]:
+        sel = ", ".join(f"{e} AS `{n}`" for n, e in layer.items())
+        sql = f"SELECT *, {sel} FROM ({sql})"
     keep_cols = ", ".join(f"`{c}`" for c in keep)
-    hi_arr, lo_arr = _sql_array(hi), _sql_array(lo)
-    rinvp = (
-        f"(element_at({hi_arr}, CAST((FLOOR(__p / {_CHUNK}) + 1) AS INT)) * "
-        f"element_at({lo_arr}, CAST((__p % {_CHUNK} + 1) AS INT)))"
-    )
-    rp = f"({_d(1.0)} / {rinvp})"
-    over_cum = (
-        f"OVER ({'PARTITION BY ' + part_keys + ' ' if keys else ''}"
-        f"ORDER BY {ordr} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-    over_blk = (
-        f"OVER (PARTITION BY {part_keys + ', ' if keys else ''}__b "
-        f"ORDER BY {ordr} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-    over_b = (
-        f"OVER ({'PARTITION BY ' + part_keys + ' ' if keys else ''}"
-        "ORDER BY __b"
-    )
-    lags = [
-        f"COALESCE(MAX(__Le) {over_b} "
-        f"RANGE BETWEEN {i} PRECEDING AND {i} PRECEDING), {_d(0.0)})"
-        for i in range(1, _CHAIN + 1)
-    ]
-    carry = f"{lags[0]} + {_d(rho)} * {lags[1]} + {_d(rho * rho)} * {lags[2]}"
-    return f"""
-SELECT {keep_cols},
-       CASE WHEN __idx >= 0
-            THEN __L + {rp} * {_d(r)} * ({carry}) END AS {out}
-FROM (
-  SELECT *, MAX_BY(__L, __p) OVER (PARTITION BY {part_keys + ', ' if keys else ''}__b) AS __Le
-  FROM (
-    SELECT *, {rp} * SUM(__u) {over_blk} AS __L
-    FROM (
-      SELECT *,
-             CASE WHEN {value_expr} IS NULL THEN NULL
-                  WHEN __idx = 0 THEN CAST({value_expr} AS DOUBLE)
-                  ELSE {_d(a)} * CAST({value_expr} AS DOUBLE) * {rinvp} END AS __u
-      FROM (
-        SELECT *,
-               CASE WHEN __idx >= 0 THEN FLOOR(__idx / {k}) ELSE 0 END AS __b,
-               CASE WHEN __idx >= 0 THEN __idx % {k} ELSE 0 END AS __p
-        FROM (
-          SELECT *, COUNT({value_expr}) {over_cum} - 1 AS __idx
-          FROM ({inner})
-        )
-      )
-    )
-  )
-)
-"""
+    return f"SELECT {keep_cols}, {layers[-1][out]} AS `{out}` FROM ({sql})"

@@ -138,7 +138,6 @@ def with_rolling_mean_fixed(
     *,
     scale_bits: int = 30,
     min_periods: int | None = None,
-    sum_dtype: str = "decimal",
 ) -> DataFrame:
     """Trailing mean in O(1) work per row instead of Spark's
     O(window)-per-row sliding-frame recomputation, hash-exactly
@@ -174,17 +173,12 @@ def with_rolling_mean_fixed(
     relative — this is a *definition*, matched exactly by the SQL twin,
     not an approximation of the float mean.
 
-    ``sum_dtype`` picks the running-sum representation:
-    ``"decimal"`` (default) is DECIMAL(38,0) — order-independent,
-    overflow-proof for any series length (headroom ~1e38), but
-    boxed arithmetic in Spark (measured at sf1: the boxing cost can
-    eat the O(1) saving); ``"long"`` is a primitive inside
-    whole-stage codegen — fastest, exact while the PER-KEY cumulative
-    sum fits: ``rows_per_series * max|x| * 2^scale_bits < 2^63``
-    (DuckDB twins are unaffected: BIGINT sums widen to HUGEINT, same
-    integers).  Long overflow in non-ANSI Spark wraps silently, so
-    only pick the long tier when the series-length envelope is known,
-    as the backtest tier does.
+    The running sum is DECIMAL(38,0): order-independent and
+    overflow-proof for any series length (headroom ~1e38), at the
+    price of boxed arithmetic in Spark (measured at sf1: the boxing
+    cost can eat the O(1) saving).  The fused backtest keeps its own
+    inline ``long`` sum instead, because its series-length envelope is
+    known (:func:`~.backtest.sma_backtest_curve_fused`).
 
     Warmup parity with :func:`rolling_mean`: NULL until
     ``min_periods`` (default ``n``) non-null observations are in the
@@ -196,12 +190,8 @@ def with_rolling_mean_fixed(
     w = series_window(keys, order)
     mp = n if min_periods is None else min_periods
     scale = float(1 << scale_bits)
-    if sum_dtype == "long":
-        zero_dec = F.lit(0)
-        q = F.floor(_c(col).cast("double") * F.lit(scale))
-    else:
-        zero_dec = F.lit(0).cast("decimal(38,0)")
-        q = F.floor(_c(col).cast("double") * F.lit(scale)).cast("decimal(38,0)")
+    zero_dec = F.lit(0).cast("decimal(38,0)")
+    q = F.floor(_c(col).cast("double") * F.lit(scale)).cast("decimal(38,0)")
     cs, cc = f"__fxs_{out}", f"__fxc_{out}"
     df = df.withColumn(cs, F.sum(q).over(cum(w))).withColumn(
         cc, F.count(_c(col)).over(cum(w))

@@ -405,7 +405,7 @@ def _pairs_of(ws: Column, keep_tail: bool) -> Column:
 
 
 def bigram_lm(
-    train: DataFrame, *, text_col: str = "text", hash_tokens: bool = True
+    train: DataFrame, *, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Train a bigram language model (the CCNet/KenLM-style cheap
     quality signal, model-free): returns ``(bigram_counts(w1, w2, c2),
@@ -418,24 +418,22 @@ def bigram_lm(
     the counts == distinct tokens), and the one-row vocab frame
     broadcast-joins downstream — no driver-side action at train time.
 
-    ``hash_tokens`` (default on) compresses the (w1, w2) keys to
-    ``xxhash64`` int64 before the count aggregates, so the bigram
-    shuffle and the scorer's joins exchange 16 bytes per row instead
-    of two word strings. Only key equality matters to the counts and
-    the smoothing formula, so scores are identical absent a 2^-64
-    collision; :func:`bigram_lm_score` detects a hashed model from
-    the ``c2.w1`` dtype and hashes its own keys to match."""
+    The (w1, w2) keys are ``xxhash64`` int64 before the count
+    aggregates, so the bigram shuffle and the scorer's joins exchange
+    16 bytes per row instead of two word strings. Only key equality
+    matters to the counts and the smoothing formula, so scores are
+    identical to string keys absent a 2^-64 collision;
+    :func:`bigram_lm_score` hashes its own keys to match."""
     bg = train.select(
         F.explode(bigram_pairs(text_col, keep_tail=True)).alias("b")
     ).select("b.w1", "b.w2")
-    if hash_tokens:
-        # hash must PRESERVE nullness: xxhash64(NULL) is a constant
-        # (the seed), which would turn the tail sentinel into a real-
-        # looking bigram key
-        bg = bg.select(
-            F.xxhash64("w1").alias("w1"),
-            F.when(F.col("w2").isNotNull(), F.xxhash64("w2")).alias("w2"),
-        )
+    # hash must PRESERVE nullness: xxhash64(NULL) is a constant (the
+    # seed), which would turn the tail sentinel into a real-looking
+    # bigram key
+    bg = bg.select(
+        F.xxhash64("w1").alias("w1"),
+        F.when(F.col("w2").isNotNull(), F.xxhash64("w2")).alias("w2"),
+    )
     # lazily pin the bigram table: c1 and vocab derive from it AND the
     # scorer joins it — without the checkpoint a consumer executing
     # those branches as separate jobs re-runs the train
@@ -459,7 +457,8 @@ def bigram_lm_score(
     text_col: str = "text",
     alpha: float = 0.5,
 ) -> DataFrame:
-    """Per-document mean bigram log-likelihood under ``lm`` with
+    """Per-document mean bigram log-likelihood under ``lm`` (a
+    :func:`bigram_lm` model, keyed on ``xxhash64`` tokens) with
     add-alpha smoothing: ``ln((c(w1,w2)+a) / (c(w1)+a*V))`` averaged
     over the doc's bigrams — the standard perplexity-style quality
     score (low = unusual text: boilerplate, garbled OCR, wrong
@@ -471,11 +470,7 @@ def bigram_lm_score(
     :mod:`..skew` for pathological vocabularies."""
     c2, c1, vocab = lm
     bg = docs.select(F.col(id_col), F.explode(bigram_pairs(text_col)).alias("b")) \
-        .select(id_col, "b.w1", "b.w2")
-    if dict(c2.dtypes).get("w1") == "bigint":  # hashed model (bigram_lm)
-        bg = bg.select(
-            id_col, F.xxhash64("w1").alias("w1"), F.xxhash64("w2").alias("w2")
-        )
+        .select(id_col, F.xxhash64("b.w1").alias("w1"), F.xxhash64("b.w2").alias("w2"))
     scored = (
         bg.join(c2, ["w1", "w2"], "left")
         .join(c1, ["w1"], "left")
@@ -501,7 +496,6 @@ def bigram_lm_train_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    hash_tokens: bool = True,
 ) -> DataFrame:
     """Fused train-on-a-subset + score-everything bigram-LM pass — the
     common corpus-curation shape (train on a clean half, score all).
@@ -511,8 +505,8 @@ def bigram_lm_train_score(
     ``localCheckpoint``-pinned and both the model aggregates and the
     scorer derive from it, saving a full regex-tokenize pass over the
     training subset (the scan + explode is the dominant map-side cost;
-    the checkpoint row is 24 bytes once ``hash_tokens`` compresses the
-    keys). With ``hash_tokens`` the TOKEN array is hashed before
+    the checkpoint row is 24 bytes: the keys are ``xxhash64`` int64,
+    as in :func:`bigram_lm`). The TOKEN array is hashed before
     pairing, so each token is hashed once (not once as w1 and once as
     w2) and the pair explode moves int64 structs, not strings; the
     zip's null tail pads to ``(last_hash, NULL)`` so nullness is
@@ -528,11 +522,8 @@ def bigram_lm_train_score(
     checkpoint the shared scan re-executes per job (4.6 s vs 3.5 s at
     the 1.5M-doc tier).
     """
-    if hash_tokens:
-        hashed = F.transform(word_tokens(text_col), lambda t: F.xxhash64(t))
-        pairs = bind_array(hashed, lambda hs: _pairs_of(hs, True))
-    else:
-        pairs = bigram_pairs(text_col, keep_tail=True)
+    hashed = F.transform(word_tokens(text_col), lambda t: F.xxhash64(t))
+    pairs = bind_array(hashed, lambda hs: _pairs_of(hs, True))
     bg_all = docs.select(
         F.col(id_col), F.explode(pairs).alias("b")
     ).select(id_col, "b.w1", "b.w2")

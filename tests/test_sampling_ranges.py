@@ -133,18 +133,6 @@ def test_contamination_check_scores(spark):
     assert 0.0 < out[11].score < 0.5 and not out[11].contaminated
     assert out[12].score == 0.0 and not out[12].contaminated
 
-    hashed = {
-        r.doc_id: r
-        for r in contamination_check(
-            train, ev, id_col="doc_id", text_col="text", n=3,
-            threshold=0.5, hash_shingles=True,
-        ).collect()
-    }
-    for k in out:
-        assert (out[k].n_shingles, out[k].n_matched) == (
-            hashed[k].n_shingles, hashed[k].n_matched,
-        ), "xxhash64 key path must agree with the string key path"
-
 
 # ------------------------------------------------------------------ range join
 def test_range_interval_join_matches_naive(spark):

@@ -51,3 +51,51 @@ def test_sql_twin_equals_dataframe_api(spark, src):
     assert df_api.columns == sql_api.columns
     assert sql_api.exceptAll(df_api).count() == 0
     assert df_api.exceptAll(sql_api).count() == 0
+
+
+def test_sql_w09_emas_bit_identical_to_dataframe_api(spark):
+    """sql_w09_ema's unrounded two-EMA statement nests the layers
+    w09_ema's with_ewm_multi attaches, at the same shared block size
+    _K_W09, so ema_12 and ema_26 agree bit for bit BEFORE the
+    6-decimal rounding both queries apply (a per-span block size for
+    ema_12 moves the last bits of about half its values, which the
+    rounded twin comparison cannot see)."""
+    import struct
+
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import (
+        _K_W09,
+        _SQL_W09_EMAS,
+        IDS,
+        KEYS,
+        ORDER,
+        _market,
+    )
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.ewm import (
+        with_ewm_multi,
+    )
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.sql import register_views
+
+    register_views(spark, SF_DIR)
+    cols = IDS + ["ema_12", "ema_26"]
+    sql_rows = spark.sql(_SQL_W09_EMAS).select(*cols).collect()
+    df_rows = with_ewm_multi(
+        _market(spark, SF_DIR),
+        [
+            {"col": "close", "out": "ema_12", "span": 12},
+            {"col": "close", "out": "ema_26", "span": 26},
+        ],
+        keys=KEYS, order=ORDER, k=_K_W09,
+    ).select(*cols).collect()
+
+    def bits(rows):
+        return {
+            tuple(r[:4]): tuple(
+                None if v is None else struct.pack("<d", v) for v in r[4:]
+            )
+            for r in rows
+        }
+
+    a, b = bits(sql_rows), bits(df_rows)
+    assert len(a) == len(sql_rows) == len(df_rows) == len(b) > 0
+    differ = [key for key in a if a[key] != b.get(key)]
+    assert not differ, (len(differ), differ[:3])
