@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Callable, Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -44,21 +45,20 @@ from .operators.dedup import (
     minhash_dedup_pairs,
     simhash_near_pairs,
 )
-from .operators.ewm import block_size_for, ewm_sql, with_ewm
+from .operators.ewm import block_size_for, ewm_spark_sql, ewm_sql
 
 # with_macd fuses the fast/slow EMAs with a SHARED block size; the
 # oracle renderings must use the same k for bit parity
 _K_MACD = max(block_size_for(span=12), block_size_for(span=26), block_size_for(span=9))
 from .operators.indicators import (
+    MARKET_FEATURES,
+    build_market_features,
     with_adx,
     with_atr,
-    with_bollinger,
     with_cci,
-    with_hl_spread,
     with_macd,
     with_mfi,
     with_obv,
-    with_returns,
     with_roc,
     with_rsi_sma,
     with_rsi_wilder,
@@ -72,7 +72,6 @@ from .operators.sampling import (
     hash_top_n_per_group,
     mixture_sample,
     pack_sequences,
-    rate_to_hex8,
     rate_to_threshold,
     take_token_budget,
     with_shuffle_key,
@@ -107,6 +106,7 @@ from .operators.similarity import (
     knn_join,
 )
 from .operators import text as textops
+from .sql import run_sql
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -244,9 +244,9 @@ def _w():
     return series_window(KEYS, ORDER)
 
 
-def _over(frame: str = "") -> str:
+def _over(frame: str = "", *, part: str = PART, order: str = ORD) -> str:
     tail = f" {frame}" if frame else ""
-    return f"OVER (PARTITION BY {PART} ORDER BY {ORD}{tail})"
+    return f"OVER (PARTITION BY {part} ORDER BY {order}{tail})"
 
 
 def _fr(n: int) -> str:
@@ -256,13 +256,12 @@ def _fr(n: int) -> str:
 _CUM = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
-def _roll(fn_sql: str, col: str, n: int, arg: str | None = None) -> str:
+def _roll(fn_sql: str, col: str, n: int, arg: str | None = None, *,
+          part: str = PART, order: str = ORD) -> str:
     """Masked trailing-window aggregate (pandas warmup parity)."""
     inner = f"{fn_sql}({arg or col})"
-    return (
-        f"CASE WHEN COUNT({col}) {_over(_fr(n))} >= {n} "
-        f"THEN {inner} {_over(_fr(n))} END"
-    )
+    over = _over(_fr(n), part=part, order=order)
+    return f"CASE WHEN COUNT({col}) {over} >= {n} THEN {inner} {over} END"
 
 
 # --- W1-W3, W23: lag/lead family ------------------------------------------
@@ -519,32 +518,25 @@ def w10b(spark, sf_dir):
     return m.select(*IDS, "rsi_w_14")
 
 
-_MACD_STAGE = (
-    "SELECT *, __ema_fast - __ema_slow AS macd FROM ("
-    + ewm_sql(
-        ewm_sql(
-            MARKET_SQL, "close", "__ema_fast",
-            keys=[PART], order=ORDER,
-            keep=["suppkey", "ts", "okey", "lnum", "pkey", "close"], span=12, k=_K_MACD,
-        ),
-        "close", "__ema_slow",
-        keys=[PART], order=ORDER,
-        keep=["suppkey", "ts", "okey", "lnum", "pkey", "close", "__ema_fast"], span=26, k=_K_MACD,
+def _macd_sql(src: str, *, part: str, order: Sequence[str], keep: Sequence[str]) -> str:
+    """DuckDB twin of ``with_macd(keep_emas=True)`` over ``src``: ``keep``
+    (which must hold ``close``) plus ``ema_12``, ``ema_26``, ``macd`` and
+    its span-9 ``macd_signal_9``, every EWM at the shared block size
+    ``_K_MACD``."""
+    emas = ewm_sql(
+        ewm_sql(src, "close", "ema_12", keys=[part], order=order, keep=keep, span=12, k=_K_MACD),
+        "close", "ema_26", keys=[part], order=order, keep=[*keep, "ema_12"], span=26, k=_K_MACD,
     )
-    + ")"
-)
+    return ewm_sql(
+        f"SELECT *, ema_12 - ema_26 AS macd FROM ({emas})", "macd", "macd_signal_9",
+        keys=[part], order=order, keep=[*keep, "ema_12", "ema_26", "macd"], span=9, k=_K_MACD,
+    )
 
-_W11_SQL = (
-    """SELECT suppkey, ts, okey, lnum, macd, macd_signal_9,
+
+_W11_SQL = f"""SELECT suppkey, ts, okey, lnum, macd, macd_signal_9,
        macd - macd_signal_9 AS histogram
-FROM ("""
-    + ewm_sql(
-        _MACD_STAGE, "macd", "macd_signal_9",
-        keys=[PART], order=ORDER,
-        keep=["suppkey", "ts", "okey", "lnum", "pkey", "macd"], span=9, k=_K_MACD,
-    )
-    + ")"
-)
+FROM ({_macd_sql(MARKET_SQL, part=PART, order=ORDER,
+                 keep=["suppkey", "ts", "okey", "lnum", "pkey", "close"])})"""
 
 
 @q(
@@ -843,60 +835,46 @@ def u5(spark, sf_dir):
 
 # --- flagship composite (entry() runs this at sf0.001) ---------------------
 
-_BMF_KEEP = ["suppkey", "ts", "okey", "lnum", "pkey", "close", "high", "low", "volume"]
-
-_BMF_EWM = ewm_sql(
-    ewm_sql(
-        MARKET_SQL, "close", "ema_12",
-        keys=[PART], order=ORDER, keep=_BMF_KEEP, span=12, k=_K_MACD,
-    ),
-    "close", "ema_26",
-    keys=[PART], order=ORDER, keep=_BMF_KEEP + ["ema_12"], span=26, k=_K_MACD,
-)
-
-_BMF_MACD = "SELECT *, ema_12 - ema_26 AS macd FROM (" + _BMF_EWM + ")"
-
-_BMF_SIG = ewm_sql(
-    _BMF_MACD, "macd", "macd_signal_9",
-    keys=[PART], order=ORDER,
-    keep=_BMF_KEEP + ["ema_12", "ema_26", "macd"], span=9, k=_K_MACD,
-)
-
-_BMF_SQL = f"""
-SELECT suppkey, ts, okey, lnum, ret_1, logret_1,
-       {_roll('STDDEV_SAMP', 'logret_1', 5)} AS rvol_5,
-       {_roll('STDDEV_SAMP', 'logret_1', 20)} AS rvol_20,
-       ema_12, ema_26, macd, macd_signal_9, rsi_14, hl_spread, oi_obv
+def _market_features_sql(src: str, *, part: str, order: Sequence[str],
+                         keep: Sequence[str]) -> str:
+    """DuckDB twin of ``build_market_features`` over ``src`` (which
+    carries close/high/low/volume): ``keep`` plus every
+    ``MARKET_FEATURES`` column, rows whose features are all NULL
+    dropped. ``keep`` must hold ``part`` and the ``order`` columns."""
+    ordr = ", ".join(order)
+    over = partial(_over, part=part, order=ordr)
+    roll = partial(_roll, part=part, order=ordr)
+    carry = list(dict.fromkeys([*keep, "close", "high", "low", "volume"]))
+    macd = _macd_sql(src, part=part, order=order, keep=carry)
+    feats = ", ".join(MARKET_FEATURES)
+    return f"""
+SELECT {', '.join(keep)}, {feats}
 FROM (
   SELECT *,
-         100.0 - (100.0 / (1.0 + ({_roll('AVG', '__rup', 14)}) / NULLIF({_roll('AVG', '__rdown', 14)}, 0.0))) AS rsi_14
+         {roll('STDDEV_SAMP', 'logret_1', 5)} AS rvol_5,
+         {roll('STDDEV_SAMP', 'logret_1', 20)} AS rvol_20,
+         100.0 - (100.0 / (1.0 + ({roll('AVG', '__rup', 14)}) / NULLIF({roll('AVG', '__rdown', 14)}, 0.0))) AS rsi_14
   FROM (
     SELECT *,
            CASE WHEN __delta > 0 THEN __delta ELSE 0.0 END AS __rup,
            CASE WHEN __delta < 0 THEN -__delta ELSE 0.0 END AS __rdown,
-           (close - LAG(close, 1) {_over()}) / NULLIF(LAG(close, 1) {_over()}, 0) AS ret_1,
-           LN(NULLIF(close, 0)) - LAG(LN(NULLIF(close, 0)), 1) {_over()} AS logret_1,
+           (close - LAG(close, 1) {over()}) / NULLIF(LAG(close, 1) {over()}, 0) AS ret_1,
+           LN(NULLIF(close, 0)) - LAG(LN(NULLIF(close, 0)), 1) {over()} AS logret_1,
            (high - low) / NULLIF(close, 0) AS hl_spread,
-           SUM(CASE WHEN __delta IS NULL THEN 0.0 ELSE SIGN(__delta) END * COALESCE(volume, 0.0)) {_over(_CUM)} AS oi_obv
-    FROM (SELECT *, close - LAG(close, 1) {_over()} AS __delta FROM ({_BMF_SIG}))
+           SUM(CASE WHEN __delta IS NULL THEN 0.0 ELSE SIGN(__delta) END * COALESCE(volume, 0.0)) {over(_CUM)} AS oi_obv
+    FROM (SELECT *, close - LAG(close, 1) {over()} AS __delta FROM ({macd}))
   )
 )
-QUALIFY COALESCE(ret_1, logret_1,
-                 {_roll('STDDEV_SAMP', 'logret_1', 5)},
-                 {_roll('STDDEV_SAMP', 'logret_1', 20)},
-                 ema_12, ema_26, macd, macd_signal_9, rsi_14, hl_spread, oi_obv) IS NOT NULL
-"""
+WHERE COALESCE({feats}) IS NOT NULL"""
 
-_BMF_FEATURES = [
-    "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
-    "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
-]
+
+_BMF_SQL = _market_features_sql(MARKET_SQL, part=PART, order=ORDER, keep=[*IDS, "pkey"])
 
 
 def market_series_frame(spark, sf_dir):
     """Market-shaped projection with series-identity columns — the
-    input both to ``entry()``'s flagship ``build_market_features`` run
-    and to the flagship oracle query."""
+    input to ``build_market_features`` in ``entry()``'s flagship run
+    and in the flagship oracle query."""
     li = _t(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_suppkey").alias("suppkey"),
@@ -917,31 +895,14 @@ def market_series_frame(spark, sf_dir):
 @q(
     "flagship_market_features",
     _BMF_SQL,
-    cols=IDS + _BMF_FEATURES,
-    fcols=_BMF_FEATURES,
+    cols=[*IDS, *MARKET_FEATURES],
+    fcols=MARKET_FEATURES,
 )
 def flagship(spark, sf_dir):
-    m = market_series_frame(spark, sf_dir)
-    # same stage list as build_market_features, kept at id granularity
-    # (suppkey/ts/okey/lnum) so every row is comparable to the oracle
-    w = series_window(["suppkey"], ORDER)
-    # r15 (guide §2.4): MACD last — its block-renormalized EWMs are the
-    # one stage sorting by (suppkey, __block, ORDER); keeping every
-    # (suppkey, ORDER) window together lets them share ONE sort instead
-    # of re-sorting after the block stage (3 sorts -> 2, see
-    # build_market_features). Same expressions, bit-identical values.
-    df = with_returns(m, "close", keys=["suppkey"], order=ORDER)
-    df = df.withColumn("rvol_5", rolling_std("logret_1", w, 5))
-    df = df.withColumn("rvol_20", rolling_std("logret_1", w, 20))
-    df = with_rsi_sma(df, "close", 14, keys=["suppkey"], order=ORDER, out="rsi_14")
-    df = with_hl_spread(df)
-    df = with_obv(df, keys=["suppkey"], order=ORDER, out="oi_obv")
-    df = with_macd(df, "close", keys=["suppkey"], order=ORDER,
-                   fast=12, slow=26, signal=9,
-                   macd_out="macd", signal_out="macd_signal_9",
-                   hist_out=None, keep_emas=True)
-    df = df.filter(F.coalesce(*[F.col(c) for c in _BMF_FEATURES]).isNotNull())
-    return df.select(*IDS, *_BMF_FEATURES)
+    return build_market_features(
+        market_series_frame(spark, sf_dir), keys=KEYS, ts_col="ts",
+        order_cols=ORDER, keep_cols=IDS,
+    ).select(*IDS, *MARKET_FEATURES)
 
 
 # --------------------------------------------------------------------------
@@ -3869,23 +3830,6 @@ def u_media(spark, sf_dir):
 # end with a full oracle.
 # --------------------------------------------------------------------------
 
-_TM_PART = "symbol"
-_TM_ORD = "timestamp"
-
-
-def _tm_over(frame: str = "") -> str:
-    tail = f" {frame}" if frame else ""
-    return f"OVER (PARTITION BY {_TM_PART} ORDER BY {_TM_ORD}{tail})"
-
-
-def _tm_roll(fn_sql: str, col: str, n: int) -> str:
-    fr = f"ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW"
-    return (
-        f"CASE WHEN COUNT({col}) {_tm_over(fr)} >= {n} "
-        f"THEN {fn_sql}({col}) {_tm_over(fr)} END"
-    )
-
-
 _BARS_SQL = """
 SELECT CAST(l_suppkey AS VARCHAR) AS symbol, 'lake' AS exchange, '1w' AS timeframe,
        EPOCH_MS((__e - __e % 604800) * 1000) AS timestamp,
@@ -3895,40 +3839,6 @@ SELECT CAST(l_suppkey AS VARCHAR) AS symbol, 'lake' AS exchange, '1w' AS timefra
        SUM(l_quantity) AS volume
 FROM (SELECT *, CAST(FLOOR(EPOCH(l_shipdate)) AS BIGINT) AS __e FROM lineitem)
 GROUP BY 1, 2, 3, 4"""
-
-_TM_KEEP = ["symbol", "exchange", "timeframe", "timestamp", "close", "high", "low", "volume"]
-
-_TM_EWM = ewm_sql(
-    ewm_sql(
-        _BARS_SQL, "close", "ema_12",
-        keys=[_TM_PART], order=[_TM_ORD], keep=_TM_KEEP, span=12, k=_K_MACD,
-    ),
-    "close", "ema_26",
-    keys=[_TM_PART], order=[_TM_ORD], keep=_TM_KEEP + ["ema_12"], span=26, k=_K_MACD,
-)
-
-_TM_SIG = ewm_sql(
-    "SELECT *, ema_12 - ema_26 AS macd FROM (" + _TM_EWM + ")",
-    "macd", "macd_signal_9",
-    keys=[_TM_PART], order=[_TM_ORD],
-    keep=_TM_KEEP + ["ema_12", "ema_26", "macd"], span=9, k=_K_MACD,
-)
-
-_TM_FEATS = f"""
-SELECT *,
-       {_tm_roll('STDDEV_SAMP', 'logret_1', 5)} AS rvol_5,
-       {_tm_roll('STDDEV_SAMP', 'logret_1', 20)} AS rvol_20,
-       100.0 - (100.0 / (1.0 + ({_tm_roll('AVG', '__rup', 14)}) / NULLIF({_tm_roll('AVG', '__rdown', 14)}, 0.0))) AS rsi_14
-FROM (
-  SELECT *,
-         CASE WHEN __delta > 0 THEN __delta ELSE 0.0 END AS __rup,
-         CASE WHEN __delta < 0 THEN -__delta ELSE 0.0 END AS __rdown,
-         (close - LAG(close, 1) {_tm_over()}) / NULLIF(LAG(close, 1) {_tm_over()}, 0) AS ret_1,
-         LN(NULLIF(close, 0)) - LAG(LN(NULLIF(close, 0)), 1) {_tm_over()} AS logret_1,
-         (high - low) / NULLIF(close, 0) AS hl_spread,
-         SUM(CASE WHEN __delta IS NULL THEN 0.0 ELSE SIGN(__delta) END * COALESCE(volume, 0.0)) {_tm_over('ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW')} AS oi_obv
-  FROM (SELECT *, close - LAG(close, 1) {_tm_over()} AS __delta FROM ({_TM_SIG}))
-)"""
 
 _SOCIAL_AGG_SQL = """
 SELECT EPOCH_MS((__e - __e % 604800) * 1000) AS timestamp,
@@ -3942,13 +3852,8 @@ FROM (SELECT *, CAST(FLOOR(EPOCH(ts - INTERVAL 28 YEAR)) AS BIGINT) AS __e
       FROM events WHERE event_type = 'click')
 GROUP BY 1"""
 
-_TM_FEATURES = [
-    "ret_1", "logret_1", "rvol_5", "rvol_20", "ema_12", "ema_26",
-    "macd", "macd_signal_9", "rsi_14", "hl_spread", "oi_obv",
-]
-
 _TM_SQL = f"""
-SELECT symbol, timestamp, {', '.join(_TM_FEATURES)}, close,
+SELECT symbol, timestamp, {', '.join(MARKET_FEATURES)}, close,
        sentiment_mean, social_n, news_n, ret_next,
        CAST(ret_next > 0 AS INT) AS y_dir
 FROM (
@@ -3956,11 +3861,9 @@ FROM (
          COALESCE(s.sentiment_mean, 0) AS sentiment_mean,
          COALESCE(s.social_n, 0) AS social_n,
          COALESCE(n.news_n, 0) AS news_n,
-         LEAD(f.ret_1, 1) {_tm_over()} AS ret_next
-  FROM (
-    SELECT * FROM ({_TM_FEATS})
-    WHERE COALESCE({', '.join(_TM_FEATURES)}) IS NOT NULL
-  ) f
+         LEAD(f.ret_1, 1) {_over(part="symbol", order="timestamp")} AS ret_next
+  FROM ({_market_features_sql(_BARS_SQL, part="symbol", order=["timestamp"],
+                              keep=["symbol", "timestamp", "close"])}) f
   LEFT JOIN ({_SOCIAL_AGG_SQL}) s USING (timestamp)
   LEFT JOIN ({_NEWS_AGG_SQL}) n USING (timestamp)
 )
@@ -3970,9 +3873,9 @@ WHERE ret_next IS NOT NULL"""
 @q(
     "training_matrix",
     _TM_SQL,
-    cols=["symbol", "timestamp"] + _TM_FEATURES
-    + ["close", "sentiment_mean", "social_n", "news_n", "ret_next", "y_dir"],
-    fcols=_TM_FEATURES + ["close", "sentiment_mean", "ret_next"],
+    cols=["symbol", "timestamp", *MARKET_FEATURES,
+          "close", "sentiment_mean", "social_n", "news_n", "ret_next", "y_dir"],
+    fcols=[*MARKET_FEATURES, "close", "sentiment_mean", "ret_next"],
 )
 def training_matrix(spark, sf_dir):
     from .datasets.training import build_training_matrix
@@ -4013,7 +3916,7 @@ def training_matrix(spark, sf_dir):
         timeframe="1w", ts_col="timestamp",
     )
     return out.select(
-        "symbol", "timestamp", *_TM_FEATURES, "close",
+        "symbol", "timestamp", *MARKET_FEATURES, "close",
         "sentiment_mean", "social_n", "news_n", "ret_next", "y_dir",
     )
 
@@ -5407,27 +5310,16 @@ def _spark_dialect(sql: str) -> str:
     return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], out)
 
 
-def _sql_twin(src_name: str, *, dialect: bool = False):
-    """Spark-side callable executing ``src_name``'s oracle SQL via
-    ``spark.sql`` after registering the domain views (verbatim text,
-    or through :func:`_spark_dialect` when ``dialect``)."""
+def _sql_twin(src_name: str, text: str) -> None:
+    """Register ``sql_<src_name>``: ``text`` executed through
+    ``spark.sql`` over the ``register_views(sf_dir)`` temp views
+    (:func:`.sql.run_sql`), checked against ``src_name``'s oracle."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .sql import register_views
-
         ensure_session_defaults(spark)
-        register_views(spark, sf_dir)
-        text = REGISTRY[src_name][1]
-        return spark.sql(_spark_dialect(text) if dialect else text)
+        return run_sql(spark, sf_dir, text)
 
-    fn.__name__ = f"sql_{src_name}"
-    fn.__doc__ = (
-        f"spark.sql twin of {src_name}: executes the registry's oracle "
-        "SQL text over register_views(sf_dir) temp views"
-        + (" after the documented mechanical dialect map." if dialect
-           else " verbatim.")
-    )
-    return fn
+    q(f"sql_{src_name}", REGISTRY[src_name][1])(fn)
 
 
 #: every registry oracle whose text parses AND runs in Spark SQL
@@ -5472,47 +5364,33 @@ _SQL_DIALECT_TWINS = (
 )
 
 for _src in _SQL_VERBATIM_TWINS:
-    q(f"sql_{_src}", REGISTRY[_src][1])(_sql_twin(_src))
+    _sql_twin(_src, REGISTRY[_src][1])
 for _src in _SQL_DIALECT_TWINS:
-    q(f"sql_{_src}", REGISTRY[_src][1])(_sql_twin(_src, dialect=True))
+    _sql_twin(_src, _spark_dialect(REGISTRY[_src][1]))
 
 
 # The EWM twin needs a Spark-dialect text (the DuckDB oracle leans on
 # LIST_REDUCE for its sequential fold): ewm_spark_sql nests the SAME
-# expression layers with_ewm_multi attaches, at w09's shared block size
-# _K_W09, so the spark.sql path is bit-identical to the DataFrame path
-# (unrounded, pinned by tests/test_sql_layer.py) and oracle-exact by
-# inheritance.
-from .operators.ewm import ewm_spark_sql  # noqa: E402
+# expression layers with_ewm_multi attaches for w09's two specs at its
+# shared block size _K_W09 — one idx/block/pos staging, so the spark.sql
+# plan has w09_ema's windows and sorts and is bit-identical to the
+# DataFrame path (unrounded, pinned by tests/test_sql_layer.py) and
+# oracle-exact by inheritance.
 
 #: the two unrounded EMAs of w09_ema as ONE Spark SQL statement
 _SQL_W09_EMAS = ewm_spark_sql(
-    ewm_spark_sql(
-        "SELECT * FROM market", "close", "ema_12",
-        keys=[PART], order=ORDER, keep=_EMA_KEEP, span=12, k=_K_W09,
-    ),
-    "close", "ema_26",
-    keys=[PART], order=ORDER, keep=_EMA_KEEP + ["ema_12"], span=26, k=_K_W09,
+    "SELECT * FROM market",
+    [
+        {"col": "close", "out": "ema_12", "span": 12},
+        {"col": "close", "out": "ema_26", "span": 26},
+    ],
+    keys=[PART], order=ORDER, keep=_EMA_KEEP, k=_K_W09,
 )
-_SQL_W09_SPARK = (
+_sql_twin(
+    "w09_ema",
     f"SELECT suppkey, ts, okey, lnum, {SR('ema_12')} AS ema_12, "
-    f"{SR('ema_26')} AS ema_26 FROM ({_SQL_W09_EMAS})"
+    f"{SR('ema_26')} AS ema_26 FROM ({_SQL_W09_EMAS})",
 )
-
-
-def _sql_w09_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.sql twin of w09_ema: the blocked-renormalization EWM
-    executed as ONE Spark SQL statement over the registered market
-    view (hardest window operator through the SQL API; oracle = the
-    registry's DuckDB ewm_sql rendering)."""
-    from .sql import register_views
-
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL_W09_SPARK)
-
-
-q("sql_w09_ema", REGISTRY["w09_ema"][1])(_sql_w09_ema)
 
 
 # Hand-authored Spark-dialect twins (r10) for the families whose
@@ -5687,23 +5565,5 @@ _SQL_SPARK_TEXTS["st12_rollup_distinct"] = (
 )
 
 
-def _sql_spark_text_twin(src_name: str):
-    text = _SQL_SPARK_TEXTS[src_name]
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .sql import register_views
-
-        ensure_session_defaults(spark)
-        register_views(spark, sf_dir)
-        return spark.sql(text)
-
-    fn.__name__ = f"sql_{src_name}"
-    fn.__doc__ = (
-        f"Spark-dialect SQL twin of {src_name} (hand-authored text, "
-        "same semantics; oracle = the registry's DuckDB text)."
-    )
-    return fn
-
-
-for _src in _SQL_SPARK_TEXTS:
-    q(f"sql_{_src}", REGISTRY[_src][1])(_sql_spark_text_twin(_src))
+for _src, _text in _SQL_SPARK_TEXTS.items():
+    _sql_twin(_src, _text)

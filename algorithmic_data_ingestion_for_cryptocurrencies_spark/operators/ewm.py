@@ -45,7 +45,7 @@ from __future__ import annotations
 import math
 from collections.abc import Collection, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 _CHUNK = 16
 _CHAIN = 3  # carry terms; truncation error ~ rho^3 <= 1e-27
@@ -408,33 +408,28 @@ FROM (
 
 def ewm_spark_sql(
     inner: str,
-    col: str,
-    out: str,
+    specs: Sequence[dict],
     *,
     keys: Sequence[str],
     order: Sequence[str],
     keep: Sequence[str],
-    span: int | None = None,
-    alpha: float | None = None,
-    com: float | None = None,
     k: int | None = None,
 ) -> str:
-    """Spark-dialect text twin of :func:`ewm_sql` (SURVEY §7.1 SQL
-    surface): the layers :func:`with_ewm_multi` attaches through
-    ``withColumns`` (one :func:`_ewm_layers` build), nested as
-    ``SELECT *, … FROM (…)`` over ``inner`` and projected to ``keep``
-    plus ``out`` — so ``spark.sql(ewm_spark_sql(...))`` evaluates the
-    same expression graph and, at the same ``k``, is bit-identical to
-    the DataFrame API path. The DuckDB rendering needs LIST_REDUCE for
-    a sequential fold; Spark's running-window SUM already folds
+    """Spark-dialect text twin of :func:`with_ewm_multi` (SURVEY §7.1
+    SQL surface): the layers it attaches through ``withColumns`` for
+    the same ``specs`` (one :func:`_ewm_layers` build, so EWMs over
+    one position column share the idx/block/pos columns and their
+    window specs), nested as ``SELECT *, … FROM (…)`` over ``inner``
+    and projected to ``keep`` plus every spec's ``out`` — so
+    ``spark.sql(ewm_spark_sql(...))`` plans the same windows and, at
+    the same ``k``, is bit-identical to the DataFrame API path. The
+    DuckDB rendering (:func:`ewm_sql`) needs LIST_REDUCE for a
+    sequential fold; Spark's running-window SUM already folds
     left-to-right, so the blocked prefix sum is a plain window here."""
-    layers, _stage, _tmp = _ewm_layers(
-        [{"col": col, "out": out, "span": span, "alpha": alpha, "com": com}],
-        keys=keys, order=order, k=k,
-    )
+    layers, _stage, _tmp = _ewm_layers(specs, keys=keys, order=order, k=k)
     sql = inner
     for layer in layers[:-1]:
         sel = ", ".join(f"{e} AS `{n}`" for n, e in layer.items())
         sql = f"SELECT *, {sel} FROM ({sql})"
-    keep_cols = ", ".join(f"`{c}`" for c in keep)
-    return f"SELECT {keep_cols}, {layers[-1][out]} AS `{out}` FROM ({sql})"
+    cols = [f"`{c}`" for c in keep] + [f"{e} AS `{n}`" for n, e in layers[-1].items()]
+    return f"SELECT {', '.join(cols)} FROM ({sql})"

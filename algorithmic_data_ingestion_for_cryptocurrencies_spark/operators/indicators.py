@@ -22,9 +22,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.time_norm import dt_from_ts
 from ..schemas import FEATURE_VERSION, MARKET_FEATURE_SCHEMA, coerce_schema
-from .ewm import with_ewm, with_ewm_multi
+from .ewm import with_ewm_multi
 from .rolling import (
-    cum,
     cum_sum,
     lag_diff,
     log_return,
@@ -42,17 +41,6 @@ from .rolling import (
 
 def _series(keys: Sequence[str], order) :
     return series_window(keys, order)
-
-
-def with_sma(df: DataFrame, col: str, n: int, *, keys, order, out: str | None = None) -> DataFrame:
-    """SMA — ``ta_indicators.py:121-125``."""
-    w = _series(keys, order)
-    return df.withColumn(out or f"sma_{n}", rolling_mean(col, w, n))
-
-
-def with_ema(df: DataFrame, col: str, span: int, *, keys, order, out: str | None = None) -> DataFrame:
-    """EMA (ewm span, adjust=False) — ``ta_indicators.py:127-131``."""
-    return with_ewm(df, col, out or f"ema_{span}", keys=keys, order=order, span=span)
 
 
 def with_returns(df: DataFrame, col: str, *, keys, order,

@@ -239,10 +239,6 @@ def cum_max(col: ColumnLike, w: WindowSpec) -> Column:
     return F.max(_c(col)).over(cum(w))
 
 
-def cum_min(col: ColumnLike, w: WindowSpec) -> Column:
-    return F.min(_c(col)).over(cum(w))
-
-
 def drawdown(col: ColumnLike, w: WindowSpec) -> Column:
     """``(s - cummax) / cummax`` — ``onchain_features.py:36-43``."""
     c = _c(col)

@@ -94,23 +94,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("quality_score", score.cast("double"))
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language stopword-hit ratio."""
-    words = word_tokens(col)
-
-    # single-parameter closure factory: PySpark passes (element, index)
-    # to two-parameter lambdas in F.filter, which would clobber a
-    # default-bound marker tuple (round-1 crash).
-    def marker_filter(markers: tuple[str, ...]):
-        return lambda t: t.isin(*markers)
-
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        hits = F.size(F.filter(words, marker_filter(markers)))
-        out[lang] = hits / F.nullif(F.size(words).cast("double"), F.lit(0.0))
-    return out
-
-
 def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> DataFrame:
     """Language ID by stopword-marker ratio argmax; 'und' when no
     marker hits (e.g. non-Latin scripts not in the marker table).
@@ -121,6 +104,9 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") 
     language), which without the barrier duplicates the tokenize tree
     O(L²) times per row — ~40 copies at 6 languages (hof.py)."""
 
+    # single-parameter closure factory: PySpark passes (element, index)
+    # to two-parameter lambdas in F.filter, which would clobber a
+    # default-bound marker tuple (round-1 crash).
     def marker_filter(markers: tuple[str, ...]):
         return lambda t: t.isin(*markers)
 

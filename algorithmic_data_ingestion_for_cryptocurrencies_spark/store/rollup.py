@@ -83,10 +83,6 @@ MANIFEST_PREFIX = "_rollup_manifest"
 MANIFEST_NAME = "_rollup_manifest.json"
 
 
-def _state_cols(c: str) -> list[str]:
-    return [f"n_{c}", f"sum_{c}", f"min_{c}", f"max_{c}", f"sumsq_{c}"]
-
-
 def _check_distinct_method(method: str) -> None:
     """Fail LOUDLY at state-build/construction time: an unrecognized
     method would otherwise write states with NO distinct column at

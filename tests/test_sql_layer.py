@@ -4,6 +4,9 @@ to the DataFrame API path."""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -99,3 +102,55 @@ def test_sql_w09_emas_bit_identical_to_dataframe_api(spark):
     assert len(a) == len(sql_rows) == len(df_rows) == len(b) > 0
     differ = [key for key in a if a[key] != b.get(key)]
     assert not differ, (len(differ), differ[:3])
+
+
+def _window_sort_counts(df):
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.plans.inspect import explain_str
+
+    tree = explain_str(df, "formatted").split("\n\n")[0]
+    ops = [ln.lstrip("+- :").split(" (")[0] for ln in tree.splitlines()]
+    return ops.count("Window"), ops.count("Sort")
+
+
+def test_sql_w09_ema_plans_the_windows_of_w09_ema(spark):
+    """The twin's one ewm_spark_sql call stages idx/block/pos once for
+    both EMAs, as with_ewm_multi does, so it plans as many Window and
+    Sort nodes as w09_ema (one call per EMA re-derived them and planned
+    8 Window and 4 Sort nodes against w09_ema's 4 and 2)."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import REGISTRY
+
+    w09 = _window_sort_counts(REGISTRY["w09_ema"][0](spark, SF_DIR))
+    twin = _window_sort_counts(REGISTRY["sql_w09_ema"][0](spark, SF_DIR))
+    assert w09[0] > 0 and w09[1] > 0
+    assert twin == w09
+
+
+def _oracle_compare():
+    spec = importlib.util.spec_from_file_location(
+        "oracle_check",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "oracle_check.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.TABLES, mod.compare
+
+
+@pytest.mark.parametrize(
+    "name", ["w11_macd", "flagship_market_features", "training_matrix"]
+)
+def test_market_feature_oracles_exact(spark, name):
+    """The registry's Spark callable and its DuckDB oracle text (both
+    renderings of the MACD / market-feature stage) agree exactly under
+    the local correctness gate's comparison."""
+    duckdb = pytest.importorskip("duckdb")
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import REGISTRY
+
+    tables, compare = _oracle_compare()
+    fn, sql = REGISTRY[name]
+    con = duckdb.connect()
+    for t in tables:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    sdf = fn(spark, SF_DIR).toPandas()
+    ok, msg = compare(name, sdf, con.sql(sql).df())
+    assert len(sdf) > 0
+    assert ok and msg == "exact", msg
