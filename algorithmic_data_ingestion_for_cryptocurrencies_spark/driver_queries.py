@@ -44,6 +44,7 @@ from .operators.dedup import (
     minhash_coeffs,
     minhash_dedup_pairs,
     simhash_near_pairs,
+    tokenize,
 )
 from .operators.ewm import block_size_for, ewm_spark_sql, ewm_sql
 
@@ -2025,7 +2026,7 @@ def e7_funnel(spark, sf_dir):
     of each step strictly after the previous one. Single scan of
     events, one exchange+sort on the user id, one dependent
     partition-wide conditional-min window pass per step (r13 A/B,
-    tools/bench_funnel_shapes.py: value-identical to the per-step
+    ROUND13_NOTES.md: value-identical to the per-step
     join chain, faster at every tier, one event-grain shuffle
     total)."""
     from .operators.funnel import funnel_steps
@@ -5253,7 +5254,7 @@ def text_wordcount(spark, sf_dir):
     normalized words, count, top-20 (deterministic tiebreak)."""
     docs = _t(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(textops.word_tokens("text")).alias("word"))
+        docs.select(F.explode(tokenize("text")).alias("word"))
         .groupBy("word")
         .count()
         .withColumnRenamed("count", "n")

@@ -1277,7 +1277,7 @@ def cross_doc_repetition(
     same way they do in :func:`jaccard_similar_pairs` — AQE skew
     splitting applies; there is no quadratic pair stage here at all.
 
-    Shape ruling (r12, A/B in ``tools/bench_crossdoc_shapes.py``): a
+    Shape ruling (r12 A/B, recorded in ``artifacts/r12/ROUND12_NOTES.md``): a
     ``COUNT(*) OVER (PARTITION BY shingle)`` variant replaces the
     freq-agg + join with one exchange and measured 13-21% faster at
     sf1/sf3 — but WindowExec gives a Zipfian-hot shingle's whole row

@@ -28,7 +28,7 @@ def funnel_steps(
     ``steps_completed``; ``within_seconds`` additionally requires the
     WHOLE funnel to fit in the window measured from step 1.
 
-    Scale shape (r13 A/B, ``tools/bench_funnel_shapes.py``): ONE scan
+    Scale shape (r13 A/B, recorded in ``ROUND13_NOTES.md``): ONE scan
     of events, one exchange+sort on the user id, then one dependent
     partition-wide conditional-min WindowExec pass per step (step k's
     min is gated on step k-1's window output), and a final user-grain

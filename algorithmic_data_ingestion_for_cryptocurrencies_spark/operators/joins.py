@@ -82,7 +82,6 @@ def range_interval_join(
     end: str,
     keys: Sequence[str] = (),
     bucket_seconds: int,
-    points_parallelism: int | None = None,
 ) -> DataFrame:
     """Point-in-interval join — ``points.ts ∈ [intervals.start,
     intervals.end)`` (half-open), optionally with equi ``keys``.
@@ -105,13 +104,6 @@ def range_interval_join(
     Skewed buckets (everything in one hour) are AQE-splittable since
     the join is a plain shuffle join."""
     b = int(bucket_seconds)
-    if points_parallelism:
-        # When the interval side broadcasts, join parallelism equals the
-        # point side's scan splits — a compact parquet file gives 1-2
-        # tasks grinding the full pair stream. A cheap round-robin
-        # repartition of the (narrow) point side restores it; pointless
-        # only when both sides are big enough to shuffle anyway.
-        points = points.repartition(points_parallelism)
 
     def _epoch_div(df: DataFrame, col: str) -> str:
         # Spark disallows DATE->BIGINT casts; route DATE columns through

@@ -28,7 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import quality_features, word_tokens
+from .dedup import tokenize
+from .text import quality_features
 
 #: numeric heuristic signals fed alongside the hashed term buckets
 HEURISTIC_COLS = [
@@ -72,7 +73,7 @@ def hashed_term_features(
             F.when(n > 0, c / n).otherwise(F.lit(0.0)) for c in counts
         ])
 
-    return df.withColumn(out_col, bind_array(word_tokens(F.col(text_col)), body))
+    return df.withColumn(out_col, bind_array(tokenize(F.col(text_col)), body))
 
 
 def _assemble(df: DataFrame, *, text_col: str, n_buckets: int) -> DataFrame:
@@ -169,11 +170,9 @@ def train_nb_quality(
     corpus tokens, no iterations, no driver-side data beyond four
     scalars.
     """
-    from .text import word_tokens
-
     lbl = F.col(label_col).cast("int")
     toks = train.select(
-        lbl.alias("__y"), F.explode(word_tokens(text_col)).alias("token")
+        lbl.alias("__y"), F.explode(tokenize(text_col)).alias("token")
     )
     cnt = toks.groupBy("token").agg(
         F.sum(F.when(F.col("__y") == 1, 1).otherwise(0)).alias("__ng"),
@@ -229,9 +228,7 @@ def score_nb_quality(
     cluster; AQE may still pick broadcast when it fits) → one
     groupBy(id). Linear in corpus tokens.
     """
-    from .text import word_tokens
-
-    toks = df.select(F.col(id_col), F.explode(word_tokens(text_col)).alias("token"))
+    toks = df.select(F.col(id_col), F.explode(tokenize(text_col)).alias("token"))
     w = toks.join(weights, "token", "left").select(
         id_col,
         F.coalesce(F.col("weight"), F.lit(float(oov_weight))).alias("__w"),

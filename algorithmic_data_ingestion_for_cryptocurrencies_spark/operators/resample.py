@@ -33,7 +33,6 @@ def resample(
     keys: Sequence[str] = (),
     bucket_out: str = "bucket",
     pre_cluster: Sequence[str] | None = None,
-    pre_cluster_n: int | None = None,
 ) -> DataFrame:
     """Tumbling-window aggregate: one row per (keys..., bucket).
 
@@ -50,18 +49,16 @@ def resample(
     ~10% off the training-matrix pipeline at sf0.1. Only worth it when
     such a consumer exists; plain rollups keep the default (map-side
     partial aggregation reduces rows before the wire, which
-    ``pre_cluster`` forgoes). ``pre_cluster_n`` defaults to
-    ``spark.sql.shuffle.partitions`` (explicit count so AQE cannot
-    byte-coalesce a CPU-heavy window stage downstream)."""
+    ``pre_cluster`` forgoes). The partition count is
+    ``spark.sql.shuffle.partitions``, given explicitly so AQE cannot
+    byte-coalesce a CPU-heavy window stage downstream."""
     if pre_cluster:
         extra = set(pre_cluster) - set(keys)
         if extra:
             raise ValueError(
                 f"pre_cluster must be a subset of keys, got extra {sorted(extra)}"
             )
-        n = pre_cluster_n or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
         df = df.repartition(n, *[F.col(c) for c in pre_cluster])
     bucketed = df.withColumn(bucket_out, bucket_col(ts_col, timeframe))
     gb = bucketed.groupBy(*list(keys), bucket_out)

@@ -696,13 +696,8 @@ def ivf_topk(
         iterations=iterations,
     )
     crows = _cent_rows(cents)
-    if not crows:  # empty corpus: empty, correctly-typed result
-        return queries.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).alias("cosine"),
-            F.lit(0).alias("rank"),
-        )
+    if not crows:  # empty corpus
+        return _ivf_rerank(queries, None, None, k, id_col=id_col)
 
     # both assignment and probe selection are MAP-ONLY expressions
     # over the collected centroids (r11, small-k tier) — the only
@@ -723,8 +718,33 @@ def ivf_topk(
         ),
         cents, crows, nprobe,
     )
+    return _ivf_rerank(queries, query_probes, corpus_l, k, id_col=id_col)
+
+
+def _ivf_rerank(
+    queries: DataFrame,
+    probes: DataFrame | None,
+    lists: DataFrame | None,
+    k: int,
+    *,
+    id_col: str,
+) -> DataFrame:
+    """Exact rerank within the probed lists, shared by :func:`ivf_topk`
+    and :func:`ivf_index_topk`: equi-join ``probes`` (``query_id``,
+    ``__qvec``, ``centroid_id``) to ``lists`` (``neighbor_id``,
+    ``__cvec``, ``centroid_id``) on ``centroid_id``, drop self-pairs,
+    score cosine and keep the top ``k`` per query (cosine DESC,
+    neighbor_id). ``probes`` is None when the quantizer is empty; the
+    result is then empty, typed like the full one."""
+    if probes is None:
+        return queries.limit(0).select(
+            F.col(id_col).alias("query_id"),
+            F.col(id_col).alias("neighbor_id"),
+            F.lit(0.0).alias("cosine"),
+            F.lit(0).alias("rank"),
+        )
     scored = (
-        query_probes.join(corpus_l, "centroid_id")
+        probes.join(lists, "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
@@ -907,12 +927,7 @@ def ivf_index_topk(
     cents = spark.read.parquet(path.rstrip("/") + "/centroids")
     crows = _cent_rows(cents)
     if not crows:  # index built over an empty corpus
-        return queries.limit(0).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).alias("cosine"),
-            F.lit(0).alias("rank"),
-        )
+        return _ivf_rerank(queries, None, None, k, id_col=id_col)
     lists_dir, folded_seq = _ivf_lists_path(spark, path)
     probes = (
         # map-only probe selection (r11, small-k tier): array_sort
@@ -977,27 +992,10 @@ def ivf_index_topk(
                     F.col("__l.centroid_id").alias("centroid_id"),
                 )
             )
-    scored = (
-        probes.join(
-            lists.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("__cvec"),
-                "centroid_id",
-            ),
-            "centroid_id",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cosine("__qvec", "__cvec").alias("cosine"),
-        )
+    lists = lists.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"), "centroid_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _ivf_rerank(queries, probes, lists, k, id_col=id_col)
 
 
 #: generation-pointer prefix: ``_ivf_lists.g{N}.json`` in the index

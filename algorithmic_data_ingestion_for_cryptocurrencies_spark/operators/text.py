@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.hof import bind_array, materialize_once
-from .dedup import normalize_text
+from .dedup import normalize_text, tokenize
 
 # Minimal per-language stopword markers for the n-gram/stopword-ratio
 # language heuristic. Deliberately tiny + deterministic.
@@ -20,12 +20,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "nicht", "ist", "ein", "zu"),
     "fr": ("le", "la", "les", "de", "et", "un", "une", "est"),
 }
-
-
-def word_tokens(col: Column | str) -> Column:
-    """Whitespace tokenization of normalized text."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(normalize_text(c), " ")
 
 
 def bpe_ish_tokens(col: Column | str) -> Column:
@@ -40,7 +34,7 @@ def bpe_ish_tokens(col: Column | str) -> Column:
 
 
 def token_count(col: Column | str, *, bpe: bool = False) -> Column:
-    return F.size(bpe_ish_tokens(col) if bpe else word_tokens(col))
+    return F.size(bpe_ish_tokens(col) if bpe else tokenize(col))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -53,7 +47,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # tokenize tree is referenced by four output columns, and without
     # the barrier each reference re-runs it per row (hof.py)
     tok_st = bind_array(
-        word_tokens(c),
+        tokenize(c),
         lambda ws: F.struct(
             F.size(ws).alias("nw"),
             F.when(
@@ -122,7 +116,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") 
         )
 
     df = materialize_once(
-        df, bind_array(word_tokens(text_col), body), "__lang_st"
+        df, bind_array(tokenize(text_col), body), "__lang_st"
     )
     scores = {lang: F.col("__lang_st")[lang] for lang in langs}
     best = F.greatest(*[scores[lang] for lang in langs])
@@ -172,7 +166,7 @@ def chunk_documents(
             ),
         )
 
-    chunks = bind_array(word_tokens(text_col), body)
+    chunks = bind_array(tokenize(text_col), body)
     return df.select(
         F.col(id_col), F.explode(chunks).alias("__c")
     ).select(
@@ -206,7 +200,7 @@ def repetition_stats(
             tot.alias("t"), F.size(F.array_distinct(grams)).alias("d")
         )
 
-    st = bind_array(word_tokens(text_col), body)
+    st = bind_array(tokenize(text_col), body)
     # Generate barrier: the struct is consumed by three columns (and
     # typically a filter on the ratio) — without it each reference
     # re-evaluates the whole tokenize+ngram+distinct tree (hof.py)
@@ -284,7 +278,7 @@ def bm25_scores(
     # tokenize once: size() lives in a Project and explode() in a
     # Generate — separate operators, so codegen subexpression
     # elimination cannot share the tokenize tree between them (hof.py)
-    base = materialize_once(df, word_tokens(text_col), "__ws").select(
+    base = materialize_once(df, tokenize(text_col), "__ws").select(
         F.col(id_col).alias("id"),
         F.size("__ws").alias("__dl"),
         F.explode("__ws").alias("__w"),
@@ -295,7 +289,7 @@ def bm25_scores(
     dfreq = tf.groupBy("__w").agg(F.count("*").alias("__df"))
     stats = df.select(
         F.count("*").alias("__n"),
-        F.avg(F.size(word_tokens(text_col))).alias("__avgdl"),
+        F.avg(F.size(tokenize(text_col))).alias("__avgdl"),
     )
     idf = F.log(
         F.lit(1.0)
@@ -353,7 +347,7 @@ def rolling_hash_fingerprint(
             )
         )
 
-    return bind_array(word_tokens(col), body)
+    return bind_array(tokenize(col), body)
 
 
 def bigram_pairs(col: Column | str, *, keep_tail: bool = False) -> Column:
@@ -375,7 +369,7 @@ def bigram_pairs(col: Column | str, *, keep_tail: bool = False) -> Column:
     this form is linear). The token array itself is bound via
     ``bind_array``: zip_with references it twice (left side + slice),
     which would otherwise tokenize every document twice per row."""
-    return bind_array(word_tokens(col), lambda ws: _pairs_of(ws, keep_tail))
+    return bind_array(tokenize(col), lambda ws: _pairs_of(ws, keep_tail))
 
 
 def _pairs_of(ws: Column, keep_tail: bool) -> Column:
@@ -508,7 +502,7 @@ def bigram_lm_train_score(
     checkpoint the shared scan re-executes per job (4.6 s vs 3.5 s at
     the 1.5M-doc tier).
     """
-    hashed = F.transform(word_tokens(text_col), lambda t: F.xxhash64(t))
+    hashed = F.transform(tokenize(text_col), lambda t: F.xxhash64(t))
     pairs = bind_array(hashed, lambda hs: _pairs_of(hs, True))
     bg_all = docs.select(
         F.col(id_col), F.explode(pairs).alias("b")
@@ -643,7 +637,7 @@ def token_entropy_stats(
     from the raw counts — a single pass, no per-token probability
     column needed. Docs with zero tokens drop out."""
     toks = df.select(
-        F.col(id_col), F.explode(word_tokens(text_col)).alias("__t")
+        F.col(id_col), F.explode(tokenize(text_col)).alias("__t")
     )
     counts = toks.groupBy(id_col, "__t").agg(F.count("*").alias("__c"))
     n = F.sum("__c")

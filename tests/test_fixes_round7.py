@@ -14,15 +14,13 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.dedup import tokenize
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.quality_model import (
     hashed_term_features,
 )
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
     kmeans_centroids,
     semantic_dedup,
-)
-from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.text import (
-    word_tokens,
 )
 
 
@@ -50,7 +48,7 @@ def test_hashed_term_buckets_bind_bucket_id_not_array_index(spark):
 
     # independent path: explode the same tokenizer, bucket via the same
     # hash expression, groupBy — must agree bucket-for-bucket
-    toks = df.select(F.explode(word_tokens(F.col("text"))).alias("t"))
+    toks = df.select(F.explode(tokenize(F.col("text"))).alias("t"))
     n = toks.count()
     got = {
         r["b"]: r["cnt"] / n

@@ -469,9 +469,9 @@ def test_nb_libm_bit_agreement(spark):
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import (
         REGISTRY,
     )
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.dedup import tokenize
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.text import (
         quality_features,
-        word_tokens,
     )
 
     sf_dir = "/root/testdata/sf0.01"
@@ -479,7 +479,7 @@ def test_nb_libm_bit_agreement(spark):
     weak = quality_features(
         docs.filter(F.col("doc_id") % 2 == 0), text_col="text"
     ).select("doc_id", "text", (F.col("quality_score") >= 0.6).cast("int").alias("__y"))
-    toks = weak.select("__y", F.explode(word_tokens("text")).alias("token"))
+    toks = weak.select("__y", F.explode(tokenize("text")).alias("token"))
     cnt = toks.groupBy("token").agg(
         F.sum(F.when(F.col("__y") == 1, 1).otherwise(0)).alias("ng"),
         F.sum(F.when(F.col("__y") == 0, 1).otherwise(0)).alias("nb"),

@@ -37,9 +37,11 @@ def main() -> None:
             "spark_shuffle_partitions": sp.get("spark_shuffle_partitions"),
             "spark_queries": sp["queries"],
         }
-        # carry the two-window-protocol record through (r13: the
-        # --outlier-rerun flag writes these into the spark partial)
-        for k in ("second_window_min_cells", "outlier_rerun", "post_swap_cells"):
+        # carry the two-window-protocol record (r13: the --outlier-rerun
+        # flag writes these into the spark partial) and the per-query
+        # layer records through
+        for k in ("second_window_min_cells", "outlier_rerun", "post_swap_cells",
+                  "layers"):
             if k in sp:
                 tier[k] = sp[k]
         if duck_path:

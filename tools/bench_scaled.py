@@ -9,11 +9,19 @@ run resumes past completed queries).
 
 The per-round BENCH_SCALED_r{N}.json is assembled from these partials
 (one file per engine x tier) with matched-set totals.
+
+On the Spark engine each timed rep splits into build (``fn(spark,
+sf_dir)``) and exec (the noop write), and the min rep's layer record
+(:func:`measure_rep`) lands under ``layers``: build seconds and the
+jobs launched while building, Catalyst phase times, per-stage totals
+and Python worker time, read from Spark's status stores with the UI
+off (``perfbench/spark_feeds.py``) after the timed window closes.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -22,6 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+from perfbench.spark_feeds import PYTHON_METRICS, SparkFeeds, catalyst_phases  # noqa: E402
 
 #: min-of-5 set (r8, verdict #2): the high-variance shingle/shuffle
 #: queries AND the floor family — committed scaled cells for these must
@@ -49,6 +58,9 @@ RUNS5_SPARK = RUNS5 | {
     "g1_pagerank", "training_matrix",
 }
 
+#: sf dir of each query's untimed warm-up run (Spark engine)
+WARM_DIR = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -67,6 +79,49 @@ def _flush(path: str, data: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(data, f, indent=1, sort_keys=True)
     os.replace(tmp, path)
+
+
+def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
+    """One timed rep of a registry query ``fn`` on the noop sink, on a
+    clean block manager, and its layer record. ``wall_s`` is timed as
+    one span and splits into ``build_s`` (``fn(spark, sf_dir)``) and
+    ``exec_s`` (the write). Everything else is read after the timed
+    window: ``build_jobs`` counts the jobs submitted while building,
+    the Catalyst phases come from planning the frame's own
+    QueryExecution, and the stage and Python-worker totals cover every
+    job and SQL execution of the rep."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.session import (
+        clear_persisted_blocks,
+    )
+
+    # sweep blocks pinned by PRIOR queries/runs (iterative operators
+    # localCheckpoint by design) so every run measures this query on a
+    # clean block manager, not the session's accumulated history —
+    # measured 72 s vs 117 s on the sf10 pagerank cell with/without
+    clear_persisted_blocks(spark, blocking=True)
+    feeds.mark()
+    e0 = time.time()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    e1 = time.time()
+    df.write.mode("overwrite").format("noop").save()
+    t2 = time.perf_counter()
+
+    feeds.drain()
+    jobs = sum(e0 <= sub_ms / 1000.0 <= e1 for _job, sub_ms in feeds.new_jobs())
+    stages = feeds.stage_totals()
+    python = feeds.sql_totals(PYTHON_METRICS)
+    df._jdf.queryExecution().executedPlan()
+    phases = catalyst_phases(df._jdf)
+    feeds.mark()
+    return {
+        "wall_s": t2 - t0, "build_s": t1 - t0, "exec_s": t2 - t1,
+        "build_jobs": jobs,
+        **{f"{p}_ms": phases.get(p, 0.0) for p in ("analysis", "optimization", "planning")},
+        **dataclasses.asdict(stages),
+        "python_run_s": python.get("python.run_s", 0.0),
+    }
 
 
 def main() -> None:
@@ -119,6 +174,7 @@ def main() -> None:
     state.setdefault("runs", args.runs)
     state.setdefault("queries", {})
     state.setdefault("errors", {})
+    state.setdefault("layers", {})
 
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import REGISTRY
 
@@ -134,27 +190,21 @@ def main() -> None:
         spark = get_spark("adi-bench-scaled", shuffle_partitions=nsp)
         spark.sparkContext.setLogLevel("ERROR")
         spark.range(1_000_000).selectExpr("sum(id)").collect()
-        warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+        feeds = SparkFeeds(spark)
 
-        def run_one(name: str) -> float | None:
+        def run_one(name: str) -> tuple[float | None, dict | None]:
             fn, _sql = REGISTRY[name]
             try:
-                fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
+                fn(spark, WARM_DIR).write.mode("overwrite").format("noop").save()
             except Exception:
                 pass
             best = None
             for _ in range(reps_for(name, RUNS5_SPARK)):
-                # sweep blocks pinned by PRIOR queries/runs (iterative
-                # operators localCheckpoint by design) so every run
-                # measures this query on a clean block manager, not
-                # the session's accumulated history — measured 72 s vs
-                # 117 s on the sf10 pagerank cell with/without
-                clear_persisted_blocks(spark, blocking=True)
-                t0 = time.perf_counter()
-                fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best or 9e9, time.perf_counter() - t0)
+                rec = measure_rep(spark, feeds, fn, args.sf_dir)
+                if best is None or rec["wall_s"] < best["wall_s"]:
+                    best = rec
             clear_persisted_blocks(spark, blocking=True)
-            return best
+            return best["wall_s"], best
     else:
         import duckdb
 
@@ -166,22 +216,22 @@ def main() -> None:
             glob = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{glob}'")
 
-        def run_one(name: str) -> float | None:
+        def run_one(name: str) -> tuple[float | None, dict | None]:
             _fn, sql = REGISTRY[name]
             if sql is None:
-                return None
+                return None, None
             best = None
             for _ in range(reps_for(name, RUNS5)):
                 t0 = time.perf_counter()
                 con.sql(sql).fetchall()
                 best = min(best or 9e9, time.perf_counter() - t0)
-            return best
+            return best, None
 
     for name in todo:
         if name in state["queries"] or name in state["errors"]:
             continue
         try:
-            got = run_one(name)
+            got, layers = run_one(name)
         except Exception as e:
             state["errors"][name] = str(e)[:300]
             _flush(args.out, state)
@@ -190,6 +240,8 @@ def main() -> None:
         if got is not None:
             state["queries"][name] = round(got, 3)
             print(f"{name}: {got:.3f}s", flush=True)
+        if layers is not None:
+            state["layers"][name] = layers
         _flush(args.out, state)
 
     # r12 two-window protocol, codified (r12 verdict task #6): Spark
@@ -218,7 +270,7 @@ def main() -> None:
             # advisor fix): one transient rerun failure must not crash
             # the tool mid-artifact with outlier_rerun.done unset
             try:
-                got = run_one(name)
+                got, layers = run_one(name)
             except Exception as e:
                 state["errors"][f"rerun:{name}"] = str(e)[:300]
                 _flush(args.out, state)
@@ -229,6 +281,7 @@ def main() -> None:
                   f"second={second} prior={refq[name]:.3f}s", flush=True)
             if got is not None and got < state["queries"][name]:
                 state["queries"][name] = round(got, 3)
+                state["layers"][name] = layers
                 merged.append(name)
             _flush(args.out, state)
         state["second_window_min_cells"] = sorted(
