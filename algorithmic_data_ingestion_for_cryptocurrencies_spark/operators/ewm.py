@@ -45,7 +45,9 @@ from __future__ import annotations
 import math
 from collections.abc import Collection, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from .rolling import attach_layers
 
 _CHUNK = 16
 _CHAIN = 3  # carry terms; truncation error ~ rho^3 <= 1e-27
@@ -130,8 +132,9 @@ def _ewm_layers(
     ``(layers, stage_cols, tmp_cols)``. ``layers`` is the ordered list
     ``idx, block/pos, u, L, Le, out`` of ``{column: expression}``
     dicts — each layer reads only columns of earlier layers (or of the
-    input), so a consumer attaches them in order. Position columns
-    already in ``staged`` (left by a ``keep_stage`` pass) are reused,
+    input), so a consumer attaches them in order
+    (:func:`~.rolling.attach_layers`). Position columns already in
+    ``staged`` (left by a ``keep_stage`` pass or an earlier build) are reused,
     not re-rendered; the idx and block/pos layers are then empty.
     ``stage_cols`` are the ``__mew_*`` position columns, ``tmp_cols``
     every helper column the layers name (``out`` excluded)."""
@@ -255,7 +258,7 @@ def with_ewm_multi(
     follow-up, run without ``keep_stage``, drops them).
     """
     # The whole stage is rendered as Spark-SQL text and attached with a
-    # handful of batched ``withColumns(F.expr(...))`` calls: building
+    # handful of batched ``withColumns`` calls (one per layer): building
     # the same graph node-by-node through the Column API costs ~2000
     # py4j round trips (~1 s of driver latency per MACD, measured
     # round 3), while the parsed SQL produces the IDENTICAL Catalyst
@@ -264,12 +267,9 @@ def with_ewm_multi(
     layers, stage_cols, tmp = _ewm_layers(
         specs, keys=keys, order=order, k=k, staged=df.columns
     )
-    for layer in layers:
-        if layer:  # idx and block/pos are empty when every stage is reused
-            df = df.withColumns({n: F.expr(s) for n, s in layer.items()})
     if keep_stage:
         tmp = [c for c in tmp if c not in stage_cols]
-    return df.drop(*tmp)
+    return attach_layers(df, layers, tmp)
 
 
 def with_ewm_exact(

@@ -22,8 +22,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.time_norm import dt_from_ts
 from ..schemas import FEATURE_VERSION, MARKET_FEATURE_SCHEMA, coerce_schema
-from .ewm import with_ewm_multi
+from .ewm import _ewm_layers, block_size_for, with_ewm_multi
 from .rolling import (
+    attach_layers,
     cum_sum,
     lag_diff,
     log_return,
@@ -43,14 +44,31 @@ def _series(keys: Sequence[str], order) :
     return series_window(keys, order)
 
 
+# Each indicator the flagship stage uses is a per-layer builder
+# returning ``(layers, helper columns)`` for :func:`attach_layers`: its
+# ``with_*`` attaches it alone, and :func:`build_market_features`
+# attaches every builder's layer i in ONE projection, so the stage's
+# window expressions share Window operators instead of one per column.
+
+def _returns_layers(col: str, w, ret_out: str, logret_out: str):
+    return [{ret_out: pct_change(col, w, 1), logret_out: log_return(col, w, 1)}], []
+
+
 def with_returns(df: DataFrame, col: str, *, keys, order,
                  ret_out: str = "ret_1", logret_out: str = "logret_1") -> DataFrame:
     """1-period pct + log returns — ``market_factory.py:106-107``."""
-    w = _series(keys, order)
-    return (
-        df.withColumn(ret_out, pct_change(col, w, 1))
-          .withColumn(logret_out, log_return(col, w, 1))
-    )
+    return attach_layers(df, *_returns_layers(col, _series(keys, order), ret_out, logret_out))
+
+
+def _rsi_sma_layers(col: str, n: int, w, out: str):
+    delta = lag_diff(col, w, 1)
+    rs = rolling_mean("__up", w, n) / F.nullif(rolling_mean("__down", w, n), F.lit(0.0))
+    return [
+        # stage ±moves: window exprs can't nest inside the rolling mean
+        {"__up": F.when(delta > 0, delta).otherwise(F.lit(0.0)),
+         "__down": F.when(delta < 0, -delta).otherwise(F.lit(0.0))},
+        {out: F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs))},
+    ], ["__up", "__down"]
 
 
 def with_rsi_sma(df: DataFrame, col: str, n: int = 14, *, keys, order,
@@ -61,17 +79,7 @@ def with_rsi_sma(df: DataFrame, col: str, n: int = 14, *, keys, order,
     a NaN delta picks the else-branch; rs divides by NULLIF(down,0)
     exactly like the reference's ``replace(0, nan)``.
     """
-    w = _series(keys, order)
-    delta = lag_diff(col, w, 1)
-    # stage ±moves: window exprs can't nest inside the rolling mean
-    df = df.withColumn("__up", F.when(delta > 0, delta).otherwise(F.lit(0.0)))
-    df = df.withColumn("__down", F.when(delta < 0, -delta).otherwise(F.lit(0.0)))
-    roll_up = rolling_mean("__up", w, n)
-    roll_down = rolling_mean("__down", w, n)
-    rs = roll_up / F.nullif(roll_down, F.lit(0.0))
-    return df.withColumn(
-        out or f"rsi_{n}", F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs))
-    ).drop("__up", "__down")
+    return attach_layers(df, *_rsi_sma_layers(col, n, _series(keys, order), out or f"rsi_{n}"))
 
 
 def with_rsi_wilder(df: DataFrame, col: str, n: int = 14, *, keys, order,
@@ -107,6 +115,31 @@ def with_rsi_wilder(df: DataFrame, col: str, n: int = 14, *, keys, order,
     )
 
 
+def _macd_layers(col: str, *, keys, order, fast: int, slow: int, signal: int,
+                 macd_out: str, signal_out: str, hist_out: str | None,
+                 keep_emas: bool):
+    k = max(block_size_for(span=s) for s in (fast, slow, signal))
+    emas, stage, ema_tmp = _ewm_layers(
+        [
+            {"col": col, "out": "__ema_fast", "span": fast},
+            {"col": col, "out": "__ema_slow", "span": slow},
+        ],
+        keys=keys, order=order, k=k,
+    )
+    line = {macd_out: F.col("__ema_fast") - F.col("__ema_slow")}
+    if keep_emas:
+        line |= {f"ema_{fast}": F.col("__ema_fast"), f"ema_{slow}": F.col("__ema_slow")}
+    sig, _stage, sig_tmp = _ewm_layers(
+        [{"col": macd_out, "out": signal_out, "span": signal, "pos_col": col}],
+        keys=keys, order=order, k=k, staged=stage,
+    )
+    hist = {hist_out: F.col(macd_out) - F.col(signal_out)} if hist_out else {}
+    # the signal reuses the staged positions, so its idx and block/pos
+    # layers (sig[:2]) are empty
+    layers = [*emas, line, *sig[2:], hist]
+    return layers, list(dict.fromkeys([*ema_tmp, *sig_tmp, "__ema_fast", "__ema_slow"]))
+
+
 def with_macd(df: DataFrame, col: str, *, keys, order,
               fast: int = 12, slow: int = 26, signal: int = 9,
               macd_out: str = "macd", signal_out: str | None = None,
@@ -115,56 +148,18 @@ def with_macd(df: DataFrame, col: str, *, keys, order,
     """MACD line / signal / histogram — ``ta_indicators.py:79-89``.
 
     All THREE EWMs share one block structure: fast/slow run fused, and
-    the signal pass (which must follow the MACD projection) reuses the
+    the signal EWM (which must follow the MACD line) reuses their
     staged position columns via ``pos_col`` — valid because the MACD
     line's null pattern equals the close's (ema null iff close's
     position index < 0) — so every EWM window shares the same
     partition spec and Catalyst keeps the whole family in one sort
     chain.
     """
-    from .ewm import block_size_for
-
-    k = max(
-        block_size_for(span=fast),
-        block_size_for(span=slow),
-        block_size_for(span=signal),
-    )
-    df = with_ewm_multi(
-        df,
-        [
-            {"col": col, "out": "__ema_fast", "span": fast},
-            {"col": col, "out": "__ema_slow", "span": slow},
-        ],
-        keys=keys,
-        order=order,
-        k=k,
-        keep_stage=True,
-    )
-    df = df.withColumn(macd_out, F.col("__ema_fast") - F.col("__ema_slow"))
-    df = with_ewm_multi(
-        df,
-        [
-            {
-                "col": macd_out,
-                "out": signal_out or f"macd_signal_{signal}",
-                "span": signal,
-                "pos_col": col,
-            }
-        ],
-        keys=keys,
-        order=order,
-        k=k,
-    )
-    if hist_out:
-        df = df.withColumn(
-            hist_out, F.col(macd_out) - F.col(signal_out or f"macd_signal_{signal}")
-        )
-    if keep_emas:
-        df = df.withColumnRenamed("__ema_fast", f"ema_{fast}").withColumnRenamed(
-            "__ema_slow", f"ema_{slow}")
-    else:
-        df = df.drop("__ema_fast", "__ema_slow")
-    return df
+    return attach_layers(df, *_macd_layers(
+        col, keys=keys, order=order, fast=fast, slow=slow, signal=signal,
+        macd_out=macd_out, signal_out=signal_out or f"macd_signal_{signal}",
+        hist_out=hist_out, keep_emas=keep_emas,
+    ))
 
 
 def with_bollinger(df: DataFrame, col: str, n: int = 20, num_std: float = 2.0, *,
@@ -214,16 +209,21 @@ def with_atr(df: DataFrame, n: int = 14, *, keys, order,
     return df.drop("__tr")
 
 
+def _obv_layers(w, price_col: str, volume_col: str, out: str):
+    delta = lag_diff(price_col, w, 1)
+    direction = F.when(delta.isNull(), F.lit(0.0)).otherwise(F.signum(delta))
+    return [
+        {"__signed_vol": direction * F.coalesce(F.col(volume_col), F.lit(0.0))},
+        {out: cum_sum("__signed_vol", w)},
+    ], ["__signed_vol"]
+
+
 def with_obv(df: DataFrame, *, keys, order,
              price_col: str = "close", volume_col: str = "volume",
              out: str = "obv") -> DataFrame:
     """OBV = cumsum(sign(Δclose)·volume), first sign 0 —
     ``ta_indicators.py:147-154``, ``market_factory.py:64-67``."""
-    w = _series(keys, order)
-    delta = lag_diff(price_col, w, 1)
-    direction = F.when(delta.isNull(), F.lit(0.0)).otherwise(F.signum(delta))
-    df = df.withColumn("__signed_vol", direction * F.coalesce(F.col(volume_col), F.lit(0.0)))
-    return df.withColumn(out, cum_sum("__signed_vol", w)).drop("__signed_vol")
+    return attach_layers(df, *_obv_layers(_series(keys, order), price_col, volume_col, out))
 
 
 def with_cci(df: DataFrame, n: int = 20, constant: float = 0.015, *, keys, order,
@@ -343,12 +343,14 @@ def with_roc(df: DataFrame, col: str, n: int = 12, *, keys, order,
     )
 
 
+def _hl_spread(high: str = "high", low: str = "low", close: str = "close") -> Column:
+    return (F.col(high) - F.col(low)) / F.nullif(F.col(close), F.lit(0))
+
+
 def with_hl_spread(df: DataFrame, *, high: str = "high", low: str = "low",
                    close: str = "close", out: str = "hl_spread") -> DataFrame:
     """(high - low) / close with 0-close -> NULL — ``market_factory.py:119``."""
-    return df.withColumn(
-        out, (F.col(high) - F.col(low)) / F.nullif(F.col(close), F.lit(0))
-    )
+    return df.withColumn(out, _hl_spread(high, low, close))
 
 
 DEFAULT_SERIES_KEYS = ("symbol", "exchange", "timeframe")
@@ -373,8 +375,12 @@ def build_market_features(
     hl_spread, oi_obv, plus dt + feature_version, rows with all-NULL
     features dropped.
 
-    One logical plan: Catalyst fuses all rolling expressions sharing
-    the (keys, ts) window into a single sort+window stage.
+    One projection per dependency layer (:func:`attach_layers`): layer
+    1 holds every lag-based column and the EWM position index, layer 2
+    the trailing/cumulative aggregates and the EWM block/pos columns,
+    the rest are the MACD family's EWM and signal layers. Each layer's
+    (keys, order) windows evaluate in one Window operator, and all of
+    them share one sort.
     ``order_cols`` (default ``[ts_col]``) lets callers add tiebreak
     columns for deterministic window order when timestamps can tie.
     ``keep_cols`` are input columns carried through after the feature
@@ -383,28 +389,28 @@ def build_market_features(
     """
     order = list(order_cols) if order_cols is not None else [ts_col]
     w = series_window(keys, order)
-    # r15 (guide §2.4 "windows keyed the same way share one sort"):
-    # every stage here rides the (keys, order) window spec EXCEPT the
-    # MACD family, whose block-renormalized EWMs sort by (keys,
-    # __block, order). Running MACD in the middle sandwiched the block
-    # sort between two (keys, order) window groups, costing a THIRD
-    # full-frame sort to restore the order for rsi/obv (r14 plan:
-    # Sort(4)/Sort(26) on identical keys around the block Sort(13)).
-    # MACD runs LAST so the plain-order group sorts once: 3 sorts -> 2.
-    # Pure stage reordering — each column's expression graph (windows,
-    # frames, operands) is unchanged, so values are bit-identical.
-    df = with_returns(df, "close", keys=keys, order=order)
-    df = df.withColumn("rvol_5", rolling_std("logret_1", w, 5))
-    df = df.withColumn("rvol_20", rolling_std("logret_1", w, 20))
-    df = with_rsi_sma(df, "close", 14, keys=keys, order=order, out="rsi_14")
-    df = with_hl_spread(df)
-    df = with_obv(df, keys=keys, order=order, out="oi_obv")
-    df = with_macd(df, "close", keys=keys, order=order,
-                   fast=12, slow=26, signal=9,
-                   macd_out="macd", signal_out="macd_signal_9",
-                   hist_out=None, keep_emas=True)
-    df = df.withColumn("dt", dt_from_ts(ts_col))
-    df = df.withColumn("feature_version", F.lit(FEATURE_VERSION))
+    rets, _ = _returns_layers("close", w, "ret_1", "logret_1")
+    rsi, rsi_tmp = _rsi_sma_layers("close", 14, w, "rsi_14")
+    obv, obv_tmp = _obv_layers(w, "close", "volume", "oi_obv")
+    # every window here rides the (keys, order) spec except the MACD
+    # family's block-renormalized EWMs, which sort by (keys, __block,
+    # order); the plain-order layers all come first, so that sort runs
+    # once and the block sort once after it (2 sorts in total)
+    macd, macd_tmp = _macd_layers(
+        "close", keys=keys, order=order, fast=12, slow=26, signal=9,
+        macd_out="macd", signal_out="macd_signal_9", hist_out=None, keep_emas=True,
+    )
+    own = [
+        {"hl_spread": _hl_spread(), "dt": dt_from_ts(ts_col),
+         "feature_version": F.lit(FEATURE_VERSION)},
+        {"rvol_5": rolling_std("logret_1", w, 5), "rvol_20": rolling_std("logret_1", w, 20)},
+    ]
+    stacks = (rets, rsi, obv, own, macd)
+    layers = [
+        {n: e for stack in stacks if i < len(stack) for n, e in stack[i].items()}
+        for i in range(max(map(len, stacks)))
+    ]
+    df = attach_layers(df, layers, [*rsi_tmp, *obv_tmp, *macd_tmp])
     out = coerce_schema(df, MARKET_FEATURE_SCHEMA, keep_extra=True).select(
         *[f.name for f in MARKET_FEATURE_SCHEMA.fields], *keep_cols
     )

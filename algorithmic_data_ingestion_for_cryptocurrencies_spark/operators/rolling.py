@@ -42,6 +42,27 @@ def series_window(keys: Sequence[str], order: str | Sequence[str]) -> WindowSpec
     return Window.partitionBy(*[_c(k) for k in keys]).orderBy(*[_c(o) for o in order_cols])
 
 
+def attach_layers(
+    df: DataFrame,
+    layers: Sequence[dict[str, ColumnLike]],
+    drop: Sequence[str] = (),
+) -> DataFrame:
+    """Attach an ordered list of ``{column: expression}`` layers, each
+    reading only the input's columns or those of earlier layers, as one
+    ``withColumns`` projection per layer, then drop the helper columns
+    ``drop``. A string expression is Spark SQL text. Window expressions
+    of one layer that share a (partition, order) spec evaluate in one
+    Window operator, whatever their frames; one projection per layer
+    also keeps driver-side analysis to one pass per layer instead of
+    one per column."""
+    for layer in layers:
+        if layer:
+            df = df.withColumns(
+                {n: F.expr(e) if isinstance(e, str) else e for n, e in layer.items()}
+            )
+    return df.drop(*drop) if drop else df
+
+
 def cum(w: WindowSpec) -> WindowSpec:
     return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 

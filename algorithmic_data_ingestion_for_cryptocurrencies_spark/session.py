@@ -18,6 +18,18 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "adi-spark"
 
+#: ``spark.sql.codegen.cache.maxEntries`` (Spark default 100). Spark
+#: keys its generated-class cache on the source text and evicts the
+#: least recently used class. One scheduled ingest tick
+#: (``start_market_ingest`` into a FeatureStore) with its 8 store reads,
+#: and one pass of the perfbench corpus_curate queries, each cycle
+#: through more than 100 classes, so at the default every warm pass
+#: recompiled 68-103 and ~104 classes. At 1000 a warm corpus pass
+#: compiles none and an ingest pass 15-18, all in store reads, whose
+#: epoch literals are inlined into the generated code (measured on a
+#: 4-core host with 2 task threads).
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -163,6 +175,7 @@ def get_spark(
         # files: keep scan partitions big enough to amortize task setup
         .config("spark.sql.files.maxPartitionBytes", "256m")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local mode: the driver JVM IS the executor — 32 concurrent
         # tasks need real heap once localCheckpoint pins blocks
         # (unevictable) next to hash-agg execution memory, but the

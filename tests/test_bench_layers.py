@@ -1,5 +1,6 @@
 """The per-rep layer record of ``tools/bench_scaled.py``: build and
-exec account for the rep's wall time, and every field is present."""
+exec account for the rep's wall time, every field is present, and a
+repeated rep compiles no generated classes."""
 
 from __future__ import annotations
 
@@ -22,7 +23,7 @@ FIELDS = {
     "analysis_ms", "optimization_ms", "planning_ms",
     "stages", "tasks", "task_s", "gc_s",
     "shuffle_write_bytes", "spill_bytes", "peak_mem_bytes",
-    "python_run_s",
+    "python_run_s", "codegen_compiles", "codegen_ms",
 }
 
 
@@ -40,3 +41,7 @@ def test_layer_record_accounts_for_the_rep(spark, name):
     else:
         # the md5 signature run-min is the Arrow/Python worker stage
         assert rec["python_run_s"] > 0
+    assert rec["codegen_compiles"] >= 0 and rec["codegen_ms"] >= 0
+    # a second rep finds every generated class in the codegen cache
+    again = bench_scaled.measure_rep(spark, feeds, REGISTRY[name][0], bench_scaled.WARM_DIR)
+    assert again["codegen_compiles"] == 0 and again["codegen_ms"] == 0

@@ -15,7 +15,8 @@ sf_dir)``) and exec (the noop write), and the min rep's layer record
 (:func:`measure_rep`) lands under ``layers``: build seconds and the
 jobs launched while building, Catalyst phase times, per-stage totals
 and Python worker time, read from Spark's status stores with the UI
-off (``perfbench/spark_feeds.py``) after the timed window closes.
+off (``perfbench/spark_feeds.py``) after the timed window closes, and
+the generated classes the rep compiled (Spark's codegen metrics).
 """
 
 from __future__ import annotations
@@ -81,6 +82,17 @@ def _flush(path: str, data: dict) -> None:
     os.replace(tmp, path)
 
 
+def codegen_totals(spark) -> tuple[int, float]:
+    """Generated classes this JVM has compiled so far (``CodegenMetrics``
+    compilation count) and their total compile time in ms (the exact
+    ``CodeGenerator.compileTime`` sum; the metric's histogram only
+    samples)."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiles.getCount(), compile_ns / 1e6
+
+
 def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
     """One timed rep of a registry query ``fn`` on the noop sink, on a
     clean block manager, and its layer record. ``wall_s`` is timed as
@@ -89,7 +101,9 @@ def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
     window: ``build_jobs`` counts the jobs submitted while building,
     the Catalyst phases come from planning the frame's own
     QueryExecution, and the stage and Python-worker totals cover every
-    job and SQL execution of the rep."""
+    job and SQL execution of the rep. ``codegen_compiles`` and
+    ``codegen_ms`` count the generated classes compiled during the rep
+    (0 once Spark's codegen cache holds all of the query's classes)."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.session import (
         clear_persisted_blocks,
     )
@@ -100,6 +114,7 @@ def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
     # measured 72 s vs 117 s on the sf10 pagerank cell with/without
     clear_persisted_blocks(spark, blocking=True)
     feeds.mark()
+    c0, cms0 = codegen_totals(spark)
     e0 = time.time()
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
@@ -107,6 +122,7 @@ def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
     e1 = time.time()
     df.write.mode("overwrite").format("noop").save()
     t2 = time.perf_counter()
+    c1, cms1 = codegen_totals(spark)
 
     feeds.drain()
     jobs = sum(e0 <= sub_ms / 1000.0 <= e1 for _job, sub_ms in feeds.new_jobs())
@@ -121,6 +137,7 @@ def measure_rep(spark, feeds: SparkFeeds, fn, sf_dir: str) -> dict:
         **{f"{p}_ms": phases.get(p, 0.0) for p in ("analysis", "optimization", "planning")},
         **dataclasses.asdict(stages),
         "python_run_s": python.get("python.run_s", 0.0),
+        "codegen_compiles": c1 - c0, "codegen_ms": cms1 - cms0,
     }
 
 
