@@ -134,8 +134,9 @@ def _ewm_layers(
     dicts — each layer reads only columns of earlier layers (or of the
     input), so a consumer attaches them in order
     (:func:`~.rolling.attach_layers`). Position columns already in
-    ``staged`` (left by a ``keep_stage`` pass or an earlier build) are reused,
-    not re-rendered; the idx and block/pos layers are then empty.
+    ``staged`` (the ``stage_cols`` of an earlier build whose layers
+    come first) are reused, not re-rendered; the idx and block/pos
+    layers are then empty.
     ``stage_cols`` are the ``__mew_*`` position columns, ``tmp_cols``
     every helper column the layers name (``out`` excluded)."""
     parsed = []
@@ -160,8 +161,8 @@ def _ewm_layers(
     )
 
     # stage shared per-position-column block columns once (reusing any
-    # left by a previous keep_stage pass — same k is the caller's
-    # responsibility and is what makes the window specs line up)
+    # in ``staged`` — same k is the caller's responsibility and is what
+    # makes the window specs line up)
     cols = list(dict.fromkeys(p for _c, _o, _a, _r, p in parsed))
     stage: dict[str, tuple[str, str, str]] = {}
     tmp: list[str] = []
@@ -240,7 +241,6 @@ def with_ewm_multi(
     keys: Sequence[str],
     order: str | Sequence[str],
     k: int | None = None,
-    keep_stage: bool = False,
 ) -> DataFrame:
     """Compute several EWMs in one fused pass: all specs share the
     block size ``k`` (default: max of the per-spec sizes) so their
@@ -252,10 +252,8 @@ def with_ewm_multi(
     ``pos_col`` — derive positions from that column's null pattern
     instead of the spec's own (valid whenever the two patterns are
     provably identical, e.g. a MACD line vs its source close: it lets
-    a dependent second pass reuse the staged block columns and hence
-    the same window partitioning). ``keep_stage=True`` leaves the
-    staged position columns in place for such a follow-up pass (the
-    follow-up, run without ``keep_stage``, drops them).
+    the signal EWM reuse the fast/slow EWMs' position columns and hence
+    their window partitioning, see ``indicators._macd_layers``).
     """
     # The whole stage is rendered as Spark-SQL text and attached with a
     # handful of batched ``withColumns`` calls (one per layer): building
@@ -264,11 +262,7 @@ def with_ewm_multi(
     # round 3), while the parsed SQL produces the IDENTICAL Catalyst
     # expression tree — same multiply/divide/sum graph on the same
     # embedded constants, so oracle bit parity is untouched.
-    layers, stage_cols, tmp = _ewm_layers(
-        specs, keys=keys, order=order, k=k, staged=df.columns
-    )
-    if keep_stage:
-        tmp = [c for c in tmp if c not in stage_cols]
+    layers, _stage, tmp = _ewm_layers(specs, keys=keys, order=order, k=k)
     return attach_layers(df, layers, tmp)
 
 

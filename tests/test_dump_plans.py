@@ -45,6 +45,15 @@ def test_only_owned_blocks_are_replaced():
 def test_missing_owned_section_fails_loudly():
     with pytest.raises(SystemExit, match="gone"):
         dump_plans.replace_plan_blocks(DOC, {"gone": "plan"})
+    # a plan block that is never closed names its section
+    with pytest.raises(SystemExit, match="'hand'"):
+        dump_plans.replace_plan_blocks(DOC.replace("by hand\n```", "by hand"), {"hand": "plan"})
+
+
+def test_tagged_commentary_block_is_not_the_plan():
+    doc = DOC.replace("Why it scales.\n", "Why it scales.\n\n```text\nsketch\n```\n")
+    out = dump_plans.replace_plan_blocks(doc, {"owned": "new plan"})
+    assert out == doc.replace("old plan\n+- Scan (1)", "new plan")
 
 
 def test_plans_md_has_a_block_for_every_owned_section():

@@ -39,6 +39,11 @@ def test_lake_read_pushes_partition_and_data_filters(spark, lake_path):
 
 
 def test_flagship_plan_has_no_cartesian_or_global_window(spark, ohlcv_sdf):
+    """Also: build_market_features attaches one projection per
+    dependency layer, so each layer's (keys, ts) windows share one
+    Window node: at most 8 Window nodes (12 when each indicator added
+    its own columns) over the 2 sorts of the plain and the EWM-block
+    orders."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.indicators import (
         build_market_features,
     )
@@ -50,18 +55,7 @@ def test_flagship_plan_has_no_cartesian_or_global_window(spark, ohlcv_sdf):
     for line in plan.splitlines():
         if "windowspecdefinition(" in line.lower():
             assert "symbol" in line, f"unpartitioned window: {line}"
-
-
-def test_market_features_plan_one_window_per_layer(spark, ohlcv_sdf):
-    """build_market_features attaches one projection per dependency
-    layer, so each layer's (keys, ts) windows share one Window node: at
-    most 8 Window nodes (12 when each indicator added its own columns)
-    over the 2 sorts of the plain and the EWM-block orders."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.indicators import (
-        build_market_features,
-    )
-
-    tree = explain_str(build_market_features(ohlcv_sdf), "formatted").split("\n\n")[0]
+    tree = plan.split("\n\n")[0]
     ops = [ln.lstrip("+- :").split(" (")[0] for ln in tree.splitlines()]
     assert ops.count("Window") <= 8, tree
     assert ops.count("Sort") == 2, tree

@@ -41,23 +41,33 @@ PLANS_MD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "PLANS
 
 
 def replace_plan_blocks(text: str, plans: dict[str, str]) -> str:
-    """``text`` with the first fenced block under each ``## <name>``
-    heading replaced by ``plans[name]``; every other line is kept."""
+    """``text`` with the first bare-fenced (```` ``` ````) block under
+    each ``## <name>`` heading replaced by ``plans[name]``; every other
+    line is kept. Blocks with a language tag are commentary, never the
+    plan; a plan block left open fails loudly."""
     lines = text.split("\n")
     out: list[str] = []
     todo = dict(plans)
     section = None
+    in_fence = False
     i = 0
     while i < len(lines):
         line = lines[i]
         out.append(line)
         i += 1
-        if line.startswith("## "):
-            section = line[3:]
-        elif line == "```" and section in todo:
-            while lines[i] != "```":  # skip the old block
+        if line.startswith("```"):
+            if not in_fence and line == "```" and section in todo:
+                # skip the old block up to its closing fence
+                while i < len(lines) and lines[i] != "```" and not lines[i].startswith("## "):
+                    i += 1
+                if i == len(lines) or lines[i] != "```":
+                    raise SystemExit(f"PLANS.md plan block of {section!r} is never closed")
+                out += [todo.pop(section), lines[i]]
                 i += 1
-            out.append(todo.pop(section))
+            else:
+                in_fence = not in_fence
+        elif line.startswith("## ") and not in_fence:
+            section = line[3:]
     if todo:
         raise SystemExit(f"PLANS.md has no plan block for {sorted(todo)}")
     return "\n".join(out)
