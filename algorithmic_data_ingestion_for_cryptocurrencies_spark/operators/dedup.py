@@ -15,7 +15,8 @@ Five tiers, each fully distributed:
 - :func:`simhash_near_pairs` — 63-bit SimHash with per-bit majority
   vote over per-token md5 hashes; near-dups = same prefix block and
   small Hamming distance.
-- :func:`embedding_near_pairs` (in :mod:`.similarity`) — cosine tier.
+- :func:`embedding_near_pairs` (in :mod:`.similarity`) — cosine tier:
+  exact pairs from a NumPy kernel over a broadcast corpus.
 
 Shingle keys and content keys use ``xxhash64`` (JVM built-in,
 deterministic across the cluster). MinHash has two hash families

@@ -46,18 +46,12 @@ def _series(keys: Sequence[str], order) :
 
 # Each indicator the flagship stage uses is a per-layer builder
 # returning ``(layers, helper columns)`` for :func:`attach_layers`: its
-# ``with_*`` attaches it alone, and :func:`build_market_features`
+# ``with_*``, where one exists, attaches it alone, and :func:`build_market_features`
 # attaches every builder's layer i in ONE projection, so the stage's
 # window expressions share Window operators instead of one per column.
 
 def _returns_layers(col: str, w, ret_out: str, logret_out: str):
     return [{ret_out: pct_change(col, w, 1), logret_out: log_return(col, w, 1)}], []
-
-
-def with_returns(df: DataFrame, col: str, *, keys, order,
-                 ret_out: str = "ret_1", logret_out: str = "logret_1") -> DataFrame:
-    """1-period pct + log returns — ``market_factory.py:106-107``."""
-    return attach_layers(df, *_returns_layers(col, _series(keys, order), ret_out, logret_out))
 
 
 def _rsi_sma_layers(col: str, n: int, w, out: str):
@@ -345,12 +339,6 @@ def with_roc(df: DataFrame, col: str, n: int = 12, *, keys, order,
 
 def _hl_spread(high: str = "high", low: str = "low", close: str = "close") -> Column:
     return (F.col(high) - F.col(low)) / F.nullif(F.col(close), F.lit(0))
-
-
-def with_hl_spread(df: DataFrame, *, high: str = "high", low: str = "low",
-                   close: str = "close", out: str = "hl_spread") -> DataFrame:
-    """(high - low) / close with 0-close -> NULL — ``market_factory.py:119``."""
-    return df.withColumn(out, _hl_spread(high, low, close))
 
 
 DEFAULT_SERIES_KEYS = ("symbol", "exchange", "timeframe")

@@ -3,8 +3,11 @@ north-star operator family (BASELINE.json): brute-force cosine top-k
 as the exact baseline, plus a random-hyperplane-LSH bucketed variant
 as the scale path.
 
-All vector math uses higher-order functions (``zip_with`` +
-``aggregate``) — JVM-side, codegen'd, no Python per row.
+Per-query scoring (top-k, kNN, IVF, k-means, LSH hyperplanes) uses
+the higher-order functions :func:`dot` and :func:`norm` (``zip_with``
++ ``aggregate``, JVM-side). The near-pair tiers score with one NumPy
+kernel (:func:`_near_pairs`) that vectorizes across pairs and adds
+in the same order, so every cosine is bit-identical to :func:`cosine`.
 """
 
 from __future__ import annotations
@@ -225,22 +228,107 @@ def ann_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-#: Byte budget for *forcing* a broadcast build side in the near-pairs
-#: tiers (r15, advisor fix): a few hundred MB broadcasts are routinely
-#: fine (guide §3.1) while multi-GB ones risk driver/executor OOM and
-#: the 8 GB broadcast-relation cap — past this budget the planner
-#: keeps join-strategy choice (shuffled join, AQE-splittable).
+#: Byte budget for broadcasting a near-pairs corpus (r15): a few
+#: hundred MB broadcasts are routinely fine (guide §3.1) while multi-GB
+#: ones risk driver/executor OOM and the 8 GB broadcast-relation cap, so
+#: past it the exact tier fails over to the LSH join.
 BROADCAST_PIN_MAX_BYTES = 256 << 20
 
 
-def _broadcast_fits(rows: int, dim: int | None) -> bool:
-    """Estimated broadcast size of ``rows`` vector rows under the pin
-    budget. Width = 8 bytes per vector element + ~64 bytes of row
-    overhead (id, staged norm, array header). With ``dim`` unknown the
-    width cannot be bounded, so the pin is only kept for row counts
-    where even a 4k-wide embedding stays in budget."""
-    width = (8 * dim + 64) if dim is not None else (8 * 4096 + 64)
-    return rows * width <= BROADCAST_PIN_MAX_BYTES
+def _broadcast_fits(rows: int, dim: int) -> bool:
+    """Estimated broadcast size of ``rows`` vectors of ``dim`` elements
+    under :data:`BROADCAST_PIN_MAX_BYTES`: 8 bytes per element plus
+    ~64 bytes of row overhead (id, norm, array header)."""
+    return rows * (8 * dim + 64) <= BROADCAST_PIN_MAX_BYTES
+
+
+#: Pair cells (rows x columns) one tile of :func:`_near_pairs` scores.
+#: A tile holds ~24 bytes a cell (float64 sum, element-type product,
+#: float64 norm product, masks): ~1.5 MB, so its sum stays in cache
+#: across the dimension loop (2^21-cell tiles ran 2.3x slower on 2,000
+#: 64-d vectors) and a Python worker's memory is bounded at any size.
+_TILE_CELLS = 1 << 16
+
+#: Pair cells one exact-tier block (one Python task) scores: ~0.3 s of
+#: kernel time at 64-d, about what a Python worker spends setting up a
+#: task (~0.25 s CPU measured with 2 task threads), so a small corpus
+#: runs as one task instead of paying that once per core.
+_BLOCK_CELLS = 1 << 21
+
+
+def _pairs_schema(df: DataFrame, id_col: str) -> str:
+    t = df.schema[id_col].dataType.simpleString()
+    return f"id_a {t}, id_b {t}, cosine double"
+
+
+def _corpus(ids, vecs) -> tuple:
+    """``(ids, vectors transposed, norms, Arrow id type)`` of an Arrow
+    id column and vector column, sorted by id, for :func:`_near_pairs`.
+    Rows that score no pair are dropped: a NULL id, a NULL vector, or
+    a NULL element (its products, and so :func:`cosine`, are NULL).
+    Norms add like :func:`norm`: each square in the element type, cast
+    to double, summed left to right. Mixed vector lengths raise."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    ids, vecs = ids.combine_chunks(), vecs.combine_chunks()
+    keep = pc.and_(ids.is_valid(), vecs.is_valid())
+    ids, vecs = ids.filter(keep), vecs.filter(keep)
+    lens = pc.min_max(pc.list_value_length(vecs))
+    lo, dim = lens["min"].as_py() or 0, lens["max"].as_py() or 0
+    if lo != dim:
+        raise ValueError(f"vectors of mixed lengths {lo}..{dim}: cosine needs one length")
+    flat = vecs.flatten()
+    whole = ~flat.is_null().to_numpy(zero_copy_only=False).reshape(len(vecs), dim).any(1)
+    mat = flat.fill_null(0).to_numpy(zero_copy_only=False).reshape(len(vecs), dim)
+    id_np = ids.to_numpy(zero_copy_only=False)[whole]
+    order = np.argsort(id_np, kind="stable")
+    vt = np.ascontiguousarray(mat[whole][order].T)
+    sq = np.zeros(len(order))
+    for x in vt:
+        sq += x * x
+    return id_np[order], vt, np.sqrt(sq), ids.type
+
+
+def _near_pairs(corpus: tuple, lo: int, hi: int, threshold: float):
+    """``(id_a, id_b, cosine)`` Arrow batches, one per tile, of
+    :func:`_corpus` rows ``lo..hi`` against every later row: the pairs
+    with ``id_a < id_b`` whose cosine is ``>= threshold`` or NaN (Spark
+    orders NaN above every number). The kernel runs :func:`cosine`'s operations in its
+    order — each product in the element type, cast to double, summed
+    left to right over the dimension, divided by the norm product, no
+    pair where that product is 0 — so every score is bit-identical to
+    the HOF form and to its DuckDB twin (``_cos_sql``). Vectorized
+    across pairs in tiles of at most :data:`_TILE_CELLS` cells."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, vt, norms, id_type = corpus
+    n = len(ids)
+    rows = max(1, min(hi - lo, _TILE_CELLS // max(1, n - lo)))
+    cols = max(1, _TILE_CELLS // rows)
+    with np.errstate(all="ignore"):
+        for r0 in range(lo, hi, rows):
+            r1 = min(r0 + rows, hi)
+            for c0 in range(r0, n, cols):
+                c1 = min(c0 + cols, n)
+                dot = np.zeros((r1 - r0, c1 - c0))
+                prod = np.empty(dot.shape, vt.dtype)
+                for x in vt:
+                    np.multiply(x[r0:r1, None], x[None, c0:c1], out=prod)
+                    dot += prod
+                den = np.multiply.outer(norms[r0:r1], norms[c0:c1])
+                cos = np.divide(dot, den, out=dot)
+                hit = (
+                    (ids[r0:r1, None] < ids[None, c0:c1]) & (den != 0)
+                    & ((cos >= threshold) | np.isnan(cos))
+                )
+                i, j = np.nonzero(hit)
+                yield pa.record_batch(
+                    [pa.array(ids[r0 + i], id_type), pa.array(ids[c0 + j], id_type),
+                     pa.array(cos[i, j])],
+                    names=["id_a", "id_b", "cosine"],
+                )
 
 
 def embedding_near_pairs(
@@ -249,83 +337,82 @@ def embedding_near_pairs(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_lsh: bool = False,
-    dim: int | None = None,
     max_exact_vectors: int = 100_000,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t).
-    Exact all-pairs by default (fine for bounded corpora / within
-    groups); ``use_lsh`` switches candidate generation to bucketed.
-    Norms are staged once per vector, not once per pair.
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t),
+    exact: scores are bit-identical to :func:`cosine`.
 
-    The exact tier is CAP-GUARDED (r3 verdict): all-pairs is O(n²),
-    and an unbounded corpus must never get the quadratic plan
-    silently. Above ``max_exact_vectors`` the call counts-and-routes
-    to the bucketed LSH tier (needs ``dim``; without it the call
-    raises rather than going quadratic) — the same fail-over contract
-    as :func:`embedding_near_pairs_arrow`."""
-    if not use_lsh:
-        n = df.count()
-        if n > max_exact_vectors:
-            if dim is None:
-                raise ValueError(
-                    f"corpus has {n} vectors > max_exact_vectors="
-                    f"{max_exact_vectors}: refusing the O(n^2) all-pairs "
-                    "plan; pass dim= to fail over to the LSH tier, raise "
-                    "the cap explicitly, or call with use_lsh=True"
-                )
-            use_lsh = True
-    a_src = df
-    if not use_lsh:
-        # r14 (guide §2.5/§1.2): the exact tier's parallelism is the
-        # STREAM side's partition count of the nested-loop join — a
-        # cap-bounded corpus is typically one parquet file, i.e. ONE
-        # task evaluating all O(n²) pair scores while the rest of the
-        # cluster idles (measured 12.5 s -> 1.0 s at sf0.1 on
-        # local[32]). Round-robin repartition the probe side to full
-        # parallelism; scores are per-pair expressions, so row
-        # placement cannot change any value.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        a_src = df.repartition(par)
-    a = a_src.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col)).alias("__na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col)).alias("__nb"),
-    )
-    if use_lsh:
-        if dim is None:
-            raise ValueError("dim required for LSH candidate generation")
-        al = with_lsh_bucket(a, vec_col="__va", dim=dim)
-        bl = with_lsh_bucket(b, vec_col="__vb", dim=dim)
-        pairs = al.join(bl, "lsh_bucket").filter(F.col("id_a") < F.col("id_b"))
-    else:
-        # pin the UNREPARTITIONED side as the broadcast build so the
-        # repartitioned side stays the probe (same device as the
-        # capped tier). r15 (advisor): the pin is BYTE-guarded, not
-        # just row-guarded — n rows of a dim-wide vector frame can be
-        # multiple GB when a caller raises max_exact_vectors for a
-        # wide corpus, and a forced broadcast that big risks driver/
-        # executor OOM where the planner could pick a shuffled join.
-        # Past the budget the planner keeps strategy choice.
-        if _broadcast_fits(n, dim):
-            b = F.broadcast(b)
-        pairs = a.crossJoin(b).filter(
-            F.col("id_a") < F.col("id_b")
+    NULL vectors are dropped, then one aggregate job measures the
+    corpus: its count and its min and max vector length. Mixed lengths
+    raise. The corpus is collected to the driver once (Arrow) and
+    broadcast, and ``spark.range(blocks)`` + ``mapInArrow`` scores each
+    block of rows against every later row with the NumPy kernel
+    :func:`_near_pairs`. Blocks hold equal shares of the pair triangle,
+    at most :data:`_BLOCK_CELLS` cells each, spread over at most one
+    partition per core.
+
+    The tier is CAP-GUARDED (r3 verdict): above ``max_exact_vectors``
+    vectors, or past :data:`BROADCAST_PIN_MAX_BYTES` at the measured
+    length, candidates come from one equi-join on a 16-plane LSH
+    bucket instead, scored by :func:`cosine` — never an unbounded
+    collect or the O(n²) plan."""
+    import numpy as np
+
+    df = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
+    n, lo, dim = df.agg(
+        F.count(F.lit(1)), F.min(F.size(vec_col)), F.max(F.size(vec_col))
+    ).first()
+    if lo != dim:
+        raise ValueError(
+            f"vectors of mixed lengths {lo}..{dim}: cosine needs one length"
         )
-    return (
-        pairs.withColumn(
-            "cosine",
-            dot("__va", "__vb")
-            / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
+    spark = df.sparkSession
+    schema = _pairs_schema(df, id_col)
+    if n < 2:
+        return spark.createDataFrame([], schema)
+    if n > max_exact_vectors or not _broadcast_fits(n, dim):
+        a, b = (
+            with_lsh_bucket(
+                df.select(
+                    F.col(id_col).alias(f"id_{s}"),
+                    F.col(vec_col).alias(f"__v{s}"),
+                    norm(F.col(vec_col)).alias(f"__n{s}"),
+                ),
+                vec_col=f"__v{s}", dim=dim,
+            )
+            for s in "ab"
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+        return (
+            a.join(b, "lsh_bucket")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .withColumn(
+                "cosine",
+                dot("__va", "__vb")
+                / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
+            )
+            .filter(F.col("cosine") >= threshold)
+            .select("id_a", "id_b", "cosine")
+        )
+    corpus = _corpus(*df.toArrow().columns)
+    m = len(corpus[0])
+    # row i scores m - i cells; cut the triangle into equal shares
+    cells, total = np.cumsum(np.arange(m, 0, -1)), m * (m + 1) // 2
+    want = max(1, -(-total // _BLOCK_CELLS))
+    cuts = np.searchsorted(cells, total * np.arange(1, want) / want) + 1
+    starts = sorted({0, m, *np.minimum(cuts, m).tolist()})
+    bc = spark.sparkContext.broadcast(corpus)
+    thr = float(threshold)
+
+    def score(batches):
+        for batch in batches:
+            for blk in batch.column(0).to_pylist():
+                yield from _near_pairs(bc.value, starts[blk], starts[blk + 1], thr)
+
+    blocks = len(starts) - 1
+    par = spark.sparkContext.defaultParallelism
+    return spark.range(
+        blocks, numPartitions=max(1, min(blocks, par))
+    ).mapInArrow(score, schema)
 
 
 def embedding_near_pairs_capped(
@@ -344,7 +431,9 @@ def embedding_near_pairs_capped(
     emitted twice), deterministically cap each bucket at ``cap``
     vectors (md5-ordered, :func:`..sampling.hash_top_n_per_group` —
     a uniform 'random' survivor set that is reproducible across
-    engines), then exact within-bucket pairs.
+    engines), then exact within-bucket pairs: one grouped Arrow map
+    per bucket runs the :func:`_near_pairs` kernel, so scores are
+    bit-identical to :func:`embedding_near_pairs`.
 
     This is the scale grade for the near-pairs family: total scored
     pairs are bounded by ``2^n_planes * cap^2 / 2`` REGARDLESS of
@@ -356,61 +445,32 @@ def embedding_near_pairs_capped(
     Fully oracle-expressible (deterministic hyperplanes + md5 cap +
     sequential-accumulation cosine), unlike the multi-table ANN path.
     """
-    b = with_lsh_bucket(
-        df, vec_col=vec_col, dim=dim, n_planes=n_planes, seed=seed
-    )
     from .sampling import hash_top_n_per_group
 
     capped = hash_top_n_per_group(
-        b, id_col=id_col, group_cols=["lsh_bucket"], n=cap
+        with_lsh_bucket(df, vec_col=vec_col, dim=dim, n_planes=n_planes, seed=seed),
+        id_col=id_col, group_cols=["lsh_bucket"], n=cap,
     )
-    # r14 optimization (guide §1.2 per-task work): stage each vector's
-    # L2 norm ONCE below the self-join instead of recomputing both
-    # norms inside the per-pair score — the HOF ``aggregate`` is
-    # interpreted per element, so the per-candidate join work drops
-    # from (dot + 2 norms) = 3·dim lambda steps to dot = 1·dim
-    # (measured 4.0 s -> 1.6 s at sf0.1).  ``dot/nullif(na*nb)`` is the
-    # exact expression :func:`cosine` expands to, evaluated on the
-    # same staged operands, so scores are bit-identical.  The capped
-    # frame is bounded (2^n_planes · cap rows) but its distinct-bucket
-    # count caps join parallelism at 2^n_planes tasks; a round-robin
-    # repartition of the probe side restores full-core parallelism at
-    # a bounded-size shuffle cost.
-    par = capped.sparkSession.sparkContext.defaultParallelism
-    a = capped.repartition(par).select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col)).alias("__na"),
-        "lsh_bucket",
-    )
-    c = capped.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col)).alias("__nb"),
-        "lsh_bucket",
-    )
-    if _broadcast_fits((1 << n_planes) * cap, dim):
-        # pin the UNREPARTITIONED side as the broadcast build so the
-        # repartitioned side stays the probe (the planner otherwise
-        # broadcasts whichever side it fancies and the parallelism
-        # repartition lands on the wrong one). Safe by the same budget
-        # arithmetic that bounds the tier's work: the capped frame
-        # never exceeds 2^n_planes * cap rows. r15 (advisor): the
-        # guard is BYTE-sized — rows x vector width, dim is a required
-        # param here — not row-counted: 800k rows of dim=768 vectors
-        # are multiple GB, past which the planner keeps strategy
-        # choice (shuffle join, AQE-splittable).
-        c = F.broadcast(c)
-    return (
-        a.join(c, "lsh_bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            dot("__va", "__vb")
-            / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0)),
+    thr = float(threshold)
+
+    def score(t):
+        import pyarrow as pa
+
+        corpus = _corpus(t.column(id_col), t.column(vec_col))
+        id_type = corpus[3]
+        return pa.Table.from_batches(
+            list(_near_pairs(corpus, 0, len(corpus[0]), thr)),
+            schema=pa.schema(
+                [("id_a", id_type), ("id_b", id_type), ("cosine", pa.float64())]
+            ),
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+
+    # the cap's window exchange already clusters rows by bucket, so the
+    # grouped map plans no second exchange
+    return (
+        capped.select(id_col, vec_col, "lsh_bucket")
+        .groupBy("lsh_bucket")
+        .applyInArrow(score, _pairs_schema(df, id_col))
     )
 
 
@@ -753,86 +813,6 @@ def _ivf_rerank(
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def embedding_near_pairs_arrow(
-    df: DataFrame,
-    threshold: float = 0.95,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_broadcast_vectors: int = 1_000_000,
-    dim: int | None = None,
-) -> DataFrame:
-    """Dense-block near-pair tier: the corpus (normalized, float32) is
-    broadcast to every executor and each Arrow batch of rows computes
-    a blocked matrix product against it (NumPy BLAS) — roughly an
-    order of magnitude faster than the per-pair expression tier for
-    bounded corpora. Scores differ from the expression tier only by
-    float-summation order, so pairs within ~1e-6 of the threshold may
-    differ — use the exact tier when the boundary matters.
-
-    The driver-side collect is CAP-GUARDED: a corpus larger than
-    ``max_broadcast_vectors`` (~1 GB at 256-d float32 for the default
-    1e6) fails over to the bucketed-LSH candidate tier
-    (:func:`embedding_near_pairs` with ``use_lsh=True``, which needs
-    ``dim``; without ``dim`` the call raises instead of silently
-    collecting an unbounded corpus onto the driver).
-
-    NULL vectors score no pair, as in the exact tier: one filter drops
-    them before the count, the collect and the per-batch product."""
-    import numpy as np
-
-    df = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    n = df.count()
-    if n > max_broadcast_vectors:
-        if dim is None:
-            raise ValueError(
-                f"corpus has {n} vectors > max_broadcast_vectors="
-                f"{max_broadcast_vectors}; pass dim= to fail over to the "
-                "LSH candidate tier, or use embedding_near_pairs/IVF directly"
-            )
-        return embedding_near_pairs(
-            df, threshold, id_col=id_col, vec_col=vec_col, use_lsh=True, dim=dim
-        )
-    spark = df.sparkSession
-    if n == 0:
-        return spark.createDataFrame([], "id_a long, id_b long, cosine double")
-    rows = df.collect()
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.array([r[vec_col] for r in rows], dtype=np.float32)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    unit = mat / norms
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_unit = spark.sparkContext.broadcast(unit)
-    thr = float(threshold)
-
-    def block(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            a = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-            an = np.linalg.norm(a, axis=1, keepdims=True)
-            an[an == 0] = 1.0
-            sims = (a / an) @ b_unit.value.T
-            aid = pdf[id_col].to_numpy()
-            # r14 (guide §4.2 — vectorize inside the UDF): hit
-            # extraction was a per-row/per-hit Python double loop;
-            # one np.where over the block + a vectorized id mask
-            # selects the same cells (scores untouched)
-            ii, jj = np.where(sims >= thr)
-            keep = aid[ii] < b_ids.value[jj]
-            ii, jj = ii[keep], jj[keep]
-            yield pd.DataFrame(
-                {
-                    "id_a": aid[ii],
-                    "id_b": b_ids.value[jj],
-                    "cosine": sims[ii, jj].astype(np.float64),
-                }
-            )
-
-    return df.mapInPandas(block, schema="id_a long, id_b long, cosine double")
 
 
 def build_ivf_index(

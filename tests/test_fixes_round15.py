@@ -36,9 +36,9 @@ def test_broadcast_pin_budget_accounts_for_vector_width():
     assert not _broadcast_fits((1 << 12) * 200, 768)
     # the bench defaults stay pinned: 2^4 * 200 rows of dim=64
     assert _broadcast_fits((1 << 4) * 200, 64)
-    # unknown width falls back to a conservative wide-row estimate
-    assert not _broadcast_fits(10_000_000, None)
-    assert _broadcast_fits(100, None)
+    # the exact tier measures the width, so it is always known
+    assert not _broadcast_fits(10_000_000, 64)
+    assert _broadcast_fits(100, 4096)
     # budget sanity: the constant is what the guard enforces
     assert _broadcast_fits(BROADCAST_PIN_MAX_BYTES // (8 * 64 + 64), 64)
 

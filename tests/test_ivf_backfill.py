@@ -3,6 +3,8 @@ trip (the reference's §3.3 admin flow)."""
 
 from __future__ import annotations
 
+import math
+import struct
 import tempfile
 
 import numpy as np
@@ -106,41 +108,91 @@ def test_gap_detect_and_backfill_roundtrip(spark):
         assert full.count() == n
 
 
-@pytest.mark.parametrize("case", ["sf0.01", "empty", "null_vector"])
-def test_arrow_near_pairs_match_exact_tier(spark, case):
-    """The Arrow tier finds the exact tier's pairs, including on an
-    empty corpus and one holding a NULL vector (both crashed the
-    driver-side collect before the NULL filter)."""
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
-        embedding_near_pairs,
-        embedding_near_pairs_arrow,
+def _pair_key(rows):
+    """Multiset of (id_a, id_b, cosine bits); NaN as one marker, since
+    its payload bits are not part of the contract."""
+    return sorted(
+        (r[0], r[1], "nan" if math.isnan(r[2]) else struct.pack("<d", r[2]))
+        for r in rows
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    if case == "empty":
+
+def _cosine_reference(df, threshold):
+    """Independent reference: crossJoin every row with every row and
+    score with similarity.cosine (the HOF form _cos_sql mirrors)."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import cosine
+
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    return (
+        a.crossJoin(b)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine("va", "vb").alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["sf0.01", "empty", "null_vector", "null_element", "single", "zero_vector",
+     "nan_element", "duplicate_ids", "small_batches", "mixed_lengths"],
+)
+def test_near_pairs_kernel_matches_cosine_reference(spark, case):
+    """The exact tier's NumPy kernel gives the reference's pairs with
+    bit-identical cosines on adversarial corpora: a NULL vector or a
+    NULL element scores no pair, a zero vector scores none (0 norm),
+    a NaN element pairs with every vector (Spark orders NaN above
+    every number), duplicate ids pair with every other id but not each
+    other, and pairs come out the same when the collect, the block ids
+    and the output are split into 3-row Arrow batches. Mixed vector
+    lengths raise."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
+        embedding_near_pairs,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+    threshold = 0.1
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+        "vec_id", "embedding"
+    ).filter(F.col("vec_id") < 60)
+    v7 = emb.filter(F.col("vec_id") == 7).first()["embedding"]
+    extra = {
+        "null_vector": [(10_001, None)],
+        "null_element": [(10_001, [None] + v7[1:])],
+        "zero_vector": [(10_001, [0.0] * len(v7))],
+        "nan_element": [(10_001, [float("nan")] + v7[1:])],
+        "duplicate_ids": [(5, v7), (7, v7)],
+    }.get(case)
+    if case == "sf0.01":
+        emb, threshold = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet"), 0.3
+    elif case == "empty":
         emb = emb.limit(0)
-    elif case == "null_vector":
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).select("vec_id", "embedding").filter(F.col("vec_id") < 30).unionByName(
-            spark.createDataFrame([(10_001, None)], "vec_id long, embedding array<float>")
-        )
-    exact = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_pairs(emb, 0.3).collect()
-    }
-    fast_df = embedding_near_pairs_arrow(emb, 0.3)
-    assert fast_df.dtypes == [
-        ("id_a", "bigint"), ("id_b", "bigint"), ("cosine", "double")
-    ]
-    fast = {(r["id_a"], r["id_b"]): r["cosine"] for r in fast_df.collect()}
-    assert bool(exact) == (case != "empty")
-    # any set difference must sit within float noise of the threshold
-    for pair in set(exact) ^ set(fast):
-        cos = exact.get(pair, fast.get(pair))
-        assert abs(cos - 0.3) < 1e-5
-    # shared pairs agree to float32-matmul precision
-    assert all(abs(exact[p] - fast[p]) < 1e-5 for p in set(exact) & set(fast))
+    elif case == "single":
+        emb = emb.filter(F.col("vec_id") == 7)
+    elif case == "mixed_lengths":  # the HOF would NULL these pairs silently
+        mixed = emb.unionByName(spark.createDataFrame([(10_001, v7[1:])], schema))
+        with pytest.raises(ValueError, match="mixed lengths"):
+            embedding_near_pairs(mixed, threshold)
+        return
+    elif extra:
+        emb = emb.unionByName(spark.createDataFrame(extra, schema))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if case == "small_batches":
+        spark.conf.set(key, "3")
+    try:
+        got_df = embedding_near_pairs(emb, threshold)
+        got = _pair_key(got_df.collect())
+    finally:
+        spark.conf.set(key, old)
+    want = _pair_key(_cosine_reference(emb, threshold).collect())
+    assert got_df.dtypes == [("id_a", "bigint"), ("id_b", "bigint"), ("cosine", "double")]
+    assert got == want
+    assert bool(got) == (case not in ("empty", "single"))
+    if case == "nan_element":
+        assert sum(1 for r in got if r[2] == "nan") == emb.count() - 1
+    if case == "duplicate_ids":  # both 5s pair with both 7s
+        assert sum(1 for r in got if r[:2] == (5, 7)) >= 2
 
 
 def test_arrow_flagship_matches_expression_plan(spark):
@@ -170,57 +222,37 @@ def test_arrow_flagship_matches_expression_plan(spark):
         assert np.abs(x[m] - y[m]).max() <= 5.1e-7  # rounding quantum
 
 
-def test_arrow_near_pairs_cap_guard_routes_to_lsh(spark):
-    """Above max_broadcast_vectors the arrow tier must NOT collect to
-    the driver: with dim it fails over to the bucketed-LSH candidate
-    join (plan shows a Join, no Python map stage); without dim it
-    raises instead of silently collecting."""
-    import pytest as _pytest
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
-        embedding_near_pairs_arrow,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-
-    routed = embedding_near_pairs_arrow(
-        emb, 0.3, max_broadcast_vectors=10, dim=dim
-    )
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan and "MapInPandas" not in plan
-    assert routed.columns == ["id_a", "id_b", "cosine"]
-    routed.limit(5).collect()  # executes end-to-end
-
-    with _pytest.raises(ValueError, match="max_broadcast_vectors"):
-        embedding_near_pairs_arrow(emb, 0.3, max_broadcast_vectors=10)
-
-
-def test_exact_near_pairs_cap_guard_never_goes_quadratic(spark):
-    """The exact tier must count-and-route above max_exact_vectors:
-    with dim it switches to the bucketed LSH join (no cartesian in the
-    plan); without dim it raises. Under the cap the all-pairs plan is
-    allowed (r3 verdict #4)."""
-    import pytest as _pytest
-
+def test_exact_near_pairs_cap_guard_never_goes_quadratic(spark, monkeypatch):
+    """Above max_exact_vectors, or when the corpus at its measured
+    length would broadcast past BROADCAST_PIN_MAX_BYTES, the exact tier
+    must neither collect to the driver nor plan all pairs: it routes to
+    the bucketed LSH join (a Join, no cartesian, no Arrow map) with no
+    dim given. Under both caps the kernel tier runs (r3 verdict #4)."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators import similarity
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
         embedding_near_pairs,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
 
-    routed = embedding_near_pairs(emb, 0.3, max_exact_vectors=10, dim=dim)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "Join" in plan
-    assert routed.columns == ["id_a", "id_b", "cosine"]
-    routed.limit(5).collect()
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    with _pytest.raises(ValueError, match="max_exact_vectors"):
-        embedding_near_pairs(emb, 0.3, max_exact_vectors=10)
+    def assert_lsh(routed):
+        p = plan(routed)
+        assert "CartesianProduct" not in p and "Join" in p, p
+        assert "MapInArrow" not in p
+        assert routed.columns == ["id_a", "id_b", "cosine"]
+        routed.limit(5).collect()
 
-    # under the cap: exact all-pairs allowed (and is the oracle tier)
+    assert_lsh(embedding_near_pairs(emb, 0.3, max_exact_vectors=10))
+    monkeypatch.setattr(similarity, "BROADCAST_PIN_MAX_BYTES", 10_000)
+    assert_lsh(embedding_near_pairs(emb, 0.3))
+    monkeypatch.undo()
+
     exact = embedding_near_pairs(emb, 0.3)
+    p = plan(exact)
+    assert "MapInArrow" in p and "Join" not in p and "CartesianProduct" not in p
     assert exact.columns == ["id_a", "id_b", "cosine"]
 
 

@@ -145,3 +145,55 @@ def test_arrow_signature_flushes_every_n_docs(spark, docs, monkeypatch):
     finally:
         spark.conf.set(key, old)
     assert got == ref and len(got) == 6
+
+
+def _small_batches(spark, rows):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(rows))
+    return lambda: spark.conf.set(key, old)
+
+
+def test_arrow_signature_empty_input_is_typed(spark, docs):
+    staged = _staged(spark, docs.limit(0))
+    ref = _md5_signatures_agg(staged, num_hashes=64)
+    got = _md5_signatures_from_staged(staged, num_hashes=64)
+    assert got.collect() == [] and got.dtypes == ref.dtypes
+
+
+def test_arrow_signature_null_text_doc(spark, docs):
+    with_null = docs.unionByName(
+        spark.createDataFrame([(7, None)], "doc_id long, text string")
+    )
+    staged = _staged(spark, with_null)
+    ref = _as_map(_md5_signatures_agg(staged, num_hashes=64).collect())
+    got = _as_map(_md5_signatures_from_staged(staged, num_hashes=64).collect())
+    assert got == ref and set(got) >= {1, 2, 3, 4, 5, 6}
+
+
+def test_arrow_signature_giant_doc_spans_batches(spark):
+    """One doc of 3,000 distinct shingles, read in 7-row Arrow batches:
+    its run is carried across ~430 batch boundaries."""
+    giant = " ".join(f"w{i}" for i in range(3_002))
+    docs = spark.createDataFrame([(1, giant), (2, "a b c d")], ["doc_id", "text"])
+    staged = _staged(spark, docs).coalesce(1)
+    ref = _as_map(_md5_signatures_agg(staged, num_hashes=64).collect())
+    restore = _small_batches(spark, 7)
+    try:
+        got = _as_map(_md5_signatures_from_staged(staged, num_hashes=64).collect())
+    finally:
+        restore()
+    assert got == ref and len(got) == 2
+
+
+def test_arrow_signature_id_split_across_batches(spark, docs):
+    """5-row batches cut every multi-shingle doc's run, so each id's
+    rows reach the run-min pass in two or more batches."""
+    staged = _staged(spark, docs).coalesce(1)
+    ref = _as_map(_md5_signatures_agg(staged, num_hashes=64).collect())
+    restore = _small_batches(spark, 5)
+    try:
+        got = _as_map(_md5_signatures_from_staged(staged, num_hashes=64).collect())
+    finally:
+        restore()
+    assert got == ref and len(got) == 6

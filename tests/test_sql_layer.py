@@ -135,13 +135,9 @@ def _oracle_compare():
     return mod.TABLES, mod.compare
 
 
-@pytest.mark.parametrize(
-    "name", ["w11_macd", "flagship_market_features", "training_matrix"]
-)
-def test_market_feature_oracles_exact(spark, name):
-    """The registry's Spark callable and its DuckDB oracle text (both
-    renderings of the MACD / market-feature stage) agree exactly under
-    the local correctness gate's comparison."""
+def _assert_oracle_exact(spark, name):
+    """The registry's Spark callable and its DuckDB oracle text agree
+    exactly under the local correctness gate's comparison."""
     duckdb = pytest.importorskip("duckdb")
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import REGISTRY
 
@@ -154,3 +150,20 @@ def test_market_feature_oracles_exact(spark, name):
     ok, msg = compare(name, sdf, con.sql(sql).df())
     assert len(sdf) > 0
     assert ok and msg == "exact", msg
+
+
+@pytest.mark.parametrize(
+    "name", ["w11_macd", "flagship_market_features", "training_matrix"]
+)
+def test_market_feature_oracles_exact(spark, name):
+    """Both renderings of the MACD / market-feature stage agree."""
+    _assert_oracle_exact(spark, name)
+
+
+@pytest.mark.parametrize(
+    "name", ["sim_near_pairs", "sim_near_pairs_arrow", "sim_near_pairs_capped"]
+)
+def test_near_pair_oracles_exact(spark, name):
+    """The NumPy near-pair kernel adds in _cos_sql's order, so every
+    near-pair tier is exact against its DuckDB twin."""
+    _assert_oracle_exact(spark, name)
