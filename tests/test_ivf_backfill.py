@@ -222,36 +222,47 @@ def test_arrow_flagship_matches_expression_plan(spark):
         assert np.abs(x[m] - y[m]).max() <= 5.1e-7  # rounding quantum
 
 
-def test_exact_near_pairs_cap_guard_never_goes_quadratic(spark, monkeypatch):
-    """Above max_exact_vectors, or when the corpus at its measured
-    length would broadcast past BROADCAST_PIN_MAX_BYTES, the exact tier
-    must neither collect to the driver nor plan all pairs: it routes to
-    the bucketed LSH join (a Join, no cartesian, no Arrow map) with no
-    dim given. Under both caps the kernel tier runs (r3 verdict #4)."""
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_routed_to_lsh(routed):
+    """The bucketed LSH join: a Join, no cartesian, no Arrow map."""
+    p = _plan(routed)
+    assert "CartesianProduct" not in p and "Join" in p, p
+    assert "MapInArrow" not in p
+    assert routed.columns == ["id_a", "id_b", "cosine"]
+    routed.limit(5).collect()  # executes end-to-end
+
+
+def test_arrow_near_pairs_cap_guard_routes_to_lsh(spark, monkeypatch):
+    """When the corpus at its measured length would broadcast past
+    BROADCAST_PIN_MAX_BYTES, the Arrow kernel tier must not collect to
+    the driver: it routes to the bucketed LSH join with no dim given."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators import similarity
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
         embedding_near_pairs,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    def assert_lsh(routed):
-        p = plan(routed)
-        assert "CartesianProduct" not in p and "Join" in p, p
-        assert "MapInArrow" not in p
-        assert routed.columns == ["id_a", "id_b", "cosine"]
-        routed.limit(5).collect()
-
-    assert_lsh(embedding_near_pairs(emb, 0.3, max_exact_vectors=10))
     monkeypatch.setattr(similarity, "BROADCAST_PIN_MAX_BYTES", 10_000)
-    assert_lsh(embedding_near_pairs(emb, 0.3))
-    monkeypatch.undo()
+    _assert_routed_to_lsh(embedding_near_pairs(emb, 0.3))
+
+
+def test_exact_near_pairs_cap_guard_never_goes_quadratic(spark):
+    """Above max_exact_vectors the exact tier must neither collect to
+    the driver nor plan all pairs: it routes to the bucketed LSH join
+    with no dim given. Under both caps the kernel tier runs (r3
+    verdict #4)."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity import (
+        embedding_near_pairs,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    _assert_routed_to_lsh(embedding_near_pairs(emb, 0.3, max_exact_vectors=10))
 
     exact = embedding_near_pairs(emb, 0.3)
-    p = plan(exact)
+    p = _plan(exact)
     assert "MapInArrow" in p and "Join" not in p and "CartesianProduct" not in p
     assert exact.columns == ["id_a", "id_b", "cosine"]
 
