@@ -4901,10 +4901,11 @@ def st15_dedup_incremental(spark, sf_dir):
     against batch exact dedup — first-arrival-wins over id-ordered
     batches is min(doc_id) per distinct text, which IS the DuckDB
     oracle (the store's xxhash64 content key only merges distinct
-    texts at 2^-64). The minhash candidate-pair side stays
-    pytest-asserted (tests/test_streaming_dedup.py: accumulated pairs
-    == batch minhash pairs) since xxhash64 signatures have no DuckDB
-    twin."""
+    texts at 2^-64). The minhash candidate pairs come from the batch
+    operator's pair stage (the narrow band join, then
+    ``dedup._verified_pairs``) and stay pytest-asserted
+    (tests/test_streaming_dedup.py: accumulated pairs == batch minhash
+    pairs) since xxhash64 signatures have no DuckDB twin."""
     import tempfile
 
     from .streaming.dedup_incremental import IncrementalDedup

@@ -1,16 +1,1 @@
-from . import (  # noqa: F401
-    asof,
-    dedup,
-    ewm,
-    indicators,
-    joins,
-    labels,
-    orderbook,
-    resample,
-    rolling,
-    sampling,
-    signals,
-    similarity,
-    skew,
-    text,
-)
+"""Operator modules; import each by name (``from .operators import dedup``)."""

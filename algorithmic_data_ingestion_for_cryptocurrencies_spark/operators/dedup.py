@@ -133,11 +133,11 @@ def _token_window_rows(
 
     ``keep_counts`` carries ``n_tokens = size(__w)`` through the
     explode (span dedup needs the clamp bound). ``drop_null_empty``
-    filters NULL and whitespace-only documents up front: both
-    otherwise manufacture one clamped window whose hash is a shared
-    constant (``xxhash64`` of an all-NULL slice / of ``['']``), so two
-    empty docs would "duplicate" each other — the r12 NULL-text
-    phantom-span bug and its r13 empty-string sibling.
+    filters NULL and whitespace-only documents up front: a
+    whitespace-only document otherwise manufactures one clamped window
+    whose hash is a shared constant (``xxhash64`` of ``['']``), so two
+    empty docs would "duplicate" each other — the r13 empty-string
+    sibling of the r12 NULL-text phantom-span bug.
 
     Why only the SPAN consumers pass ``drop_null_empty=True`` (r14
     advisor ruling): for the span family the constant gram is a bug —
@@ -146,8 +146,10 @@ def _token_window_rows(
     (jaccard / minhash / simhash via ``exploded_shingles`` /
     ``exploded_shingle_hashes``) the clamp's behavior is the INTENDED
     semantics, in two parts: (a) a NULL-text document emits NO windows
-    at all — its explode bound is NULL and exploding a NULL sequence
-    yields zero rows — so NULL docs join no pair; (b) empty /
+    at all — the explode is guarded on a non-NULL word array, because
+    ``size(NULL)`` is -1 outside ANSI mode and ``greatest`` skips
+    NULLs, so the clamp alone would give it one window — and NULL docs
+    join no pair; (b) empty /
     whitespace-only documents have identical (empty) token streams,
     i.e. they ARE exact duplicates of each other, and the shared
     clamped-window constant gram is exactly what collapses them while
@@ -168,7 +170,12 @@ def _token_window_rows(
         bound = F.col("n_tokens") - F.lit(n - 1)
     else:
         bound = F.size("__w") - F.lit(n - 1)
-    idx = F.explode(F.sequence(F.lit(1), F.greatest(bound, F.lit(1))))
+    idx = F.explode(
+        F.when(
+            F.col("__w").isNotNull(),
+            F.sequence(F.lit(1), F.greatest(bound, F.lit(1))),
+        )
+    )
     cols = ["id", "__w"] + (["n_tokens"] if keep_counts else [])
     return staged.select(*cols, idx.alias("__i"))
 
@@ -743,12 +750,45 @@ def banded_buckets(
     ).select("id", "sig", "bb.band", "bb.bucket")
 
 
-def _est_jaccard(num_hashes: int) -> Column:
-    """MinHash Jaccard estimate of a candidate pair: the fraction of
-    the ``num_hashes`` positions where columns ``sig_a`` and ``sig_b``
-    agree."""
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, of documents
+    that share a band bucket: the shuffle-hash self-join of the narrow
+    ``(id, band, bucket)`` rows, deduplicated with a plain
+    ``distinct``."""
+    nb = bands.select("id", "band", "bucket")
+    a = nb.alias("a")
+    b = nb.alias("b").hint("shuffle_hash")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _verified_pairs(
+    cand: DataFrame, sigs: DataFrame, *, num_hashes: int, threshold: float
+) -> DataFrame:
+    """``(id_a, id_b, est_jaccard)`` for the candidate pairs whose
+    MinHash Jaccard estimate — the fraction of the ``num_hashes``
+    positions where the two signatures agree — is >= ``threshold``.
+    Each signature is attached from the one-row-per-doc ``(id, sig)``
+    frame ``sigs`` once per unique pair."""
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     agree = F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int"))
-    return F.size(F.filter(agree, lambda v: v == 1)) / F.lit(float(num_hashes))
+    est = F.size(F.filter(agree, lambda v: v == 1)) / F.lit(float(num_hashes))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("est_jaccard", est)
+        .filter(F.col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
+    )
 
 
 def minhash_dedup_pairs(
@@ -810,29 +850,12 @@ def minhash_dedup_pairs(
     # signature row per doc for the attach — ~5x fewer bytes on the
     # operator's dominant exchange. Measured: sf0.1 2.40 -> 2.06 s,
     # sf1 4.62 -> 3.81 s (interleaved min-of-4, value-identity
-    # asserted before timing).
-    nb = banded.select("id", "band", "bucket")
-    a = nb.alias("a")
-    b = nb.alias("b").hint("shuffle_hash")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sig_frame = banded.filter(F.col("band") == 0).select("id", "sig")
-    sa = sig_frame.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig_frame.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", _est_jaccard(num_hashes))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    # asserted before timing). The incremental store
+    # (streaming.dedup_incremental) verifies through the same stages.
+    return _verified_pairs(
+        _band_pairs(banded),
+        banded.filter(F.col("band") == 0).select("id", "sig"),
+        num_hashes=num_hashes, threshold=threshold,
     )
 
 

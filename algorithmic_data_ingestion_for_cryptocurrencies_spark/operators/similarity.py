@@ -1035,28 +1035,15 @@ def _ivf_batches(spark, path: str) -> tuple[set, int, list]:
     pairs) from the tiny append-only manifest dir ``<index>/batches``
     — one row per committed append, the
     :class:`..store.rollup.RollupStore` idempotence pattern. Only a
-    MISSING path reads as a fresh index (structured error class
-    first, the r8 ADVICE discipline); any other failure propagates."""
+    MISSING path reads as a fresh index (structured error condition,
+    the r8 ADVICE discipline); any other failure propagates."""
     from pyspark.errors import AnalysisException
 
     p = path.rstrip("/") + "/batches"
     try:
         rows = spark.read.schema("batch_id string, seq bigint").parquet(p).collect()
     except AnalysisException as e:
-        cond = None
-        for accessor in ("getCondition", "getErrorClass"):
-            fn = getattr(e, accessor, None)
-            if fn is None:
-                continue
-            try:
-                cond = fn()
-            except Exception:
-                cond = None
-            if cond is not None:
-                break
-        missing = (cond == "PATH_NOT_FOUND") if cond is not None \
-            else ("PATH_NOT_FOUND" in str(e))
-        if missing:
+        if e.getCondition() == "PATH_NOT_FOUND":
             return set(), 1, []
         raise
     return (

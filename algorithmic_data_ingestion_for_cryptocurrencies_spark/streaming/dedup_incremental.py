@@ -14,15 +14,22 @@ store of previously-seen content keys and MinHash band buckets:
 - **near tier**: MinHash signatures for the truly-new docs, banded
   LSH buckets joined against the store's buckets PLUS the batch's own
   — each emitted candidate pair surfaces exactly once, in the batch
-  where its second member arrives. The accumulated pair set equals
-  the batch :func:`~..operators.dedup.minhash_dedup_pairs` output
-  over the same corpus (pytest-asserted).
+  where its second member arrives. The pair stage is the batch
+  operator's: the band join runs on the narrow ``(band, bucket, id)``
+  rows and ends in a ``distinct``, and the unique pairs are verified
+  by ``operators.dedup._verified_pairs``, which attaches each
+  signature once per pair; :meth:`IncrementalDedup.all_pairs_from_store`
+  is ``_band_pairs`` + ``_verified_pairs`` over the store, as in
+  :func:`~..operators.dedup.minhash_dedup_pairs`. The accumulated
+  pair set equals the batch operator's output over the same corpus
+  (pytest-asserted).
 
 Scale shape: per batch the work is O(batch) signature computation +
 an equi-join of the batch's bands against the store (shuffle keyed on
 (band, bucket) — at warehouse scale partition the store by ``band``
-so the join prunes to touched bands). Nothing rescans the corpus; the
-store grows by one row per unique doc and ``bands`` rows per doc.
+so the join prunes to touched bands) + one signature attach per
+unique candidate pair. Nothing rescans the corpus; the store grows by
+one row per unique doc and ``bands`` rows per doc.
 
 Replay safety: every append carries the batch id; a replayed batch id
 is detected from the store and returns empty results without
@@ -40,7 +47,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import (
-    _est_jaccard,
+    _band_pairs,
+    _verified_pairs,
     banded_buckets,
     exact_dedup,
     minhash_signatures,
@@ -85,35 +93,16 @@ class IncrementalDedup:
         permissions, FS hiccup — propagates: silently substituting an
         empty store would make the anti-join re-emit previously-seen
         docs as unique (the silent-reset failure mode
-        ``RollupStore._read_manifest`` guards against).
-
-        Missing-path detection uses the STRUCTURED error class
-        (``getCondition()`` on pyspark>=4, ``getErrorClass()`` on
-        older builds) — a substring match on the rendered message
-        would misread any wrapped/reworded error that merely MENTIONS
-        PATH_NOT_FOUND as a fresh store; the substring stays only as
-        the last-resort fallback for builds exposing neither
-        accessor."""
+        ``RollupStore._read_manifest`` guards against). Missing-path
+        detection reads the structured error condition, never the
+        message text."""
         from pyspark.errors import AnalysisException
 
         p = os.path.join(self.path, sub)
         try:
             return self.spark.read.schema(schema).parquet(p)
         except AnalysisException as e:
-            cond = None
-            for accessor in ("getCondition", "getErrorClass"):
-                fn = getattr(e, accessor, None)
-                if fn is None:
-                    continue
-                try:
-                    cond = fn()
-                except Exception:
-                    cond = None
-                if cond is not None:
-                    break
-            missing = (cond == "PATH_NOT_FOUND") if cond is not None \
-                else ("PATH_NOT_FOUND" in str(e))
-            if missing:
+            if e.getCondition() == "PATH_NOT_FOUND":
                 return self.spark.createDataFrame([], schema)
             raise
 
@@ -177,16 +166,12 @@ class IncrementalDedup:
         new_banded = banded_buckets(
             new_rows.filter(F.col("sig").isNotNull()).select("id", "sig"),
             num_hashes=self.num_hashes, bands=self.bands,
-        ).localCheckpoint()
+        ).select("band", "bucket", "id").localCheckpoint()
 
         # candidates: new-vs-(store ∪ new) band collisions; each pair
         # fires once — when its younger member arrives
-        store_banded = self.band_rows().join(
-            self.keys().select(F.col("id").alias("__sid"), "sig"),
-            F.col("id") == F.col("__sid"),
-        ).select("band", "bucket", "id", "sig")
-        other = store_banded.unionByName(
-            new_banded.select("band", "bucket", "id", "sig")
+        other = self.band_rows().select("band", "bucket", "id").unionByName(
+            new_banded
         )
         a = new_banded.alias("a")
         b = other.alias("b")
@@ -200,28 +185,25 @@ class IncrementalDedup:
             .select(
                 F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
                 F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-                F.col("a.sig").alias("sig_a"),
-                F.col("b.sig").alias("sig_b"),
             )
-            .dropDuplicates(["id_a", "id_b"])
+            .distinct()
         )
-        pairs = (
-            cand.withColumn("est_jaccard", _est_jaccard(self.num_hashes))
-            .filter(F.col("est_jaccard") >= self.threshold)
-            .select("id_a", "id_b", "est_jaccard")
-            .localCheckpoint()
-        )
+        pairs = _verified_pairs(
+            cand, self.keys().unionByName(new_rows),  # stored + new sigs
+            num_hashes=self.num_hashes, threshold=self.threshold,
+        ).localCheckpoint()
 
         # bands FIRST, keys last: the replay guard checks only keys/,
         # so the keys append is the commit marker. A crash between the
         # two appends leaves orphan band rows for an uncommitted batch;
         # the replay re-appends them (benign — candidate pairs are
-        # dropDuplicates'd), whereas the reverse order would mark the
+        # deduplicated, and a pair verifies only against committed or
+        # new signatures), whereas the reverse order would mark the
         # batch seen with its band rows lost, silently dropping every
         # future near-dup pair involving those docs.
-        new_banded.select("band", "bucket", "id").withColumn(
-            "__batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(os.path.join(self.path, _BANDS_DIR))
+        new_banded.withColumn("__batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(os.path.join(self.path, _BANDS_DIR))
         new_rows.write.mode("append").parquet(
             os.path.join(self.path, _KEYS_DIR)
         )
@@ -248,30 +230,9 @@ class IncrementalDedup:
     def all_pairs_from_store(self) -> DataFrame:
         """Recompute the full candidate-pair set from the persisted
         store (diagnostic / bootstrap parity with the batch
-        ``minhash_dedup_pairs``)."""
-        banded = self.band_rows().join(
-            self.keys().select(F.col("id").alias("__sid"), "sig"),
-            F.col("id") == F.col("__sid"),
-        ).select("band", "bucket", "id", "sig")
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.sig").alias("sig_a"),
-                F.col("b.sig").alias("sig_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        return (
-            cand.withColumn("est_jaccard", _est_jaccard(self.num_hashes))
-            .filter(F.col("est_jaccard") >= self.threshold)
-            .select("id_a", "id_b", "est_jaccard")
+        ``minhash_dedup_pairs``): the batch operator's pair stage over
+        the stored bands and signatures."""
+        return _verified_pairs(
+            _band_pairs(self.band_rows()), self.keys(),
+            num_hashes=self.num_hashes, threshold=self.threshold,
         )

@@ -56,3 +56,58 @@ def test_jaccard_self_join_reuses_exchange_at_runtime(spark):
     final = _final_plan(pairs)
     assert "ShuffledHashJoin" in final, final
     assert "ReusedExchange" in final, final
+
+
+def test_incremental_band_join_carries_no_signatures(spark, tmp_path, monkeypatch):
+    """The incremental store's new-vs-(store ∪ new) band join runs on
+    narrow (band, bucket, id) rows, like the batch operator's: in the
+    executed plan of ``process_batch``'s pairs, no operator that
+    carries a band column also carries a signature — the signatures
+    are attached once per unique pair, after the join."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.dedup_incremental import (
+        IncrementalDedup,
+    )
+
+    boiler = "the quarterly report shows strong growth in all regions "
+    docs = spark.createDataFrame(
+        [(i, boiler * 3 + (f"variant {i}" if i % 2 else "")) for i in range(30)],
+        "doc_id long, text string",
+    )
+    # the pairs frame is localCheckpoint'ed inside process_batch; its
+    # plan is captured (and executed) just before the checkpoint
+    plans = []
+    cls = type(docs)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        if self.columns == ["id_a", "id_b", "est_jaccard"]:
+            self.collect()
+            plans.append(explain_str(self, "formatted"))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    inc = IncrementalDedup(
+        spark, str(tmp_path / "store"), id_col="doc_id", text_col="text",
+        num_hashes=32, bands=8, threshold=0.5,
+    )
+    inc.process_batch(docs.filter(F.col("doc_id") < 15), "b1")
+    _, pairs = inc.process_batch(docs.filter(F.col("doc_id") >= 15), "b2")
+    assert pairs.count() > 0
+    plan = plans[-1]
+
+    final_tree = plan.split("== Initial Plan ==")[0]
+    final_ids = set(re.findall(r"\((\d+)\)", final_tree))
+    blocks = {
+        m.group(1): m.group(0)
+        for m in re.finditer(r"(?ms)^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan)
+    }
+    final = [blocks[i] for i in sorted(final_ids, key=int) if i in blocks]
+    assert any(re.search(r"Left keys \[2\]: \[band#\d+, bucket#", b) for b in final), plan
+    for block in final:
+        for cols in re.findall(r"^(?:Input|Output) \[\d+\]: \[(.*)\]$", block, re.M):
+            if re.search(r"\bband#", cols):
+                assert not re.search(r"\bsig#", cols), block

@@ -487,7 +487,9 @@ def test_token_window_refactor_plan_identity(spark):
     shingle plans must provably not move. Re-build the pre-refactor
     inline shape of exploded_shingle_hashes / exploded_shingles here
     and assert the OPTIMIZED PLAN of the refactored functions is
-    identical (string compare after expr-id normalization)."""
+    identical (string compare after expr-id normalization). The
+    inline shapes carry the later NULL-text guard (a NULL word array
+    explodes no window), the one intended change to these plans."""
     import re
 
     from pyspark.sql import functions as F
@@ -502,9 +504,10 @@ def test_token_window_refactor_plan_identity(spark):
         staged = df.select(
             F.col(id_col).alias("id"), dedup.tokenize(text_col).alias("__w")
         )
-        idx = F.explode(
-            F.sequence(F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1)))
-        )
+        idx = F.explode(F.when(
+            F.col("__w").isNotNull(),
+            F.sequence(F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1))),
+        ))
         return staged.select("id", "__w", idx.alias("__i")).select(
             "id", F.xxhash64(F.slice("__w", F.col("__i"), n)).alias("shingle")
         )
@@ -513,9 +516,10 @@ def test_token_window_refactor_plan_identity(spark):
         staged = df.select(
             F.col(id_col).alias("id"), dedup.tokenize(text_col).alias("__w")
         )
-        idx = F.explode(
-            F.sequence(F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1)))
-        )
+        idx = F.explode(F.when(
+            F.col("__w").isNotNull(),
+            F.sequence(F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1))),
+        ))
         return staged.select("id", "__w", idx.alias("__i")).select(
             "id", F.concat_ws(" ", F.slice("__w", F.col("__i"), n)).alias("shingle")
         )
@@ -611,11 +615,11 @@ def test_token_free_docs_pair_only_each_other(spark):
     OTHER — identical (empty) token streams keyed by the shared
     clamped-window constant gram — and never pair with any document
     that has tokens; NULL-text documents emit NO token windows at all
-    (the explode bound is NULL, and exploding a NULL sequence yields
-    zero rows), so they appear in no pair whatsoever.  (Contrast the
-    span family, where the same clamped constant gram was a bug —
-    phantom overlap spans at positions inside nonexistent text — and
-    is filtered with drop_null_empty=True.)"""
+    (the explode is guarded on a non-NULL word array), so they appear
+    in no pair whatsoever — not even with each other, in either MinHash
+    hash family.  (Contrast the span family, where the same clamped
+    constant gram was a bug — phantom overlap spans at positions inside
+    nonexistent text — and is filtered with drop_null_empty=True.)"""
     rows = [
         (0, None),
         (1, ""),
@@ -623,10 +627,11 @@ def test_token_free_docs_pair_only_each_other(spark):
         (3, "alpha beta gamma delta epsilon zeta"),
         (4, "alpha beta gamma delta epsilon zeta"),  # real dup of 3
         (5, "totally different words in this document here"),
+        (6, None),
     ]
     sdf = spark.createDataFrame(rows, "doc_id int, text string")
 
-    empty_pairs = {(1, 2)}  # NULL doc 0 emits no windows -> no pairs
+    empty_pairs = {(1, 2)}  # NULL docs 0 and 6 emit no windows -> no pairs
 
     jac = dedup.jaccard_similar_pairs(
         sdf, id_col="doc_id", text_col="text", threshold=0.8
@@ -635,9 +640,10 @@ def test_token_free_docs_pair_only_each_other(spark):
     assert set(found) == empty_pairs | {(3, 4)}
     assert all(j == 1.0 for j in found.values())
 
-    mh = dedup.minhash_dedup_pairs(
-        sdf, id_col="doc_id", text_col="text",
-        num_hashes=16, bands=4, threshold=0.8,
-    ).collect()
-    mh_found = {(r["id_a"], r["id_b"]) for r in mh}
-    assert mh_found == empty_pairs | {(3, 4)}
+    for family in ("xx64", "md5"):
+        mh = dedup.minhash_dedup_pairs(
+            sdf, id_col="doc_id", text_col="text",
+            num_hashes=16, bands=4, threshold=0.8, hash_family=family,
+        ).collect()
+        mh_found = {(r["id_a"], r["id_b"]) for r in mh}
+        assert mh_found == empty_pairs | {(3, 4)}, family

@@ -167,3 +167,13 @@ def test_near_pair_oracles_exact(spark, name):
     """The NumPy near-pair kernel adds in _cos_sql's order, so every
     near-pair tier is exact against its DuckDB twin."""
     _assert_oracle_exact(spark, name)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_minhash_pairs", "dedup_jaccard_pairs", "st15_dedup_incremental"],
+)
+def test_dedup_oracles_exact(spark, name):
+    """The batch MinHash and Jaccard pair operators and the incremental
+    store's survivors agree exactly with their DuckDB twins."""
+    _assert_oracle_exact(spark, name)
