@@ -1668,15 +1668,14 @@ def text_tokens(spark, sf_dir):
 )
 def text_tokens_bpe(spark, sf_dir):
     # The Java lookaround split has no DuckDB twin, but its *count*
-    # does: (# alnum runs) + (# non-alnum non-space chars).  The
-    # rolling fingerprint uses the md5_64 parity hash here so the
-    # oracle can reproduce it; xxhash64 stays the scale default
-    # (covered by tests/test_media_text.py).
+    # does: (# alnum runs) + (# non-alnum non-space chars). The
+    # rolling fingerprint hashes each window to the first 60 bits of
+    # its md5, which the oracle reproduces.
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         textops.token_count("text", bpe=True).alias("n_bpe_tokens"),
-        textops.rolling_hash_fingerprint("text", hash_fn="md5_64").alias("roll_fp"),
+        textops.rolling_hash_fingerprint("text").alias("roll_fp"),
     )
 
 
@@ -5041,21 +5040,6 @@ def a6b_robust(spark, sf_dir):
 # tier (an Arrow map over the broadcast corpus) under the same oracle
 q("sim_near_pairs_arrow", _NEAR_PAIRS_SQL, cols=["id_a", "id_b", "cosine"],
   fcols=["cosine"])(sim_near_pairs)
-
-
-@q("flagship_arrow", None)
-def flagship_arrow(spark, sf_dir):
-    # alternate PHYSICAL plan for the flagship: one applyInPandas per
-    # series (O(n) C-speed rolling/ewm, single shuffle) — agrees with
-    # the oracle-exact expression plan to float tolerance (test-
-    # asserted); rows-only since pandas float paths are not bit-equal
-    from .operators.indicators import build_market_features_arrow
-
-    m = _market(spark, sf_dir)
-    return build_market_features_arrow(
-        m, keys=["suppkey"], ts_col="ts",
-        order_cols=["ts", "okey", "lnum", "pkey"], id_cols=["okey", "lnum"],
-    )
 
 
 # --------------------------------------------------------------------------

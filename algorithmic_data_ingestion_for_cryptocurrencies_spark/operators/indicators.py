@@ -407,41 +407,6 @@ def build_market_features(
     return out
 
 
-def build_market_features_arrow(
-    df: DataFrame,
-    *,
-    keys: Sequence[str] = ("suppkey",),
-    ts_col: str = "ts",
-    order_cols: Sequence[str] | None = None,
-    id_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Alternate PHYSICAL strategy for the flagship feature stage: one
-    ``applyInPandas`` per series computes every feature in a single
-    O(n) pandas pass (:func:`market_features_step` with no carry) — one
-    shuffle total vs the expression plan's window-stage chain. Same
-    logical features as :func:`build_market_features` (values agree to
-    float tolerance; the expression plan remains the oracle-exact
-    path). Series are bounded per key, so no group outgrows a task —
-    the same contract as ``with_ewm_exact``.
-    """
-    from pyspark.sql import types as T
-
-    keys = list(keys)
-    order = list(order_cols) if order_cols is not None else [ts_col]
-    out_cols = [*keys, *id_cols, ts_col]
-    schema = T.StructType(
-        [df.schema[c] for c in out_cols]
-        + [T.StructField(c, T.DoubleType()) for c in MARKET_FEATURES]
-    )
-
-    def compute(pdf):
-        out, _ = market_features_step(pdf, None, ts_col=ts_col, sort_cols=order)
-        out = out[[*out_cols, *MARKET_FEATURES]]
-        return out[out[list(MARKET_FEATURES)].notna().any(axis=1)]
-
-    return df.groupBy(*keys).applyInPandas(compute, schema=schema)
-
-
 _MF_CARRY_ROWS = 20  # longest rolling window (rvol_20): 20 trailing closes
 
 
@@ -469,8 +434,8 @@ def market_features_step(pdf, carry: dict | None, *, ts_col: str, sort_cols: Seq
     accumulators ``ema12``, ``ema26``, ``sig9`` (MACD signal) and
     ``obv`` (running total). Chunked output equals one full pass to
     float precision (``stateful_processor.py:11-41``'s invariant over
-    the whole family). The Arrow tier runs it once per series with no
-    carry; ``streaming/stateful.py`` runs it per micro-batch."""
+    the whole family). ``streaming/stateful.py`` runs it per
+    micro-batch."""
     import numpy as np
     import pandas as pd
 

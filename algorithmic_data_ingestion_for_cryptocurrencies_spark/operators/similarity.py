@@ -616,18 +616,21 @@ def _probe_expr(
 ) -> Column:
     """Map-only probe-list selection: the ``nprobe`` nearest centroid
     ids as an array, ordered (dot DESC, centroid_id) exactly like the
-    former crossJoin + row_number window — ``array_sort`` on
-    ``(-dot, centroid_id)`` structs needs no exchange at all."""
+    large-k tier's row_number window — a descending ``sort_array`` on
+    ``(dot, -centroid_id)`` structs needs no exchange at all. Sorting
+    the dot itself descending, not its negation ascending, keeps
+    Spark's order of a NaN dot (above every number) the same as the
+    window's and the assignment tiers': a NaN centroid comes first."""
     arr = F.array(*[
         F.struct(
-            (-dot(F.col(vec_col), _cent_lit(v))).alias("nd"),
-            F.lit(cid).alias("cid"),
+            dot(F.col(vec_col), _cent_lit(v)).alias("d"),
+            F.lit(-cid).alias("nc"),
         )
         for cid, v in cents
     ])
-    ranked = F.slice(F.array_sort(arr), 1, nprobe)
-    probes = F.transform(ranked, lambda s: s["cid"])
-    # NULL/malformed query vector: every nd is NULL and the sort would
+    ranked = F.slice(F.sort_array(arr, asc=False), 1, nprobe)
+    probes = F.transform(ranked, lambda s: -s["nc"])
+    # NULL/malformed query vector: every dot is NULL and the sort would
     # fall through to centroid-id order, silently probing the lowest
     # nprobe lists. Yield NULL (a null query matches nothing) — same
     # dirty-input contract as _assign_expr; gate on ONE dot, not the
@@ -702,7 +705,7 @@ def _probed_frame(
     nprobe: int,
 ) -> DataFrame:
     """Top-``nprobe`` probe lists per query, tiered like
-    :func:`_assigned_frame`: map-only array_sort expression for small
+    :func:`_assigned_frame`: map-only sort_array expression for small
     k, broadcast crossJoin + row_number window for large k — identical
     (dot DESC, centroid_id) order in both. ``q`` carries
     ``(query_id, __qvec)``; returns those plus ``centroid_id``."""
@@ -910,8 +913,8 @@ def ivf_index_topk(
         return _ivf_rerank(queries, None, None, k, id_col=id_col)
     lists_dir, folded_seq = _ivf_lists_path(spark, path)
     probes = (
-        # map-only probe selection (r11, small-k tier): array_sort
-        # over per-centroid (−dot, id) structs replaces the former
+        # map-only probe selection (r11, small-k tier): sort_array
+        # over per-centroid (dot, −id) structs replaces the former
         # crossJoin + row_number window — zero exchanges; large-k
         # indexes fall back to the join shape inside the helper
         _probed_frame(

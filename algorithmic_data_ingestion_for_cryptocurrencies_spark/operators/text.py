@@ -317,25 +317,11 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col).cast("binary"))
 
 
-def rolling_hash_fingerprint(
-    col: Column | str, window: int = 8, hash_fn: str = "xxhash64"
-) -> Column:
+def rolling_hash_fingerprint(col: Column | str, window: int = 8) -> Column:
     """Winnowing-style fingerprint: min over rolling word-window
-    hashes — robust to local edits (document-level signature).
-
-    ``hash_fn``: ``"xxhash64"`` (default — fastest, JVM-native, the
-    scale path) or ``"md5_64"`` (first 60 bits of md5 as a BIGINT —
-    slower but reproducible in any engine with md5, used for
-    cross-engine oracle parity).
-    """
-    if hash_fn == "xxhash64":
-        def _h(c: Column) -> Column:
-            return F.xxhash64(c)
-    elif hash_fn == "md5_64":
-        def _h(c: Column) -> Column:
-            return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    hashes — robust to local edits (document-level signature). Each
+    window hashes to the first 60 bits of its md5 as a BIGINT, which
+    any engine with md5 reproduces."""
 
     # bound lambda: one tokenize per row, not one per window
     def body(ws: Column) -> Column:
@@ -343,130 +329,14 @@ def rolling_hash_fingerprint(
         return F.array_min(
             F.transform(
                 F.sequence(F.lit(1), k),
-                lambda i: _h(F.concat_ws(" ", F.slice(ws, i, window))),
+                lambda i: F.conv(
+                    F.substring(F.md5(F.concat_ws(" ", F.slice(ws, i, window))), 1, 15),
+                    16, 10,
+                ).cast("long"),
             )
         )
 
     return bind_array(tokenize(col), body)
-
-
-def bigram_pairs(col: Column | str, *, keep_tail: bool = False) -> Column:
-    """Adjacent word-token pairs as ``array<struct<w1,w2>>``; short
-    texts (0-1 tokens) yield an empty, correctly-typed array.
-
-    ``keep_tail=True`` keeps the zip's trailing ``(last_token, NULL)``
-    pair (and the single pair of a 1-token text), so the w1 values
-    cover EVERY token of the text — :func:`bigram_lm` uses this to
-    derive the vocabulary size from the bigram counts instead of a
-    second tokenize pass over the corpus.
-
-    Built as ``zip_with(toks, toks[2:], struct)`` so the lambda binds
-    ELEMENT variables. The previous ``transform(sequence(1, n-1),
-    i -> element_at(toks, i))`` form embedded the whole tokenize
-    expression (regex normalize + split) in the lambda body, which
-    Catalyst re-evaluates PER ELEMENT — O(n²) regex work per document
-    (measured 20 s just to explode 4M bigrams at the 150k-doc tier;
-    this form is linear). The token array itself is bound via
-    ``bind_array``: zip_with references it twice (left side + slice),
-    which would otherwise tokenize every document twice per row."""
-    return bind_array(tokenize(col), lambda ws: _pairs_of(ws, keep_tail))
-
-
-def _pairs_of(ws: Column, keep_tail: bool) -> Column:
-    """Adjacent-pair builder over an already-bound array variable."""
-    zipped = F.zip_with(
-        ws,
-        F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(1))),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    if keep_tail:
-        return zipped
-    return F.filter(zipped, lambda p: p["w2"].isNotNull())
-
-
-def bigram_lm(
-    train: DataFrame, *, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train a bigram language model (the CCNet/KenLM-style cheap
-    quality signal, model-free): returns ``(bigram_counts(w1, w2, c2),
-    context_counts(w1, c1), vocab(vs))``.
-
-    Scale shape: ONE tokenize pass over the corpus + map-side-combined
-    aggregates; the context counts AND the vocabulary size both derive
-    from the bigram-count table (``bigram_pairs(keep_tail=True)``
-    keeps the ``(last_token, NULL)`` tail pair, so distinct w1 over
-    the counts == distinct tokens), and the one-row vocab frame
-    broadcast-joins downstream — no driver-side action at train time.
-
-    The (w1, w2) keys are ``xxhash64`` int64 before the count
-    aggregates, so the bigram shuffle and the scorer's joins exchange
-    16 bytes per row instead of two word strings. Only key equality
-    matters to the counts and the smoothing formula, so scores are
-    identical to string keys absent a 2^-64 collision;
-    :func:`bigram_lm_score` hashes its own keys to match."""
-    bg = train.select(
-        F.explode(bigram_pairs(text_col, keep_tail=True)).alias("b")
-    ).select("b.w1", "b.w2")
-    # hash must PRESERVE nullness: xxhash64(NULL) is a constant (the
-    # seed), which would turn the tail sentinel into a real-looking
-    # bigram key
-    bg = bg.select(
-        F.xxhash64("w1").alias("w1"),
-        F.when(F.col("w2").isNotNull(), F.xxhash64("w2")).alias("w2"),
-    )
-    # lazily pin the bigram table: c1 and vocab derive from it AND the
-    # scorer joins it — without the checkpoint a consumer executing
-    # those branches as separate jobs re-runs the train
-    # explode+aggregate (ReuseExchange only dedupes within one job)
-    c2_all = bg.groupBy("w1", "w2").agg(
-        F.count("*").alias("c2")
-    ).localCheckpoint(eager=False)
-    # vocab from the vocab²-bounded count table, not a second corpus
-    # pass: keep_tail puts every token in the w1 column
-    vocab = c2_all.agg(F.count_distinct("w1").alias("vs"))
-    c2 = c2_all.filter(F.col("w2").isNotNull())
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    return c2, c1, vocab
-
-
-def bigram_lm_score(
-    docs: DataFrame,
-    lm: tuple[DataFrame, DataFrame, DataFrame],
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Per-document mean bigram log-likelihood under ``lm`` (a
-    :func:`bigram_lm` model, keyed on ``xxhash64`` tokens) with
-    add-alpha smoothing: ``ln((c(w1,w2)+a) / (c(w1)+a*V))`` averaged
-    over the doc's bigrams — the standard perplexity-style quality
-    score (low = unusual text: boilerplate, garbled OCR, wrong
-    language). Docs with <2 tokens have no bigrams and drop out.
-
-    Scale shape: explode -> shuffle join on (w1, w2) -> join on w1 ->
-    one per-doc aggregate; the one-row vocab broadcasts. Hot tokens
-    skew the w1 join — AQE skew-join handles it, or pre-salt with
-    :mod:`..skew` for pathological vocabularies."""
-    c2, c1, vocab = lm
-    bg = docs.select(F.col(id_col), F.explode(bigram_pairs(text_col)).alias("b")) \
-        .select(id_col, F.xxhash64("b.w1").alias("w1"), F.xxhash64("b.w2").alias("w2"))
-    scored = (
-        bg.join(c2, ["w1", "w2"], "left")
-        .join(c1, ["w1"], "left")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            id_col,
-            F.log(
-                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(alpha))
-                / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(alpha) * F.col("vs"))
-            ).alias("__logp"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"),
-        F.avg("__logp").alias("avg_logp"),
-    )
 
 
 def bigram_lm_train_score(
@@ -477,25 +347,37 @@ def bigram_lm_train_score(
     text_col: str = "text",
     alpha: float = 0.5,
 ) -> DataFrame:
-    """Fused train-on-a-subset + score-everything bigram-LM pass — the
-    common corpus-curation shape (train on a clean half, score all).
-    Same output as ``bigram_lm(docs.filter(train_filter))`` piped into
-    :func:`bigram_lm_score` over ``docs``, but the corpus is tokenized
-    and exploded ONCE: the instance-grain ``(id, w1, w2)`` frame is
-    ``localCheckpoint``-pinned and both the model aggregates and the
-    scorer derive from it, saving a full regex-tokenize pass over the
-    training subset (the scan + explode is the dominant map-side cost;
-    the checkpoint row is 24 bytes: the keys are ``xxhash64`` int64,
-    as in :func:`bigram_lm`). The TOKEN array is hashed before
-    pairing, so each token is hashed once (not once as w1 and once as
-    w2) and the pair explode moves int64 structs, not strings; the
-    zip's null tail pads to ``(last_hash, NULL)`` so nullness is
-    preserved without a post-hash guard. The model joins are left
-    UNHINTED on purpose: the count tables are vocab²-bounded and AQE's
-    runtime stats broadcast them when they fit (measured 89k bigram
-    types at the 15M-doc tier — both joins go broadcast, zero probe
-    shuffles), degrading to shuffled joins only when a huge vocabulary
-    actually warrants it. NOTE a pre-partition-by-w1 scheme (one
+    """Bigram-LM quality score (the CCNet/KenLM-style cheap signal,
+    model-free), trained on a subset and scored over every document —
+    the common corpus-curation shape (train on a clean half, score
+    all). The model is add-alpha bigram counts over the documents that
+    pass ``train_filter`` (all of them when it is ``None``); each
+    document's score is its mean ``ln((c(w1,w2)+a) / (c(w1)+a*V))``
+    over its bigrams, where ``V`` is the number of distinct training
+    tokens (low = unusual text: boilerplate, garbled OCR, wrong
+    language). Documents with fewer than 2 tokens have no bigrams and
+    drop out. Returns ``(id_col, n_bigrams, avg_logp)``.
+
+    The corpus is tokenized and exploded ONCE: the instance-grain
+    ``(id, w1, w2)`` frame is ``localCheckpoint``-pinned and both the
+    model aggregates and the scorer derive from it (the scan + explode
+    is the dominant map-side cost; the checkpoint row is 24 bytes).
+    The TOKEN array is hashed with ``xxhash64`` before pairing, so
+    each token is hashed once and the pair explode, the count shuffle
+    and the scorer's joins move int64 keys, not strings; only key
+    equality matters to the counts and the smoothing formula, so
+    scores equal string keys' absent a 2^-64 collision. Pairs are
+    ``zip_with(hs, hs[2:])`` over the bound hash array (lambdas bind
+    ELEMENT variables, so nothing re-tokenizes per element); the zip's
+    null tail pads to ``(last_hash, NULL)``, which keeps every token
+    in the w1 column, so the vocabulary size comes from the
+    bigram-count table instead of a second pass over the corpus.
+
+    The model joins are left UNHINTED on purpose: the count tables are
+    vocab²-bounded and AQE's runtime stats broadcast them when they
+    fit (measured 89k bigram types at the 15M-doc tier — both joins go
+    broadcast, zero probe shuffles), degrading to shuffled joins only
+    when a huge vocabulary actually warrants it. NOTE a pre-partition-by-w1 scheme (one
     upfront exchange serving every downstream clustering requirement)
     was prototyped and REJECTED: Dataset.localCheckpoint does not
     propagate outputPartitioning in this build, and without the
@@ -503,7 +385,11 @@ def bigram_lm_train_score(
     the 1.5M-doc tier).
     """
     hashed = F.transform(tokenize(text_col), lambda t: F.xxhash64(t))
-    pairs = bind_array(hashed, lambda hs: _pairs_of(hs, True))
+    pairs = bind_array(hashed, lambda hs: F.zip_with(
+        hs,
+        F.slice(hs, 2, F.greatest(F.size(hs) - 1, F.lit(1))),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    ))
     bg_all = docs.select(
         F.col(id_col), F.explode(pairs).alias("b")
     ).select(id_col, "b.w1", "b.w2")

@@ -89,13 +89,16 @@ class IncrementalDedup:
     # -- store access -------------------------------------------------
     def _read(self, sub: str, schema: str) -> DataFrame:
         """Read one store table; ONLY a missing path yields the empty
-        frame (a brand-new store). Any other failure — corrupt footer,
-        permissions, FS hiccup — propagates: silently substituting an
-        empty store would make the anti-join re-emit previously-seen
-        docs as unique (the silent-reset failure mode
-        ``RollupStore._read_manifest`` guards against). Missing-path
-        detection reads the structured error condition, never the
-        message text."""
+        frame (a brand-new store), a parquet scan of no files. Its
+        size statistic is 0, so a new store's first batch broadcasts
+        the store side of its joins (an empty ``createDataFrame`` has
+        no size statistic, and its joins would shuffle). Any other
+        failure — corrupt footer, permissions, FS hiccup — propagates:
+        silently substituting an empty store would make the anti-join
+        re-emit previously-seen docs as unique (the silent-reset
+        failure mode ``RollupStore._read_manifest`` guards against).
+        Missing-path detection reads the structured error condition,
+        never the message text."""
         from pyspark.errors import AnalysisException
 
         p = os.path.join(self.path, sub)
@@ -103,7 +106,7 @@ class IncrementalDedup:
             return self.spark.read.schema(schema).parquet(p)
         except AnalysisException as e:
             if e.getCondition() == "PATH_NOT_FOUND":
-                return self.spark.createDataFrame([], schema)
+                return self.spark.read.schema(schema).parquet()
             raise
 
     def keys(self) -> DataFrame:

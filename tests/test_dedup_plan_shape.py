@@ -9,6 +9,8 @@ silently starts building the signature subtree twice fails loudly.
 
 from __future__ import annotations
 
+import re
+
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators import dedup
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.plans.inspect import explain_str
 
@@ -58,29 +60,11 @@ def test_jaccard_self_join_reuses_exchange_at_runtime(spark):
     assert "ReusedExchange" in final, final
 
 
-def test_incremental_band_join_carries_no_signatures(spark, tmp_path, monkeypatch):
-    """The incremental store's new-vs-(store ∪ new) band join runs on
-    narrow (band, bucket, id) rows, like the batch operator's: in the
-    executed plan of ``process_batch``'s pairs, no operator that
-    carries a band column also carries a signature — the signatures
-    are attached once per unique pair, after the join."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.dedup_incremental import (
-        IncrementalDedup,
-    )
-
-    boiler = "the quarterly report shows strong growth in all regions "
-    docs = spark.createDataFrame(
-        [(i, boiler * 3 + (f"variant {i}" if i % 2 else "")) for i in range(30)],
-        "doc_id long, text string",
-    )
-    # the pairs frame is localCheckpoint'ed inside process_batch; its
-    # plan is captured (and executed) just before the checkpoint
+def _pairs_plans(monkeypatch, cls) -> list[str]:
+    """Capture the executed plan of every ``process_batch`` pairs frame:
+    the frame is ``localCheckpoint``'ed inside ``process_batch``, so
+    its plan is taken (after executing it) just before the checkpoint."""
     plans = []
-    cls = type(docs)
     checkpoint = cls.localCheckpoint
 
     def spy(self, *args, **kwargs):
@@ -90,24 +74,80 @@ def test_incremental_band_join_carries_no_signatures(spark, tmp_path, monkeypatc
         return checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", spy)
-    inc = IncrementalDedup(
-        spark, str(tmp_path / "store"), id_col="doc_id", text_col="text",
-        num_hashes=32, bands=8, threshold=0.5,
-    )
-    inc.process_batch(docs.filter(F.col("doc_id") < 15), "b1")
-    _, pairs = inc.process_batch(docs.filter(F.col("doc_id") >= 15), "b2")
-    assert pairs.count() > 0
-    plan = plans[-1]
+    return plans
 
+
+def _final_blocks(plan: str) -> list[str]:
+    """The node blocks (``(n) Name`` + its detail lines) of the AQE
+    final plan in a formatted executed plan."""
     final_tree = plan.split("== Initial Plan ==")[0]
     final_ids = set(re.findall(r"\((\d+)\)", final_tree))
     blocks = {
         m.group(1): m.group(0)
         for m in re.finditer(r"(?ms)^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan)
     }
-    final = [blocks[i] for i in sorted(final_ids, key=int) if i in blocks]
+    return [blocks[i] for i in sorted(final_ids, key=int) if i in blocks]
+
+
+def _incremental_docs(spark):
+    boiler = "the quarterly report shows strong growth in all regions "
+    return spark.createDataFrame(
+        [(i, boiler * 3 + (f"variant {i}" if i % 2 else "")) for i in range(30)],
+        "doc_id long, text string",
+    )
+
+
+def _incremental_store(spark, path):
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.streaming.dedup_incremental import (
+        IncrementalDedup,
+    )
+
+    return IncrementalDedup(
+        spark, path, id_col="doc_id", text_col="text",
+        num_hashes=32, bands=8, threshold=0.5,
+    )
+
+
+def test_incremental_band_join_carries_no_signatures(spark, tmp_path, monkeypatch):
+    """The incremental store's new-vs-(store ∪ new) band join runs on
+    narrow (band, bucket, id) rows, like the batch operator's: in the
+    executed plan of ``process_batch``'s pairs, no operator that
+    carries a band column also carries a signature — the signatures
+    are attached once per unique pair, after the join."""
+    from pyspark.sql import functions as F
+
+    docs = _incremental_docs(spark)
+    plans = _pairs_plans(monkeypatch, type(docs))
+    inc = _incremental_store(spark, str(tmp_path / "store"))
+    inc.process_batch(docs.filter(F.col("doc_id") < 15), "b1")
+    _, pairs = inc.process_batch(docs.filter(F.col("doc_id") >= 15), "b2")
+    assert pairs.count() > 0
+    plan = plans[-1]
+
+    final = _final_blocks(plan)
     assert any(re.search(r"Left keys \[2\]: \[band#\d+, bucket#", b) for b in final), plan
     for block in final:
         for cols in re.findall(r"^(?:Input|Output) \[\d+\]: \[(.*)\]$", block, re.M):
             if re.search(r"\bband#", cols):
                 assert not re.search(r"\bsig#", cols), block
+
+
+def test_new_store_first_batch_shuffles_no_signatures(spark, tmp_path, monkeypatch):
+    """A brand-new store stands in for its missing tables with a frame
+    of known size 0, so the first batch attaches the signatures to its
+    pairs through a broadcast: no shuffle exchange in the executed
+    pairs plan carries a signature column (``sig``, or ``sig_a`` and
+    ``sig_b`` as the attach renames it). The batch is read from
+    parquet, as a stream's is, so its own size is known too."""
+    _incremental_docs(spark).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    plans = _pairs_plans(monkeypatch, type(docs))
+    _, pairs = _incremental_store(spark, str(tmp_path / "store")).process_batch(docs, "b1")
+    assert pairs.count() > 0
+    exchanges = [
+        b for b in _final_blocks(plans[-1])
+        if re.match(r"\(\d+\) (Exchange|ShuffleQueryStage)\b", b)
+    ]
+    for block in exchanges:
+        for cols in re.findall(r"^(?:Input|Output) \[\d+\]: \[(.*)\]$", block, re.M):
+            assert not re.search(r"\bsig(_a|_b)?#", cols), block

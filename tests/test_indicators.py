@@ -166,12 +166,11 @@ def test_cci_adx(spark, ohlcv_sdf, ohlcv_pdf):
     assert_close(got["adx"], dx.rolling(14).mean(), name="adx")
 
 
-def test_build_market_features_full_parity(spark, ohlcv_sdf, ohlcv_pdf):
-    """Full flagship-stage parity vs the reference's exact pandas math
-    (``market_factory.py:105-142``), including dropna-any-feature."""
-    out = ind.build_market_features(ohlcv_sdf)
-    p = one_series(ohlcv_pdf)
-
+def market_features_reference(p: pd.DataFrame) -> pd.DataFrame:
+    """The reference's pandas math for the flagship stage
+    (``market_factory.py:105-142``) over ONE series already in window
+    order: the :data:`~ind.MARKET_FEATURES` columns on ``p``'s index,
+    rows whose every feature is NaN dropped (the reference's dropna)."""
     close = p["close"]
     ret_1 = close.pct_change()
     logret_1 = np.log(close.replace(0, np.nan)).diff()
@@ -180,8 +179,8 @@ def test_build_market_features_full_parity(spark, ohlcv_sdf, ohlcv_pdf):
     macd = ema_12 - ema_26
     macd_signal_9 = macd.ewm(span=9, adjust=False).mean()
     delta = close.diff()
-    up = pd.Series(np.where(delta > 0, delta, 0.0))
-    down = pd.Series(np.where(delta < 0, -delta, 0.0))
+    up = pd.Series(np.where(delta > 0, delta, 0.0), index=p.index)
+    down = pd.Series(np.where(delta < 0, -delta, 0.0), index=p.index)
     rs = up.rolling(14).mean() / down.rolling(14).mean().replace(0, np.nan)
     rsi_14 = 100 - 100 / (1 + rs)
     exp = pd.DataFrame({
@@ -195,8 +194,14 @@ def test_build_market_features_full_parity(spark, ohlcv_sdf, ohlcv_pdf):
         "hl_spread": (p["high"] - p["low"]) / close.replace(0, np.nan),
         "oi_obv": (np.sign(close.diff()).fillna(0.0) * p["volume"]).cumsum(),
     })
-    # reference drops rows where every feature is NaN
-    exp = exp[exp.notna().any(axis=1)].reset_index(drop=True)
+    return exp[exp.notna().any(axis=1)]
+
+
+def test_build_market_features_full_parity(spark, ohlcv_sdf, ohlcv_pdf):
+    """Full flagship-stage parity vs the reference's exact pandas math
+    (``market_factory.py:105-142``), including dropna-any-feature."""
+    out = ind.build_market_features(ohlcv_sdf)
+    exp = market_features_reference(one_series(ohlcv_pdf)).reset_index(drop=True)
 
     cols = list(exp.columns)
     got = spark_series(out, "BTC-USDT" if False else "BTC/USDT", cols)
@@ -207,6 +212,48 @@ def test_build_market_features_full_parity(spark, ohlcv_sdf, ohlcv_pdf):
     # schema contract: column order matches the declared feature schema
     assert out.columns[:6] == ["timestamp", "dt", "symbol", "exchange", "timeframe", "feature_version"]
     assert set(out.columns[6:]) == set(cols)
+
+
+#: Bound on |registry - pandas| per feature at sf0.01. The registry
+#: rounds with FLOOR(x * 1e6 + 0.5) / 1e6, which moves a value by at
+#: most 5e-7; the unrounded stage differs from pandas by at most
+#: ~1.1e-10 (the EWM family on prices up to ~1e5, measured), so every
+#: rounded feature stays within 5.1e-7 and none needs more. OBV sums
+#: integer quantities and is exact; hl_spread is twice a two-decimal
+#: discount, so rounding it moves only the last bit.
+FLAGSHIP_REFERENCE_BOUND = {
+    **{c: 5.1e-7 for c in ind.MARKET_FEATURES},
+    "hl_spread": 1e-15,
+    "oi_obv": 0.0,
+}
+
+
+def test_flagship_matches_pandas_reference(spark):
+    """The registry flagship (``build_market_features`` over every
+    ``suppkey`` series at sf0.01, rounded by the registry) against
+    :func:`market_features_reference` run per series in the window
+    order ``(ts, okey, lnum, pkey)``: the same rows, the same NaNs,
+    and every feature within :data:`FLAGSHIP_REFERENCE_BOUND`."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import (
+        IDS,
+        ORDER,
+        REGISTRY,
+        _market,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    m = _market(spark, sf).toPandas().sort_values(["suppkey", *ORDER])
+    series = m.groupby("suppkey", group_keys=False)[["close", "high", "low", "volume"]]
+    want = m[IDS].join(series.apply(market_features_reference), how="inner")
+    fn, _sql = REGISTRY["flagship_market_features"]
+    got = fn(spark, sf).toPandas()
+    mrg = want.merge(got, on=IDS, suffixes=("_ref", "_reg"), validate="one_to_one")
+    assert len(mrg) == len(want) == len(got) > 0
+    for c in ind.MARKET_FEATURES:
+        x, y = mrg[c + "_ref"].to_numpy(float), mrg[c + "_reg"].to_numpy(float)
+        assert (np.isnan(x) == np.isnan(y)).all(), c
+        err = np.abs(x - y)[~np.isnan(x)].max()
+        assert err <= FLAGSHIP_REFERENCE_BOUND[c], (c, err)
 
 
 def test_triple_barrier_label_semantics(spark):

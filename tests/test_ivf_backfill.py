@@ -195,33 +195,6 @@ def test_near_pairs_kernel_matches_cosine_reference(spark, case):
         assert sum(1 for r in got if r[:2] == (5, 7)) >= 2
 
 
-def test_arrow_flagship_matches_expression_plan(spark):
-    import numpy as np
-
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import (
-        REGISTRY,
-        _market,
-    )
-    from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.indicators import (
-        build_market_features_arrow,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    a = build_market_features_arrow(
-        _market(spark, sf), keys=["suppkey"], ts_col="ts",
-        order_cols=["ts", "okey", "lnum", "pkey"], id_cols=["okey", "lnum"],
-    ).toPandas()
-    fn, _sql = REGISTRY["flagship_market_features"]
-    b = fn(spark, sf).toPandas()  # rounded to 1e-6 by the registry
-    mrg = a.merge(b, on=["suppkey", "ts", "okey", "lnum"], suffixes=("_a", "_b"))
-    assert len(mrg) == len(a) == len(b)
-    for c in ["ret_1", "ema_12", "macd_signal_9", "rsi_14", "oi_obv"]:
-        x, y = mrg[c + "_a"].to_numpy(), mrg[c + "_b"].to_numpy()
-        m = ~(np.isnan(x) | np.isnan(y))
-        assert (np.isnan(x) == np.isnan(y)).all()
-        assert np.abs(x[m] - y[m]).max() <= 5.1e-7  # rounding quantum
-
-
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -421,6 +394,48 @@ def test_null_vector_assignment_is_null_in_both_tiers(spark, monkeypatch):
         ).collect()
     }
     assert probes[0] == [0, 2] and probes[1] is None and probes[2] is None
+
+
+def test_nan_dot_centroid_ranks_first_in_every_tier(spark, monkeypatch):
+    """Spark orders NaN above every number, so a centroid whose dot
+    with the query is NaN is the nearest one in every tier: the
+    small-k probe expression, the large-k probe window, both
+    assignment tiers and the DuckDB twin's ``ORDER BY dot DESC,
+    centroid_id``. The query [inf, 1] has dots NaN, inf and -inf with
+    centroids 0: [0, 1], 1: [1, 0] and 2: [-1, 0]."""
+    import algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.similarity as sim
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import _dot_sql
+
+    df = spark.createDataFrame(
+        [(0, [math.inf, 1.0])], "vec_id int, embedding array<float>"
+    )
+    crows = [(0, [0.0, 1.0]), (1, [1.0, 0.0]), (2, [-1.0, 0.0])]
+    cents = spark.createDataFrame(
+        crows, "centroid_id int, centroid array<float>"
+    )
+    q = df.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
+    )
+    for cap in (64, 2):  # expression tiers, then broadcast-join tiers
+        monkeypatch.setattr(sim, "ASSIGN_EXPR_MAX_CENTROIDS", cap)
+        probed = [r["centroid_id"] for r in sim._probed_frame(q, cents, crows, 1).collect()]
+        assigned = [
+            r["centroid_id"]
+            for r in sim._assigned_frame(df, cents, crows, vec_col="embedding").collect()
+        ]
+        assert probed == assigned == [0], (cap, probed, assigned)
+    ranked = df.select(sim._probe_expr("embedding", crows, 3).alias("p")).first()["p"]
+    assert ranked == [0, 1, 2]
+
+    duckdb = pytest.importorskip("duckdb")
+    order = duckdb.sql(
+        f"""SELECT c.centroid_id
+        FROM (SELECT [CAST('inf' AS FLOAT), CAST(1 AS FLOAT)] AS qe) q,
+             (SELECT UNNEST(RANGE(3)) AS centroid_id,
+                     UNNEST([[0, 1], [1, 0], [-1, 0]]::FLOAT[][]) AS centroid) c
+        ORDER BY {_dot_sql('q.qe', 'c.centroid')} DESC, c.centroid_id"""
+    ).fetchall()
+    assert [r[0] for r in order] == ranked
 
 
 def test_null_vectors_through_kmeans_probe_and_ivf(spark, monkeypatch):

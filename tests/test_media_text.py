@@ -162,18 +162,14 @@ def test_bigram_lm_scores_flag_unusual_text(spark):
     """In-domain text must score higher (less negative mean bigram
     log-likelihood) than out-of-vocabulary gibberish, and short docs
     (<2 tokens) drop out."""
-    from pyspark.sql import functions as F
-
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.text import (
-        bigram_lm,
-        bigram_lm_score,
+        bigram_lm_train_score,
     )
 
     train = spark.createDataFrame(
         [(i, "the cat sat on the mat and the cat ran") for i in range(5)],
         ["doc_id", "text"],
     )
-    lm = bigram_lm(train, text_col="text")
     test = spark.createDataFrame(
         [
             (100, "the cat sat on the mat"),   # in-domain
@@ -182,55 +178,78 @@ def test_bigram_lm_scores_flag_unusual_text(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {
-        r["doc_id"]: r
-        for r in bigram_lm_score(test, lm, id_col="doc_id", text_col="text").collect()
-    }
+    scored = bigram_lm_train_score(
+        train.unionByName(test), train_filter=F.col("doc_id") < 100,
+        id_col="doc_id", text_col="text",
+    )
+    rows = {r["doc_id"]: r for r in scored.collect() if r["doc_id"] >= 100}
     assert set(rows) == {100, 101}
     assert rows[100]["avg_logp"] > rows[101]["avg_logp"]
     assert rows[100]["n_bigrams"] == 5
 
 
-def test_bigram_lm_fused_equals_two_step(spark):
-    """The fused single-tokenize train+score path must reproduce the
-    two-step bigram_lm -> bigram_lm_score result exactly (same model,
-    same smoothing, same hashed keys), including the OOV and
-    1-token-tail edge cases."""
-    from pyspark.sql import functions as F
+def _bigram_lm_reference(docs, train_ids, alpha=0.5):
+    """Add-alpha bigram LM on string keys in plain Python: counts over
+    the training documents' adjacent token pairs, ``V`` = distinct
+    training tokens, and per document the count of its bigrams and
+    their mean ``ln((c(w1,w2)+a) / (c(w1)+a*V))``. Tokens are split as
+    ``dedup.tokenize`` splits a non-empty text: lower-cased, on
+    whitespace."""
+    import math
+    from collections import Counter
 
+    c2, c1, vocab = Counter(), Counter(), set()
+    for i, text in docs:
+        if i in train_ids:
+            ws = text.lower().split()
+            vocab.update(ws)
+            for w1, w2 in zip(ws, ws[1:]):
+                c2[w1, w2] += 1
+                c1[w1] += 1
+    out = {}
+    for i, text in docs:
+        ws = text.lower().split()
+        logps = [
+            math.log((c2[w1, w2] + alpha) / (c1[w1] + alpha * len(vocab)))
+            for w1, w2 in zip(ws, ws[1:])
+        ]
+        if logps:
+            out[i] = (len(logps), sum(logps) / len(logps))
+    return out
+
+
+def test_bigram_lm_matches_python_reference(spark):
+    """The fused train+score bigram LM against a pure-Python add-alpha
+    model on string keys, trained on the even doc ids: the same
+    documents (1-token docs drop out), bigram counts and mean
+    log-likelihoods, with an OOV document and a 1-token document (its
+    token is in the vocabulary, it has no bigram) in the corpus."""
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.operators.text import (
-        bigram_lm,
-        bigram_lm_score,
         bigram_lm_train_score,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (0, "the cat sat on the mat and the cat ran"),
-            (1, "zxq vbn qwe rty uio plm"),
-            (2, "the dog sat on a log"),
-            (3, "one"),
-            (4, "cats and dogs run on mats"),
-            (5, "the mat ran on the cat"),
-        ],
-        ["doc_id", "text"],
-    )
-    pred = F.col("doc_id") % 2 == 0
-    lm = bigram_lm(docs.filter(pred), text_col="text")
-    expected = {
-        r["doc_id"]: r
-        for r in bigram_lm_score(docs, lm, id_col="doc_id", text_col="text").collect()
-    }
-    fused = {
-        r["doc_id"]: r
+    corpus = [
+        (0, "the cat sat on the mat and the cat ran"),
+        (1, "zxq vbn qwe rty uio plm"),
+        (2, "the dog sat on a log"),
+        (3, "one"),
+        (4, "cats and dogs run on mats"),
+        (5, "the mat ran on the cat"),
+        (6, "one"),
+    ]
+    docs = spark.createDataFrame(corpus, ["doc_id", "text"])
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["avg_logp"])
         for r in bigram_lm_train_score(
-            docs, train_filter=pred, id_col="doc_id", text_col="text"
+            docs, train_filter=F.col("doc_id") % 2 == 0,
+            id_col="doc_id", text_col="text",
         ).collect()
     }
-    assert set(fused) == set(expected)
-    for k in expected:
-        assert fused[k]["n_bigrams"] == expected[k]["n_bigrams"]
-        assert abs(fused[k]["avg_logp"] - expected[k]["avg_logp"]) < 1e-12
+    want = _bigram_lm_reference(corpus, {i for i, _ in corpus if i % 2 == 0})
+    assert set(got) == set(want) == {0, 1, 2, 4, 5}
+    for i, (n, logp) in want.items():
+        assert got[i][0] == n
+        assert abs(got[i][1] - logp) <= 1e-12 * abs(logp), (i, got[i], logp)
 
 
 def test_html_to_text_strips_payloads_and_decodes_entities(spark):

@@ -177,3 +177,10 @@ def test_dedup_oracles_exact(spark, name):
     """The batch MinHash and Jaccard pair operators and the incremental
     store's survivors agree exactly with their DuckDB twins."""
     _assert_oracle_exact(spark, name)
+
+
+def test_bigram_lm_oracle_exact(spark):
+    """The fused bigram LM (int64 token keys, vocabulary from the
+    bigram-count table) agrees exactly with its DuckDB twin (string
+    keys, vocabulary from a separate pass over the training tokens)."""
+    _assert_oracle_exact(spark, "text_bigram_lm")

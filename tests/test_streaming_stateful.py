@@ -136,9 +136,9 @@ def ohlcv_series_pdf():
 
 
 def _full_batch_features(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One-pass reference: the same math as build_market_features_arrow
-    (the flagship pandas twin, itself parity-tested against the
-    oracle-exact expression tier)."""
+    """One-pass reference: the flagship's pandas math over the whole
+    series (``tests/test_indicators.py::market_features_reference``
+    checks the same formulas against the registry flagship)."""
     close = pdf["close"].astype(float)
     prev = close.shift(1)
     out = pdf.copy()

@@ -55,7 +55,7 @@ RUNS5 = {
 #: reps (5x DuckDB reps on a 457 s flagship cell would cost 38 min for
 #: noise DuckDB does not exhibit).
 RUNS5_SPARK = RUNS5 | {
-    "flagship_market_features", "flagship_arrow", "u6_backtest",
+    "flagship_market_features", "u6_backtest",
     "g1_pagerank", "training_matrix",
 }
 
