@@ -2811,13 +2811,8 @@ def dedup_substring_spans_q(spark, sf_dir):
     from .operators.dedup import duplicated_spans
 
     docs = _t(spark, sf_dir, "documents")
-    # broadcast_dup_grams: bounded doc corpus -> one int64 row per
-    # distinct duplicated gram broadcasts, sparing the probe-side
-    # shuffle write (r13 A/B: 0.95s vs 1.92s marked stage at sf1) --
-    # the jaccard broadcast_sizes ruling applied to this family
     return duplicated_spans(
         docs, id_col="doc_id", text_col="text", k=_SUBSTR_K, min_count=2,
-        broadcast_dup_grams=True,
     )
 
 
@@ -2852,7 +2847,6 @@ def dedup_substring_scrub_q(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return remove_duplicated_spans(
         docs, id_col="doc_id", text_col="text", k=_SUBSTR_K, min_count=2,
-        broadcast_dup_grams=True,
     )
 
 
@@ -2886,11 +2880,9 @@ _JACCARD_PAIRS_SQL = f"""SELECT id_a, id_b, jaccard FROM (
 )
 def dedup_jaccard(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    # broadcast_sizes: bounded doc corpus -> the (id, n_sh) sizes frame
-    # broadcasts, replacing the id-window recount's full index sort
     return jaccard_similar_pairs(
         docs, id_col="doc_id", text_col="text", n=3, threshold=0.12,
-        max_doc_freq=_JACCARD_MAX_DF, broadcast_sizes=True,
+        max_doc_freq=_JACCARD_MAX_DF,
     )
 
 
@@ -2939,7 +2931,6 @@ def _jaccard_pairs_df(spark, sf_dir):
     return jaccard_similar_pairs(
         _t(spark, sf_dir, "documents"), id_col="doc_id", text_col="text",
         n=3, threshold=0.12, max_doc_freq=_JACCARD_MAX_DF,
-        broadcast_sizes=True,
     )
 
 
@@ -4780,13 +4771,11 @@ FROM base b LEFT JOIN kmv k USING (event_type, bucket_ts)"""
 )
 def st12_rollup_distinct(spark, sf_dir):
     # incremental approx-distinct per bucket via MERGEABLE sketch
-    # states. r11: flipped from rows-only to hash-exact by running the
-    # store's distinct_method="kmv" (portable k-minimum-values arrays,
-    # rule V) — the two-increment merged-then-compacted state must
+    # states: the store keeps portable k-minimum-values arrays (rule
+    # V), so the two-increment merged-then-compacted state must
     # finalize to the IDENTICAL estimate DuckDB computes one-shot from
     # raw events, which additionally proves merge==one-shot inside the
-    # driver gate. HLL stays the store default (smaller state);
-    # accuracy + merge==one-shot for both methods pytest-asserted.
+    # driver gate; accuracy is pytest-asserted.
     import tempfile
 
     from .store.rollup import RollupStore
@@ -4798,7 +4787,7 @@ def st12_rollup_distinct(spark, sf_dir):
     store = RollupStore(
         spark, tempfile.mkdtemp(prefix="adi_rollup_kmv_") + "/t",
         keys=["event_type"], val_cols=["value"], bucket_seconds=7 * 86400,
-        distinct_cols=["user_id"], distinct_method="kmv",
+        distinct_cols=["user_id"],
     )
     store.upsert_rollup(
         ev.filter(F.col("ts").cast("double") < mid), ts_col="ts", batch_id="b1"

@@ -26,7 +26,6 @@ def asof_join(
     value_cols: Sequence[str] | None = None,
     tolerance_seconds: float | None = None,
     suffix: str = "_asof",
-    allow_global: bool = False,
     direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the nearest right row within the same
@@ -41,14 +40,13 @@ def asof_join(
     are staged under internal names, so a left column with the same
     name survives (output gets ``<col><suffix>``). ``keys`` must be
     non-empty — an empty partition spec serializes the whole table
-    through one task; pass ``allow_global=True`` only for genuinely
-    tiny frames.
+    through one task.
     """
     keys = list(keys)
-    if not keys and not allow_global:
+    if not keys:
         raise ValueError(
             "asof_join with empty keys is a single-task global window; "
-            "pass series keys, or allow_global=True for tiny inputs"
+            "pass series keys"
         )
     value_cols = list(
         value_cols

@@ -225,17 +225,18 @@ def jaccard_similar_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    broadcast_sizes: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= t).
 
-    Shape: explode shingles -> dedup + set size in ONE tiny
+    Shape: explode shingles -> dedup in ONE tiny
     ``groupBy(id).collect_set`` (partial-aggregated map-side, one row
     per doc on the wire) -> re-explode to the inverted index ->
     self-join on shingle (generates only candidate pairs that share
     >= 1 shingle) -> count common shingles -> |A∪B| = |A|+|B|-common.
     Three shuffles total: doc-grain set build, shingle-grain join
-    (one exchange, reused by both sides), pair-grain count.
+    (one exchange, reused by both sides), pair-grain count — plus,
+    with ``max_doc_freq``, the doc-grain size count of the surviving
+    index (map-side combined, one row per doc).
 
     The shingle self-join is the scale risk: a shingle appearing in
     d documents emits d² candidate rows, so one ubiquitous shingle
@@ -248,14 +249,11 @@ def jaccard_similar_pairs(
     near-identical to full Jaccard in practice because stop-shingles
     carry no discriminative signal.
 
-    ``broadcast_sizes`` changes how the post-filter set sizes reach
-    the pair grain: the default re-counts them with a window over
-    ``id`` (a full shuffle+sort of the inverted index — scale-safe at
-    any doc-id cardinality); with ``broadcast_sizes=True`` the sizes
-    are a map-side-combined ``groupBy(id).count()`` (one row per doc)
-    broadcast-joined onto the pair aggregates — ~30% faster measured
-    at sf0.1, correct only while one (id, n_sh) row per document fits
-    a broadcast (bounded corpora; not the 5B-doc regime).
+    The set sizes are a map-side-combined ``groupBy(id).count()`` of
+    the (surviving) inverted index, one row per doc, broadcast-joined
+    onto the pair counts — so one (id, n_sh) row per document must fit
+    a broadcast (bounded corpora; not the 5B-doc regime, where an
+    oversized broadcast fails rather than returning wrong rows).
 
     Every stage is keyed on :func:`exploded_shingle_hashes` int64s;
     Jaccard is a set-count statistic, so the string-keyed DuckDB
@@ -268,24 +266,14 @@ def jaccard_similar_pairs(
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("__shs"))
     )
-    shingled = sets.select(
-        "id", F.size("__shs").alias("n_sh"), F.explode("__shs").alias("shingle")
-    )
-    sizes = None
+    shingled = sets.select("id", F.explode("__shs").alias("shingle"))
     if max_doc_freq is not None:
         # document frequency over the same hash partitioning as the
-        # join below (partitionBy shingle), then re-count set sizes on
-        # the surviving universe
+        # join below (partitionBy shingle)
         shingled = shingled.withColumn(
             "__df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("__df") <= max_doc_freq)
-        if broadcast_sizes:
-            shingled = shingled.drop("n_sh", "__df")
-            sizes = shingled.groupBy("id").agg(F.count("*").alias("n_sh"))
-        else:
-            shingled = shingled.withColumn(
-                "n_sh", F.count("*").over(Window.partitionBy("id"))
-            ).drop("__df")
+        ).filter(F.col("__df") <= max_doc_freq).drop("__df")
+    sizes = shingled.groupBy("id").agg(F.count("*").alias("n_sh"))
     # r14 (guide §2.4, same device as minhash_dedup_pairs): hint the
     # inverted-index self-join to SHUFFLE-HASH so both sides sit behind
     # identical shingle-hash exchanges and the index subtree (tokenize
@@ -305,21 +293,12 @@ def jaccard_similar_pairs(
     joined = a.join(
         b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
     )
-    if sizes is not None:
-        pairs = joined.groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        ).agg(F.count("*").alias("common"))
-        sa = F.broadcast(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")))
-        sb = F.broadcast(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")))
-        pairs = pairs.join(sa, "id_a").join(sb, "id_b")
-    else:
-        pairs = joined.groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        ).agg(
-            F.count("*").alias("common"),
-            F.first(F.col("a.n_sh")).alias("n_a"),
-            F.first(F.col("b.n_sh")).alias("n_b"),
-        )
+    pairs = joined.groupBy(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    ).agg(F.count("*").alias("common"))
+    sa = F.broadcast(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")))
+    sb = F.broadcast(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")))
+    pairs = pairs.join(sa, "id_a").join(sb, "id_b")
     return (
         pairs.withColumn(
             "jaccard",
@@ -1111,7 +1090,6 @@ def duplicated_spans(
     text_col: str,
     k: int = 8,
     min_count: int = 2,
-    broadcast_dup_grams: bool = False,
 ) -> DataFrame:
     """Exact substring-span dedup, the distributable form of suffix
     -array substring dedup ('Deduplicating Training Data Makes
@@ -1135,9 +1113,9 @@ def duplicated_spans(
     Plan shape, all linear in corpus tokens: one zero-shuffle
     positioned-gram explode, one gram-keyed count aggregate (map-side
     partial: a doc's grams never cross partitions before the agg),
-    one semi-join back (the duplicated-gram side is DISTINCT on the
-    key, so a boilerplate gram shared by 30% of docs multiplies by 1,
-    not by its df — linear, AQE splits any hot build partition), then
+    one broadcast semi-join back (the duplicated-gram side is DISTINCT
+    on the key, so a boilerplate gram shared by 30% of docs multiplies
+    by 1, not by its df — linear), then
     one exchange on doc id + per-doc sort for the gaps-and-islands
     merge (lag + running sum + group — the same window algebra as
     ``j4_find_gaps``). No pair stage exists anywhere: cost is
@@ -1149,17 +1127,15 @@ def duplicated_spans(
     token intervals [p, p+k) touch); ``span_end`` clamps to the token
     count for the short-doc whole-text gram.
 
-    ``broadcast_dup_grams`` (r13 A/B at sf1): with the hint the probe
-    side of the semi-join never plans a shuffle — the marked stage
-    measured 0.95 s vs 1.92 s WITHOUT it, even though AQE had already
-    converted the plain join to broadcast (the conversion happens
-    after the probe exchange is planned, so its shuffle files are
-    still written and locally re-read). Correct only while one int64
-    row per distinct duplicated gram fits a broadcast — bounded
-    corpora, the same ruling as ``jaccard_similar_pairs
-    (broadcast_sizes=True)``; the default keeps the scale-safe
-    shuffled join for the unbounded-dup-vocabulary regime (AQE still
-    broadcasts it when the agg output turns out small).
+    The duplicated grams are always broadcast (r13 A/B at sf1): with
+    the hint the probe side of the semi-join never plans a shuffle —
+    the marked stage measured 0.95 s vs 1.92 s without it, even though
+    AQE had already converted the plain join to broadcast (the
+    conversion happens after the probe exchange is planned, so its
+    shuffle files are still written and locally re-read). One int64
+    row per distinct duplicated gram must fit a broadcast — bounded
+    corpora, the same ruling as the broadcast set sizes of
+    :func:`jaccard_similar_pairs`.
 
     Returns (id_col, span_start, span_end, span_len) with [start, end)
     0-based token positions, one row per maximal span.
@@ -1167,14 +1143,12 @@ def duplicated_spans(
     from pyspark.sql import Window
 
     grams = positioned_gram_hashes(df, id_col=id_col, text_col=text_col, k=k)
-    dup = (
+    dup = F.broadcast(
         grams.groupBy("gram")
         .agg(F.count("*").alias("__c"))
         .filter(F.col("__c") >= min_count)
         .select("gram")
     )
-    if broadcast_dup_grams:
-        dup = F.broadcast(dup)
     marked = grams.join(dup, "gram").select("id", "pos", "n_tokens")
     w = Window.partitionBy("id").orderBy("pos")
     islands = (
@@ -1206,7 +1180,6 @@ def remove_duplicated_spans(
     text_col: str,
     k: int = 8,
     min_count: int = 2,
-    broadcast_dup_grams: bool = False,
 ) -> DataFrame:
     """Scrub tier over :func:`duplicated_spans`: rebuild each
     document's NORMALIZED text with every duplicated span's tokens
@@ -1238,7 +1211,6 @@ def remove_duplicated_spans(
     """
     span_sets = duplicated_spans(
         df, id_col=id_col, text_col=text_col, k=k, min_count=min_count,
-        broadcast_dup_grams=broadcast_dup_grams,
     ).groupBy(F.col(id_col).alias("id")).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )

@@ -15,7 +15,7 @@ queries carry hash-exact oracles.
   smallest distinct hashes per group, estimate ``(k-1) * 2^52 / h_k``.
   Relative error ~ 1/sqrt(k-2) (k=256 → ~6%). The k-min SET is also a
   MERGEABLE state — union two sets, keep the k smallest — which is
-  what the rollup store's ``distinct_method="kmv"`` persists
+  the approx-distinct state the rollup store persists
   (:mod:`..store.rollup`).
 
 * :func:`hist_percentiles` — fixed-bin histogram percentile, the
@@ -67,8 +67,8 @@ def kmv_hash(col: Column | str) -> Column:
 def kmv_estimate_expr(state: Column, k: int) -> Column:
     """Finalize a sorted k-min hash array into the distinct estimate:
     exact size below ``k``, else ``(k-1)·2^52/(h_k + 1)``. Shared by
-    :func:`kmv_distinct` and the rollup store's
-    ``distinct_method="kmv"`` so the two estimators cannot drift."""
+    :func:`kmv_distinct` and the rollup store's distinct states so the
+    two estimators cannot drift."""
     return (
         F.when(F.size(state) < k, F.size(state).cast("double"))
         .otherwise(

@@ -33,11 +33,9 @@ def register_views(
     spark: SparkSession,
     sf_dir: str,
     *,
-    tables=TABLES,
-    include_domain: bool = True,
     strict: bool = False,
 ) -> list[str]:
-    """Register the domain tables under ``sf_dir`` as temp views,
+    """Register the :data:`TABLES` under ``sf_dir`` as temp views,
     plus the ``market`` and ``book`` views derived from ``lineitem``.
     Missing parquet files are skipped unless ``strict`` (scaled bench
     tiers carry only the tables their queries touch). Returns the
@@ -45,7 +43,7 @@ def register_views(
     from .driver_queries import BOOK_SQL, MARKET_SQL, _events, _t
 
     names: list[str] = []
-    for t in tables:
+    for t in TABLES:
         if not os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
             if strict:
                 raise FileNotFoundError(f"{sf_dir}/{t}.parquet")
@@ -53,7 +51,7 @@ def register_views(
         df = _events(spark, sf_dir) if t == "events" else _t(spark, sf_dir, t)
         df.createOrReplaceTempView(t)
         names.append(t)
-    if include_domain and "lineitem" in names:
+    if "lineitem" in names:
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW market AS {MARKET_SQL}")
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW book AS {BOOK_SQL}")
         names += ["market", "book"]

@@ -30,8 +30,8 @@ Rename atomicity is filesystem-level: local FS/HDFS yes; bare object
 stores need their conditional-put primitive. No directory is ever
 renamed, so the layout itself is object-store safe.
 
-Used by :class:`.rollup.RollupStore` (``_rollup_manifest.g{N}.json``,
-plus a legacy unsuffixed name) and the persisted IVF index
+Used by :class:`.rollup.RollupStore` (``_rollup_manifest.g{N}.json``)
+and the persisted IVF index
 (``_ivf_lists.g{N}.json`` in :mod:`..operators.similarity`).
 """
 
@@ -69,11 +69,10 @@ def read_small_file(fs, p) -> bytes:
 
 
 def list_generation_files(
-    spark, base: str, prefix: str, *, legacy_name: str | None = None
+    spark, base: str, prefix: str
 ) -> list[tuple[int, object]]:
     """``(generation, hadoop Path)`` for every generation file present,
-    unsorted. ``legacy_name`` (an unsuffixed pre-generation layout
-    file) reads as generation ``-1`` so any suffixed file beats it."""
+    unsorted."""
     fs, hpath = hadoop_fs(spark, base)
     root = hpath(base)
     out: list[tuple[int, object]] = []
@@ -81,14 +80,9 @@ def list_generation_files(
         return out
     pat = re.compile(re.escape(prefix) + r"\.g(\d+)\.json$")
     for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not st.isFile():
-            continue
-        m = pat.match(name)
-        if m:
+        m = pat.match(st.getPath().getName())
+        if st.isFile() and m:
             out.append((int(m.group(1)), st.getPath()))
-        elif legacy_name is not None and name == legacy_name:
-            out.append((-1, st.getPath()))
     return out
 
 
@@ -98,14 +92,13 @@ def read_committed(
     prefix: str,
     *,
     default: dict,
-    legacy_name: str | None = None,
     store_desc: str = "store",
 ) -> dict:
     """The committed metadata dict: highest-generation parseable file;
     ``default`` (copied) when no generation file exists at all."""
     base = base.rstrip("/")
     fs, _hpath = hadoop_fs(spark, base)
-    files = list_generation_files(spark, base, prefix, legacy_name=legacy_name)
+    files = list_generation_files(spark, base, prefix)
     if not files:
         return dict(default)
     best: dict | None = None
@@ -130,7 +123,6 @@ def commit_generation(
     prefix: str,
     meta: dict,
     *,
-    legacy_name: str | None = None,
     store_desc: str = "store",
 ) -> None:
     """Commit ``meta`` (must carry ``meta['generation']``) as the new
@@ -152,8 +144,6 @@ def commit_generation(
             f"to {name!r} returned false (the previous generation is "
             "still committed)"
         )
-    for g, p in list_generation_files(
-        spark, base, prefix, legacy_name=legacy_name
-    ):
+    for g, p in list_generation_files(spark, base, prefix):
         if g < gen:
             fs.delete(p, False)

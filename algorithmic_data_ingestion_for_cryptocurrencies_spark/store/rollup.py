@@ -70,29 +70,21 @@ raw on every backfill); this is the beyond-reference scale surface.
 
 from __future__ import annotations
 
+import functools
+import operator
 import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..operators.sketches import kmv_estimate_expr, kmv_hash
 from . import genfile
 
 COMPACTED_PREFIX = "__compacted"
 MANIFEST_PREFIX = "_rollup_manifest"
-# legacy single-file manifest name (pre-generation-suffix layout)
-MANIFEST_NAME = "_rollup_manifest.json"
-
-
-def _check_distinct_method(method: str) -> None:
-    """Fail LOUDLY at state-build/construction time: an unrecognized
-    method would otherwise write states with NO distinct column at
-    all (neither branch matches) and only surface later as an
-    unresolved-column error on read — with the bad states already
-    persisted."""
-    if method not in ("hll", "kmv"):
-        raise ValueError(
-            f"unknown distinct_method {method!r} (expected 'hll' or 'kmv')"
-        )
+#: KMV sample size of the approx-distinct state: the k smallest
+#: distinct hashes kept per bucket (relative error ~1/sqrt(k-2))
+KMV_K = 256
 
 
 def rollup_state(
@@ -105,8 +97,6 @@ def rollup_state(
     batch_id: str,
     distinct_cols: Sequence[str] = (),
     hist_cols: "dict[str, tuple[float, float, int]] | None" = None,
-    distinct_method: str = "hll",
-    kmv_k: int = 256,
 ) -> DataFrame:
     """Per-(keys, bucket_ts) mergeable aggregation state for each value
     column: count, sum, min, max, sum of squares. ``bucket_ts`` is the
@@ -123,22 +113,14 @@ def rollup_state(
     estimate error is bounded by the bin width.
 
     ``distinct_cols`` adds an incremental APPROX-DISTINCT state per
-    column: an HLL sketch (``hll_sketch_agg``, binary, ~1.5 KB at the
-    default lgConfigK) that merges across batches and compactions with
-    ``hll_union_agg`` exactly like the numeric states add — "unique
-    users per bucket maintained incrementally over the stream", which
-    no exact state can do without keeping the full value set.
-
-    ``distinct_method="kmv"`` (r11, rule V) swaps the HLL binary for
-    the PORTABLE k-minimum-values state (``operators/sketches.py``):
-    the ``kmv_k`` smallest distinct 52-bit md5 hashes per bucket, a
-    sorted ``array<bigint>``. KMV sets are mergeable (union, keep the
-    k smallest) and the estimate is a deterministic function of the
-    data, so the rollup's approx-distinct column gains a hash-exact
-    DuckDB oracle — HLL stays the default (smaller state at high
-    cardinality: 1.5 KB vs 2 KB at k=256, and one aggregate pass vs
-    a rank pre-pass per column)."""
-    _check_distinct_method(distinct_method)
+    column — "unique users per bucket maintained incrementally over
+    the stream", which no exact state can do without keeping the full
+    value set. The state is the portable k-minimum-values set (rule V,
+    ``operators/sketches.py``): the :data:`KMV_K` smallest distinct
+    52-bit md5 hashes per bucket, a sorted ``array<bigint>``. KMV sets
+    merge across batches and compactions (union, keep the k smallest)
+    and the estimate is a deterministic function of the data, so the
+    rollup's approx-distinct column has a hash-exact DuckDB oracle."""
     b = (
         F.floor(F.col(ts_col).cast("long") / F.lit(bucket_seconds))
         * F.lit(bucket_seconds)
@@ -153,9 +135,6 @@ def rollup_state(
             F.max(v).alias(f"max_{c}"),
             F.sum(v * v).alias(f"sumsq_{c}"),
         ]
-    if distinct_method == "hll":
-        for c in distinct_cols:
-            aggs.append(F.hll_sketch_agg(c).alias(f"hll_{c}"))
     for c, (lo, hi, nbins) in (hist_cols or {}).items():
         v = F.col(c).cast("double")
         idx = F.when(v < lo, F.lit(0)).when(v >= hi, F.lit(nbins + 1)).otherwise(
@@ -179,53 +158,46 @@ def rollup_state(
         .groupBy(*keys, "bucket_ts")
         .agg(*aggs)
     )
-    if distinct_method == "kmv":
-        import functools
-        import operator
-
-        from ..operators.sketches import kmv_hash
-
-        jcols = [*keys, "bucket_ts"]
-        for c in distinct_cols:
-            # rank pre-pass per column: distinct hashes, per-bucket
-            # k smallest (WindowGroupLimit keeps in-flight state O(k)
-            # per group), collected into the sorted array state. One
-            # extra exchange per distinct col vs HLL's in-agg sketch —
-            # the price of a portable, engine-reproducible state.
-            hashes = (
-                df.withColumn("bucket_ts", b)
-                .filter(F.col(c).isNotNull())
-                .select(*keys, "bucket_ts", kmv_hash(c).alias("__h"))
-                .distinct()
+    jcols = [*keys, "bucket_ts"]
+    for c in distinct_cols:
+        # rank pre-pass per column: distinct hashes, per-bucket k
+        # smallest (WindowGroupLimit keeps in-flight state O(k) per
+        # group), collected into the sorted array state — one extra
+        # exchange per distinct col, the price of a portable,
+        # engine-reproducible state
+        hashes = (
+            df.withColumn("bucket_ts", b)
+            .filter(F.col(c).isNotNull())
+            .select(*keys, "bucket_ts", kmv_hash(c).alias("__h"))
+            .distinct()
+        )
+        w = Window.partitionBy(*jcols).orderBy("__h")
+        st = (
+            hashes.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= KMV_K)
+            .groupBy(*jcols)
+            .agg(F.array_sort(F.collect_list("__h")).alias(f"kmv_{c}"))
+            # NULL-SAFE join keys (review fix): a group keyed by NULL
+            # (or a NULL-ts bucket) must still receive its state — a
+            # plain equi-join drops it and the column would silently
+            # finalize to 0 instead of the true count
+            .select(
+                *[F.col(k).alias(f"__r_{k}") for k in jcols],
+                f"kmv_{c}",
             )
-            w = Window.partitionBy(*jcols).orderBy("__h")
-            st = (
-                hashes.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= kmv_k)
-                .groupBy(*jcols)
-                .agg(F.array_sort(F.collect_list("__h")).alias(f"kmv_{c}"))
-                # NULL-SAFE join keys (review fix): a group keyed by
-                # NULL (or a NULL-ts bucket) must still receive its
-                # state — a plain equi-join drops it and the column
-                # would silently finalize to 0 where HLL reports the
-                # true count
-                .select(
-                    *[F.col(k).alias(f"__r_{k}") for k in jcols],
-                    f"kmv_{c}",
-                )
+        )
+        cond = functools.reduce(
+            operator.and_,
+            [out[k].eqNullSafe(st[f"__r_{k}"]) for k in jcols],
+        )
+        out = (
+            out.join(st, cond, "left")
+            .drop(*[f"__r_{k}" for k in jcols])
+            .withColumn(
+                f"kmv_{c}",
+                F.coalesce(f"kmv_{c}", F.array().cast("array<bigint>")),
             )
-            cond = functools.reduce(
-                operator.and_,
-                [out[k].eqNullSafe(st[f"__r_{k}"]) for k in jcols],
-            )
-            out = (
-                out.join(st, cond, "left")
-                .drop(*[f"__r_{k}" for k in jcols])
-                .withColumn(
-                    f"kmv_{c}",
-                    F.coalesce(f"kmv_{c}", F.array().cast("array<bigint>")),
-                )
-            )
+        )
     return out.withColumn("batch_id", F.lit(batch_id))
 
 
@@ -233,12 +205,10 @@ def merge_rollup_states(
     states: DataFrame, *, keys: Sequence[str], val_cols: Sequence[str],
     distinct_cols: Sequence[str] = (),
     hist_cols: "dict[str, tuple[float, float, int]] | None" = None,
-    distinct_method: str = "hll",
-    kmv_k: int = 256,
 ) -> DataFrame:
     """Merge partial states across batches: counts/sums/sumsq add,
-    min/max combine, HLL sketches union (KMV sets union + re-truncate
-    to the k smallest — bounded by states-per-group × k). Associative
+    min/max combine, KMV sets union + re-truncate to the k smallest
+    (bounded by states-per-group × k). Associative
     + commutative, so any merge order (and any partial compaction
     history) yields the same state."""
     aggs: list[F.Column] = []
@@ -251,17 +221,14 @@ def merge_rollup_states(
             F.sum(f"sumsq_{c}").alias(f"sumsq_{c}"),
         ]
     for c in distinct_cols:
-        if distinct_method == "kmv":
-            aggs.append(
-                F.slice(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list(f"kmv_{c}")))
-                    ),
-                    1, kmv_k,
-                ).alias(f"kmv_{c}")
-            )
-        else:
-            aggs.append(F.hll_union_agg(f"hll_{c}").alias(f"hll_{c}"))
+        aggs.append(
+            F.slice(
+                F.array_sort(
+                    F.array_distinct(F.flatten(F.collect_list(f"kmv_{c}")))
+                ),
+                1, KMV_K,
+            ).alias(f"kmv_{c}")
+        )
     for c, (_lo, _hi, nbins) in (hist_cols or {}).items():
         # element-wise sum per bin slot (map-side combining, O(nbins)
         # state) rather than collecting one array per batch per group
@@ -279,15 +246,13 @@ def finalize_rollup(
     distinct_cols: Sequence[str] = (),
     hist_cols: "dict[str, tuple[float, float, int]] | None" = None,
     percentiles: Sequence[float] = (0.5, 0.95, 0.99),
-    distinct_method: str = "hll",
-    kmv_k: int = 256,
 ) -> DataFrame:
     """Finalize merged states into count/mean/min/max/std (population
-    std via E[x²]−E[x]², clamped at 0 against FP negatives) and
-    distinct states into approx-distinct estimates (HLL: the sketch
-    estimate, bigint; KMV: ``(k-1)·2^52/(h_k+1)``, double — exact
-    count below k; identical to ``operators/sketches.kmv_distinct``,
-    so the rollup column matches its DuckDB oracle)."""
+    std via E[x²]−E[x]², clamped at 0 against FP negatives) and KMV
+    distinct states into approx-distinct estimates
+    ``(k-1)·2^52/(h_k+1)`` (double; exact count below k; identical to
+    ``operators/sketches.kmv_distinct``, so the rollup column matches
+    its DuckDB oracle)."""
     out = state
     for c, (lo, hi, nbins) in (hist_cols or {}).items():
         h = F.col(f"hist_{c}")
@@ -315,18 +280,10 @@ def finalize_rollup(
             out = out.withColumn(name, F.when(total > 0, est))
         out = out.drop(f"hist_{c}")
     for c in distinct_cols:
-        if distinct_method == "kmv":
-            from ..operators.sketches import kmv_estimate_expr
-
-            out = out.withColumn(
-                f"approx_distinct_{c}",
-                kmv_estimate_expr(F.col(f"kmv_{c}"), kmv_k),
-            ).drop(f"kmv_{c}")
-        else:
-            out = out.withColumn(
-                f"approx_distinct_{c}",
-                F.hll_sketch_estimate(f"hll_{c}"),
-            ).drop(f"hll_{c}")
+        out = out.withColumn(
+            f"approx_distinct_{c}",
+            kmv_estimate_expr(F.col(f"kmv_{c}"), KMV_K),
+        ).drop(f"kmv_{c}")
     for c in val_cols:
         n = F.col(f"n_{c}").cast("double")
         mean = F.col(f"sum_{c}") / n
@@ -354,8 +311,6 @@ class RollupStore:
         bucket_seconds: int,
         distinct_cols: Sequence[str] = (),
         hist_cols: "dict[str, tuple[float, float, int]] | None" = None,
-        distinct_method: str = "hll",
-        kmv_k: int = 256,
     ):
         self.spark = spark
         self.path = path
@@ -363,9 +318,6 @@ class RollupStore:
         self.val_cols = list(val_cols)
         self.distinct_cols = list(distinct_cols)
         self.hist_cols = dict(hist_cols or {})
-        _check_distinct_method(distinct_method)
-        self.distinct_method = distinct_method
-        self.kmv_k = kmv_k
         self.bucket_seconds = bucket_seconds
         # serializes in-process ingest vs compaction: without it a
         # compaction snapshot can catch HALF of an in-flight append's
@@ -388,18 +340,18 @@ class RollupStore:
         return genfile.read_committed(
             self.spark, self.path, MANIFEST_PREFIX,
             default={"generation": 0, "compacted_batch_ids": []},
-            legacy_name=MANIFEST_NAME, store_desc="rollup store",
+            store_desc="rollup store",
         )
 
     def _write_manifest(self, manifest: dict) -> None:
         """Commit = atomic rename onto the NEW generation-suffixed
-        name (``_rollup_manifest.g{N}.json``); superseded manifests
-        (including the legacy unsuffixed layout) are swept only after
-        the new one exists (:func:`.genfile.commit_generation`, which
-        also fails loudly on a false-returning rename)."""
+        name (``_rollup_manifest.g{N}.json``); superseded manifests are
+        swept only after the new one exists
+        (:func:`.genfile.commit_generation`, which also fails loudly on
+        a false-returning rename)."""
         genfile.commit_generation(
             self.spark, self.path, MANIFEST_PREFIX, manifest,
-            legacy_name=MANIFEST_NAME, store_desc="rollup store",
+            store_desc="rollup store",
         )
 
     def _data_files(self) -> list[str]:
@@ -451,7 +403,6 @@ class RollupStore:
                 batch_id=batch_id,
                 distinct_cols=self.distinct_cols,
                 hist_cols=self.hist_cols,
-                distinct_method=self.distinct_method, kmv_k=self.kmv_k,
             )
             state.write.mode("append").parquet(self.path)
 
@@ -465,14 +416,12 @@ class RollupStore:
         merged = merge_rollup_states(
             states, keys=self.keys, val_cols=self.val_cols,
             distinct_cols=self.distinct_cols, hist_cols=self.hist_cols,
-            distinct_method=self.distinct_method, kmv_k=self.kmv_k,
         )
         if not finalize:
             return merged
         return finalize_rollup(
             merged, val_cols=self.val_cols,
             distinct_cols=self.distinct_cols, hist_cols=self.hist_cols,
-            distinct_method=self.distinct_method, kmv_k=self.kmv_k,
         )
 
     def compact_rollup(self, *, min_bucket_ts: int | None = None) -> None:
@@ -522,7 +471,6 @@ class RollupStore:
             merged = merge_rollup_states(
                 states, keys=self.keys, val_cols=self.val_cols,
                 distinct_cols=self.distinct_cols, hist_cols=self.hist_cols,
-                distinct_method=self.distinct_method, kmv_k=self.kmv_k,
             ).withColumn("batch_id", F.lit(gen_tag))
 
             # stage the new generation, then move its part files INTO

@@ -647,3 +647,73 @@ def test_token_free_docs_pair_only_each_other(spark):
         ).collect()
         mh_found = {(r["id_a"], r["id_b"]) for r in mh}
         assert mh_found == empty_pairs | {(3, 4)}, family
+
+
+def _jaccard_reference(docs, *, n, threshold, max_doc_freq=None):
+    """Pure-Python exact Jaccard over string-tuple shingles: normalize
+    (lowercase, collapse whitespace, strip), split on single spaces,
+    one window per start with the short-document clamp (a document of
+    fewer than ``n`` tokens is one window; an empty or whitespace-only
+    one is the single ``('',)`` shingle); NULL text has no windows."""
+    import re
+
+    sets = {}
+    for i, text in docs:
+        if text is None:
+            continue
+        toks = re.sub(r"\s+", " ", text.lower()).strip().split(" ")
+        sets[i] = {
+            tuple(toks[s:s + n]) for s in range(max(len(toks) - n + 1, 1))
+        }
+    if max_doc_freq is not None:
+        df = {}
+        for sh in sets.values():
+            for g in sh:
+                df[g] = df.get(g, 0) + 1
+        sets = {i: {g for g in sh if df[g] <= max_doc_freq} for i, sh in sets.items()}
+    out = set()
+    for a in sets:
+        for b in sets:
+            common = len(sets[a] & sets[b])
+            if a < b and common:
+                jac = common / (len(sets[a]) + len(sets[b]) - common)
+                if jac >= threshold:
+                    out.add((a, b, jac))
+    return out
+
+
+@pytest.mark.parametrize("max_doc_freq", [None, 20])
+def test_jaccard_matches_python_reference(spark, max_doc_freq):
+    """``jaccard_similar_pairs`` against :func:`_jaccard_reference` on
+    40 documents: NULL, empty and whitespace-only text, short
+    documents, an exact duplicate (up to case and spacing), a
+    near-duplicate, and a hot phrase in 30 documents. The cutoff of
+    20 drops the hot phrase's shingles; the (id_a, id_b, jaccard) rows
+    must match exactly either way."""
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(60)]
+    hot = "alpha beta gamma delta"
+    docs = [
+        (i, (hot + " " if i < 30 else "") + " ".join(rng.choice(vocab, 8)))
+        for i in range(32)
+    ]
+    docs += [
+        (32, None), (33, None), (34, ""), (35, "  \t "),
+        (36, "Short"), (37, "short  DOC"), (38, "short doc"),
+        (39, "  " + docs[3][1].upper() + "\n"),  # exact dup of doc 3
+    ]
+    words = docs[4][1].split()
+    docs[5] = (5, " ".join(words[:-1] + ["mutated"]))  # near-dup of doc 4
+    sdf = spark.createDataFrame(docs, "doc_id long, text string").repartition(3)
+    got = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in dedup.jaccard_similar_pairs(
+            sdf, id_col="doc_id", text_col="text", n=3, threshold=0.1,
+            max_doc_freq=max_doc_freq,
+        ).collect()
+    }
+    want = _jaccard_reference(docs, n=3, threshold=0.1, max_doc_freq=max_doc_freq)
+    assert got == want
+    assert (3, 39, 1.0) in want and (34, 35, 1.0) in want and (37, 38, 1.0) in want
+    assert any(a == 4 and b == 5 for a, b, _ in want)
+    assert not any(32 in (a, b) or 33 in (a, b) for a, b, _ in want)

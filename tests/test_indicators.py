@@ -256,6 +256,46 @@ def test_flagship_matches_pandas_reference(spark):
         assert err <= FLAGSHIP_REFERENCE_BOUND[c], (c, err)
 
 
+#: |registry - pandas| bound for ``w09_ema``: the registry rounds both
+#: EMAs to 1e-6, so an exact stage can sit up to 5e-7 from the unrounded
+#: reference; 5.1e-7 leaves 1e-8 for the stage's own summation order
+#: (shared-block ``with_ewm_multi`` vs pandas' recursion, measured far
+#: below that on these ~100-2,000 prices)
+W09_REFERENCE_BOUND = 5.1e-7
+
+
+def test_w09_ema_matches_pandas_reference(spark):
+    """The registry ``w09_ema`` (``with_ewm_multi`` over every
+    ``suppkey`` series at sf0.01, spans 12 and 26 on one shared block
+    layout, rounded by the registry) against pandas
+    ``close.ewm(span=s, adjust=False).mean()`` run per series in the
+    window order ``(ts, okey, lnum, pkey)``: the same rows, the same
+    NaNs, and both EMAs within :data:`W09_REFERENCE_BOUND`."""
+    from algorithmic_data_ingestion_for_cryptocurrencies_spark.driver_queries import (
+        IDS,
+        ORDER,
+        REGISTRY,
+        _market,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    m = _market(spark, sf).toPandas().sort_values(["suppkey", *ORDER])
+    close = m.groupby("suppkey", group_keys=False)["close"]
+    want = m[IDS].assign(
+        ema_12=close.transform(lambda x: x.ewm(span=12, adjust=False).mean()),
+        ema_26=close.transform(lambda x: x.ewm(span=26, adjust=False).mean()),
+    )
+    fn, _sql = REGISTRY["w09_ema"]
+    got = fn(spark, sf).toPandas()
+    mrg = want.merge(got, on=IDS, suffixes=("_ref", "_reg"), validate="one_to_one")
+    assert len(mrg) == len(want) == len(got) > 0
+    for c in ("ema_12", "ema_26"):
+        x, y = mrg[c + "_ref"].to_numpy(float), mrg[c + "_reg"].to_numpy(float)
+        assert (np.isnan(x) == np.isnan(y)).all(), c
+        err = np.abs(x - y)[~np.isnan(x)].max()
+        assert err <= W09_REFERENCE_BOUND, (c, err)
+
+
 def test_triple_barrier_label_semantics(spark):
     """Upper-first tie convention, timeout at the vertical barrier,
     bars-to-hit, and horizon truncation at series end."""

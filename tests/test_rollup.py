@@ -4,7 +4,6 @@ batch replay counts once, compaction preserves results."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -218,21 +217,18 @@ def test_compaction_crash_before_commit_is_invisible(spark, tmp_path):
     assert [r["batch_id"] for r in tags.collect()] == ["__compacted_g2"]
 
 
-@pytest.mark.parametrize("method", ["hll", "kmv"])
-def test_rollup_incremental_approx_distinct(spark, tmp_path, method):
-    """Distinct states must merge across batches and compaction:
+def test_rollup_incremental_approx_distinct(spark, tmp_path):
+    """KMV distinct states must merge across batches and compaction:
     the incremental approx-distinct equals the one-shot estimate on
-    the same data, stays close to exact (HLL: 5%; KMV k=256: ~3 rsd
-    = 20% above k, exact below), and survives compaction + a
-    post-compaction replay unchanged. Runs for both the HLL default
-    and the portable KMV state (r11)."""
+    the same data, stays close to exact (k=256: ~3 rsd = 20% above
+    k, exact below), and survives compaction + a post-compaction
+    replay unchanged."""
     df = _raw(spark, n=4000, seed=11).withColumn(
         "u", (F.abs(F.hash("v")) % 500).cast("long")
     )
     store = RollupStore(
         spark, str(tmp_path / "r"), keys=["k"], val_cols=["v"],
         bucket_seconds=7 * 86400, distinct_cols=["u"],
-        distinct_method=method,
     )
     b1 = df.filter(F.col("ts") < "2024-03-06")
     b2 = df.filter(F.col("ts") >= "2024-03-06")
@@ -246,7 +242,6 @@ def test_rollup_incremental_approx_distinct(spark, tmp_path, method):
     one_shot = rollup_state(
         df, keys=["k"], ts_col="ts", bucket_seconds=7 * 86400,
         val_cols=["v"], batch_id="all", distinct_cols=["u"],
-        distinct_method=method,
     )
     from algorithmic_data_ingestion_for_cryptocurrencies_spark.store.rollup import (
         finalize_rollup as _fin,
@@ -256,9 +251,8 @@ def test_rollup_incremental_approx_distinct(spark, tmp_path, method):
     want = {
         (r["k"], r["bucket_ts"]): r["approx_distinct_u"]
         for r in _fin(
-            _mrg(one_shot, keys=["k"], val_cols=["v"], distinct_cols=["u"],
-                 distinct_method=method),
-            val_cols=["v"], distinct_cols=["u"], distinct_method=method,
+            _mrg(one_shot, keys=["k"], val_cols=["v"], distinct_cols=["u"]),
+            val_cols=["v"], distinct_cols=["u"],
         ).collect()
     }
     assert got == want  # state merge is exact-deterministic on same data
@@ -270,9 +264,8 @@ def test_rollup_incremental_approx_distinct(spark, tmp_path, method):
             (F.floor(F.col("ts").cast("long") / (7 * 86400)) * (7 * 86400)).cast("long"),
         ).groupBy("k", "bucket_ts").agg(F.countDistinct("u").alias("x")).collect()
     }
-    bound = 0.05 if method == "hll" else 0.20
     for key, est in got.items():
-        assert abs(est - exact[key]) / exact[key] < bound
+        assert abs(est - exact[key]) / exact[key] < 0.20
 
     store.compact_rollup()
     store.upsert_rollup(b2, ts_col="ts", batch_id="b2")  # replay: inert
@@ -402,44 +395,11 @@ def test_manifest_never_absent_and_stale_generations_resolved(spark, tmp_path):
     assert names == ["_rollup_manifest.g2.json"]
 
 
-def test_manifest_legacy_unsuffixed_layout_still_read(spark, tmp_path):
-    """Tables written before the generation-suffixed manifests (plain
-    _rollup_manifest.json) stay readable, and the next compaction
-    migrates them to the suffixed layout."""
-    import os
-
-    df = _raw(spark, n=1200)
-    store = RollupStore(
-        spark, str(tmp_path / "r"), keys=["k"], val_cols=["v"],
-        bucket_seconds=3600,
-    )
-    store.upsert_rollup(df, ts_col="ts", batch_id="b1")
-    want = _sorted(store.read_rollup().toPandas())
-    store.compact_rollup()
-    # rewrite as the legacy layout
-    src = tmp_path / "r" / "_rollup_manifest.g1.json"
-    dst = tmp_path / "r" / "_rollup_manifest.json"
-    dst.write_text(src.read_text())
-    src.unlink()
-    assert store._read_manifest()["generation"] == 1
-    got = _sorted(store.read_rollup().toPandas())
-    assert got.n_v.equals(want.n_v)
-    store.upsert_rollup(df, ts_col="ts", batch_id="b2")
-    store.compact_rollup()
-    names = sorted(
-        n for n in os.listdir(store.path) if n.startswith("_rollup_manifest")
-    )
-    assert names == ["_rollup_manifest.g2.json"]
-
-
 def test_kmv_rollup_null_group_key_gets_state(spark, tmp_path):
     """Review fix (r11): a group keyed by NULL must still receive its
     KMV distinct state — the state join is null-safe, so the NULL
     group reports the true distinct count (a plain equi-join silently
-    finalized it to 0), matching the HLL path. Unknown
-    distinct_method fails loudly at construction."""
-    import pytest as _pytest
-
+    finalized it to 0)."""
     rows = [
         (None, "2024-03-01 00:00:00", 1.0, 10),
         (None, "2024-03-01 01:00:00", 2.0, 11),
@@ -452,16 +412,8 @@ def test_kmv_rollup_null_group_key_gets_state(spark, tmp_path):
     store = RollupStore(
         spark, str(tmp_path / "r"), keys=["k"], val_cols=["v"],
         bucket_seconds=7 * 86400, distinct_cols=["u"],
-        distinct_method="kmv",
     )
     store.upsert_rollup(df, ts_col="ts", batch_id="b1")
     got = {r["k"]: r["approx_distinct_u"] for r in store.read_rollup().collect()}
     assert got[None] == 2.0   # users 10, 11 — not 0
     assert got["k1"] == 1.0
-
-    with _pytest.raises(ValueError, match="distinct_method"):
-        RollupStore(
-            spark, str(tmp_path / "bad"), keys=["k"], val_cols=["v"],
-            bucket_seconds=86400, distinct_cols=["u"],
-            distinct_method="KMV",
-        )
